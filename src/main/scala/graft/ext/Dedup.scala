@@ -662,24 +662,16 @@ object Dedup {
     // measured as a clean 2× on the 16× scale probe
     val p0 = pairs.select(col(aCol).as("a"), col(bCol).as("b")).cache()
     val nEdges = p0.count()
-    // r14 fast path (guide §1.2 step 1, the round-13 bounded-driver
-    // precedent): a pair graph small enough to sit on the driver is
-    // folded with one local union-find instead of the iterative
-    // label-propagation loop — the loop costs ~4 sequential Spark jobs
-    // PER ROUND (join+agg, checkpoint, change count) × diameter rounds,
-    // all fixed scheduling latency at small edge counts (ProfileQ: the
-    // dedup CC loops are 10–20 of each query's ~30–70 jobs with < 4 MB
-    // shuffled). Labels are identical BY CONSTRUCTION: both compute
-    // min(component id) per node over the same edge set (min-label
-    // fixpoint ≡ union-find + per-root min), so this is a physical
-    // rewrite, not a semantic one. Guarded: only int64 ids (every pair
-    // graph in the engine) and only below an edge bound (default 4M ≈
-    // 64 MB of ids — driver-trivial; env-overridable, 0 disables), with
-    // the distributed loop as the unconditional fallback — a 100 TB
-    // pair graph takes the loop exactly as before.
-    val ccLocalMax = sys.props.get("graft.cc.local.max")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_LOCAL_MAX"))
-      .map(_.toLong).getOrElse(4000000L)
+    // Fast path: a pair graph within `Bounded.Edges` (capped by the one
+    // `graft.local.max` override) is folded with one local union-find
+    // instead of the iterative label-propagation loop, which costs ~4
+    // sequential Spark jobs PER ROUND × diameter rounds, all fixed
+    // scheduling latency at small edge counts. Labels are identical BY
+    // CONSTRUCTION: both compute min(component id) per node over the
+    // same edge set (min-label fixpoint ≡ union-find + per-root min).
+    // Only int64 ids (every pair graph in the engine) take it; past the
+    // bound the distributed loop runs exactly as before.
+    val ccLocalMax = graft.util.Bounded.limit(graft.util.Bounded.Edges)
     val longIds = Seq("a", "b").forall(c =>
       p0.schema(c).dataType == org.apache.spark.sql.types.LongType)
     if (nEdges <= ccLocalMax && longIds) {
@@ -719,13 +711,8 @@ object Dedup {
         out(i) = org.apache.spark.sql.Row(id, find(id))
         i += 1
       }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("cluster_id",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      return pairs.sparkSession.createDataFrame(
-        java.util.Arrays.asList(out: _*), schema)
+      return graft.util.Bounded.relation(pairs.sparkSession, out.toSeq,
+        Seq("id", "cluster_id").map(_ -> org.apache.spark.sql.types.LongType))
     }
     // the loop's per-round join+agg shuffles run under a shuffle budget
     // proportional to the (exact, already-materialized-by-the-count)

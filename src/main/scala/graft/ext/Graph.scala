@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Bounded
+
 /** Iterative graph analytics over relation-shaped edge lists. The
   * reference's framework runs exactly this workload class as chained
   * MapReduce rounds (`w6/docs/design.md` motivates the framework with
@@ -19,39 +21,29 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** r14 fast-path bound (the `connectedComponents` /
-    * driver-local-trainer precedent, guide §1.2): a graph whose
-    * ids-only edge + node relations fit comfortably on the driver is
-    * folded with an exact local loop instead of the per-round
-    * join+aggregate jobs — the fixed-round fixpoints here cost 2–4
-    * scheduler round-trips PER ROUND while moving < 5 MB at fixture
-    * scale (ProfileQ: the graph family was 2.5–4 s each, nearly all
-    * scheduling latency). Arithmetic is replicated EXACTLY (int64
-    * floor division on non-negative values, argmax ties, set
-    * semantics — each documented at its loop) and the DuckDB oracle
-    * replay pins it per query. Above the bound (default 4M rows
-    * combined; env-overridable, 0 disables) every algorithm takes the
-    * distributed loop exactly as before — a 100 TB graph never
-    * touches the driver. */
-  private def graphLocalMax: Long = sys.props.get("graft.graph.local.max")
-    .orElse(sys.env.get("SPARK_GRAFT_GRAPH_LOCAL_MAX"))
-    .map(_.toLong).getOrElse(4000000L)
+  /** Fast-path bound (the `connectedComponents` precedent): a graph
+    * whose ids-only edge + node relations fit on the driver is folded
+    * with an exact local loop instead of the per-round join+aggregate
+    * jobs — the fixed-round fixpoints here cost 2–4 scheduler
+    * round-trips PER ROUND while moving < 5 MB at fixture scale.
+    * Arithmetic is replicated EXACTLY (int64 floor division on
+    * non-negative values, argmax ties, set semantics — each documented
+    * at its loop) and the DuckDB oracle replay pins it per query. Above
+    * the bound (`Bounded.Edges` rows combined, capped by the one
+    * `graft.local.max` override) every algorithm takes the distributed
+    * loop exactly as before. */
+  private def graphLocalMax: Long = Bounded.limit(Bounded.Edges)
 
   private def allLong(df: DataFrame, cols: String*): Boolean =
     cols.forall(c =>
       df.schema(c).dataType == org.apache.spark.sql.types.LongType)
 
-  /** LocalRelation of all-int64 rows — broadcasts into every consumer
-    * with no job, no cache entry (the trainer-result idiom). */
+  /** LocalRelation of all-int64 rows. */
   private def localRel(
       spark: org.apache.spark.sql.SparkSession,
       rows: Array[org.apache.spark.sql.Row],
-      names: Seq[String]): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(names.map(n =>
-      org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+      names: Seq[String]): DataFrame =
+    Bounded.relation(spark, rows.toSeq, names.map(_ -> org.apache.spark.sql.types.LongType))
 
   /** Shipped constants, shared with the oracle generator: rank mass is
     * scaled to 10⁹ integer units, damping 0.85 as the classic x100
@@ -99,7 +91,7 @@ object Graph {
     // teleport/seed terms are constant-folded from the same count.
     val nn = nodes.count()
     val teleport = if (nn == 0) 0L else ((100L - dampX100) * scale) / (100L * nn)
-    // r14 driver-local fast path (see graphLocalMax): the loop below
+    // driver-local fast path (see graphLocalMax): the loop below
     // replicates the distributed rounds exactly — degrees count edge
     // MULTIPLICITY (no distinct here), a src outside the node set
     // contributes nothing (the rank join is inner), a dst outside it
@@ -212,7 +204,7 @@ object Graph {
       .getOrElse(0L)
     val initSeed = if (ns == 0) 0L else scale / ns
     val roundSeed = if (ns == 0) 0L else ((100L - dampX100) * scale) / (100L * ns)
-    // r14 driver-local fast path — the pageRank loop with the
+    // driver-local fast path — the pageRank loop with the
     // seed-gated teleport (isSeed ∈ {0,1} rides the collected node
     // rows; everything else replicates identically)
     if (nodes.count() + edges.count() <= graphLocalMax &&
@@ -425,7 +417,7 @@ object Graph {
     val und = scope.cache(
       e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct())
     val nodes = scope.cache(nodes0.select(col(idCol).as("id")))
-    // r14 driver-local fast path: exact replication of the synchronous
+    // driver-local fast path: exact replication of the synchronous
     // rounds — und is the DEDUPED symmetrization (self-loops kept, as
     // in the distributed form), labels exist only for the node set (a
     // src outside it contributes no vote, a dst outside it is ignored),
@@ -687,7 +679,7 @@ object Graph {
     var und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .where(col("src") =!= col("dst")).distinct()
       .localCheckpoint(false)
-    // r14 driver-local fast path: exact replication of the fixed
+    // driver-local fast path: exact replication of the fixed
     // synchronous peels over the deduped symmetrized edge set — per
     // round, survivors are the endpoints whose residual degree ≥ k,
     // and an edge survives only if BOTH endpoints do. Output is the
@@ -783,7 +775,7 @@ object Graph {
         .where(col("src") =!= col("dst")).distinct())
     val nodes = scope.cache(nodes0.select(col(idCol).as("id")))
     val seedsD = scope.cache(seeds0.select(col(seedCol).as("id")).distinct())
-    // r14 driver-local fast path: exact frontier BFS — seeds at depth
+    // driver-local fast path: exact frontier BFS — seeds at depth
     // 0 (whether or not they are in the node relation, as in the
     // distributed form), `rounds` synchronous expansions over the
     // deduped symmetrized edges, unreached nodes -1 via the final

@@ -1,8 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
+
+import graft.util.Bounded
 
 /** Embedding similarity search (SURVEY.md §2.5).
   *
@@ -451,206 +454,101 @@ object Similarity {
       numCentroids: Int,
       trainRounds: Int,
       trainSample: Int,
-      scope: graft.util.CacheScope): DataFrame = {
-    requireIntegralId(corpus, idCol, "ivfCentroids")
-    // Round-13 optimization (guide §1.2 step 1 — remove passes): the
-    // Lloyd loop runs on the DRIVER over the bounded training sample.
-    // The sample is <= max(trainSample, numCentroids) rows BY CONTRACT
-    // (constant in corpus size — the same rows the previous distributed
-    // formulation broadcast to every executor each round), so the
-    // collect is O(constant); what it replaces is ~15 scheduler
-    // round-trips per trainer call (per round: a broadcast build, a
-    // crossJoin+agg shuffle, a posexplode two-level agg shuffle, a
-    // fallback join, and an EAGER localCheckpoint job) — profiled at
-    // 2-4 s of pure job overhead per call at sf0.1 while moving < 20 MB.
-    // Arithmetic is replicated EXACTLY (int64 dots; `div` = Java
-    // truncating division, probed in OPTIMIZATION_r13.md; argmax ties =
-    // max(cd, -cent_id); vectors arrive PRE-QUANTIZED so the driver
-    // never touches a float) and the DuckDB oracle replay pins it — a
-    // one-ulp divergence fails 20+ query hashes. The corpus-wide passes
-    // (assignment, encode, probe) remain fully distributed.
-    // ONE distributed TakeOrdered serves both the training sample (first
-    // trainSample rows) and the seed set (first numCentroids rows) —
-    // both are prefixes of the same (md5-hash, id) global order the
-    // previous two orderBy+limit selections used.
-    val rows = trainerSampleRows(corpus, idCol, vecCol,
-      math.max(numCentroids, trainSample))
-    ivfCentroidsFromSample(corpus.sparkSession, rows,
-      corpus.schema(idCol).dataType, numCentroids, trainRounds, trainSample)
+      scope: graft.util.CacheScope,
+      who: String = "ivfCentroids"): DataFrame = {
+    requireIntegralId(corpus, idCol, who)
+    // The Lloyd loop runs on the DRIVER over the bounded training
+    // sample: <= max(trainSample, numCentroids) rows BY CONTRACT,
+    // constant in corpus size, so the collect is O(constant) and
+    // replaces ~15 scheduler round-trips per trainer call (a broadcast,
+    // two shuffles, a fallback join and a checkpoint per round).
+    // Arithmetic is replicated EXACTLY in `LocalIvf` (int64 dots; `div`
+    // = Java truncating division, probed in OPTIMIZATION_r13.md; argmax
+    // ties to the smallest cent_id; vectors arrive PRE-QUANTIZED) and
+    // the DuckDB oracle replay pins it. The corpus-wide passes
+    // (assignment, encode, probe) remain fully distributed. ONE
+    // TakeOrdered serves both the sample (first trainSample rows) and
+    // the seeds (first numCentroids rows): both are prefixes of the
+    // same (md5-hash, id) order.
+    val rows = LocalIvf.sample(
+      trainerSample(corpus, idCol, vecCol).limit(math.max(numCentroids, trainSample)).collect(),
+      who, vecCol)
+    coarseDF(corpus.sparkSession,
+      LocalIvf.trainCoarse(rows, numCentroids, trainRounds, trainSample),
+      corpus.schema(idCol).dataType)
   }
 
-  /** The trainers' shared bounded collect: (id-as-long, pre-quantized
-    * vector) in the (md5-hash, id) global order, first `take` rows.
-    * Quantization happens in the ENGINE expression (the driver never
-    * touches a float) — identical for the IVF and PQ trainers, which is
-    * what lets `annIndex` collect ONCE for both. */
-  private[ext] def trainerSampleRows(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      take: Int): Array[(Long, Array[Long])] =
-    trainerSampleRaw(corpus, idCol, vecCol, take)
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-
-  /** The raw Rows behind [[trainerSampleRows]] — `annIndex` reads one
-    * row PAST the trainers' bounded take off this form, so it can both
-    * feed the trainers their exact prefix and detect (null-safely)
-    * whether the whole corpus is already on the driver. */
-  private[ext] def trainerSampleRaw(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      take: Int): Array[org.apache.spark.sql.Row] = {
+  /** The trainers' shared sample order over (sid = id as long, qv):
+    * ascending (md5-hash of the id, id). Unlimited: every caller states
+    * its own take, and the distributed engine runs the limit as one
+    * TakeOrdered merge. */
+  private def hashOrdered(df: DataFrame, idCol: String, qv: Column): DataFrame = {
     val idHash = conv(substring(md5(col(idCol).cast("string").cast("binary")), 1, 15), 16, 10)
       .cast("long")
-    val qv = transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long"))
-    corpus
-      .select(col(idCol).cast("long").as("sid"), qv.as("qv"), idHash.as("__h"))
+    df.select(col(idCol).cast("long").as("sid"), qv.as("qv"), idHash.as("__h"))
       .orderBy(asc("__h"), asc("sid"))
-      .limit(take)
       .select("sid", "qv")
-      .collect()
   }
 
-  /** The trained coarse centroids as driver arrays — the Lloyd half of
-    * [[ivfCentroidsFromSample]] (shared with `annIndex`'s local
-    * assignment twin, which needs the arrays, not the DataFrame). */
-  private def localCoarseTrain(
-      rows: Array[(Long, Array[Long])],
-      numCentroids: Int,
-      trainRounds: Int,
-      trainSample: Int): Array[(Long, Array[Long])] = {
-    val sample = rows.map(_._2).take(trainSample)
-    var cents: Array[(Long, Array[Long])] = rows.take(numCentroids)
-    for (_ <- 1 to trainRounds) cents = localLloydRound(sample, cents)
-    cents
+  /** [[hashOrdered]] over the corpus's quantized vectors (quantized in
+    * the ENGINE expression, identically for the IVF and PQ trainers). */
+  private def trainerSample(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    hashOrdered(corpus, idCol, qvT(col(vecCol)))
+
+  /** The bounded twins' one corpus read: the whole hash-ordered trainer
+    * sample, when the corpus has at most `bound` rows and no duplicate
+    * ids (the distributed `groupBy(id)` assignment would collapse
+    * those). None sends the caller down its distributed path. */
+  private def boundedSample(
+      corpus: DataFrame, idCol: String, vecCol: String, who: String,
+      bound: Long): Option[LocalIvf.Cents] = {
+    requireIntegralId(corpus, idCol, who)
+    Bounded.collect(trainerSample(corpus, idCol, vecCol), bound)
+      .map(LocalIvf.sample(_, who, vecCol))
+      .filter(uniqueIds)
   }
 
-  /** `ivfCentroids`' driver half over already-collected sample rows. */
-  private[ext] def ivfCentroidsFromSample(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Array[(Long, Array[Long])],
-      idType: org.apache.spark.sql.types.DataType,
-      numCentroids: Int,
-      trainRounds: Int,
-      trainSample: Int): DataFrame =
-    coarseDF(spark,
-      localCoarseTrain(rows, numCentroids, trainRounds, trainSample), idType)
+  private def uniqueIds(rows: LocalIvf.Cents): Boolean =
+    rows.iterator.map(_._1).toSet.size == rows.length
 
-  /** LocalRelation form of trained coarse centroids. */
+  /** LocalRelation form of trained coarse centroids: (cent_id, cv, nrm),
+    * broadcast into every consumer with no job, no cache entry, no
+    * lineage. */
   private def coarseDF(
       spark: org.apache.spark.sql.SparkSession,
-      cents: Array[(Long, Array[Long])],
-      idType: org.apache.spark.sql.types.DataType): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cent_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cv",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        nullable = false),
-      org.apache.spark.sql.types.StructField("nrm",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val out: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList
-    cents.foreach { case (cid, cv) =>
-      out.add(org.apache.spark.sql.Row(cid, cv.toSeq, localDot(cv, cv)))
-    }
-    // LocalRelation result: broadcasts into every consumer with no job,
-    // no cache entry, no lineage to truncate
-    spark.createDataFrame(out, schema)
-      .select(col("cent_id").cast(idType).as("cent_id"), col("cv"), col("nrm"))
-  }
+      cents: LocalIvf.Cents,
+      idType: DataType): DataFrame =
+    Bounded.relation(spark,
+      cents.toSeq.map { case (cid, cv) => Row(cid, cv.toSeq, LocalIvf.dot(cv, cv)) },
+      Seq("cent_id" -> LongType, "cv" -> Bounded.LongArray, "nrm" -> LongType),
+      idType, Seq("cent_id"))
 
   /** The driver-local trainers order and collect the sample through
-    * `cast(idCol, long)` — exact for every integral id, but a
-    * non-numeric string id would silently null out where the r12
-    * distributed formulation handled any orderable type (round-13
-    * verdict, "latent type narrowing"). Fail loudly at entry instead:
-    * every caller in the engine passes an int64 id, and a deployment
-    * with string ids must hash them to int64 first (as the fixtures
-    * do), not lose them to a silent null sort key. */
-  private def requireIntegralId(df: DataFrame, idCol: String, who: String): Unit = {
-    val t = df.schema(idCol).dataType
-    require(Seq(
-      org.apache.spark.sql.types.LongType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.ByteType).contains(t),
+    * `cast(idCol, long)`: exact for every integral id, but a
+    * non-numeric string id would silently null out. Fail loudly at
+    * entry instead: every caller in the engine passes an int64 id, and
+    * a deployment with string ids must hash them to int64 first (as the
+    * fixtures do). */
+  private def requireIntegralId(df: DataFrame, idCol: String, who: String): Unit =
+    require(Bounded.integralId(df, idCol),
       s"$who: id column '$idCol' must be an integral type (the driver-local " +
-        s"trainer orders the sample by cast($idCol as long)); got $t")
-  }
+        s"trainer orders the sample by cast($idCol as long)); got ${df.schema(idCol).dataType}")
 
-  /** Exact int64 dot — the driver twin of the codegen'd `QuantizedDot`
-    * over pre-quantized arrays (equal lengths by construction here). */
-  private def localDot(a: Array[Long], b: Array[Long]): Long = {
-    var acc = 0L
-    var i = 0
-    while (i < a.length) { acc += a(i) * b(i); i += 1 }
-    acc
-  }
+  /** The (probe_id, id, qdot, rn) LocalRelation of a driver-local top-k,
+    * ids cast back to the input's id type. */
+  private def topKRelation(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[Row],
+      idCol: String,
+      idType: DataType): DataFrame =
+    Bounded.relation(spark, rows,
+      Seq("probe_id" -> LongType, idCol -> LongType, "qdot" -> LongType, "rn" -> LongType),
+      idType, Seq("probe_id", idCol))
 
-  /** One synchronous Lloyd round over the bounded sample, exact int64:
-    * per sample vector the argmax of 2*dot(x,c) - |c|^2 with ties to the
-    * smallest cent_id (= the distributed max_by(cent_id, (cd, -cent_id))),
-    * then per-list truncating-division component means, empty lists
-    * keeping their previous centroid (= the left-join coalesce
-    * fallback). Chunk-parallel over the sample: per-list (count,
-    * component-sum) accumulators merge by addition, so the thread split
-    * cannot change the result. */
-  private def localLloydRound(
-      sample: Array[Array[Long]],
-      cents: Array[(Long, Array[Long])]): Array[(Long, Array[Long])] = {
-    val k = cents.length
-    if (k == 0 || sample.isEmpty) return cents
-    val dim = sample(0).length
-    val cnorm = cents.map(c => localDot(c._2, c._2))
-    val nThreads = math.max(1, math.min(
-      Runtime.getRuntime.availableProcessors(), sample.length / 256 + 1))
-    val bounds = (0 to nThreads).map(t => (sample.length.toLong * t / nThreads).toInt)
-    val partials = (0 until nThreads).map { t =>
-      java.util.concurrent.CompletableFuture.supplyAsync { () =>
-        val counts = new Array[Long](k)
-        val sums = Array.ofDim[Long](k, dim)
-        var r = bounds(t)
-        while (r < bounds(t + 1)) {
-          val x = sample(r)
-          var best = 0
-          var bestCd = 0L
-          var first = true
-          var c = 0
-          while (c < k) {
-            val cd = 2L * localDot(x, cents(c)._2) - cnorm(c)
-            if (first || cd > bestCd ||
-                (cd == bestCd && cents(c)._1 < cents(best)._1)) {
-              best = c; bestCd = cd; first = false
-            }
-            c += 1
-          }
-          counts(best) += 1
-          val s = sums(best)
-          var i = 0
-          while (i < dim) { s(i) += x(i); i += 1 }
-          r += 1
-        }
-        (counts, sums)
-      }
-    }.map(_.join())
-    val counts = new Array[Long](k)
-    val sums = Array.ofDim[Long](k, dim)
-    partials.foreach { case (cs, ss) =>
-      var c = 0
-      while (c < k) {
-        counts(c) += cs(c)
-        var i = 0
-        while (i < dim) { sums(c)(i) += ss(c)(i); i += 1 }
-        c += 1
-      }
-    }
-    cents.zipWithIndex.map { case ((cid, cv0), c) =>
-      if (counts(c) == 0) (cid, cv0)
-      else (cid, Array.tabulate(dim)(i => sums(c)(i) / counts(c)))
-    }
-  }
+  /** One probe's ranked (score, id) list as (probe_id, id, score, rn)
+    * rows, rn from 1. */
+  private def ranked(pid: Long, top: Seq[(Long, Long)]): Seq[Row] =
+    top.zipWithIndex.map { case ((score, id), i) => Row(pid, id, score, (i + 1).toLong) }
 
   /** Euclidean-nearest-centroid list assignment: (idCol, list_id), one
     * row per corpus vector — a map-side broadcast join +
@@ -690,7 +588,8 @@ object Similarity {
       trainSample: Int = defaultTrainSample,
       scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
     require(perList > 0, s"need perList > 0, got $perList")
-    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample, scope)
+    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample,
+      scope, "diversitySample")
     val assigned = corpus.crossJoin(broadcast(cents))
       .select(col(idCol), col("cent_id"),
         (lit(2L) * quantizedDot(col(vecCol), col("cv")) - col("nrm")).as("cd"))
@@ -735,21 +634,19 @@ object Similarity {
     val scope = new graft.util.CacheScope
     val cand = scope.cache(
       shortlist.select(col("probe_id"), col("vec_id"), col("qdot")))
-    // r14 wave 4 (guide §1.2): the greedy rounds are k sequential
-    // join-penalize-argmax jobs over a SHORTLIST-scale relation (≤ m
-    // rows per probe by the first-stage contract) — pure scheduling
-    // latency at any corpus size. Below a bounded shortlist row count
-    // the whole rerank runs driver-local over one collect of the
-    // shortlist + one of its vectors; above it (or on any input outside
-    // the exact-replica assumptions) the distributed loop below runs
-    // unchanged.
-    val longT = org.apache.spark.sql.types.LongType
-    if (mmrLocalMax > 0 &&
-        cand.schema.forall(_.dataType == longT) &&
-        vectors.schema(idCol).dataType == longT &&
-        cand.count() <= mmrLocalMax) {
-      val local = localMmr(cand, vectors, idCol, vecCol, k, lambdaPermille)
-      if (local.isDefined) { scope.close(); return local.get }
+    // The greedy rounds are k sequential join-penalize-argmax jobs over
+    // a SHORTLIST-scale relation: pure scheduling latency at any corpus
+    // size. A shortlist within the vector bound reranks driver-local off
+    // one bounded read of it and one of its vectors; past the bound (or
+    // on input outside the replica's assumptions) the distributed loop
+    // below runs unchanged.
+    if (cand.schema.forall(_.dataType == LongType) &&
+        vectors.schema(idCol).dataType == LongType) {
+      Bounded.collect(cand, Bounded.limit(Bounded.Vectors))
+        .flatMap(localMmr(_, vectors, idCol, vecCol, k, lambdaPermille)) match {
+        case Some(local) => scope.close(); return local
+        case None =>
+      }
     }
     val withVec = shortlist.select(col("probe_id"), col("vec_id"))
       .join(vectors.select(col(idCol).as("vec_id"), col(vecCol).as("__v")), "vec_id")
@@ -790,15 +687,9 @@ object Similarity {
     selected
   }
 
-  /** Bounded-shortlist ceiling for the driver-local MMR fast path
-    * (`SPARK_GRAFT_MMR_LOCAL_MAX` / `graft.mmr.local.max`; 0 disables). */
-  private def mmrLocalMax: Long = sys.props.get("graft.mmr.local.max")
-    .orElse(sys.env.get("SPARK_GRAFT_MMR_LOCAL_MAX"))
-    .map(_.toLong).getOrElse(32768L)
-
   /** Driver-local exact replica of `mmrRerank`'s greedy rounds over a
-    * bounded shortlist: collects the (probe, vec, qdot) candidates and
-    * the shortlist ids' PRE-QUANTIZED vectors (the engine expression
+    * bounded shortlist's (probe, vec, qdot) rows: collects the shortlist
+    * ids' PRE-QUANTIZED vectors (the engine expression
     * quantizes — the driver never touches a float), then replays the
     * distributed trajectory bit-for-bit: round 1 argmax (qdot,
     * smaller-id tie); each later round penalizes a remaining candidate
@@ -809,26 +700,22 @@ object Similarity {
     * the distributed inner pen join. Returns None (caller falls back)
     * on null ids/qdots, null/ragged/duplicate vector rows. */
   private def localMmr(
-      cand: DataFrame,
+      candRows: Array[Row],
       vectors: DataFrame,
       idCol: String,
       vecCol: String,
       k: Int,
       lambdaPermille: Int): Option[DataFrame] = {
-    val spark = cand.sparkSession
-    val candRows = cand.collect()
+    val spark = vectors.sparkSession
     if (candRows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
       return None
     val ids = candRows.map(_.getLong(1)).distinct
-    val idRel = spark.createDataFrame(
-      java.util.Arrays.asList(ids.map(org.apache.spark.sql.Row(_)): _*),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__mid",
-          org.apache.spark.sql.types.LongType, nullable = false))))
-    val qvE = transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long"))
+    val idRel = Bounded.relation(spark, ids.toSeq.map(Row(_)), Seq("__mid" -> LongType))
+    // bounded by the shortlist's distinct ids (a duplicate vector row
+    // bails below)
     val vecRows = vectors
       .join(broadcast(idRel), col(idCol) === col("__mid"))
-      .select(col(idCol).as("vid"), qvE.as("qv"))
+      .select(col(idCol).as("vid"), qvT(col(vecCol)).as("qv"))
       .collect()
     if (vecRows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
     val vecMap = scala.collection.mutable.LongMap.empty[Array[Long]]
@@ -851,7 +738,7 @@ object Similarity {
       buf += ((r.getLong(1), r.getLong(2)))
     }
     val lam = lambdaPermille.toLong
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row]
+    val out = new scala.collection.mutable.ArrayBuffer[Row]
     perProbe.forEach { (probe, rows) =>
       val selected = new scala.collection.mutable.ArrayBuffer[(Long, Long)]
       val selSet = new scala.collection.mutable.HashSet[Long]
@@ -875,7 +762,7 @@ object Similarity {
             var pen = Long.MinValue
             selected.foreach { case (sv, _) =>
               vecMap.get(sv).foreach { sq =>
-                val s = localDot(qv, sq)
+                val s = LocalIvf.dot(qv, sq)
                 if (s > pen) pen = s
               }
             }
@@ -890,20 +777,10 @@ object Similarity {
         }
         if (bi >= 0) { selected += rows(bi); selSet += rows(bi)._1 }
       }
-      var rn = 0
-      while (rn < selected.length) {
-        out.add(org.apache.spark.sql.Row(
-          probe, selected(rn)._1, selected(rn)._2, (rn + 1).toLong))
-        rn += 1
-      }
+      out ++= ranked(probe, selected.toSeq.map(_.swap))
     }
-    val longT = org.apache.spark.sql.types.LongType
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id", longT, nullable = false),
-      org.apache.spark.sql.types.StructField("vec_id", longT, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot", longT, nullable = false),
-      org.apache.spark.sql.types.StructField("rn", longT, nullable = false)))
-    Some(spark.createDataFrame(out, schema))
+    Some(Bounded.relation(spark, out.toSeq,
+      Seq("probe_id", "vec_id", "qdot", "rn").map(_ -> LongType)))
   }
 
   /** Content-based ingest drift monitor: each group's (source's /
@@ -1026,7 +903,8 @@ object Similarity {
       trainRounds: Int = defaultTrainRounds,
       trainSample: Int = defaultTrainSample,
       scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
-    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample, scope)
+    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample,
+      scope, "ivfListSizes")
     ivfAssign(corpus, idCol, vecCol, cents)
       .groupBy("list_id").agg(count(lit(1)).as("n"))
   }
@@ -1069,7 +947,8 @@ object Similarity {
       scope: graft.util.CacheScope = new graft.util.CacheScope,
       candidateFilter: Column = lit(true),
       maxQdot: Long = Long.MaxValue): DataFrame = {
-    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample, scope)
+    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample,
+      scope, "ivfTopK")
     val lists = ivfAssign(corpus, idCol, vecCol, cents)
     val candidates = corpus.where(candidateFilter)
     val probes = corpus.where(probeFilter)
@@ -1156,15 +1035,6 @@ object Similarity {
     * the distributed path) or supplied a matching `localEdgeFilter`. */
   private val noEdgeFilter: Column = lit(true)
 
-  /** Bounded-corpus ceiling for the driver-local kNN-graph fast path
-    * (`SPARK_GRAFT_KNN_LOCAL_MAX` / `graft.knn.local.max`; 0 disables).
-    * The effective bound is min(this, trainSample): below it the
-    * hash-ordered collect brings back no more rows than the trainer's
-    * own bounded sample collect already does by contract. */
-  private def knnLocalMax: Long = sys.props.get("graft.knn.local.max")
-    .orElse(sys.env.get("SPARK_GRAFT_KNN_LOCAL_MAX"))
-    .map(_.toLong).getOrElse(32768L)
-
   def knnGraphIvf(
       corpus: DataFrame,
       idCol: String,
@@ -1184,28 +1054,19 @@ object Similarity {
     // leaf its consumers (pageRank's edge cache, SemDeDup-style
     // pruning) re-read for free
     if (eager) {
-      // r14 wave 4 (guide §1.2): the corpus count is needed for the √n
-      // centroid budget anyway; below the trainer's own bounded-collect
-      // contract the ENTIRE derivation (train + assign + probe +
-      // rescore + topk) runs driver-local over one hash-ordered collect
-      // — at sf0.1 this replaces ~10 scheduler-bound jobs per graph
-      // query with 2 (count + collect). A corpus above the bound takes
-      // exactly the distributed path below, unchanged.
+      // The corpus count is needed for the √n centroid budget anyway.
+      // Within min(vector bound, trainSample) the ENTIRE derivation
+      // (train + assign + probe + rescore + top-k) runs driver-local
+      // over one bounded hash-ordered read: 2 jobs (count + read)
+      // instead of ~10 scheduler-bound ones. A corpus past the bound
+      // takes exactly the distributed path below.
       val n = corpus.count()
       val kCents =
         if (numCentroids > 0) numCentroids else graphCentroidBudget(n)
-      val localOk = knnLocalMax > 0 &&
-        n <= math.min(knnLocalMax, trainSample.toLong) &&
-        Seq[org.apache.spark.sql.types.DataType](
-          org.apache.spark.sql.types.LongType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.ShortType,
-          org.apache.spark.sql.types.ByteType)
-          .contains(corpus.schema(idCol).dataType) &&
-        ((edgeFilter eq noEdgeFilter) || localEdgeFilter.isDefined)
-      if (localOk) {
+      val bound = math.min(Bounded.limit(Bounded.Vectors), trainSample.toLong)
+      if (n <= bound && ((edgeFilter eq noEdgeFilter) || localEdgeFilter.isDefined)) {
         val local = localKnnGraph(corpus, idCol, vecCol, k, kCents, nprobe,
-          trainRounds, trainSample,
+          trainRounds, trainSample, bound,
           localEdgeFilter.getOrElse((_: Long, _: Long) => true))
         // the graph stays a CHECKPOINT leaf like the distributed result:
         // join-heavy consumers (triangles' wedge self-join, linkpred)
@@ -1226,7 +1087,8 @@ object Similarity {
     // quantizer the fixed-K oracles replay.
     val kCents =
       if (numCentroids > 0) numCentroids else graphCentroidBudget(corpus.count())
-    val cents = ivfCentroids(corpus, idCol, vecCol, kCents, trainRounds, trainSample, scope)
+    val cents = ivfCentroids(corpus, idCol, vecCol, kCents, trainRounds, trainSample,
+      scope, "knnGraphIvf")
     val lists = ivfAssign(corpus, idCol, vecCol, cents)
     val aff = corpus.crossJoin(broadcast(cents))
       .select(col(idCol).as("probe_id"), col("cent_id"),
@@ -1249,23 +1111,14 @@ object Similarity {
   }
 
   /** Driver-local exact replica of the distributed kNN-graph derivation
-    * for a corpus within the trainer's bounded-collect contract: ONE
-    * hash-ordered collect of (id, pre-quantized vector) — the SAME rows,
-    * in the SAME (md5-hash, id) order, that `ivfCentroids` would have
-    * collected — then training (the shared `localLloydRound`),
-    * assignment (argmax of 2·dot−|c|², ties to the smallest cent_id =
-    * the distributed `max_by`), probe-list selection (top `nprobe` by
-    * (cd desc, cent_id asc) = the `TopKPerKey` order), candidate
-    * generation over the inverted lists (each corpus row sits in
+    * over the whole corpus, read once in the trainer's (md5-hash, id)
+    * order: training, then per row ONE affinity sweep feeds both its
+    * assignment and its `nprobe` probe lists (`LocalIvf.Coarse`),
+    * candidates come from the probed inverted lists (each corpus row in
     * exactly one list, self-pairs excluded, `pred` applied BEFORE the
-    * rank cut), and the top-k rank (qdot desc, id asc = `rankTopK`).
-    * All int64 — the arithmetic is the same `localDot` the trainer
-    * parity spec pins against the codegen'd `QuantizedDot`.
-    *
-    * Returns None (caller falls back to the distributed path) on
-    * anything outside the exact-replica assumptions: null ids/vectors,
-    * ragged dimensions, duplicate ids (the distributed `groupBy(id)`
-    * assignment would collapse those; fixtures never carry them). */
+    * rank cut), and the top-k is `rankTopK`'s (qdot desc, id asc).
+    * Returns None (distributed fallback) past `bound` rows or on
+    * duplicate ids. */
   private def localKnnGraph(
       corpus: DataFrame,
       idCol: String,
@@ -1275,135 +1128,34 @@ object Similarity {
       nprobe: Int,
       trainRounds: Int,
       trainSample: Int,
-      pred: (Long, Long) => Boolean): Option[DataFrame] = {
-    val spark = corpus.sparkSession
-    val idType = corpus.schema(idCol).dataType
-    val idHash = conv(substring(md5(col(idCol).cast("string").cast("binary")), 1, 15), 16, 10)
-      .cast("long")
-    val qvE = transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long"))
-    val collected = corpus
-      .select(col(idCol).cast("long").as("sid"), qvE.as("qv"), idHash.as("__h"))
-      .orderBy(asc("__h"), asc("sid"))
-      .collect()
-    val n = collected.length
-    if (collected.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val ids = collected.map(_.getLong(0))
-    val vecs = collected.map(_.getSeq[Long](1).toArray)
-    val dim = if (n == 0) 0 else vecs(0).length
-    if (vecs.exists(_.length != dim)) return None
-    if (ids.distinct.length != n) return None
-
-    // train: sample and seeds are prefixes of the same hash order
-    var cents: Array[(Long, Array[Long])] =
-      (0 until math.min(kCents, n)).map(i => (ids(i), vecs(i))).toArray
-    val sample = vecs.take(trainSample)
-    for (_ <- 1 to trainRounds) cents = localLloydRound(sample, cents)
-    val kk = cents.length
-    val cnorm = cents.map(c => localDot(c._2, c._2))
-    val np = math.min(nprobe, kk)
-
-    // per-row coarse affinities: ONE cd sweep feeds both the
-    // assignment argmax and the probe top-nprobe selection —
-    // chunk-parallel over rows, each row independent (deterministic)
-    val assign = new Array[Int](n)
-    val probes = Array.ofDim[Int](n, np)
-    if (n > 0 && kk > 0) {
-      val nThreads = math.max(1, math.min(
-        Runtime.getRuntime.availableProcessors(), n / 64 + 1))
-      val bounds = (0 to nThreads).map(t => (n.toLong * t / nThreads).toInt)
-      (0 until nThreads).map { t =>
-        java.util.concurrent.CompletableFuture.runAsync { () =>
-          val cd = new Array[Long](kk)
-          val order = new Array[Integer](kk)
-          var r = bounds(t)
-          while (r < bounds(t + 1)) {
-            val x = vecs(r)
-            var c = 0
-            while (c < kk) { cd(c) = 2L * localDot(x, cents(c)._2) - cnorm(c); order(c) = c; c += 1 }
-            // assignment: argmax cd, ties to the smallest cent_id
-            var best = 0
-            c = 1
-            while (c < kk) {
-              if (cd(c) > cd(best) ||
-                  (cd(c) == cd(best) && cents(c)._1 < cents(best)._1)) best = c
-              c += 1
-            }
-            assign(r) = best
-            // probe lists: top np by (cd desc, cent_id asc)
-            java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
-              val d = java.lang.Long.compare(cd(b), cd(a))
-              if (d != 0) d else java.lang.Long.compare(cents(a)._1, cents(b)._1)
-            })
-            var p = 0
-            while (p < np) { probes(r)(p) = order(p); p += 1 }
-            r += 1
+      bound: Long,
+      pred: (Long, Long) => Boolean): Option[DataFrame] =
+    boundedSample(corpus, idCol, vecCol, "knnGraphIvf", bound).map { rows =>
+      val n = rows.length
+      val ids = rows.map(_._1)
+      val vecs = rows.map(_._2)
+      val q = new LocalIvf.Coarse(LocalIvf.trainCoarse(rows, kCents, trainRounds, trainSample))
+      val np = math.min(nprobe, q.k)
+      val out = if (n == 0 || q.k == 0) Seq.empty[Row] else {
+        val swept = LocalIvf.chunks(n, 64) { (lo, hi) =>
+          (lo until hi).map { r =>
+            val cd = q.affinity(vecs(r))
+            (q.assign(cd), q.route(cd, np))
           }
-        }
-      }.foreach(_.join())
-    }
-
-    // inverted lists by centroid index
-    val listOf = Array.fill(kk)(new scala.collection.mutable.ArrayBuffer[Int])
-    var i = 0
-    while (i < n) { listOf(assign(i)) += i; i += 1 }
-
-    // candidates + per-probe top-k (qdot desc, id asc), rn 1..k —
-    // chunks land indexed by thread so the output row order is
-    // deterministic (probe order of the collect)
-    val all = new java.util.ArrayList[org.apache.spark.sql.Row]
-    if (n > 0 && kk > 0) {
-      val nThreads = math.max(1, math.min(
-        Runtime.getRuntime.availableProcessors(), n / 64 + 1))
-      val bounds = (0 to nThreads).map(t => (n.toLong * t / nThreads).toInt)
-      val chunks = new Array[Array[org.apache.spark.sql.Row]](nThreads)
-      (0 until nThreads).map { t =>
-        java.util.concurrent.CompletableFuture.runAsync { () =>
-          val rows = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]
-          val cand = new scala.collection.mutable.ArrayBuffer[(Long, Long)]
-          var r = bounds(t)
-          while (r < bounds(t + 1)) {
+        }.flatten
+        val listOf = (0 until n).groupBy(swept(_)._1)
+        LocalIvf.chunks(n, 64) { (lo, hi) =>
+          (lo until hi).flatMap { r =>
             val pid = ids(r)
-            val pv = vecs(r)
-            cand.clear()
-            var p = 0
-            while (p < np) {
-              val members = listOf(probes(r)(p))
-              var m = 0
-              while (m < members.length) {
-                val y = members(m)
-                if (ids(y) != pid && pred(pid, ids(y)))
-                  cand += ((localDot(pv, vecs(y)), ids(y)))
-                m += 1
-              }
-              p += 1
-            }
-            val top = cand.sortWith((a, b) =>
-              a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)).take(k)
-            var rn = 0
-            while (rn < top.length) {
-              rows += org.apache.spark.sql.Row(pid, top(rn)._2, top(rn)._1, (rn + 1).toLong)
-              rn += 1
-            }
-            r += 1
+            val cand = for (p <- swept(r)._2.toSeq; y <- listOf.getOrElse(p, Nil)
+                if ids(y) != pid && pred(pid, ids(y)))
+              yield (LocalIvf.dot(vecs(r), vecs(y)), ids(y))
+            ranked(pid, LocalIvf.topK(cand, k, desc = true))
           }
-          chunks(t) = rows.toArray
-        }
-      }.foreach(_.join())
-      chunks.foreach(chunk => chunk.foreach(all.add))
+        }.flatten
+      }
+      topKRelation(corpus.sparkSession, out, idCol, corpus.schema(idCol).dataType)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rn",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    Some(spark.createDataFrame(all, schema)
-      .select(col("probe_id").cast(idType).as("probe_id"),
-        col(idCol).cast(idType).as(idCol), col("qdot"), col("rn")))
-  }
 
   /** Margin-based parallel-pair (bitext) mining — the selection rule
     * behind large mined translation corpora (Artetxe & Schwenk,
@@ -1576,7 +1328,7 @@ object Similarity {
       numCentroids: Int = 64,
       scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
     val cents = ivfCentroids(emb, idCol, vecCol, numCentroids,
-      defaultTrainRounds, defaultTrainSample, scope)
+      defaultTrainRounds, defaultTrainSample, scope, "oodScreen")
     val best = emb.crossJoin(broadcast(cents))
       .select(col(idCol),
         (lit(2L) * quantizedDot(col(vecCol), col("cv")) - col("nrm")).as("cd"))
@@ -1624,15 +1376,9 @@ object Similarity {
     // data-proportional shuffle budget; the kept (id, list_id) rows
     // return as a checkpoint leaf
     if (eager) {
-      // r14 wave 5 (guide §1.2): below the trainer's own bounded
-      // collect the whole kernel (train + assign + within-list pair
-      // scan + drop) runs driver-local off ONE hash-ordered collect —
-      // the localKnnGraph treatment applied to SemDeDup. Exact
-      // replica: same trainer prefix, assignment argmax with
-      // smallest-cent_id ties (= ivfAssign's max_by), a pair (a < b)
-      // drops b iff qdot ≥ minQdot (the distributed filter verbatim,
-      // both vectors pre-quantized by the same expression). Lists are
-      // independent, so the Σm² scan chunk-parallelizes by list.
+      // Within the vector bound the whole kernel (train + assign +
+      // within-list pair scan + drop) runs driver-local off ONE bounded
+      // hash-ordered read; see localSemDedupKeep.
       localSemDedupKeep(corpus, idCol, vecCol, minQdot, numCentroids,
         trainRounds, trainSample) match {
         case Some(df) => return df.localCheckpoint(true)
@@ -1643,7 +1389,8 @@ object Similarity {
           trainRounds, trainSample, scope, eager = false).localCheckpoint(true)
       }
     }
-    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample, scope)
+    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample,
+      scope, "semDedupKeep")
     // (id, vec, list_id): consumed by both sides of the within-list
     // self-join and by the final anti-join — cache for the query's
     // lifetime (Verify/Bench clear per query)
@@ -1662,10 +1409,11 @@ object Similarity {
   }
 
   /** Driver-local exact replica of [[semDedupKeep]] for a corpus within
-    * the trainer's bounded-collect contract — see the eager branch
-    * there for the replica argument. Returns None (distributed
-    * fallback) on null ids/vectors, duplicate ids, ragged dimensions,
-    * or a corpus past min(trainer take, `SPARK_GRAFT_KNN_LOCAL_MAX`). */
+    * min(trainer take, vector bound): the same trainer prefix, the
+    * shared assignment, and a pair (a < b) in one list drops b iff
+    * qdot ≥ minQdot (the distributed filter verbatim). Lists are
+    * independent, so the Σm² scan runs chunk-parallel by list. Returns
+    * None (distributed fallback) past the bound or on duplicate ids. */
   private def localSemDedupKeep(
       corpus: DataFrame,
       idCol: String,
@@ -1674,87 +1422,26 @@ object Similarity {
       numCentroids: Int,
       trainRounds: Int,
       trainSample: Int): Option[DataFrame] = {
-    if (knnLocalMax <= 0) return None
-    val idType = corpus.schema(idCol).dataType
-    if (!Seq[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(idType)) return None
-    val spark = corpus.sparkSession
-    val take = math.max(numCentroids, trainSample)
-    val raw = trainerSampleRaw(corpus, idCol, vecCol, take + 1)
-    val n = raw.length
-    if (n > math.min(take.toLong, knnLocalMax)) return None
-    if (raw.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val rows = raw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val dim = if (n == 0) 0 else rows(0)._2.length
-    if (rows.exists(_._2.length != dim)) return None
-    if (rows.iterator.map(_._1).toSet.size != n) return None
-
-    val cents = localCoarseTrain(rows, numCentroids, trainRounds, trainSample)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("list_id",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    def finish(rows: java.util.List[org.apache.spark.sql.Row]): Option[DataFrame] =
-      Some(spark.createDataFrame(rows, schema)
-        .select(col(idCol).cast(idType).as(idCol),
-          col("list_id").cast(idType).as("list_id")))
-    if (n == 0 || cents.isEmpty)
-      return finish(java.util.Collections.emptyList[org.apache.spark.sql.Row])
-
-    // assignment: argmax 2·dot−|c|², ties to the smallest cent_id
-    val cnorm = cents.map(c => localDot(c._2, c._2))
-    val assign = new Array[Int](n)
-    var r = 0
-    while (r < n) {
-      val v = rows(r)._2
-      var best = 0
-      var bestCd = 2L * localDot(v, cents(0)._2) - cnorm(0)
-      var c = 1
-      while (c < cents.length) {
-        val cd = 2L * localDot(v, cents(c)._2) - cnorm(c)
-        if (cd > bestCd || (cd == bestCd && cents(c)._1 < cents(best)._1)) {
-          best = c; bestCd = cd
+    val bound = math.min(math.max(numCentroids, trainSample).toLong, Bounded.limit(Bounded.Vectors))
+    boundedSample(corpus, idCol, vecCol, "semDedupKeep", bound).map { rows =>
+      val q = new LocalIvf.Coarse(
+        LocalIvf.trainCoarse(rows, numCentroids, trainRounds, trainSample))
+      val kept = if (rows.isEmpty || q.k == 0) Seq.empty[Row] else {
+        val assign = rows.map { case (_, v) => q.assign(q.affinity(v)) }
+        // members per list, sorted by id so (a < b) is the upper triangle
+        val lists = rows.indices.groupBy(assign(_)).values.toArray.map(_.sortBy(rows(_)._1))
+        val dropped = new Array[Boolean](rows.length)
+        LocalIvf.chunks(lists.length, 1) { (lo, hi) =>
+          for (l <- lo until hi; i <- lists(l).indices; j <- i + 1 until lists(l).length)
+            if (LocalIvf.dot(rows(lists(l)(i))._2, rows(lists(l)(j))._2) >= minQdot)
+              dropped(lists(l)(j)) = true
         }
-        c += 1
+        rows.indices.filterNot(dropped).map(r => Row(rows(r)._1, q.ids(assign(r))))
       }
-      assign(r) = best
-      r += 1
+      Bounded.relation(corpus.sparkSession, kept,
+        Seq(idCol -> LongType, "list_id" -> LongType),
+        corpus.schema(idCol).dataType, Seq(idCol, "list_id"))
     }
-    val listOf = Array.fill(cents.length)(new scala.collection.mutable.ArrayBuffer[Int])
-    r = 0
-    while (r < n) { listOf(assign(r)) += r; r += 1 }
-
-    // within-list pair scan: drop the larger id of any pair at/above
-    // the threshold — lists are independent, chunk-parallel by list
-    val dropped = new Array[Boolean](n)
-    listOf.filter(_.length > 1).map { members =>
-      java.util.concurrent.CompletableFuture.runAsync { () =>
-        // sort by id so (a < b) enumeration is the plain upper triangle
-        val byId = members.sortBy(rows(_)._1)
-        var i = 0
-        while (i < byId.length) {
-          var j = i + 1
-          val vi = rows(byId(i))._2
-          while (j < byId.length) {
-            if (localDot(vi, rows(byId(j))._2) >= minQdot) dropped(byId(j)) = true
-            j += 1
-          }
-          i += 1
-        }
-      }
-    }.foreach(_.join())
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row]
-    r = 0
-    while (r < n) {
-      if (!dropped(r))
-        out.add(org.apache.spark.sql.Row(rows(r)._1, cents(assign(r))._1))
-      r += 1
-    }
-    finish(out)
   }
 
   /** Product-quantization encoder — the storage half of the IVF-PQ
@@ -1825,73 +1512,22 @@ object Similarity {
       trainSample: Int,
       scope: graft.util.CacheScope): DataFrame = {
     requireIntegralId(qdf, idCol, "pqCodebookFromQ")
-    // Driver-local Lloyd round over the bounded sample — the
-    // ivfCentroids rationale verbatim (see there): one distributed
-    // TakeOrdered collect replaces a broadcast + two shuffle rounds +
-    // fallback join, exact int64 arithmetic, codes = hash rank of the
-    // first `codebook` sample rows, per-(sub) argmin ties to the
-    // smaller code, truncating-division means, codeless (sub, code)
-    // cells keep their seed vector.
-    val idHash = conv(substring(md5(col(idCol).cast("string").cast("binary")), 1, 15), 16, 10)
-      .cast("long")
-    val rows = qdf
-      .select(col(idCol).cast("long").as("sid"), col("q"), idHash.as("__h"))
-      .orderBy(asc("__h"), asc("sid"))
-      .limit(trainSample)
-      .select("sid", "q")
-      .collect()
-    pqCodebookFromSample(qdf.sparkSession,
-      rows.map(_.getSeq[Long](1).toArray), numSub, subDim, codebook)
+    // driver-local Lloyd round over the bounded sample, the
+    // ivfCentroids rationale verbatim (see there); codes = hash rank of
+    // the first `codebook` sample rows, codeless cells keep their seed
+    val rows = LocalIvf.sample(
+      hashOrdered(qdf, idCol, col("q")).limit(trainSample).collect(), "pqCodebookFromQ", "q")
+    bookDF(qdf.sparkSession, LocalIvf.trainBook(rows.map(_._2), numSub, subDim, codebook))
   }
 
-  /** `pqCodebookFromQ`'s driver half over an already-collected sample
-    * (the quantized vectors in (md5-hash, id) order, first trainSample
-    * rows) — shared with `annIndex`'s single-collect build. */
-  private[ext] def pqCodebookFromSample(
-      spark: org.apache.spark.sql.SparkSession,
-      sample: Array[Array[Long]],
-      numSub: Int,
-      subDim: Int,
-      codebook: Int): DataFrame =
-    bookDF(spark, localBookTrain(sample, numSub, subDim, codebook), numSub)
-
-  /** The trained PQ codebook as driver arrays, indexed by subspace —
-    * the Lloyd half of [[pqCodebookFromSample]] (shared with
-    * `annIndex`'s local encode twin). */
-  private def localBookTrain(
-      sample: Array[Array[Long]],
-      numSub: Int,
-      subDim: Int,
-      codebook: Int): Array[Array[(Long, Array[Long])]] = {
-    val nSeeds = math.min(codebook, sample.length)
-    // per sub: codebook seed subvectors (code = sample rank)
-    def sliceOf(v: Array[Long], sub: Int): Array[Long] =
-      java.util.Arrays.copyOfRange(v, sub * subDim, (sub + 1) * subDim)
-    Array.tabulate(numSub) { sub =>
-      val seeds = Array.tabulate(nSeeds)(code => (code.toLong, sliceOf(sample(code), sub)))
-      localLloydRound(sample.map(sliceOf(_, sub)), seeds)
-    }
-  }
-
-  /** LocalRelation form of a trained PQ codebook. */
+  /** LocalRelation form of a trained PQ codebook: (sub, code, cv). */
   private def bookDF(
       spark: org.apache.spark.sql.SparkSession,
-      book: Array[Array[(Long, Array[Long])]],
-      numSub: Int): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("sub",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("code",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cv",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        nullable = false)))
-    val out: java.util.List[org.apache.spark.sql.Row] = new java.util.ArrayList
-    for (sub <- 0 until numSub; (code, cv) <- book(sub))
-      out.add(org.apache.spark.sql.Row(sub, code, cv.toSeq))
-    spark.createDataFrame(out, schema)
-  }
+      book: Array[LocalIvf.Cents]): DataFrame =
+    Bounded.relation(spark,
+      for (sub <- book.indices; (code, cv) <- book(sub)) yield Row(sub, code, cv.toSeq),
+      Seq("sub" -> org.apache.spark.sql.types.IntegerType, "code" -> LongType,
+        "cv" -> Bounded.LongArray))
 
   /** Encode the corpus under a trained codebook: (id, sub, code, qerr)
     * — a map-side broadcast join + partial-aggregable min_by, ≤ 1 row
@@ -2011,81 +1647,29 @@ object Similarity {
     val spark = corpus.sparkSession
     val idType = corpus.schema(idCol).dataType
     val subDim = dim / numSub
-    // r14 wave 4 (guide §1.2): both trainers collect the SAME rows — the
-    // identical quantized projection in the identical (md5-hash, id)
-    // order (the PQ sample is the first trainSample rows, a prefix of
-    // the IVF take) — so ONE bounded TakeOrdered serves both, halving
-    // the per-build trainer jobs.
-    // r14 wave 5: the collect asks for ONE row beyond the trainers'
-    // bounded take. The trainers still consume exactly their prefix,
-    // and a short read proves the whole corpus is already on the
-    // driver — in which case assignment and encode (normally the two
-    // distributed corpus passes) run as exact local twins over the
-    // same rows: argmax of 2·dot−|c|² with smallest-cent_id ties
-    // (= ivfAssign's max_by) and per-subspace argmin of ‖sv−cv‖² with
-    // smallest-code ties (= pqCodes' min_by). A corpus past the bound
-    // (or with null/duplicate/ragged rows) takes the distributed
-    // passes below, unchanged.
+    // Both trainers read prefixes of the same hash-ordered sample (the
+    // PQ sample is a prefix of the IVF take), so ONE bounded TakeOrdered
+    // serves both. It asks for one row past the take: a short read
+    // within the vector bound proves the whole corpus is on the driver,
+    // and assignment and encode (normally the two distributed corpus
+    // passes) then run locally over the same rows.
     val take = math.max(numCentroids, trainSample)
-    val raw = trainerSampleRaw(corpus, idCol, vecCol, take + 1)
-    val rowsAll = raw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    val trainRows = rowsAll.take(take)
-    val cents = localCoarseTrain(trainRows, numCentroids, trainRounds, trainSample)
+    val rows = LocalIvf.sample(
+      trainerSample(corpus, idCol, vecCol).limit(take + 1).collect(), "annIndex", vecCol)
+    val trainRows = rows.take(take)
+    val cents = LocalIvf.trainCoarse(trainRows, numCentroids, trainRounds, trainSample)
     val coarse = coarseDF(spark, cents, idType)
-    val bookArr = localBookTrain(
+    val bookArr = LocalIvf.trainBook(
       trainRows.map(_._2).take(trainSample), numSub, subDim, codebook)
-    val book = bookDF(spark, bookArr, numSub)
-    val n = rowsAll.length
-    val localOk = knnLocalMax > 0 && n <= math.min(take.toLong, knnLocalMax) &&
-      !raw.exists(r => r.isNullAt(0) || r.isNullAt(1)) &&
-      rowsAll.forall(_._2.length == dim) &&
-      rowsAll.iterator.map(_._1).toSet.size == n
-    if (localOk) {
-      val cnorm = cents.map(c => localDot(c._2, c._2))
-      val listRows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-      val codeRows = new java.util.ArrayList[org.apache.spark.sql.Row](n * numSub)
-      rowsAll.foreach { case (id, v) =>
-        if (cents.nonEmpty) {
-          var best = 0
-          var bestCd = 2L * localDot(v, cents(0)._2) - cnorm(0)
-          var c = 1
-          while (c < cents.length) {
-            val cd = 2L * localDot(v, cents(c)._2) - cnorm(c)
-            if (cd > bestCd || (cd == bestCd && cents(c)._1 < cents(best)._1)) {
-              best = c; bestCd = cd
-            }
-            c += 1
-          }
-          listRows.add(org.apache.spark.sql.Row(id, cents(best)._1))
-        }
-        var sub = 0
-        while (sub < numSub) {
-          val entries = bookArr(sub)
-          if (entries.nonEmpty) {
-            val sv = java.util.Arrays.copyOfRange(v, sub * subDim, (sub + 1) * subDim)
-            val svv = localDot(sv, sv)
-            var bd = 0L
-            var bcode = 0L
-            var first = true
-            entries.foreach { case (code, cv) =>
-              val d = svv - 2L * localDot(sv, cv) + localDot(cv, cv)
-              if (first || d < bd || (d == bd && code < bcode)) {
-                bd = d; bcode = code; first = false
-              }
-            }
-            codeRows.add(org.apache.spark.sql.Row(id, sub.toLong, bcode))
-          }
-          sub += 1
-        }
+    val book = bookDF(spark, bookArr)
+    val bound = math.min(take.toLong, Bounded.limit(Bounded.Vectors))
+    if (Bounded.fits(rows, bound).exists(all => uniqueIds(all) && all.forall(_._2.length == dim))) {
+      val q = new LocalIvf.Coarse(cents)
+      val lists = if (q.k == 0) Seq.empty[Row]
+        else rows.toSeq.map { case (id, v) => Row(id, q.ids(q.assign(q.affinity(v)))) }
+      val codes = rows.toSeq.flatMap { case (id, v) =>
+        LocalIvf.encode(v, bookArr, subDim).map { case (sub, code) => Row(id, sub, code) }
       }
-      val lt = org.apache.spark.sql.types.LongType
-      val listsSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__sid", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("__list", lt, nullable = false)))
-      val codesSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("__sid", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("sub", lt, nullable = false),
-        org.apache.spark.sql.types.StructField("code", lt, nullable = false)))
       // coalesce(1): LocalRelations otherwise parallelize to the
       // session default (32 slices), and writeAnnIndex would pay 32
       // parquet-writer inits per relation AND leave a 32-part-file
@@ -2094,14 +1678,12 @@ object Similarity {
       // distributed plans' AQE-coalesced single files)
       return AnnIndex(
         coarse,
-        spark.createDataFrame(listRows, listsSchema)
-          .select(col("__sid").cast(idType).as(idCol),
-            col("__list").cast(idType).as("list_id"))
-          .coalesce(1),
+        Bounded.relation(spark, lists, Seq(idCol -> LongType, "list_id" -> LongType),
+          idType, Seq(idCol, "list_id")).coalesce(1),
         book,
-        spark.createDataFrame(codeRows, codesSchema)
-          .select(col("__sid").cast(idType).as(idCol), col("sub"), col("code"))
-          .coalesce(1))
+        Bounded.relation(spark, codes,
+          Seq(idCol -> LongType, "sub" -> LongType, "code" -> LongType),
+          idType, Seq(idCol)).coalesce(1))
     }
     // the corpus-wide passes (assignment, encode) stay distributed
     AnnIndex(
@@ -2231,11 +1813,10 @@ object Similarity {
       numSub: Int = 8,
       subDim: Int = 8,
       refine: Int = defaultRefine): DataFrame = {
-    // r14 wave 5 (guide §1.2): a bounded index serves driver-locally —
-    // see localProbeServe. Anything outside the exact-replica
-    // assumptions (index or probe batch past the bound, non-integral
-    // ids, nulls, duplicates, ragged dims) falls through to the
-    // distributed serve below, unchanged.
+    // a bounded index serves driver-locally (see localProbeServe);
+    // anything outside the replica's assumptions (index or probe batch
+    // past the bound, non-integral ids, nulls, duplicates, ragged dims)
+    // falls through to the distributed serve below, unchanged
     localProbeServe(index, corpus, idCol, vecCol, probeFilter, k,
       nprobe, numSub, subDim, refine) match {
       case Some(df) => return df
@@ -2278,25 +1859,19 @@ object Similarity {
     rankTopK(rescored, idCol, k)
   }
 
-  /** Driver-local exact replica of [[probeIndex]]'s serve leg for a
-    * BOUNDED index (≤ `SPARK_GRAFT_KNN_LOCAL_MAX` indexed vectors — the
-    * same knob and bound discipline as the kNN-graph fast path): the
-    * four index relations and the probe batch are collected through
-    * bounded limits (five independent jobs, overlapped per guide §2.6),
-    * routing / ADC / shortlist run locally in exact int64, and ONE more
-    * distributed pass fetches raw vectors for just the ≤ probes·refine
-    * shortlist ids (so the fast path never assumes the CORPUS is small
-    * — only the index and the probe batch). Replicated decisions, each
-    * the distributed operator's exact twin: routing top-nprobe by
-    * (cd desc, cent_id asc); the ADC lookup built ONLY from (sub, code)
-    * cells present in the book (inner-join semantics — a candidate
-    * with no matching cell never surfaces); shortlist top-refine by
-    * (adc asc, id asc); rescore drops shortlist ids absent from the
-    * corpus (inner join); final top-k by (qdot desc, id asc) with
-    * rn 1..k. At sf0.1 this replaces the serve leg's ~10
-    * scheduler-bound jobs (window + 3 joins + agg + TopK + rescore,
-    * < 1 MB shuffled) with 6 bounded ones; a production-scale index or
-    * probe batch takes the distributed serve unchanged. */
+  /** Driver-local exact replica of [[probeIndex]]'s serve leg for an
+    * index of at most `Bounded.Vectors` indexed vectors: the four index
+    * relations and the probe batch arrive through bounded reads (five
+    * independent jobs, overlapped per guide §2.6), routing / ADC /
+    * shortlist run in `LocalIvf`, and ONE more distributed pass fetches
+    * raw vectors for just the ≤ probes·refine shortlist ids (so the
+    * fast path never assumes the CORPUS is small — only the index and
+    * the probe batch). The shortlist is top-refine by (adc asc, id asc);
+    * rescore drops shortlist ids absent from the corpus (inner join).
+    * The index relations come from outside, so every null, duplicate
+    * or ragged row in them bails to the distributed serve. At sf0.1
+    * this replaces the serve leg's ~10 scheduler-bound jobs with 6
+    * bounded ones. */
   private def localProbeServe(
       index: AnnIndex,
       corpus: DataFrame,
@@ -2308,140 +1883,65 @@ object Similarity {
       numSub: Int,
       subDim: Int,
       refine: Int): Option[DataFrame] = {
-    val bound = knnLocalMax
-    if (bound <= 0) return None
-    val idType = corpus.schema(idCol).dataType
-    if (!Seq[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(idType)) return None
+    val bound = Bounded.limit(Bounded.Vectors)
+    if (bound <= 0 || !Bounded.integralId(corpus, idCol)) return None
     val spark = corpus.sparkSession
-    val lim = math.min(bound, (Int.MaxValue - 8).toLong).toInt
-    val codesLim = math.min(numSub.toLong * lim + 1, (Int.MaxValue - 8).toLong).toInt
-    import org.apache.spark.sql.Row
-    // five bounded independent collects — overlap them (guide §2.6)
-    var listsRaw: Array[Row] = null
-    var codesRaw: Array[Row] = null
-    var coarseRaw: Array[Row] = null
-    var bookRaw: Array[Row] = null
-    var probesRaw: Array[Row] = null
-    graft.util.Par.jobs(Seq(
-      () => listsRaw = index.lists
-        .select(col(idCol).cast("long"), col("list_id").cast("long"))
-        .limit(lim + 1).collect(),
-      () => codesRaw = index.codes
-        .select(col(idCol).cast("long"), col("sub").cast("long"), col("code").cast("long"))
-        .limit(codesLim + 1).collect(),
-      () => coarseRaw = index.coarse
-        .select(col("cent_id").cast("long"), col("cv"), col("nrm").cast("long"))
-        .limit(lim + 1).collect(),
-      () => bookRaw = index.book
-        .select(col("sub").cast("long"), col("code").cast("long"), col("cv"))
-        .limit(codesLim + 1).collect(),
-      () => probesRaw = corpus.where(probeFilter)
-        .select(col(idCol).cast("long"),
-          transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")))
-        .limit(lim + 1).collect()))
-    if (listsRaw.length > lim || probesRaw.length > lim ||
-        codesRaw.length > codesLim || coarseRaw.length > lim ||
-        bookRaw.length > codesLim) return None
-    if (listsRaw.exists(r => r.isNullAt(0) || r.isNullAt(1)) ||
-        codesRaw.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ||
-        coarseRaw.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ||
-        bookRaw.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ||
-        probesRaw.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val idType = corpus.schema(idCol).dataType
+    val codesBound = numSub * bound + 1
+    // five bounded independent reads — overlap them (guide §2.6)
+    val reqs = Seq(
+      index.lists.select(col(idCol).cast("long"), col("list_id").cast("long")) -> bound,
+      index.codes.select(col(idCol).cast("long"), col("sub").cast("long"),
+        col("code").cast("long")) -> codesBound,
+      index.coarse.select(col("cent_id").cast("long"), col("cv"), col("nrm").cast("long")) -> bound,
+      index.book.select(col("sub").cast("long"), col("code").cast("long"), col("cv")) -> codesBound,
+      corpus.where(probeFilter).select(col(idCol).cast("long"), qvT(col(vecCol))) -> bound)
+    val got = new Array[Option[Array[Row]]](reqs.length)
+    graft.util.Par.jobs(reqs.indices.map(i =>
+      () => got(i) = Bounded.collect(reqs(i)._1, reqs(i)._2)))
+    if (got.exists(_.isEmpty)) return None
+    val Array(listsRaw, codesRaw, coarseRaw, bookRaw, probesRaw) = got.map(_.get)
+    if (got.exists(_.get.exists(r => (0 until r.length).exists(r.isNullAt)))) return None
     val probes = probesRaw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    if (probes.iterator.map(_._1).toSet.size != probes.length) return None
     val lists = listsRaw.map(r => (r.getLong(0), r.getLong(1)))
-    if (lists.iterator.map(_._1).toSet.size != lists.length) return None
     val coarse = coarseRaw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
     val book = bookRaw.map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toArray))
-    // dimension discipline: every probe/centroid vector spans exactly
-    // numSub·subDim coordinates and every book cell spans subDim —
-    // anything ragged is outside the replica's slice arithmetic
+    def unique[T](keys: Seq[T]): Boolean = keys.distinct.length == keys.length
+    // every probe/centroid vector spans exactly numSub·subDim coordinates
+    // and every book cell subDim; duplicate cent_ids would double-visit
+    // a list and duplicate (sub, code) cells sum per cell in the
+    // distributed plan — none occurs from clean training
     val dim = numSub * subDim
-    if (probes.exists(_._2.length != dim) ||
-        coarse.exists(_._2.length != dim) ||
+    if (!unique(probes.map(_._1)) || !unique(lists.map(_._1)) ||
+        !unique(coarse.map(_._1)) || !unique(book.map(b => (b._1, b._2))) ||
+        probes.exists(_._2.length != dim) || coarse.exists(_._2.length != dim) ||
         book.exists(_._3.length != subDim)) return None
-    // duplicate cent_ids would double-visit a list (the distributed
-    // plan sums the doubled join rows); duplicate (sub, code) cells
-    // would sum per cell — neither occurs from clean training, both
-    // bail to the distributed serve
-    if (coarse.iterator.map(_._1).toSet.size != coarse.length) return None
-    if (book.iterator.map(b => (b._1, b._2)).toSet.size != book.length) return None
+    val empty = Some(topKRelation(spark, Nil, idCol, idType))
+    if (probes.isEmpty || coarse.isEmpty) return empty
 
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rn",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    def finish(rows: java.util.List[Row]): Option[DataFrame] =
-      Some(spark.createDataFrame(rows, outSchema)
-        .select(col("probe_id").cast(idType).as("probe_id"),
-          col(idCol).cast(idType).as(idCol), col("qdot"), col("rn")))
-    if (probes.isEmpty || coarse.isEmpty)
-      return finish(java.util.Collections.emptyList[Row])
-
-    // members per list (ids sorted for determinism of iteration only)
-    val membersOf = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[Long]]
-    lists.foreach { case (id, list) =>
-      membersOf.getOrElseUpdate(list, new scala.collection.mutable.ArrayBuffer[Long]) += id
-    }
-    // PQ codes per id
-    val codesOf = new scala.collection.mutable.LongMap[scala.collection.mutable.ArrayBuffer[(Long, Long)]]
-    codesRaw.foreach { r =>
-      codesOf.getOrElseUpdate(r.getLong(0),
-        new scala.collection.mutable.ArrayBuffer[(Long, Long)]) += ((r.getLong(1), r.getLong(2)))
-    }
-    val np = math.min(nprobe, coarse.length)
-    // shortlists: per probe the top-refine candidate ids by (adc, id)
+    val q = new LocalIvf.Coarse(coarse.map(_._1), coarse.map(_._2), coarse.map(_._3))
+    // book cells by subspace; a cell outside [0, numSub) never joins a
+    // probe subvector in the distributed plan
+    val bookArr: Array[LocalIvf.Cents] = Array.tabulate(numSub)(s =>
+      book.collect { case (sub, code, cv) if sub == s => (code, cv) })
+    val membersOf = lists.groupMap(_._2)(_._1)
+    val codesOf = codesRaw.groupMap(_.getLong(0))(r => (r.getLong(1), r.getLong(2)))
+    val np = math.min(nprobe, q.k)
     val shortlists = probes.map { case (pid, pq) =>
-      // routing: top-nprobe centroids by (2·dot−nrm desc, cent_id asc)
-      val order = coarse.indices.toArray.map(Integer.valueOf)
-      val cd = coarse.map(c => 2L * localDot(pq, c._2) - c._3)
-      java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
-        val d = java.lang.Long.compare(cd(b), cd(a))
-        if (d != 0) d else java.lang.Long.compare(coarse(a)._1, coarse(b)._1)
-      })
-      // the probe's ADC lookup: only cells PRESENT in the book exist
-      val adc = new scala.collection.mutable.HashMap[(Long, Long), Long]
-      book.foreach { case (sub, code, cv) =>
-        val s = sub.toInt
-        val sv = java.util.Arrays.copyOfRange(pq, s * subDim, (s + 1) * subDim)
-        adc((sub, code)) =
-          localDot(sv, sv) - 2L * localDot(sv, cv) + localDot(cv, cv)
+      val table = LocalIvf.adcTable(pq, bookArr, subDim)
+      val cand = q.route(q.affinity(pq), np).toSeq.flatMap { c =>
+        membersOf.getOrElse(q.ids(c), Array.empty[Long]).toSeq.filter(_ != pid).flatMap(cid =>
+          codesOf.get(cid).flatMap(LocalIvf.adcScore(table, _)).map((_, cid)))
       }
-      val cand = new scala.collection.mutable.ArrayBuffer[(Long, Long)] // (adc, id)
-      var p = 0
-      while (p < np) {
-        val members = membersOf.getOrElse(coarse(order(p).intValue())._1, null)
-        if (members != null) members.foreach { cid =>
-          if (cid != pid) codesOf.get(cid).foreach { cs =>
-            var sum = 0L
-            var matched = false
-            cs.foreach { case (sub, code) =>
-              adc.get((sub, code)).foreach { d => sum += d; matched = true }
-            }
-            if (matched) cand += ((sum, cid))
-          }
-        }
-        p += 1
-      }
-      (pid, pq, cand.sortWith((a, b) =>
-        a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)).take(refine).map(_._2))
+      (pid, pq, LocalIvf.topK(cand, refine, desc = false).map(_._2))
     }
     val shortIds = shortlists.iterator.flatMap(_._3).toSet
-    if (shortIds.isEmpty) return finish(java.util.Collections.emptyList[Row])
-    // ONE distributed pass fetches raw vectors for just the shortlist —
-    // the corpus itself is never assumed bounded
+    if (shortIds.isEmpty) return empty
+    // ONE distributed pass fetches raw vectors for just the shortlist
+    // (at most one row per shortlist id unless the corpus repeats ids,
+    // which bails below) — the corpus itself is never assumed bounded
     val fetched = corpus
-      .select(col(idCol).cast("long").as("__sid"),
-        transform(col(vecCol), x => round(x.cast("double") * 1000).cast("long")).as("__qv"))
+      .select(col(idCol).cast("long").as("__sid"), qvT(col(vecCol)).as("__qv"))
       .where(col("__sid").isin(shortIds.toSeq: _*))
       .collect()
     if (fetched.exists(r => r.isNullAt(1))) return None
@@ -2453,18 +1953,10 @@ object Similarity {
       if (v.length != dim) return None // ragged corpus vector: bail
       vecOf(sid) = v
     }
-    val out = new java.util.ArrayList[Row]
-    shortlists.foreach { case (pid, pq, short) =>
-      val scored = short.flatMap(cid => vecOf.get(cid).map(v => (localDot(pq, v), cid)))
-      val top = scored.sortWith((a, b) =>
-        a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)).take(k)
-      var rn = 0
-      while (rn < top.length) {
-        out.add(Row(pid, top(rn)._2, top(rn)._1, (rn + 1).toLong))
-        rn += 1
-      }
-    }
-    finish(out)
+    Some(topKRelation(spark, shortlists.toSeq.flatMap { case (pid, pq, short) =>
+      ranked(pid, LocalIvf.topK(
+        short.flatMap(cid => vecOf.get(cid).map(v => (LocalIvf.dot(pq, v), cid))), k, desc = true))
+    }, idCol, idType))
   }
 
   /** The join-ready serving form of a persisted index's corpus half:
@@ -2638,7 +2130,8 @@ object Similarity {
       trainSample: Int,
       scope: graft.util.CacheScope): (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val subDim = dim / numSub
-    val coarse = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample, scope)
+    val coarse = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample,
+      scope, "ivfPqResidualTopK")
     // cached: consumed by the residual computation AND candidate
     // generation
     val lists = scope.cache(ivfAssign(corpus, idCol, vecCol, coarse))
@@ -2686,11 +2179,9 @@ object Similarity {
       trainRounds: Int = defaultTrainRounds,
       trainSample: Int = defaultTrainSample,
       scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
-    // r14 wave 5 (guide §1.2): the bounded-corpus case runs the WHOLE
-    // coupled-quantizer pipeline driver-local off one hash-ordered
-    // collect + one bounded probe-id collect — see localIvfPqResidual.
-    // Anything outside the replica assumptions takes the distributed
-    // pipeline below, unchanged.
+    // a bounded corpus runs the WHOLE coupled-quantizer pipeline
+    // driver-local (see localIvfPqResidual); anything else takes the
+    // distributed pipeline below, unchanged
     localIvfPqResidual(corpus, idCol, vecCol, probeFilter, k, numCentroids,
       nprobe, dim, numSub, codebook, refine, trainRounds, trainSample) match {
       case Some(df) => return df
@@ -2741,21 +2232,15 @@ object Similarity {
   }
 
   /** Driver-local exact replica of [[ivfPqResidualTopK]] for a corpus
-    * within the trainer's bounded-collect contract (the
-    * [[localProbeServe]] discipline applied to the coupled residual
-    * quantizer): ONE hash-ordered corpus collect feeds coarse training,
-    * assignment, residual computation, residual-book training, residual
-    * encode, and the rescore vectors; one more bounded collect
-    * evaluates the probe filter distributedly and brings back the probe
-    * ids. Replicated decisions, each the distributed operator's exact
-    * twin: trainer prefixes in (md5-hash, id) order (the residual
-    * sample IS the residual of the corpus sample prefix — same order);
-    * assignment argmax with smallest-cent_id ties; per-subspace encode
-    * argmin with smallest-code ties; routing top-nprobe by (cd desc,
-    * cent_id asc); per-(probe, list) residual ADC tables built only
-    * from cells present in the trained book (inner-join semantics);
-    * shortlist top-refine by (adc asc, id asc); final top-k by (qdot
-    * desc, id asc) with rn 1..k. */
+    * within min(trainer take, vector bound): ONE bounded hash-ordered
+    * read feeds coarse training, assignment, residuals, residual-book
+    * training (the residual sample IS the residual of the sample
+    * prefix, same order), residual encode and the rescore vectors; one
+    * more bounded read evaluates the probe filter distributedly and
+    * brings back the probe ids. Each probed list gets the probe's own
+    * residual ADC table against that list's centroid. Returns None
+    * (distributed fallback) past the bound, on duplicate ids, or when
+    * the vectors do not span `dim` coordinates. */
   private def localIvfPqResidual(
       corpus: DataFrame,
       idCol: String,
@@ -2770,176 +2255,47 @@ object Similarity {
       refine: Int,
       trainRounds: Int,
       trainSample: Int): Option[DataFrame] = {
-    if (knnLocalMax <= 0) return None
-    val idType = corpus.schema(idCol).dataType
-    if (!Seq[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.LongType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.ShortType,
-        org.apache.spark.sql.types.ByteType).contains(idType)) return None
-    val spark = corpus.sparkSession
     val subDim = dim / numSub
-    val take = math.max(numCentroids, trainSample)
-    val lim = math.min(knnLocalMax, (Int.MaxValue - 8).toLong).toInt
-
-    // two bounded independent collects — overlap them (guide §2.6)
-    var raw: Array[org.apache.spark.sql.Row] = null
-    var probeRaw: Array[org.apache.spark.sql.Row] = null
+    val bound = Bounded.limit(Bounded.Vectors)
+    // two bounded independent reads — overlap them (guide §2.6)
+    var sampled: Option[LocalIvf.Cents] = None
+    var probeRaw: Option[Array[Row]] = None
     graft.util.Par.jobs(Seq(
-      () => raw = trainerSampleRaw(corpus, idCol, vecCol, take + 1),
-      () => probeRaw = corpus.where(probeFilter)
-        .select(col(idCol).cast("long")).limit(lim + 1).collect()))
-    val n = raw.length
-    if (n > math.min(take.toLong, knnLocalMax) || probeRaw.length > lim) return None
-    if (raw.exists(r => r.isNullAt(0) || r.isNullAt(1)) ||
-        probeRaw.exists(_.isNullAt(0))) return None
-    val rows = raw.map(r => (r.getLong(0), r.getSeq[Long](1).toArray))
-    if (rows.exists(_._2.length != dim)) return None
-    if (rows.iterator.map(_._1).toSet.size != n) return None
-    val probeIds = probeRaw.map(_.getLong(0))
-    if (probeIds.toSet.size != probeIds.length) return None
-
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("probe_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(idCol,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("qdot",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rn",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    def finish(rs: java.util.List[org.apache.spark.sql.Row]): Option[DataFrame] =
-      Some(spark.createDataFrame(rs, outSchema)
-        .select(col("probe_id").cast(idType).as("probe_id"),
-          col(idCol).cast(idType).as(idCol), col("qdot"), col("rn")))
-
-    val cents = localCoarseTrain(rows, numCentroids, trainRounds, trainSample)
+      () => sampled = boundedSample(corpus, idCol, vecCol, "ivfPqResidualTopK",
+        math.min(math.max(numCentroids, trainSample).toLong, bound)),
+      () => probeRaw = Bounded.collect(
+        corpus.where(probeFilter).select(col(idCol).cast("long")), bound)))
+    // the probes are corpus rows, so a whole, validated, unique-id
+    // corpus leaves them non-null and unique too
+    val (rows, probeIds) = (sampled, probeRaw) match {
+      case (Some(rs), Some(ps)) if rs.forall(_._2.length == dim) => (rs, ps.map(_.getLong(0)))
+      case _ => return None
+    }
+    val n = rows.length
+    val cents = LocalIvf.trainCoarse(rows, numCentroids, trainRounds, trainSample)
     if (n == 0 || cents.isEmpty || probeIds.isEmpty)
-      return finish(java.util.Collections.emptyList[org.apache.spark.sql.Row])
-    val cnorm = cents.map(c => localDot(c._2, c._2))
-
-    // assignment + residuals (x − c_assigned), in collect (hash) order
-    val assign = new Array[Int](n)
-    val resid = new Array[Array[Long]](n)
-    var r = 0
-    while (r < n) {
-      val v = rows(r)._2
-      var best = 0
-      var bestCd = 2L * localDot(v, cents(0)._2) - cnorm(0)
-      var c = 1
-      while (c < cents.length) {
-        val cd = 2L * localDot(v, cents(c)._2) - cnorm(c)
-        if (cd > bestCd || (cd == bestCd && cents(c)._1 < cents(best)._1)) {
-          best = c; bestCd = cd
-        }
-        c += 1
-      }
-      assign(r) = best
-      resid(r) = Array.tabulate(dim)(i => v(i) - cents(best)._2(i))
-      r += 1
-    }
-    // residual book: trained on the residuals of the SAME sample prefix
-    val bookArr = localBookTrain(resid.take(trainSample), numSub, subDim, codebook)
-    // residual encode: per (row, sub) the argmin code (ties → smaller)
-    val codesOf = Array.ofDim[Long](n, numSub)
-    val hasCode = Array.ofDim[Boolean](n, numSub)
-    r = 0
-    while (r < n) {
-      var sub = 0
-      while (sub < numSub) {
-        val entries = bookArr(sub)
-        if (entries.nonEmpty) {
-          val sv = java.util.Arrays.copyOfRange(resid(r), sub * subDim, (sub + 1) * subDim)
-          val svv = localDot(sv, sv)
-          var bd = 0L; var bcode = 0L; var first = true
-          entries.foreach { case (code, cv) =>
-            val d = svv - 2L * localDot(sv, cv) + localDot(cv, cv)
-            if (first || d < bd || (d == bd && code < bcode)) {
-              bd = d; bcode = code; first = false
-            }
-          }
-          codesOf(r)(sub) = bcode
-          hasCode(r)(sub) = true
-        }
-        sub += 1
-      }
-      r += 1
-    }
-    val idxOf = new scala.collection.mutable.LongMap[Int](n)
-    r = 0
-    while (r < n) { idxOf(rows(r)._1) = r; r += 1 }
-    val listOf = Array.fill(cents.length)(new scala.collection.mutable.ArrayBuffer[Int])
-    r = 0
-    while (r < n) { listOf(assign(r)) += r; r += 1 }
-    val np = math.min(nprobe, cents.length)
-
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row]
-    probeIds.foreach { pid =>
+      return Some(topKRelation(corpus.sparkSession, Nil, idCol, corpus.schema(idCol).dataType))
+    val q = new LocalIvf.Coarse(cents)
+    def minus(a: Array[Long], b: Array[Long]) = Array.tabulate(dim)(i => a(i) - b(i))
+    val assign = rows.map { case (_, v) => q.assign(q.affinity(v)) }
+    val resid = Array.tabulate(n)(r => minus(rows(r)._2, q.vecs(assign(r))))
+    val bookArr = LocalIvf.trainBook(resid.take(trainSample), numSub, subDim, codebook)
+    val codes = resid.map(LocalIvf.encode(_, bookArr, subDim))
+    val idxOf = scala.collection.mutable.LongMap(rows.map(_._1).zipWithIndex.toSeq: _*)
+    val listOf = (0 until n).groupBy(assign(_))
+    val np = math.min(nprobe, q.k)
+    val out = probeIds.toSeq.flatMap { pid =>
       val pq = rows(idxOf(pid))._2
-      // routing: top-nprobe centroids by (cd desc, cent_id asc)
-      val order = cents.indices.toArray.map(Integer.valueOf)
-      val cd = cents.indices.map(c => 2L * localDot(pq, cents(c)._2) - cnorm(c))
-      java.util.Arrays.sort(order, (a: Integer, b: Integer) => {
-        val d = java.lang.Long.compare(cd(b), cd(a))
-        if (d != 0) d else java.lang.Long.compare(cents(a)._1, cents(b)._1)
-      })
-      val cand = new scala.collection.mutable.ArrayBuffer[(Long, Long)] // (adc, id)
-      var p = 0
-      while (p < np) {
-        val ci = order(p).intValue()
-        // the probe's residual against THIS list's centroid, and its
-        // per-(sub, code) ADC table over cells present in the book
-        val rq = Array.tabulate(dim)(i => pq(i) - cents(ci)._2(i))
-        val adcT = Array.ofDim[Long](numSub, codebook)
-        val adcHas = Array.ofDim[Boolean](numSub, codebook)
-        var sub = 0
-        while (sub < numSub) {
-          val sv = java.util.Arrays.copyOfRange(rq, sub * subDim, (sub + 1) * subDim)
-          val svv = localDot(sv, sv)
-          bookArr(sub).foreach { case (code, cv) =>
-            if (code >= 0 && code < codebook) {
-              adcT(sub)(code.toInt) = svv - 2L * localDot(sv, cv) + localDot(cv, cv)
-              adcHas(sub)(code.toInt) = true
-            }
-          }
-          sub += 1
-        }
-        val members = listOf(ci)
-        var m = 0
-        while (m < members.length) {
-          val y = members(m)
-          val cid = rows(y)._1
-          if (cid != pid) {
-            var sum = 0L
-            var matched = false
-            var s = 0
-            while (s < numSub) {
-              if (hasCode(y)(s)) {
-                val code = codesOf(y)(s).toInt
-                if (code >= 0 && code < codebook && adcHas(s)(code)) {
-                  sum += adcT(s)(code); matched = true
-                }
-              }
-              s += 1
-            }
-            if (matched) cand += ((sum, cid))
-          }
-          m += 1
-        }
-        p += 1
+      val cand = q.route(q.affinity(pq), np).toSeq.flatMap { c =>
+        val table = LocalIvf.adcTable(minus(pq, q.vecs(c)), bookArr, subDim)
+        listOf.getOrElse(c, Nil).filter(rows(_)._1 != pid).flatMap(y =>
+          LocalIvf.adcScore(table, codes(y)).map((_, rows(y)._1)))
       }
-      val short = cand.sortWith((a, b) =>
-        a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)).take(refine)
-      val top = short.map { case (_, cid) =>
-        (localDot(pq, rows(idxOf(cid))._2), cid)
-      }.sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)).take(k)
-      var rn = 0
-      while (rn < top.length) {
-        out.add(org.apache.spark.sql.Row(pid, top(rn)._2, top(rn)._1, (rn + 1).toLong))
-        rn += 1
-      }
+      ranked(pid, LocalIvf.topK(LocalIvf.topK(cand, refine, desc = false).map { case (_, cid) =>
+        (LocalIvf.dot(pq, rows(idxOf(cid))._2), cid)
+      }, k, desc = true))
     }
-    finish(out)
+    Some(topKRelation(corpus.sparkSession, out, idCol, corpus.schema(idCol).dataType))
   }
 
   /** Per-probe top-k of a scored candidate relation through the
@@ -3189,7 +2545,8 @@ object Similarity {
       trainRounds: Int = defaultTrainRounds,
       trainSample: Int = defaultTrainSample,
       scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
-    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample, scope)
+    val cents = ivfCentroids(corpus, idCol, vecCol, numCentroids, trainRounds, trainSample,
+      scope, "ivfSq8TopK")
     val lists = ivfAssign(corpus, idCol, vecCol, cents)
     val q = corpus.select(col(idCol), qvT(col(vecCol)).as("q"))
     // cached for the same two-broadcast reason as sq8TopK

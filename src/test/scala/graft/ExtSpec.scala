@@ -54,27 +54,22 @@ class ExtSpec extends SparkSpec {
   }
 
   test("driver-local union-find CC == distributed min-label loop") {
-    // the r14 fast path folds small pair graphs on the driver; pin it
-    // against the distributed loop (graft.cc.local.max=0 disables the
-    // fast path) on a graph with a long chain (multi-round diameter),
-    // an isolated pair, a cycle, and a self-loop
+    // the fast path folds small pair graphs on the driver; pin it
+    // against the distributed loop (graft.local.max=0 disables the fast
+    // path) and at the switch point of the fixture's 12 edges, on a
+    // graph with a long chain (multi-round diameter), an isolated pair,
+    // a cycle, and a self-loop
     val pairs = (((1L to 7L).map(i => (i, i + 1)) :+ (100L, 101L)) ++
       Seq((200L, 202L), (202L, 204L), (204L, 200L), (300L, 300L)))
       .toDF("id_a", "id_b")
-    val fast = Dedup.connectedComponents(pairs, "id_a", "id_b")
+    def run() = Dedup.connectedComponents(pairs, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    val key = "graft.cc.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    try {
-      val loop = Dedup.connectedComponents(pairs, "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-      assert(fast == loop, "union-find fast path diverges from the loop")
-      assert(fast(204L) == 200L && fast(300L) == 300L && fast(8L) == 1L)
-    } finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+    val fast = run()
+    val loop = withLocalMax(0)(run())
+    assert(fast == loop, "union-find fast path diverges from the loop")
+    assert(fast(204L) == 200L && fast(300L) == 300L && fast(8L) == 1L)
+    for (b <- Seq(11L, 12L, 13L))
+      assert(withLocalMax(b)(run()) == loop, s"CC labels change at graft.local.max=$b")
   }
 
   test("minhash signature of an empty hash array is null, not all-MaxValue") {
@@ -556,16 +551,9 @@ class ExtSpec extends SparkSpec {
     // index runs): the r14 bounded driver-local serve replaces the
     // whole plan with a LocalTableScan, so disable it for this test
     // (KnnLocalSpec pins the two paths row-identical)
-    val key = "graft.knn.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    val plan = try Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+    val plan = withLocalMax(0)(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
         probeFilter = col("vec_id") < 5, k = 5, numCentroids = 8)
-      .queryExecution.executedPlan.toString
-    finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
+      .queryExecution.executedPlan.toString)
     // the ADC shortlist and the final ranking both run through the
     // bounded-heap operator — never a full window sort over candidates
     assert(plan.contains("TopKPerKey"), plan.take(2000))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.ext.Graph
 
 /** Pins the r14 driver-local graph fast paths against the distributed
-  * loops (`graft.graph.local.max=0` disables the fast path): every
+  * loops (`graft.local.max=0` disables the fast path): every
   * algorithm must produce IDENTICAL rows on a fixture that exercises
   * the semantic corners — duplicate edges (pageRank degree counts
   * multiplicity), a self-loop, directed asymmetry, isolated nodes,
@@ -27,20 +27,9 @@ class GraphLocalSpec extends SparkSpec {
   private def rowsOf(df: DataFrame): Seq[String] =
     df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
-  private def withLoopOnly[A](body: => A): A = {
-    val key = "graft.graph.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    try body
-    finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
-  }
-
   private def paritySuite(name: String)(run: () => DataFrame): Unit = {
     val fast = rowsOf(run())
-    val loop = withLoopOnly(rowsOf(run()))
+    val loop = withLocalMax(0)(rowsOf(run()))
     assert(fast == loop, s"$name: driver-local fast path diverges from the loop")
     assert(fast.nonEmpty, s"$name: empty result — the parity check is vacuous")
   }

@@ -5,9 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
 
-/** Pins the r14 driver-local kNN-graph fast path against the
-  * distributed derivation (`graft.knn.local.max=0` disables it): the
-  * graph must be IDENTICAL on a fixture that exercises the semantic
+/** Pins the driver-local kNN-graph, ANN, SemDeDup and MMR fast paths
+  * against the distributed derivations (`graft.local.max=0` disables
+  * them), and at the switch point: with the override at the fixture's
+  * row count − 1, = and + 1 the rows must not change. The graph must
+  * be IDENTICAL on a fixture that exercises the semantic
   * corners — qdot ties (id-broken), many near-empty inverted lists
   * (centroid budget > occupied lists), k larger than a probe's
   * candidate pool, the cross-side candidate filter applied BEFORE the
@@ -20,36 +22,39 @@ class KnnLocalSpec extends SparkSpec {
   // quantized dot products collide often (tie-break coverage); the
   // residue moduli are odd so id parity stays decorrelated from the
   // geometry (the cross-side tests need mixed-parity inverted lists)
-  private def emb = (0L until 120L).map { i =>
-    (i, Array(((i * 7) % 13).toFloat * 0.1f, ((i * 3) % 11).toFloat * 0.2f,
-      ((i * 5) % 17).toFloat * 0.05f, ((i * 11) % 19).toFloat * 0.125f))
-  }.toDF("vec_id", "embedding")
+  private def vec(i: Long) =
+    Array(((i * 7) % 13).toFloat * 0.1f, ((i * 3) % 11).toFloat * 0.2f,
+      ((i * 5) % 17).toFloat * 0.05f, ((i * 11) % 19).toFloat * 0.125f)
+  private def emb = (0L until 120L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
+
+  // the same 120-row shape, but ids 100-119 repeat the vectors of ids
+  // 0-19: a repeated vector among the seeds gives identical centroids,
+  // so the coarse assignment ties exactly (smallest cent_id wins), and
+  // copies tie on qdot
+  private def tied = (0L until 120L).map(i => (i, vec(if (i >= 100) i - 100 else i)))
+    .toDF("vec_id", "embedding")
 
   private def rowsOf(df: DataFrame): Seq[String] =
     df.orderBy(df.columns.map(col): _*).collect().map(_.toString).toSeq
 
-  private def withLoopOnly[A](body: => A): A = {
-    val key = "graft.knn.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    try body
-    finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
-  }
-
-  private def parity(name: String)(run: () => DataFrame): Unit = {
+  /** Default bounds (fast path), override 0 (distributed) and each of
+    * `bounds` (the switch point of the 120-row fixture) must give the
+    * same rows; returns them. */
+  private def parity(name: String, bounds: Seq[Long] = Seq(119L, 120L, 121L))(
+      run: () => DataFrame): Seq[String] = {
     val fast = rowsOf(run())
-    val loop = withLoopOnly(rowsOf(run()))
+    val loop = withLocalMax(0)(rowsOf(run()))
     assert(fast == loop, s"$name: driver-local fast path diverges from the distributed graph")
     assert(fast.nonEmpty, s"$name: empty result — the parity check is vacuous")
+    for (b <- bounds)
+      assert(withLocalMax(b)(rowsOf(run())) == loop, s"$name: rows change at graft.local.max=$b")
+    fast
   }
 
   test("knnGraphIvf: driver-local == distributed (default filter)") {
-    for (k <- Seq(3, 7))
-      parity(s"knn(k=$k)")(() =>
-        Similarity.knnGraphIvf(emb, "vec_id", "embedding", k = k))
+    for (k <- Seq(3, 7); (name, corpus) <- Seq("emb" -> emb, "tied" -> tied))
+      parity(s"knn(k=$k, $name)")(() =>
+        Similarity.knnGraphIvf(corpus, "vec_id", "embedding", k = k))
   }
 
   test("knnGraphIvf: driver-local == distributed (cross-side filter)") {
@@ -78,10 +83,15 @@ class KnnLocalSpec extends SparkSpec {
     // dim 4 → numSub 2, subDim 2; nprobe below K so routing matters;
     // refine below the pool so the ADC shortlist cut matters; the
     // fixture's residue geometry forces qdot/adc ties
-    parity("ivfPqTopK(local serve)")(() =>
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-        probeFilter = col("vec_id") < 7, k = 4, numCentroids = 8,
-        nprobe = 3, dim = 4, numSub = 2, codebook = 4, refine = 10))
+    def run() = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+      probeFilter = col("vec_id") < 7, k = 4, numCentroids = 8,
+      nprobe = 3, dim = 4, numSub = 2, codebook = 4, refine = 10)
+    parity("ivfPqTopK(local serve)")(() => run())
+    // the local serve answers with a LocalRelation: it engages from a
+    // bound of exactly the fixture's 120 indexed vectors
+    def servedLocally(b: Long) = withLocalMax(b)(run().queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(!servedLocally(119L) && servedLocally(120L) && servedLocally(121L))
   }
 
   test("annIndex + probeIndex: duplicate ids bail to the distributed path, same rows") {
@@ -97,7 +107,7 @@ class KnnLocalSpec extends SparkSpec {
       probeFilter = col("vec_id") < 0, k = 3, numCentroids = 8,
       nprobe = 4, dim = 4, numSub = 2, codebook = 4, refine = 8)
     val fast = run()
-    val loop = withLoopOnly(run())
+    val loop = withLocalMax(0)(run())
     assert(fast.collect().isEmpty && loop.collect().isEmpty)
     // names + types must match (nullability legitimately differs:
     // LocalRelation columns are provably non-null)
@@ -124,26 +134,15 @@ class KnnLocalSpec extends SparkSpec {
   test("semDedupKeep: driver-local == distributed (r14 wave 5)") {
     // thresholds chosen so SOME pairs drop and some survive (the
     // residue fixture collides heavily within lists)
-    for (minQdot <- Seq(1000000L, 3000000L))
-      parity(s"semDedup(minQdot=$minQdot)")(() =>
-        Similarity.semDedupKeep(emb, "vec_id", "embedding", minQdot = minQdot))
+    for (minQdot <- Seq(1000000L, 3000000L); (name, corpus) <- Seq("emb" -> emb, "tied" -> tied))
+      parity(s"semDedup(minQdot=$minQdot, $name)")(() =>
+        Similarity.semDedupKeep(corpus, "vec_id", "embedding", minQdot = minQdot))
   }
 
   test("semDedupKeep: duplicate ids bail to the distributed path, same rows") {
     val dup = emb.union(emb.limit(4))
     parity("semDedup(dup-ids)")(() =>
       Similarity.semDedupKeep(dup, "vec_id", "embedding", minQdot = 2000000L))
-  }
-
-  private def withMmrLoopOnly[A](body: => A): A = {
-    val key = "graft.mmr.local.max"
-    val before = sys.props.get(key)
-    sys.props(key) = "0"
-    try body
-    finally before match {
-      case Some(v) => sys.props(key) = v
-      case None => sys.props.remove(key)
-    }
   }
 
   test("mmrRerank: driver-local == distributed (ties, missing vector, k > pool)") {
@@ -160,12 +159,10 @@ class KnnLocalSpec extends SparkSpec {
       (8L, Array(1.0f, 0.1f, 0.5f)),
       (9L, Array(-1.0f, 0.2f, 0.25f))
     ).toDF("vec_id", "embedding")
-    def run() = Similarity.mmrRerank(shortlist, vecs, "vec_id", "embedding",
-      k = 4, lambdaPermille = 700)
-    val fast = rowsOf(run())
-    val loop = withMmrLoopOnly(rowsOf(run()))
-    assert(fast == loop, "mmrRerank: driver-local fast path diverges from the loop")
-    assert(fast.nonEmpty, "mmrRerank: empty result — the parity check is vacuous")
+    // the switch point of the 6-row shortlist
+    val fast = parity("mmrRerank", bounds = Seq(5L, 6L, 7L))(() =>
+      Similarity.mmrRerank(shortlist, vecs, "vec_id", "embedding",
+        k = 4, lambdaPermille = 700))
     // round 1 must have picked the vector-less top hit for probe 0
     assert(fast.exists(_.startsWith("[0,42,900,1]")), s"round-1 pick wrong: $fast")
   }

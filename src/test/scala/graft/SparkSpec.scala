@@ -15,4 +15,18 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` with the one bounded-local override
+    * (`graft.local.max`) set to `n`, restoring it afterwards; 0 forces
+    * every distributed path. */
+  def withLocalMax[A](n: Long)(body: => A): A = {
+    val key = "graft.local.max"
+    val before = sys.props.get(key)
+    sys.props(key) = n.toString
+    try body
+    finally before match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props.remove(key)
+    }
+  }
 }

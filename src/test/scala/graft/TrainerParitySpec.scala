@@ -127,6 +127,28 @@ class TrainerParitySpec extends SparkSpec {
       Similarity.pqCodebookForTest(qdf, "vec_id", 4, 16, 4, 16)
     }
     assert(e2.getMessage.contains("integral"))
+    // a null or ragged vector in the training sample fails loudly too,
+    // naming the operator, the column and the fault (for a bounded
+    // corpus the sample is the whole corpus, so every twin checks it)
+    import spark.implicits._
+    def corpus(bad: Array[Float]) = (0L until 120L).map { i =>
+      (i, if (i == 57L) bad else Array(((i * 7) % 13).toFloat * 0.1f,
+        ((i * 3) % 11).toFloat * 0.2f, 0.5f, ((i * 11) % 19).toFloat * 0.125f))
+    }.toDF("vec_id", "embedding")
+    val ops: Seq[(String, DataFrame => Unit)] = Seq(
+      "annIndex" -> (df => Similarity.annIndex(df, "vec_id", "embedding",
+        numCentroids = 8, dim = 4, numSub = 2, codebook = 4)),
+      "semDedupKeep" -> (df => Similarity.semDedupKeep(df, "vec_id", "embedding", 1000000L)),
+      "knnGraphIvf" -> (df => Similarity.knnGraphIvf(df, "vec_id", "embedding", k = 3)),
+      "ivfPqResidualTopK" -> (df => Similarity.ivfPqResidualTopK(df, "vec_id", "embedding",
+        col("vec_id") < 7, k = 3, numCentroids = 8, dim = 4, numSub = 2, codebook = 4)),
+      "ivfTopK" -> (df => Similarity.ivfTopK(df, "vec_id", "embedding", col("vec_id") < 7, k = 3)))
+    for ((bad, fault) <- Seq((null: Array[Float]) -> "null", Array(0.1f, 0.2f, 0.3f) -> "ragged");
+         (who, op) <- ops) {
+      val e = intercept[IllegalArgumentException](op(corpus(bad)))
+      assert(Seq(who, "'embedding'", fault).forall(e.getMessage.contains),
+        s"$who on a $fault vector: ${e.getMessage}")
+    }
   }
 
   test("driver-local IVF centroids == round-12 distributed formulation") {
