@@ -16,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Noise defense #2 (round 8): ONE FRESH SparkContext PER QUERY GROUP
   * (default 12 queries — `SPARK_GRAFT_BENCH_GROUP`). Round-6 audits
-  * (AuditR6/R6b, SURVEY §9) showed a long-lived single-JVM probe reads
+  * (SURVEY §9) showed a long-lived single-JVM probe reads
   * shuffle-heavy kernels ~2× above their isolated matched-conditions
   * cost — cumulative JVM/block-manager decay over a sustained session —
   * and the round-7 driver artifact reproduced exactly that signature in
@@ -35,17 +35,7 @@ object Bench {
     val groupSize = sys.env.getOrElse("SPARK_GRAFT_BENCH_GROUP", "12").toInt
 
     def newSession(): SparkSession = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local(cpus, cpus, "graft-bench")
       // untimed warmup: touch every table once so the first measured query
       // doesn't absorb JVM/codegen/parquet-footer cold-start (profiled at
       // ~5 s — it made whichever query sorted first look 5× slower)
@@ -54,21 +44,14 @@ object Bench {
     }
 
     // round 12 (verdict ask #2): stream state stores / staged sources
-    // ride tmpfs when available. The AuditStream 2×2 (placement ×
-    // induced fsync load) read a consistent 5–15% on the stream pair
-    // from tmpfs placement and NO inflation from a single-writer disk
-    // load in either cell — so the r11 3.8× driver reading was a
-    // host-level throughput phase (now canary-detected below), not
-    // state-store disk contention; tmpfs still removes the stream
-    // family's one disk dependency outright. Explicit settings win.
-    // only adopt tmpfs when it actually has headroom (≥ 4 GiB free):
-    // staged sources + state stores on a nearly-full /dev/shm would
-    // fail queries outright — disk scratch is slower but never wrong
-    if (!sys.props.contains("graft.scratch") && !sys.env.contains("GRAFT_SCRATCH") &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")) &&
-        (try java.nio.file.Files.getFileStore(java.nio.file.Paths.get("/dev/shm"))
-          .getUsableSpace >= (4L << 30) catch { case _: Throwable => false }))
-      sys.props("graft.scratch") = "/dev/shm/graft_scratch"
+    // ride tmpfs when available. The round-12 stream-join attribution
+    // 2×2 (placement × induced fsync load, SURVEY §9) read a consistent
+    // 5–15% on the stream pair from tmpfs placement and NO inflation
+    // from a single-writer disk load in either cell — so the r11 3.8×
+    // driver reading was a host-level throughput phase (now
+    // canary-detected below), not state-store disk contention; tmpfs
+    // still removes the stream family's one disk dependency outright.
+    util.Scratch.adoptTmpfs()
 
     val benchStart = System.nanoTime()
     def now(): Double = (System.nanoTime() - benchStart) / 1e9

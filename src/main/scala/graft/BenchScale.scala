@@ -131,15 +131,10 @@ object BenchScale {
     val quadMax = sys.env.getOrElse("SPARK_GRAFT_QUAD_MAX", "4").toInt
 
     // stream state stores / staged sources on tmpfs when it has
-    // headroom — the same placement Bench.main uses, so the streaming
-    // scale rows measure the engine, not this host's disk fsync path
-    if (!sys.props.contains("graft.scratch") && !sys.env.contains("GRAFT_SCRATCH") &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")) &&
-        (try java.nio.file.Files.getFileStore(java.nio.file.Paths.get("/dev/shm"))
-          .getUsableSpace >= (4L << 30) catch { case _: Throwable => false }))
-      sys.props("graft.scratch") = "/dev/shm/graft_scratch"
+    // headroom — the same placement Bench.main uses
+    util.Scratch.adoptTmpfs()
 
-    // ONE FRESH SparkContext PER KERNEL. Round-6 audits (AuditR6/R6b)
+    // ONE FRESH SparkContext PER KERNEL. Round-6 audits (SURVEY §9)
     // showed the long-lived probe JVM reads the heavy kernels ~2× above
     // their isolated matched-conditions cost (64× neardup: 52–55 s
     // in-probe vs 21–31 s isolated) while cheap kernels are unaffected;
@@ -149,20 +144,10 @@ object BenchScale {
     // multi-kernel session. Recycling the context per kernel (a) drops
     // the accumulated shuffle files and block-manager state with it and
     // (b) makes the artifact reproduce the isolated numbers the repo's
-    // A/B protocol (AuditR5Geom-style) produces — which is the whole
-    // point of an artifact of record.
+    // matched-conditions A/B protocol (SURVEY §9) produces — which is
+    // the whole point of an artifact of record.
     def withSession[T](body: (SparkSession, DataFrame, DataFrame) => T): T = {
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = GraftSession.local(cpus, cpus, "graft-bench-scale")
       val docs0 = io.Tables(spark, sfDir, "documents")
       val emb0 = io.Tables(spark, sfDir, "embeddings")
       docs0.count(); emb0.count() // untimed cold-start warmup
@@ -524,9 +509,9 @@ object BenchScale {
     // synthesizes the f× corpus as an f-leg union, so at the top
     // factors the timed number carries f× plan legs' worth of
     // planning/codegen alongside the data path — an overhead a REAL
-    // f× corpus (more files, same plan) never pays. AuditR11's
-    // dupngrams probe pinned it: at 128× the gram relation is
-    // duplicate-free (instances == distinct (doc, gram), max group 4)
+    // f× corpus (more files, same plan) never pays. The round-11
+    // dupngrams probe (SURVEY §9) pinned it: at 128× the gram relation
+    // is duplicate-free (instances == distinct (doc, gram), max group 4)
     // and the kernel runs 32.4 s in-session vs 143.9 s through the
     // 128-leg union harness. With SPARK_GRAFT_SCALE_MATERIALIZE=1 the
     // inflated input is WRITTEN TO PARQUET UNTIMED and the kernel is

@@ -4918,9 +4918,9 @@ object ExtQueries {
         ev.where(col("event_type") === "purchase"))
       // state-store partitions 4, not the family default 8: the
       // stream-stream interval join's per-trigger cost is per-partition
-      // state open/commit, and the r14 SPARK_GRAFT_STREAM_PARTS sweep
-      // measured 4/8/16/32 → 4.6/5.2/9.6/21.0 s (task time 6→495 s) on
-      // the outer twin — per-query sizing, still env-overridable
+      // state open/commit, and the r14 state-partition sweep measured
+      // 4/8/16/32 → 4.6/5.2/9.6/21.0 s (task time 6→495 s) on the outer
+      // twin — per-query sizing through runToMemory's argument
       StreamOps.runToMemory(joined, "stream_join_sink",
         shufflePartitions = 4)
         .orderBy("click_id", "purchase_id")

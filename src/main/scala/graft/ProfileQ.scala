@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): for each named
   * query, run once untimed (warm codegen/broadcast machinery exactly
@@ -22,17 +21,7 @@ object ProfileQ {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
     val names = args.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, cpus, "graft-profile")
     io.Tables.all.foreach(t => io.Tables(spark, sfDir, t).count())
 
     case class JobRec(id: Int, t0: Long, var t1: Long = 0L, var nStages: Int = 0,

@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local(cpus, cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated name filter for targeted local checks
     // (tools/check.py walks the dump subdirs, so a partial dump works);
@@ -24,11 +17,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+      dump(s"$outDir/$name", name)(fn(spark, sfDir))
       // queries that cache intermediates (dedup/simhash pipelines) must
       // not accumulate across a 67-query session
       spark.catalog.clearCache()
@@ -50,4 +39,20 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Write one query's result to `dir` as a single parquet file and
+    * report whether it succeeded. A query that throws (while planning or
+    * while running) leaves `dir` EMPTY — never absent and never holding
+    * an earlier run's dump — so tools/check.py reports it as "no spark
+    * output" instead of silently skipping it or passing on stale rows. */
+  def dump(dir: String, name: String)(result: => DataFrame): Boolean =
+    try {
+      result.coalesce(1).write.mode("overwrite").parquet(dir)
+      true
+    } catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      util.Scratch.delete(dir)
+      Files.createDirectories(Paths.get(dir))
+      false
+    }
 }

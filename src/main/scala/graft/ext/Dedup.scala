@@ -166,14 +166,6 @@ object Dedup {
   def minHashSignature(hashesCol: Column, numPerms: Int): Column =
     graft.functions.MinHashSig.minhash(hashesCol, numPerms)
 
-  /** Built-ins-only formulation (array_min ∘ transform per permutation) —
-    * validation reference for the native expression; interpreted lambda
-    * evaluation makes it ~50× slower at 128 perms. */
-  def minHashSignatureHof(hashesCol: Column, numPerms: Int): Column =
-    array((0 until numPerms).map { i =>
-      array_min(transform(hashesCol, h => xxhash64(h, lit(i))))
-    }: _*)
-
   /** Explode a signature into (band, bandHash) rows: bands of `rows`
     * consecutive signature entries, hashed together. */
   def lshBands(df: DataFrame, idCol: String, sigCol: String, bands: Int, rows: Int): DataFrame = {
@@ -735,9 +727,7 @@ object Dedup {
       .localCheckpoint(true)
     var changed = 1L
     var i = 0
-    val verbose = sys.env.contains("GRAFT_CC_VERBOSE")
     while (changed > 0 && i < maxIters) {
-      val t0 = System.nanoTime()
       val prop = edges.join(labels, col("dst") === col("id"))
         .groupBy(col("src").as("pid")).agg(min(col("lbl")).as("nlbl"))
       // lazy checkpoint: the count below runs the round's single job,
@@ -752,8 +742,6 @@ object Dedup {
       changed = next.where(col("__chg")).count()
       labels = next.select("id", "lbl")
       i += 1
-      if (verbose) System.err.println(
-        f"[cc] round $i%2d  changed=$changed%-8d ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     }
     require(changed == 0,
       s"connectedComponents did not converge in $maxIters rounds — raise maxIters")
@@ -926,9 +914,6 @@ object Dedup {
     (0 until 60).map(b => when(bitScore(b) > 0, lit(1L << b)).otherwise(lit(0L)))
       .reduce((x, y) => x.bitwiseOR(y))
   }
-
-  /** 60-bit SimHash of a token array column. */
-  def simHash(tokens: Column): Column = simHashFromHashes(wordHashes(tokens))
 
   /** SimHash near-dup pairs: candidates share one of `maxHamming + 1`
     * bit chunks (pigeonhole: ≤ maxHamming differing bits cannot touch

@@ -33,7 +33,7 @@ object Similarity {
   val defaultTrainSample = 32768
 
   /** IVF-PQ serving defaults — the measured operating point, not the
-    * cheapest one. `AuditRecall` (SURVEY §9) on the isotropic sf0.1
+    * cheapest one. The SURVEY §9 recall audit on the isotropic sf0.1
     * embeddings (coarse quantization's worst case, so these are floor
     * numbers): nprobe=4/refine=40 → recall@10 0.26, with the ADC
     * shortlist — not the coarse probe — as the binding cap (nprobe 16
@@ -1270,7 +1270,7 @@ object Similarity {
   /** ANN recall evaluation as a first-class relation — the quality
     * gauge a deployment runs BEFORE trusting an approximate index:
     * per probe, how many of the exact top-k the IVF path returned
-    * (recall@k in integer permille). `AuditRecall` measures this
+    * (recall@k in integer permille). SURVEY §9 records this measured
     * offline across regimes; this operator makes the same number a
     * queryable, externally-replayable relation over the production
     * corpus, so an ingest pipeline can gate an index rollout on it

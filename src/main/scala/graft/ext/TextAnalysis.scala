@@ -98,10 +98,6 @@ object TextAnalysis {
     size(filter(toks, t => t.isInCollection(markers)))
   }
 
-  /** Marker-count score for one language. */
-  def langScore(text: Column, lang: String): Column =
-    langScoreFromTokens(TextOps.tokens(text), lang)
-
   /** n-gram-heuristic language ID over a precomputed token array:
     * argmax marker count, alphabetical tie-break, "und" (undetermined)
     * when nothing matches. Four cheap array scans instead of four

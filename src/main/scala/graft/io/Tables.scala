@@ -51,25 +51,6 @@ object Tables {
       read(spark, dir, name)
     }
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (cboEnabled) catalogTable(spark, dir, name)
-    else spark.read.parquet(s"$dir/$name.parquet")
-
-  /** CBO feed (SURVEY §9 / round-11 verdict ask #4): with
-    * `SPARK_GRAFT_CBO=1` every table read is served through a CATALOG
-    * table carrying the engine's own one-pass ANALYZE output
-    * (`Sketches.computeCatalogStats` → `CatalogStatistics`), so all
-    * suite plans price joins/filters with real row counts, NDVs, and
-    * min/max instead of raw file sizes — the broadcast-flip and
-    * join-reorder decisions `CboSpec` pins, now suite-wide. Default
-    * ON since round 12 (measured correctness-neutral 228/228,
-    * plan-neutral at sf0.01, cost-neutral at sf0.1 — SURVEY §9);
-    * `SPARK_GRAFT_CBO=0` is the kill-switch back to stats-blind
-    * file-size planning. */
-  private def cboEnabled: Boolean =
-    !sys.props.get("graft.cbo").orElse(sys.env.get("SPARK_GRAFT_CBO"))
-      .exists(v => Set("0", "false", "off", "no")(v.trim.toLowerCase))
-
   // the ANALYZE pass is memoized ACROSS sessions — the bench recycles
   // ~60 SparkContexts and must not pay a stats rescan in each; only
   // the metadata-sized catalog install repeats. The entry carries a
@@ -95,7 +76,15 @@ object Tables {
     }
   }
 
-  private def catalogTable(spark: SparkSession, dir: String, name: String): DataFrame = {
+  /** CBO feed (SURVEY §9 / round-11 verdict ask #4): every table read is
+    * served through a CATALOG table carrying the engine's own one-pass
+    * ANALYZE output (`Sketches.computeCatalogStats` →
+    * `CatalogStatistics`), so all suite plans price joins/filters with
+    * real row counts, NDVs, and min/max instead of raw file sizes — the
+    * broadcast-flip and join-reorder decisions `CboSpec` pins, now
+    * suite-wide. Measured correctness-neutral 228/228, plan-neutral at
+    * sf0.01 and cost-neutral at sf0.1 (SURVEY §9). */
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     val tbl = s"graft_$name"
     val marker = s"graft.cbo.registered.$tbl"
     if (!spark.conf.getOption(marker).contains(dir)) synchronized {

@@ -515,7 +515,7 @@ object Sketches {
   }
 
   /** The compute half of [[analyzeToCatalog]], split out so a
-    * whole-suite CBO feed (`io.Tables` under `SPARK_GRAFT_CBO=1`) can
+    * whole-suite CBO feed (every `io.Tables` read) can
     * memoize the ANALYZE pass per (dir, table) across the bench's
     * recycled sessions — the stats object is session-independent;
     * only the cheap catalog install repeats per session. */

@@ -672,13 +672,10 @@ object StreamOps {
       shufflePartitions: Int = 8): DataFrame = {
     val spark = df.sparkSession
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // env override for attribution experiments / deployment sizing —
-    // the default stays 8 (the measured local sweet spot; a production
-    // deployment sizes state-store partitions to throughput)
-    val parts = sys.props.get("graft.stream.parts")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTS"))
-      .map(_.toInt).getOrElse(shufflePartitions)
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    // state-store partitions are sized per query by the caller: the
+    // default 8 is the measured local sweet spot, the stream-stream
+    // joins pass 4 (a production deployment sizes them to throughput)
+    spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
     try {
       // checkpoint/state store on the Scratch root (tmpfs-relocatable):
       // a stateful drain writes one state delta per partition per

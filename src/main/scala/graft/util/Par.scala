@@ -25,13 +25,6 @@ import org.apache.spark.sql.DataFrame
   * independent by contract (the reference's R-knob invariant).
   */
 object Par {
-  // kill-switch (SPARK_GRAFT_WIDEN=0): restores the unwidened plans for
-  // A/B attribution runs and for deployments whose inputs are always
-  // well-split
-  private lazy val enabled: Boolean =
-    !sys.props.get("graft.widen").orElse(sys.env.get("SPARK_GRAFT_WIDEN"))
-      .exists(v => Set("0", "false", "off", "no")(v.trim.toLowerCase))
-
   def widen(df: DataFrame): DataFrame = widen(df, Int.MaxValue)
 
   /** `widen` with a cap below the session default parallelism — for
@@ -42,7 +35,7 @@ object Par {
     * the cache build. Cap choice is a measured per-callsite decision,
     * like widen placement itself. */
   def widen(df: DataFrame, cap: Int): DataFrame = {
-    if (!enabled || df.isStreaming) return df // no .rdd probe on a stream
+    if (df.isStreaming) return df // no .rdd probe on a stream
     val target =
       math.min(cap, df.sparkSession.sparkContext.defaultParallelism)
     // .rdd only PLANS the frame (no job); scans report their file splits

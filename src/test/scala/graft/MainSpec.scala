@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.{assert_true, lit}
+
 /** A user's custom mapper/reducer pair, exactly as someone outside the
   * engine would write them: plain classes implementing the two traits,
   * submitted to the CLI by fully-qualified name. */
@@ -251,5 +253,45 @@ class MainSpec extends SparkSpec {
     val rows = back.select($"key", $"value".cast("long")).as[(String, Long)].collect().toMap
     assert(rows.size == 25)
     assert(rows.values.forall(_ == 1000000L)) // 500 * 2000
+  }
+
+  test("Verify.dump: a throwing query leaves an EMPTY dump dir, never a stale one") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("verify_out")
+    val dir = out.resolve("q_throws").toString
+    // an earlier run's dump of the same query, which check.py would pass
+    assert(Verify.dump(dir, "q_throws")(Seq(1L, 2L).toDF("x")))
+    assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".parquet")))
+    val ok = Verify.dump(dir, "q_throws")(
+      Seq(1L).toDF("x").select(assert_true(lit(false))))
+    assert(!ok)
+    val left = new java.io.File(dir).listFiles()
+    assert(left != null, "the failed query's dump dir must exist for check.py to see it")
+    assert(left.isEmpty, s"stale output survived a failed query: ${left.map(_.getName).toSeq}")
+    // a query that throws while it is being built, not run
+    val dir2 = out.resolve("q_build_throws").toString
+    assert(!Verify.dump(dir2, "q_build_throws")(sys.error("boom")))
+    assert(new java.io.File(dir2).listFiles().isEmpty)
+  }
+
+  test("every main builds its session through GraftSession (no other SparkSession.builder)") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    def isCode(line: String): Boolean =
+      !Seq("//", "/*", "*").exists(line.trim.startsWith)
+    val walk = Files.walk(root)
+    val offenders = try walk.iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "GraftSession.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if isCode(line) && line.contains("SparkSession.builder") =>
+            s"$p:${i + 1}"
+        }
+      }.toList
+    finally walk.close()
+    assert(offenders.isEmpty,
+      s"build sessions with GraftSession.local, not by hand: ${offenders.mkString(", ")}")
   }
 }
