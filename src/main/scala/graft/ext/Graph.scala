@@ -58,17 +58,8 @@ object Graph {
     * replays the fixpoint trajectory bit-for-bit (the same reason the
     * BM25/LM scores are integer). Nodes with no out-edges simply leak
     * their mass (the standard simplified formulation); nodes with no
-    * in-edges settle at the teleport floor.
-    *
-    * Scale shape: edges are projected to ids-only ONCE, joined with
-    * their out-degree, and cached — per iteration the work is exactly
-    * one shuffle keyed by `src` (rank join) and one keyed by `dst`
-    * (contribution sum), both linear in |edges|; the rank relation
-    * stays O(nodes) with a `localCheckpoint` per round so the plan
-    * doesn't grow with the iteration count (the
-    * `connectedComponents` lineage rule). The node count crosses the
-    * driver once as a broadcast 1-row aggregate — no `collect`, no
-    * driver-side graph. */
+    * in-edges settle at the teleport floor. It is [[trustRank]] with
+    * every node seeded; scale shape and fast path at `seededRank`. */
   def pageRank(
       edges0: DataFrame,
       srcCol: String,
@@ -78,73 +69,9 @@ object Graph {
       iters: Int = defaultIters,
       scale: Long = defaultScale,
       dampX100: Long = defaultDampX100,
-      scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
-    require(iters >= 0 && dampX100 >= 0 && dampX100 <= 100 && scale > 0,
-      s"need iters >= 0, 0 <= dampX100 <= 100, scale > 0; got $iters/$dampX100/$scale")
-    val edges = scope.cache(
-      edges0.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val nodes = scope.cache(nodes0.select(col(idCol).as("id")))
-    // r13: the node count crosses the driver as ONE bounded 1-row
-    // aggregate and becomes a literal, instead of a broadcast 1-row
-    // relation crossJoined into EVERY round (that cost one broadcast
-    // exchange + job per iteration). Same integer arithmetic: the
-    // teleport/seed terms are constant-folded from the same count.
-    val nn = nodes.count()
-    val teleport = if (nn == 0) 0L else ((100L - dampX100) * scale) / (100L * nn)
-    // driver-local fast path (see graphLocalMax): the loop below
-    // replicates the distributed rounds exactly — degrees count edge
-    // MULTIPLICITY (no distinct here), a src outside the node set
-    // contributes nothing (the rank join is inner), a dst outside it
-    // receives nothing (ranks come from the node relation), and
-    // `r div d` on non-negative int64 is Java `/`.
-    if (nn + edges.count() <= graphLocalMax &&
-        allLong(edges, "src", "dst") && allLong(nodes, "id")) {
-      val eArr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nArr = nodes.collect().map(_.getLong(0))
-      val degM = scala.collection.mutable.LongMap.empty[Long]
-      eArr.foreach { case (s, _) => degM(s) = degM.getOrElse(s, 0L) + 1L }
-      var r = scala.collection.mutable.LongMap.empty[Long]
-      val init = if (nn == 0) 0L else scale / nn
-      nArr.foreach(id => r(id) = init)
-      for (_ <- 1 to iters) {
-        val contrib = scala.collection.mutable.LongMap.empty[Long]
-        eArr.foreach { case (s, d) =>
-          r.get(s).foreach(rs =>
-            contrib(d) = contrib.getOrElse(d, 0L) + rs / degM(s))
-        }
-        val nr = scala.collection.mutable.LongMap.empty[Long]
-        nArr.foreach(id =>
-          nr(id) = teleport + (dampX100 * contrib.getOrElse(id, 0L)) / 100L)
-        r = nr
-      }
-      return localRel(edges.sparkSession,
-        nArr.map(id => org.apache.spark.sql.Row(id, r(id))),
-        Seq(idCol, "pr"))
-    }
-    // out-degree joined onto every edge once — the per-iteration join
-    // then carries (src, dst, d) and never recomputes degrees
-    val ed = scope.cache(edges
-      .join(edges.groupBy("src").agg(count(lit(1)).as("d")), "src"))
-    // r13: no per-round localCheckpoint — ranks is referenced ONCE per
-    // round (contrib join), so lineage grows LINEARLY in iters (the
-    // exponential-branch hazard that forces checkpoints in
-    // connectedComponents/LPA/kCore does not exist here) and the whole
-    // fixpoint executes as one adaptive plan: 2 shuffles per round, no
-    // per-round RDD materialization barriers. (Profiled: 64 jobs → ~18
-    // for 5 rounds at sf0.1.)
-    var ranks = nodes
-      .select(col("id"), lit(if (nn == 0) 0L else scale / nn).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = ed.join(ranks, col("src") === col("id"))
-        .groupBy(col("dst"))
-        .agg(sum(expr("r div d")).as("s"))
-      ranks = nodes
-        .join(contrib, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit(teleport) + expr(s"($dampX100 * coalesce(s, 0L)) div 100")).as("r"))
-    }
-    ranks.select(col("id").as(idCol), col("r").as("pr"))
-  }
+      scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame =
+    seededRank(edges0, srcCol, dstCol, nodes0.select(col(idCol).as("id")), lit(1L),
+      idCol, "pr", iters, scale, dampX100, scope)
 
   /** Seeded (personalized) PageRank — the TrustRank form of the
     * centrality family: teleport mass flows ONLY to a trusted seed set
@@ -165,13 +92,8 @@ object Graph {
     * set yields every score 0 (the teleport term coalesces to 0 when
     * |seeds| = 0, matching the same CASE guard in the oracle SQL —
     * without it Spark's `div` returns NULL and DuckDB's `//` errors).
-    *
-    * Scale shape: identical to `pageRank` — per round one src-keyed
-    * rank join + one dst-keyed contribution sum over the cached
-    * ids-only degree-joined edges, O(nodes) rank relation with
-    * per-round lineage truncation; the seed flag rides the cached
-    * node relation and the seed COUNT crosses as a broadcast 1-row
-    * aggregate. Nothing collects. */
+    * Scale shape and fast path at `seededRank`; the seed flag rides the
+    * cached node relation. */
   def trustRank(
       edges0: DataFrame,
       srcCol: String,
@@ -184,37 +106,67 @@ object Graph {
       scale: Long = defaultScale,
       dampX100: Long = defaultDampX100,
       scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
+    val seedIds = seeds0.select(col(seedIdCol).as("id")).distinct()
+    val nodes = nodes0.select(col(idCol).as("id"))
+      .join(seedIds.withColumn("__s", lit(1L)), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__s"), lit(0L)).as("isSeed"))
+    seededRank(edges0, srcCol, dstCol, nodes, col("isSeed"),
+      idCol, "trust", iters, scale, dampX100, scope)
+  }
+
+  /** The one integer fixpoint behind [[pageRank]] and [[trustRank]]:
+    * `r₀(v) = isSeed(v)·(scale div ns)`, then
+    * `r_{t+1}(v) = isSeed(v)·(((100-d)·scale) div (100·ns)) + (d·Σ_u r_t(u) div deg(u)) div 100`
+    * with ns the seed count (0 seeds → every score 0). `nodes` is (id)
+    * or (id, isSeed) and `isSeed` a 0/1 int64 column over it; PageRank
+    * seeds every node (`lit(1L)`, so ns = the node count). isSeed ∈
+    * {0,1}, so (isSeed · C) div ns ≡ isSeed · (C div ns) and both
+    * teleport constants fold to literals from ONE driver-side count.
+    *
+    * Scale shape: edges are projected to ids-only ONCE, joined with
+    * their out-degree, and cached — per iteration one src-keyed rank
+    * join + one dst-keyed contribution sum, both linear in |edges|.
+    * No per-round checkpoint: ranks is consumed once per round, so
+    * lineage grows LINEARLY in iters (the exponential-branch hazard
+    * that forces checkpoints in connectedComponents/LPA/kCore does not
+    * exist here) and the whole fixpoint executes as one adaptive plan
+    * (profiled: 64 jobs → ~18 for 5 rounds at sf0.1). */
+  private def seededRank(
+      edges0: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      nodes0: DataFrame,
+      isSeed: org.apache.spark.sql.Column,
+      idCol: String,
+      outCol: String,
+      iters: Int,
+      scale: Long,
+      dampX100: Long,
+      scope: graft.util.CacheScope): DataFrame = {
     require(iters >= 0 && dampX100 >= 0 && dampX100 <= 100 && scale > 0,
       s"need iters >= 0, 0 <= dampX100 <= 100, scale > 0; got $iters/$dampX100/$scale")
     val edges = scope.cache(
       edges0.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    val seedIds = seeds0.select(col(seedIdCol).as("id")).distinct()
-    val nodes = scope.cache(nodes0.select(col(idCol).as("id"))
-      .join(seedIds.withColumn("__s", lit(1L)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__s"), lit(0L)).as("isSeed")))
-    // r13 (the pageRank rewrite, seed-gated form): the seed count
-    // crosses the driver once and both teleport constants fold to
-    // literals — isSeed ∈ {0,1}, so (isSeed · C) div ns ≡
-    // isSeed · (C div ns) and the integer trajectory is unchanged; the
-    // ns = 0 guard becomes a Scala conditional instead of a per-row
-    // CASE. No per-round checkpoint: ranks is consumed once per round,
-    // lineage linear in iters (see pageRank).
-    val ns = nodes.agg(sum(col("isSeed")).as("ns")).collect()
-      .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-      .getOrElse(0L)
+    val nodes = scope.cache(nodes0)
+    val counts = nodes.agg(count(lit(1)), coalesce(sum(isSeed), lit(0L))).head()
+    val (nn, ns) = (counts.getLong(0), counts.getLong(1))
     val initSeed = if (ns == 0) 0L else scale / ns
     val roundSeed = if (ns == 0) 0L else ((100L - dampX100) * scale) / (100L * ns)
-    // driver-local fast path — the pageRank loop with the
-    // seed-gated teleport (isSeed ∈ {0,1} rides the collected node
-    // rows; everything else replicates identically)
-    if (nodes.count() + edges.count() <= graphLocalMax &&
+    // driver-local fast path (see graphLocalMax): the loop below
+    // replicates the distributed rounds exactly — degrees count edge
+    // MULTIPLICITY (no distinct here), a src outside the node set
+    // contributes nothing (the rank join is inner), a dst outside it
+    // receives nothing (ranks come from the node relation), and
+    // `r div d` on non-negative int64 is Java `/`.
+    if (nn + edges.count() <= graphLocalMax &&
         allLong(edges, "src", "dst") && allLong(nodes, "id")) {
       val eArr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val nArr = nodes.collect().map(r => (r.getLong(0), r.getLong(1)))
+      val nArr = nodes.select(col("id"), isSeed).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
       val degM = scala.collection.mutable.LongMap.empty[Long]
       eArr.foreach { case (s, _) => degM(s) = degM.getOrElse(s, 0L) + 1L }
       var r = scala.collection.mutable.LongMap.empty[Long]
-      nArr.foreach { case (id, isSeed) => r(id) = isSeed * initSeed }
+      nArr.foreach { case (id, seed) => r(id) = seed * initSeed }
       for (_ <- 1 to iters) {
         val contrib = scala.collection.mutable.LongMap.empty[Long]
         eArr.foreach { case (s, d) =>
@@ -222,31 +174,30 @@ object Graph {
             contrib(d) = contrib.getOrElse(d, 0L) + rs / degM(s))
         }
         val nr = scala.collection.mutable.LongMap.empty[Long]
-        nArr.foreach { case (id, isSeed) =>
-          nr(id) = isSeed * roundSeed +
-            (dampX100 * contrib.getOrElse(id, 0L)) / 100L
+        nArr.foreach { case (id, seed) =>
+          nr(id) = seed * roundSeed + (dampX100 * contrib.getOrElse(id, 0L)) / 100L
         }
         r = nr
       }
       return localRel(edges.sparkSession,
         nArr.map { case (id, _) => org.apache.spark.sql.Row(id, r(id)) },
-        Seq(idCol, "trust"))
+        Seq(idCol, outCol))
     }
+    // out-degree joined onto every edge once — the per-iteration join
+    // then carries (src, dst, d) and never recomputes degrees
     val ed = scope.cache(edges
       .join(edges.groupBy("src").agg(count(lit(1)).as("d")), "src"))
-    var ranks = nodes
-      .select(col("id"), col("isSeed"), (col("isSeed") * lit(initSeed)).as("r"))
+    var ranks = nodes.select(col("id"), (isSeed * lit(initSeed)).as("r"))
     for (_ <- 1 to iters) {
-      val contrib = ed.join(ranks.select("id", "r"), col("src") === col("id"))
+      val contrib = ed.join(ranks, col("src") === col("id"))
         .groupBy(col("dst"))
         .agg(sum(expr("r div d")).as("s"))
       ranks = nodes
         .join(contrib, col("id") === col("dst"), "left")
-        .select(col("id"), col("isSeed"),
-          (col("isSeed") * lit(roundSeed)
-            + expr(s"($dampX100 * coalesce(s, 0L)) div 100")).as("r"))
+        .select(col("id"),
+          (isSeed * lit(roundSeed) + expr(s"($dampX100 * coalesce(s, 0L)) div 100")).as("r"))
     }
-    ranks.select(col("id").as(idCol), col("r").as("trust"))
+    ranks.select(col("id").as(idCol), col("r").as(outCol))
   }
 
   /** Oracle generator for `trustRank`: the pageRank replay with the

@@ -508,38 +508,45 @@ object Search {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      path: String): Unit = {
+      path: String): Unit =
+    writeIndexRels(docs, idCol, textCol, path, "")
+
+  /** Tokenize `docs` once and write the three index relations as
+    * `$path/<rel>$suffix`: range-sorted postings first, then `term_df`
+    * and `meta` derived from the WRITTEN postings as two concurrent
+    * jobs (§2.6). r13: term_df comes off a pruned (term) columnar scan
+    * of the compact postings instead of re-running the
+    * tokenize+explode+aggregate pipeline over the corpus. r14 (guide
+    * §1.2 — remove passes): meta's tokenize pass is gone too. sum_dl
+    * comes off the written postings' distinct (id, dl) rows (dl is
+    * functionally dependent on id, so each tokenized doc contributes
+    * once); n_docs is a tokenize-free count. The one asymmetry — docs
+    * that leave no postings row — is exact by construction: a
+    * token-LESS doc contributed 0 to the old sum and contributes
+    * nothing to the postings sum (same value), and a NULL-text doc
+    * contributed NULL (ignored); the old sum was NULL (instead of 0)
+    * only when the input had no non-null text at all, which
+    * `count(textCol)` — a read, never a tokenize — reproduces. */
+  private def writeIndexRels(
+      docs: DataFrame,
+      idCol: String,
+      textCol: String,
+      path: String,
+      suffix: String): Unit = {
     val dl = graft.util.Par.widen(docs)
       .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("tk"))
       .select(col("id"), size(col("tk")).cast("long").as("dl"), col("tk"))
     val postings = dl
       .select(col("id"), col("dl"), explode(col("tk")).as("term"))
       .groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
-    // r13: term_df comes off the postings just WRITTEN — a pruned
-    // (term) columnar scan of the compact index relation — instead of
-    // re-running the tokenize+explode+aggregate pipeline over the
-    // corpus a second time (strictly cheaper at every scale: the
-    // postings relation is the gram stream already term-sorted).
-    // r14 (guide §1.2 — remove passes): meta's TOKENIZE pass is gone
-    // too. sum_dl comes off the written postings' distinct (id, dl)
-    // rows (dl is functionally dependent on id, so each tokenized doc
-    // contributes once); n_docs is a tokenize-free corpus count. The
-    // one asymmetry — docs that leave no postings row — is exact by
-    // construction: a token-LESS doc contributed 0 to the old sum and
-    // contributes nothing to the postings sum (same value), and a
-    // NULL-text doc contributed NULL (ignored); the old sum was NULL
-    // (instead of 0) only when the corpus had no non-null text at
-    // all, which `count(textCol)` — a read, never a tokenize —
-    // reproduces. The two derived passes (term_df, meta) overlap as
-    // concurrent jobs (§2.6) after the one tokenize pass lands.
     postings
       .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$path/postings")
-    val written = docs.sparkSession.read.parquet(s"$path/postings")
+      .write.mode("overwrite").parquet(s"$path/postings$suffix")
+    val written = docs.sparkSession.read.parquet(s"$path/postings$suffix")
     graft.util.Par.jobs(Seq(
       () => written
         .groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$path/term_df"),
+        .write.mode("overwrite").parquet(s"$path/term_df$suffix"),
       () => docs
         .agg(count(lit(1)).as("n_docs"), count(col(textCol)).as("__nt"))
         .crossJoin(broadcast(written.select("id", "dl").distinct()
@@ -547,7 +554,7 @@ object Search {
         .select(col("n_docs"),
           when(col("__nt") > 0, coalesce(col("__sd"), lit(0L)))
             .otherwise(lit(null).cast("long")).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$path/meta")))
+        .write.mode("overwrite").parquet(s"$path/meta$suffix")))
   }
 
   /** The index's three relation names; each lives as a base directory
@@ -618,34 +625,7 @@ object Search {
       .flatMap(rel => deltaDirs(spark, path, rel)
         .map(_.split("_delta_").last.toInt))
       .reduceOption(_ max _).map(_ + 1).getOrElse(0)
-    val dl = graft.util.Par.widen(batch)
-      .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("tk"))
-      .select(col("id"), size(col("tk")).cast("long").as("dl"), col("tk"))
-    val newPost = dl
-      .select(col("id"), col("dl"), explode(col("tk")).as("term"))
-      .groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
-    // df and meta from the delta just written (pruned columnar reads)
-    // — the writeTextIndex r13/r14 rationale per fold-in batch: ONE
-    // tokenize pass over the batch (the postings write), then the two
-    // derived relations overlap as concurrent jobs (§2.6); meta's
-    // sum_dl comes off the delta's distinct (id, dl) with the same
-    // exact tokenless/null-text asymmetry handling.
-    newPost
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$path/postings_delta_$gen")
-    val written = spark.read.parquet(s"$path/postings_delta_$gen")
-    graft.util.Par.jobs(Seq(
-      () => written
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$path/term_df_delta_$gen"),
-      () => batch
-        .agg(count(lit(1)).as("n_docs"), count(col(textCol)).as("__nt"))
-        .crossJoin(broadcast(written.select("id", "dl").distinct()
-          .agg(sum(col("dl")).as("__sd"))))
-        .select(col("n_docs"),
-          when(col("__nt") > 0, coalesce(col("__sd"), lit(0L)))
-            .otherwise(lit(null).cast("long")).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$path/meta_delta_$gen")))
+    writeIndexRels(batch, idCol, textCol, path, s"_delta_$gen")
   }
 
   /** Fold accumulated deltas back into the base relations — the

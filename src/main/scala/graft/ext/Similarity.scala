@@ -126,11 +126,8 @@ object Similarity {
       probeIdCol: String,
       probeVecCol: String,
       k: Int): DataFrame = {
-    val scored = scoreAllPairs(corpus, probes, idCol, vecCol, probeIdCol, probeVecCol)
-    val top = graft.plans.TopKPerKey(
-      scored, Seq(probeIdCol), Seq(("qdot", false), (idCol, true)), k)
-    val w = Window.partitionBy(probeIdCol).orderBy(desc("qdot"), asc(idCol))
-    top.withColumn("rn", row_number().over(w).cast("long"))
+    rankTopK(scoreAllPairs(corpus, probes, idCol, vecCol, probeIdCol, probeVecCol),
+      probeIdCol, idCol, k)
   }
 
   /** Hard-negative mining for embedding/retrieval training: for each
@@ -159,12 +156,8 @@ object Similarity {
       probeVecCol: String,
       k: Int,
       maxQdot: Long = 450000L): DataFrame = {
-    val scored = scoreAllPairs(corpus, probes, idCol, vecCol, probeIdCol, probeVecCol)
-      .where(col("qdot") < maxQdot)
-    val top = graft.plans.TopKPerKey(
-      scored, Seq(probeIdCol), Seq(("qdot", false), (idCol, true)), k)
-    val w = Window.partitionBy(probeIdCol).orderBy(desc("qdot"), asc(idCol))
-    top.withColumn("rn", row_number().over(w).cast("long"))
+    rankTopK(scoreAllPairs(corpus, probes, idCol, vecCol, probeIdCol, probeVecCol)
+      .where(col("qdot") < maxQdot), probeIdCol, idCol, k)
   }
 
   /** The built-ins-only window formulation — equivalence reference for
@@ -391,11 +384,7 @@ object Similarity {
     // pair dedup would otherwise shuffle both float vectors per
     // candidate row; vectors are re-attached afterwards by two joins
     // against the (small per bucket-key group) corpus
-    val buckets = df
-      .select(col(idCol),
-        posexplode(graft.functions.RhpBuckets.rhpBuckets(col(vecCol), dim, planesN, tablesN)))
-      .withColumnRenamed("pos", "tbl")
-      .withColumnRenamed("col", "bkt")
+    val buckets = rhpBucketRows(df, col(idCol), vecCol, dim, planesN, tablesN)
     val a = buckets.select(col("tbl"), col("bkt"), col(idCol).as("id_a"))
     val b = buckets.select(col("tbl"), col("bkt"), col(idCol).as("id_b"))
     val cands = a.join(b, Seq("tbl", "bkt"))
@@ -951,20 +940,9 @@ object Similarity {
       scope, "ivfTopK")
     val lists = ivfAssign(corpus, idCol, vecCol, cents)
     val candidates = corpus.where(candidateFilter)
-    val probes = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
-    // probe the nprobe Euclidean-nearest lists — the same metric that
-    // assigned the corpus, so a probe's neighbors live in the lists it
-    // scans
-    val wp = Window.partitionBy("probe_id").orderBy(desc("cd"), asc("cent_id"))
-    val probeLists = probes.crossJoin(broadcast(cents))
-      .select(col("probe_id"), col("cent_id"),
-        (lit(2L) * quantizedDot(col("pe"), col("cv")) - col("nrm")).as("cd"))
-      .withColumn("pr", row_number().over(wp))
-      .where(col("pr") <= nprobe)
-      .select(col("probe_id"), col("cent_id").as("list_id"))
+    val probes = probeRows(corpus, probeFilter, idCol, vecCol)
     val corpusLists = candidates.select(col(idCol), col(vecCol)).join(lists, Seq(idCol))
-    val rescored = probeLists.join(corpusLists, "list_id")
+    val rescored = route(probes, cents, nprobe).join(corpusLists, "list_id")
       .where(col(idCol) =!= col("probe_id"))
       .join(broadcast(probes), "probe_id")
       .select(col("probe_id"), col(idCol),
@@ -975,7 +953,7 @@ object Similarity {
     val capped =
       if (maxQdot == Long.MaxValue) rescored
       else rescored.where(col("qdot") < maxQdot)
-    rankTopK(capped, idCol, k)
+    rankTopK(capped, "probe_id", idCol, k)
   }
 
   /** All-points k-nearest-neighbor GRAPH via the trained IVF coarse
@@ -1107,7 +1085,7 @@ object Similarity {
       .where(edgeFilter)
       .select(col("probe_id"), col(idCol),
         quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(rescored, idCol, k)
+    rankTopK(rescored, "probe_id", idCol, k)
   }
 
   /** Driver-local exact replica of the distributed kNN-graph derivation
@@ -1248,8 +1226,7 @@ object Similarity {
       negatives: Int = 3,
       minPosQdot: Long = 450000L,
       scope: graft.util.CacheScope = new graft.util.CacheScope): DataFrame = {
-    val probes = emb.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
+    val probes = probeRows(emb, probeFilter, idCol, vecCol)
     val scored = scope.cache(
       scoreAllPairs(emb, probes, idCol, vecCol, "probe_id", "pe"))
     val pos = graft.plans.TopKPerKey(
@@ -1257,7 +1234,7 @@ object Similarity {
         Seq("probe_id"), Seq(("qdot", false), (idCol, true)), 1)
       .select(col("probe_id"),
         col(idCol).as("pos_id"), col("qdot").as("pos_qdot"))
-    val neg = rankTopK(scored.where(col("qdot") < minPosQdot), idCol, negatives)
+    val neg = rankTopK(scored.where(col("qdot") < minPosQdot), "probe_id", idCol, negatives)
       .select(col("probe_id"),
         col(idCol).as("neg_id"), col("qdot").as("neg_qdot"),
         col("rn").as("neg_rank"))
@@ -1291,8 +1268,7 @@ object Similarity {
       k: Int = 10,
       numCentroids: Int = 64,
       nprobe: Int = 4): DataFrame = {
-    val probes = emb.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
+    val probes = probeRows(emb, probeFilter, idCol, vecCol)
     val truth = bruteForceTopK(emb, probes, idCol, vecCol, "probe_id", "pe", k)
       .select(col("probe_id"), col(idCol))
     val approx = ivfTopK(emb, idCol, vecCol, probeFilter, k, numCentroids, nprobe)
@@ -1822,15 +1798,7 @@ object Similarity {
       case Some(df) => return df
       case None =>
     }
-    val probes = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
-    val wp = Window.partitionBy("probe_id").orderBy(desc("cd"), asc("cent_id"))
-    val probeLists = probes.crossJoin(broadcast(index.coarse))
-      .select(col("probe_id"), col("cent_id"),
-        (lit(2L) * quantizedDot(col("pe"), col("cv")) - col("nrm")).as("cd"))
-      .withColumn("pr", row_number().over(wp))
-      .where(col("pr") <= nprobe)
-      .select(col("probe_id"), col("cent_id").as("list_id"))
+    val probes = probeRows(corpus, probeFilter, idCol, vecCol)
     // ADC lookup table: probes × numSub × codebook distances — tiny,
     // broadcast into the code-keyed candidate join
     val adc = pqSubspaces(probes.select(col("probe_id"), qvT(col("pe")).as("q")),
@@ -1840,23 +1808,14 @@ object Similarity {
         qdist(col("sv"), col("cv")).as("d"))
     // candidates carry CODES only (8 small ints), never raw vectors:
     // each (probe, candidate) sums its numSub table distances
-    val cand = probeLists.join(index.lists, "list_id")
+    val cand = route(probes, index.coarse, nprobe).join(index.lists, "list_id")
       .where(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol))
       .join(index.codes, idCol)
       .join(broadcast(adc), Seq("probe_id", "sub", "code"))
       .groupBy("probe_id", idCol)
       .agg(sum(col("d")).as("adc"))
-    // ADC shortlist (bounded heap), then exact re-rank of ≤ refine rows
-    val short = graft.plans.TopKPerKey(
-      cand, Seq("probe_id"), Seq(("adc", true), (idCol, true)), refine)
-      .select(col("probe_id"), col(idCol))
-    val rescored = short
-      .join(corpus.select(col(idCol), col(vecCol)), idCol)
-      .join(broadcast(probes), "probe_id")
-      .select(col("probe_id"), col(idCol),
-        quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(rescored, idCol, k)
+    rerank(cand, "adc", ascending = true, probes, corpus, idCol, vecCol, refine, k)
   }
 
   /** Driver-local exact replica of [[probeIndex]]'s serve leg for an
@@ -2087,17 +2046,8 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int,
-      refine: Int = defaultRefine): DataFrame = {
-    val short = graft.plans.TopKPerKey(
-      scored, Seq("probe_id"), Seq(("adc", true), (idCol, true)), refine)
-      .select(col("probe_id"), col(idCol))
-    val rescored = short
-      .join(corpus.select(col(idCol), col(vecCol)), idCol)
-      .join(broadcast(probes), "probe_id")
-      .select(col("probe_id"), col(idCol),
-        quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(rescored, idCol, k)
-  }
+      refine: Int = defaultRefine): DataFrame =
+    rerank(scored, "adc", ascending = true, probes, corpus, idCol, vecCol, refine, k)
 
   /** Residual IVF-PQ top-k — true IVFADC (Jégou et al. 2011,
     * "Product Quantization for Nearest Neighbor Search"): PQ encodes
@@ -2192,15 +2142,8 @@ object Similarity {
       corpus, idCol, vecCol, numCentroids, dim, numSub, codebook,
       trainRounds, trainSample, scope)
     val codes = codesFull.select(col(idCol), col("sub"), col("code"))
-    val probes = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
-    val wp = Window.partitionBy("probe_id").orderBy(desc("cd"), asc("cent_id"))
-    val probeLists = probes.crossJoin(broadcast(coarse))
-      .select(col("probe_id"), col("cent_id"),
-        (lit(2L) * quantizedDot(col("pe"), col("cv")) - col("nrm")).as("cd"))
-      .withColumn("pr", row_number().over(wp))
-      .where(col("pr") <= nprobe)
-      .select(col("probe_id"), col("cent_id").as("list_id"))
+    val probes = probeRows(corpus, probeFilter, idCol, vecCol)
+    val probeLists = route(probes, coarse, nprobe)
     // the probe's residual differs PER PROBED LIST — the ADC table is
     // keyed (probe, list, sub, code), still a tiny broadcast
     val pres = probeLists
@@ -2220,15 +2163,7 @@ object Similarity {
       .join(broadcast(adc), Seq("probe_id", "list_id", "sub", "code"))
       .groupBy("probe_id", idCol)
       .agg(sum(col("d")).as("adc"))
-    val short = graft.plans.TopKPerKey(
-      cand, Seq("probe_id"), Seq(("adc", true), (idCol, true)), refine)
-      .select(col("probe_id"), col(idCol))
-    val rescored = short
-      .join(corpus.select(col(idCol), col(vecCol)), idCol)
-      .join(broadcast(probes), "probe_id")
-      .select(col("probe_id"), col(idCol),
-        quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(rescored, idCol, k)
+    rerank(cand, "adc", ascending = true, probes, corpus, idCol, vecCol, refine, k)
   }
 
   /** Driver-local exact replica of [[ivfPqResidualTopK]] for a corpus
@@ -2304,12 +2239,67 @@ object Similarity {
     * buckets hold millions of candidates never funnels them all into
     * one window task), then rank labels over the ≤ k·probes
     * survivors. */
-  private def rankTopK(scored: DataFrame, idCol: String, k: Int): DataFrame = {
+  private def rankTopK(
+      scored: DataFrame, probeCol: String, idCol: String, k: Int): DataFrame = {
     val top = graft.plans.TopKPerKey(
-      scored, Seq("probe_id"), Seq(("qdot", false), (idCol, true)), k)
-    val w = Window.partitionBy("probe_id").orderBy(desc("qdot"), asc(idCol))
+      scored, Seq(probeCol), Seq(("qdot", false), (idCol, true)), k)
+    val w = Window.partitionBy(probeCol).orderBy(desc("qdot"), asc(idCol))
     top.withColumn("rn", row_number().over(w).cast("long"))
   }
+
+  /** The probe batch as (probe_id, pe): the `probeFilter` rows of the
+    * corpus with their raw vectors. */
+  private def probeRows(
+      corpus: DataFrame, probeFilter: Column, idCol: String, vecCol: String): DataFrame =
+    corpus.where(probeFilter).select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
+
+  /** (probe_id, list_id): each probe's `nprobe` Euclidean-nearest
+    * coarse lists by (2·pe·cv − |c|² desc, cent_id asc) — the metric
+    * that assigned the corpus, so a probe's neighbors live in the lists
+    * it scans. `coarse` is (cent_id, cv, nrm), broadcast. */
+  private def route(probes: DataFrame, coarse: DataFrame, nprobe: Int): DataFrame = {
+    val wp = Window.partitionBy("probe_id").orderBy(desc("cd"), asc("cent_id"))
+    probes.crossJoin(broadcast(coarse))
+      .select(col("probe_id"), col("cent_id"),
+        (lit(2L) * quantizedDot(col("pe"), col("cv")) - col("nrm")).as("cd"))
+      .withColumn("pr", row_number().over(wp))
+      .where(col("pr") <= nprobe)
+      .select(col("probe_id"), col("cent_id").as("list_id"))
+  }
+
+  /** The quantized serves' tail: the `refine` best candidates per probe
+    * by `scoreCol` (bounded heap, id-broken ties), re-scored exactly
+    * against raw corpus vectors, ranked top-k by qdot. `probes` is
+    * (probe_id, pe), broadcast. */
+  private def rerank(
+      scored: DataFrame,
+      scoreCol: String,
+      ascending: Boolean,
+      probes: DataFrame,
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      refine: Int,
+      k: Int): DataFrame = {
+    val short = graft.plans.TopKPerKey(
+      scored, Seq("probe_id"), Seq((scoreCol, ascending), (idCol, true)), refine)
+      .select(col("probe_id"), col(idCol))
+    val rescored = short
+      .join(corpus.select(col(idCol), col(vecCol)), idCol)
+      .join(broadcast(probes), "probe_id")
+      .select(col("probe_id"), col(idCol),
+        quantizedDot(col("pe"), col(vecCol)).as("qdot"))
+    rankTopK(rescored, "probe_id", idCol, k)
+  }
+
+  /** (id, tbl, bkt): one row per hyperplane table of each row of `df`,
+    * `id` being its id column under the name the caller joins on. */
+  private def rhpBucketRows(
+      df: DataFrame, id: Column, vecCol: String, dim: Int, planes: Int, tables: Int): DataFrame =
+    df.select(id,
+        posexplode(graft.functions.RhpBuckets.rhpBuckets(col(vecCol), dim, planes, tables)))
+      .withColumnRenamed("pos", "tbl")
+      .withColumnRenamed("col", "bkt")
 
   /** LSH-bucketed approximate top-k: candidates come only from buckets
     * the probe shares in one of `tables` independent hyperplane tables,
@@ -2330,35 +2320,8 @@ object Similarity {
       k: Int,
       dim: Int,
       tables: Int = 0,
-      planes: Int = 0): DataFrame = {
-    val (planesN, tablesN) =
-      if (planes > 0 && tables > 0) (planes, tables) else rhpGeometry(corpus.count())
-    // ids-only candidate generation (see lshNearDupPairs), vectors
-    // re-attached before the exact re-score
-    val buckets = corpus
-      .select(col(idCol),
-        posexplode(graft.functions.RhpBuckets.rhpBuckets(col(vecCol), dim, planesN, tablesN)))
-      .withColumnRenamed("pos", "tbl")
-      .withColumnRenamed("col", "bkt")
-    val probeBuckets = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"),
-        posexplode(graft.functions.RhpBuckets.rhpBuckets(col(vecCol), dim, planesN, tablesN)))
-      .withColumnRenamed("pos", "tbl")
-      .withColumnRenamed("col", "bkt")
-    val cands = probeBuckets
-      .join(buckets, Seq("tbl", "bkt"))
-      .where(col(idCol) =!= col("probe_id"))
-      .select(col("probe_id"), col(idCol))
-      .distinct()
-    val probesVec = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
-    val cv = corpus.select(col(idCol), col(vecCol))
-    val scored = cands
-      .join(broadcast(probesVec), "probe_id")
-      .join(cv, idCol)
-      .select(col("probe_id"), col(idCol), quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(scored, idCol, k)
-  }
+      planes: Int = 0): DataFrame =
+    lshServe(corpus, idCol, vecCol, probeFilter, k, dim, tables, planes, flips = false)
 
   /** Multiprobe LSH top-k (Lv et al., VLDB 2007 — the step-wise probing
     * sequence restricted to Hamming distance ≤ 1, which keeps the
@@ -2380,40 +2343,50 @@ object Similarity {
       k: Int,
       dim: Int,
       tables: Int = 0,
-      planes: Int = 0): DataFrame = {
+      planes: Int = 0): DataFrame =
+    lshServe(corpus, idCol, vecCol, probeFilter, k, dim, tables, planes, flips = true)
+
+  /** The LSH serve: ids-only candidate generation (see
+    * `lshNearDupPairs`) from the (table, bucket) keys a probe shares
+    * with the corpus, vectors re-attached for the exact re-score. With
+    * `flips` a probe also joins, per table, the `planes` buckets at
+    * Hamming distance 1 from its home bucket, and the geometry derives
+    * from `rhpMpGeometry` instead of `rhpGeometry`. */
+  private def lshServe(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      probeFilter: Column,
+      k: Int,
+      dim: Int,
+      tables: Int,
+      planes: Int,
+      flips: Boolean): DataFrame = {
     require((planes > 0) == (tables > 0),
       s"specify both planes and tables or neither, got planes=$planes tables=$tables")
     val (planesN, tablesN) =
-      if (planes > 0 && tables > 0) (planes, tables) else rhpMpGeometry(corpus.count())
-    val buckets = corpus
-      .select(col(idCol),
-        posexplode(graft.functions.RhpBuckets.rhpBuckets(col(vecCol), dim, planesN, tablesN)))
-      .withColumnRenamed("pos", "tbl")
-      .withColumnRenamed("col", "bkt")
+      if (planes > 0) (planes, tables)
+      else if (flips) rhpMpGeometry(corpus.count())
+      else rhpGeometry(corpus.count())
+    val home = rhpBucketRows(corpus.where(probeFilter), col(idCol).as("probe_id"),
+      vecCol, dim, planesN, tablesN)
     // home bucket + one key per flipped plane; flips are pairwise
     // distinct (bkt ⊕ 2^a ≠ bkt ⊕ 2^b), so no within-probe dedup needed
-    val probeBuckets = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"),
-        posexplode(graft.functions.RhpBuckets.rhpBuckets(col(vecCol), dim, planesN, tablesN)))
-      .withColumnRenamed("pos", "tbl")
-      .withColumnRenamed("col", "bkt")
+    val probeBuckets = if (!flips) home else home
       .select(col("probe_id"), col("tbl"),
         explode(array(
           col("bkt") +: (0 until planesN).map(j =>
             col("bkt").bitwiseXOR(lit(1L << j))): _*)).as("bkt"))
     val cands = probeBuckets
-      .join(buckets, Seq("tbl", "bkt"))
+      .join(rhpBucketRows(corpus, col(idCol), vecCol, dim, planesN, tablesN), Seq("tbl", "bkt"))
       .where(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol))
       .distinct()
-    val probesVec = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
-    val cv = corpus.select(col(idCol), col(vecCol))
     val scored = cands
-      .join(broadcast(probesVec), "probe_id")
-      .join(cv, idCol)
+      .join(broadcast(probeRows(corpus, probeFilter, idCol, vecCol)), "probe_id")
+      .join(corpus.select(col(idCol), col(vecCol)), idCol)
       .select(col("probe_id"), col(idCol), quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(scored, idCol, k)
+    rankTopK(scored, "probe_id", idCol, k)
   }
 
   /** Per-dimension SQ8 bounds — the scalar quantizer's entire trained
@@ -2497,21 +2470,12 @@ object Similarity {
     // to [0, 255] by construction)
     val codes = q.crossJoin(broadcast(bnd))
       .select(col(idCol), sq8EncodeExpr.as("codes"))
-    val probes = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
+    val probes = probeRows(corpus, probeFilter, idCol, vecCol)
     val probesQ = probes.select(col("probe_id"), qvT(col("pe")).as("pq"))
     val scored = codes.crossJoin(broadcast(bnd)).crossJoin(broadcast(probesQ))
       .where(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol), sq8ScoreExpr.as("sq8"))
-    val short = graft.plans.TopKPerKey(
-      scored, Seq("probe_id"), Seq(("sq8", false), (idCol, true)), refine)
-      .select(col("probe_id"), col(idCol))
-    val rescored = short
-      .join(corpus.select(col(idCol), col(vecCol)), idCol)
-      .join(broadcast(probes), "probe_id")
-      .select(col("probe_id"), col(idCol),
-        quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(rescored, idCol, k)
+    rerank(scored, "sq8", ascending = false, probes, corpus, idCol, vecCol, refine, k)
   }
 
   /** IVF + SQ8 — the composed big-corpus serving recipe (FAISS
@@ -2553,33 +2517,17 @@ object Similarity {
     val bnd = scope.cache(sq8Bounds(q))
     val codes = q.crossJoin(broadcast(bnd))
       .select(col(idCol), sq8EncodeExpr.as("codes"))
-    val probes = corpus.where(probeFilter)
-      .select(col(idCol).as("probe_id"), col(vecCol).as("pe"))
-    val wp = Window.partitionBy("probe_id").orderBy(desc("cd"), asc("cent_id"))
-    val probeLists = probes.crossJoin(broadcast(cents))
-      .select(col("probe_id"), col("cent_id"),
-        (lit(2L) * quantizedDot(col("pe"), col("cv")) - col("nrm")).as("cd"))
-      .withColumn("pr", row_number().over(wp))
-      .where(col("pr") <= nprobe)
-      .select(col("probe_id"), col("cent_id").as("list_id"))
+    val probes = probeRows(corpus, probeFilter, idCol, vecCol)
     val probesQ = probes.select(col("probe_id"), qvT(col("pe")).as("pq"))
     // candidates carry CODES only; the probed-list join bounds them at
     // probes·nprobe·avg_list rows before any scoring work
-    val scored = probeLists.join(lists, "list_id")
+    val scored = route(probes, cents, nprobe).join(lists, "list_id")
       .where(col(idCol) =!= col("probe_id"))
       .select(col("probe_id"), col(idCol))
       .join(codes, idCol)
       .join(broadcast(probesQ), "probe_id")
       .crossJoin(broadcast(bnd))
       .select(col("probe_id"), col(idCol), sq8ScoreExpr.as("sq8"))
-    val short = graft.plans.TopKPerKey(
-      scored, Seq("probe_id"), Seq(("sq8", false), (idCol, true)), refine)
-      .select(col("probe_id"), col(idCol))
-    val rescored = short
-      .join(corpus.select(col(idCol), col(vecCol)), idCol)
-      .join(broadcast(probes), "probe_id")
-      .select(col("probe_id"), col(idCol),
-        quantizedDot(col("pe"), col(vecCol)).as("qdot"))
-    rankTopK(rescored, idCol, k)
+    rerank(scored, "sq8", ascending = false, probes, corpus, idCol, vecCol, refine, k)
   }
 }

@@ -41,7 +41,8 @@ object KvText {
     val parts = fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-"))
     parts.foreach { p =>
       val j = p.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt
-      fs.rename(p, new Path(dir, s"out_$j"))
+      val dst = new Path(dir, s"out_$j")
+      require(fs.rename(p, dst), s"KvText.write: rename $p -> $dst failed")
     }
     (0 until r).foreach { j =>
       val p = new Path(dir, s"out_$j")

@@ -25,7 +25,8 @@ object Sinks {
     fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-")).foreach { p =>
       val j = p.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt
       val ext = p.getName.dropWhile(_ != '.')
-      fs.rename(p, new Path(dir, s"out_$j$ext"))
+      val dst = new Path(dir, s"out_$j$ext")
+      require(fs.rename(p, dst), s"writePartitioned: rename $p -> $dst failed")
     }
   }
 
@@ -177,7 +178,7 @@ object Sinks {
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dst = new Path(path)
     if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(new Path(staging), dst)
+    require(fs.rename(new Path(staging), dst), s"writeAudited: rename $staging -> $dst failed")
     report
   }
 
@@ -557,9 +558,12 @@ object Sinks {
   }
 
   /** Fold commits 0..`upTo` into a single resolved base partition:
-    * rewrites `__v=upTo` as the materialized snapshot and drops the
-    * older directories (write-then-swap via a temp dir, so a crash
-    * never leaves the table truncated). Reads at any `asOf >= upTo`
+    * writes the materialized snapshot to a `.compacting_v<upTo>`
+    * sibling, deletes `__v=0..upTo`, then renames the sibling in as
+    * `__v=upTo`. Crash window: between the deletes and the rename the
+    * table holds only the commits above `upTo`, and the folded base
+    * sits in the sibling until the rename is redone; a failed rename
+    * throws. Reads at any `asOf >= upTo`
     * are unchanged; history BEFORE `upTo` is retired — the retention
     * trade every log-structured table format makes — and a read below
     * the horizon fails loud (`readSnapshotAt`/`snapshotDiff` check the
@@ -582,7 +586,8 @@ object Sinks {
           p.getName.stripPrefix("__v=").toLong <= upTo
       }
       .foreach(fs.delete(_, true))
-    fs.rename(tmp, new Path(root, s"__v=$upTo"))
+    val base = new Path(root, s"__v=$upTo")
+    require(fs.rename(tmp, base), s"compactVersions: rename $tmp -> $base failed")
   }
 
   /** Persist a table bucketed (and sorted) by join/aggregation keys —
@@ -633,7 +638,7 @@ object Sinks {
       .write.mode("overwrite").parquet(tmp)
     val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(path), true)
-    fs.rename(new Path(tmp), new Path(path))
+    require(fs.rename(new Path(tmp), new Path(path)), s"compact: rename $tmp -> $path failed")
   }
 
   /** Morton (Z-order) interleave of two columns, each equal-width

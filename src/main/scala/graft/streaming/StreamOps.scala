@@ -306,12 +306,19 @@ object StreamOps {
     * boundaries only decide how many commits the same ordered log is
     * split into. */
   def cdcApply(changes: DataFrame, path: String): Unit =
-    drain(changes.writeStream
+    drainBatches(changes) { batch =>
+      graft.io.Sinks.writeVersion(batch.toDF(), path,
+        graft.io.Sinks.nextVersion(batch.sparkSession, path))
+    }
+
+  /** [[drain]] an append-mode stream through `foreachBatch`, handing
+    * every non-empty micro-batch to `f`. */
+  private def drainBatches(stream: DataFrame)(
+      f: Dataset[org.apache.spark.sql.Row] => Unit): Unit =
+    drain(stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.io.Sinks.writeVersion(batch.toDF(), path,
-            graft.io.Sinks.nextVersion(batch.sparkSession, path))
+        if (!batch.isEmpty) f(batch)
       })
 
   /** Start → drain → stop with the checkpoint/state-store dir placed
@@ -339,9 +346,12 @@ object StreamOps {
     * micro-batch commits as ONE append-only `__v=N` version (exactly
     * [[cdcApply]]) and then folds its OWN change feed (the
     * `snapshotDiff` of just that commit) into the stored view, written
-    * next-then-swapped so a crash never leaves a half-updated MV
-    * behind a committed version. The view the stream maintains is
-    * therefore bit-equal, after every trigger, to what a batch
+    * to a `.next_v<N>` sibling, then swapped in by delete + rename.
+    * Crash windows: between the commit and the swap the stored view
+    * lags the committed head by one version, and between the delete
+    * and the rename no view exists at `mvPath` (the updated one sits
+    * at `<mvPath>.next_v<N>`). A failed rename throws. After every
+    * completed trigger the view is bit-equal to what a batch
     * recompute over the resolved head would produce — which is what
     * lets `stream_mv_maintain` share `io_mv_maintain`'s recompute
     * oracle verbatim.
@@ -359,27 +369,23 @@ object StreamOps {
       grpCol: String,
       oldVal: org.apache.spark.sql.Column,
       newVal: org.apache.spark.sql.Column): Unit = {
-    drain(changes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val v = graft.io.Sinks.nextVersion(s, path)
-          graft.io.Sinks.writeVersion(batch.toDF(), path, v)
-          val updated = graft.io.Sinks.maintainAggView(
-            s.read.parquet(mvPath)
-              .select(col(grpCol), col("n_rows"), col("sum_val")),
-            graft.io.Sinks.snapshotDiff(s, path, v - 1, v, keyCol),
-            grpCol, oldVal, newVal)
-          val fs = new org.apache.hadoop.fs.Path(mvPath)
-            .getFileSystem(s.sparkContext.hadoopConfiguration)
-          val tmp = new org.apache.hadoop.fs.Path(mvPath + s".next_v$v")
-          updated.write.mode("overwrite").parquet(tmp.toString)
-          fs.delete(new org.apache.hadoop.fs.Path(mvPath), true)
-          fs.rename(tmp, new org.apache.hadoop.fs.Path(mvPath))
-          ()
-        }
-      })
+    drainBatches(changes) { batch =>
+      val s = batch.sparkSession
+      val v = graft.io.Sinks.nextVersion(s, path)
+      graft.io.Sinks.writeVersion(batch.toDF(), path, v)
+      val updated = graft.io.Sinks.maintainAggView(
+        s.read.parquet(mvPath)
+          .select(col(grpCol), col("n_rows"), col("sum_val")),
+        graft.io.Sinks.snapshotDiff(s, path, v - 1, v, keyCol),
+        grpCol, oldVal, newVal)
+      val fs = new org.apache.hadoop.fs.Path(mvPath)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val tmp = new org.apache.hadoop.fs.Path(mvPath + s".next_v$v")
+      updated.write.mode("overwrite").parquet(tmp.toString)
+      fs.delete(new org.apache.hadoop.fs.Path(mvPath), true)
+      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(mvPath)),
+        s"mvMaintainApply: rename $tmp -> $mvPath failed")
+    }
   }
 
   /** Streaming right-to-be-forgotten: delete requests arriving as a
@@ -399,13 +405,9 @@ object StreamOps {
     * `stream_index_purge` shares `privacy_purge_text`'s
     * rebuild-on-the-retained-corpus oracle shape. */
   def indexPurgeApply(deletes: DataFrame, path: String, idCol: String): Unit =
-    drain(deletes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.ext.Search.purgeTextIndex(
-            batch.sparkSession, path, batch.toDF(), idCol)
-      })
+    drainBatches(deletes) { batch =>
+      graft.ext.Search.purgeTextIndex(batch.sparkSession, path, batch.toDF(), idCol)
+    }
 
   /** The ANN-side twin of [[indexPurgeApply]]: delete requests folded
     * into the persisted vector index per trigger via
@@ -415,13 +417,9 @@ object StreamOps {
     * the drained index equals one batch purge of the union of
     * arrivals. */
   def annPurgeApply(deletes: DataFrame, dir: String, idCol: String): Unit =
-    drain(deletes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty)
-          graft.ext.Similarity.purgeAnnIndex(
-            batch.sparkSession, dir, batch.toDF(), idCol)
-      })
+    drainBatches(deletes) { batch =>
+      graft.ext.Similarity.purgeAnnIndex(batch.sparkSession, dir, batch.toDF(), idCol)
+    }
 
   /** Stream-stream interval LEFT OUTER join — attribution with the
     * unconverted rows kept: every purchase, matched to same-user

@@ -38,6 +38,22 @@ class IoLshSpec extends SparkSpec {
     assert(names.map(_.takeWhile(_ != '.')).sorted.toSeq == Seq("out_0", "out_1", "out_2"))
   }
 
+  test("writePartitioned throws when the filesystem refuses an out_<j> rename") {
+    // Hadoop reports a failed rename by returning false, not by throwing
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.refuseout.impl", classOf[RefuseOutRenameFs].getName)
+    conf.setBoolean("fs.refuseout.impl.disable.cache", true)
+    val dir = Files.createTempDirectory("partr").toString
+    try {
+      val e = intercept[IllegalArgumentException](Sinks.writePartitioned(
+        io.Tables(spark, sf, "nation"), s"refuseout://$dir", 3, "n_nationkey", "csv"))
+      assert(e.getMessage.contains("out_"))
+    } finally {
+      conf.unset("fs.refuseout.impl")
+      conf.unset("fs.refuseout.impl.disable.cache")
+    }
+  }
+
   test("bruteForceTopK (bounded-heap operator) equals the window formulation") {
     val emb = io.Tables(spark, sf, "embeddings")
     val probes = emb.where(col("vec_id") < 10)
@@ -191,4 +207,13 @@ class IoLshSpec extends SparkSpec {
       }
     }
   }
+}
+
+/** Local filesystem under the `refuseout://` scheme whose rename returns
+  * false for every destination named `out_*`. */
+class RefuseOutRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refuseout:///")
+  override def getScheme: String = "refuseout"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !dst.getName.startsWith("out_") && super.rename(src, dst)
 }
