@@ -556,22 +556,27 @@ object Queries {
       |    return best
       |""".stripMargin
 
-  /** Write the two wordcount scripts to a fresh temp dir → (map, reduce)
-    * paths. Exposed to MainSpec, which submits them through the CLI. */
-  private[graft] def writeWordcountScripts(): (String, String) = {
+  /** The Python-scripted queries' scripts, written once per JVM into
+    * one temp dir that is deleted at exit (as `api.PyJob.shimPath` does
+    * for the shim), so repeated runs of these queries leave nothing
+    * behind. */
+  private lazy val pyScripts: Map[String, String] = {
     val d = java.nio.file.Files.createTempDirectory("graft_py")
-    val m = d.resolve("map.py"); val r = d.resolve("reduce.py")
-    java.nio.file.Files.writeString(m, wordcountMapperPy)
-    java.nio.file.Files.writeString(r, wordcountReducerPy)
-    (m.toString, r.toString)
+    d.toFile.deleteOnExit()
+    Seq("map.py" -> wordcountMapperPy, "reduce.py" -> wordcountReducerPy,
+      "grep_map.py" -> grepMapperPy, "keymax_map.py" -> keyMaxMapperPy,
+      "keymax_reduce.py" -> keyMaxReducerPy).map { case (name, body) =>
+      val p = d.resolve(name)
+      java.nio.file.Files.writeString(p, body)
+      p.toFile.deleteOnExit()
+      name -> p.toString
+    }.toMap
   }
 
-  private def writePyScript(name: String, body: String): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_py")
-    val p = d.resolve(name)
-    java.nio.file.Files.writeString(p, body)
-    p.toString
-  }
+  /** The two wordcount scripts' paths → (map, reduce). Exposed to
+    * MainSpec, which submits them through the CLI. */
+  private[graft] def wordcountScripts(): (String, String) =
+    (pyScripts("map.py"), pyScripts("reduce.py"))
 
   val plans: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mr_wordcount" -> { (s, dir) =>
@@ -579,7 +584,7 @@ object Queries {
     },
     "mr_py_wordcount" -> { (s, dir) =>
       import s.implicits._
-      val (mapPy, redPy) = writeWordcountScripts()
+      val (mapPy, redPy) = wordcountScripts()
       val lines = t(s, dir, "documents")
         .select(col("text").cast("string")).na.drop().as[String]
       graft.api.PyJob.run(lines, mapPy, Some(redPy), r = 8)
@@ -593,7 +598,7 @@ object Queries {
       // keys are globally unique, so the concatenated shard dicts are
       // partitioning-independent and hash-comparable to the oracle
       import s.implicits._
-      val mapPy = writePyScript("grep_map.py", grepMapperPy)
+      val mapPy = pyScripts("grep_map.py")
       val lines = t(s, dir, "documents")
         .select(concat_ws("\t", col("doc_id"), col("text"))).na.drop().as[String]
       graft.api.PyJob.run(lines, mapPy, None, r = 8)
@@ -606,8 +611,8 @@ object Queries {
       // reducefunc decides the merge (a built-in sum would be wrong);
       // all-integer values keep the string wire format exact
       import s.implicits._
-      val mapPy = writePyScript("keymax_map.py", keyMaxMapperPy)
-      val redPy = writePyScript("keymax_reduce.py", keyMaxReducerPy)
+      val mapPy = pyScripts("keymax_map.py")
+      val redPy = pyScripts("keymax_reduce.py")
       val lines = t(s, dir, "orders")
         .select(concat_ws("|", col("o_orderpriority"), col("o_orderkey"))).as[String]
       graft.api.PyJob.run(lines, mapPy, Some(redPy), r = 8)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextOps
+import graft.util.Bounded
 
 /** Keyword retrieval over the corpus — the inverted-index-shaped
   * capability a training-data pipeline leans on for targeted corpus
@@ -542,7 +543,7 @@ object Search {
     postings
       .repartitionByRange(col("term")).sortWithinPartitions("term")
       .write.mode("overwrite").parquet(s"$path/postings$suffix")
-    val written = docs.sparkSession.read.parquet(s"$path/postings$suffix")
+    val written = graft.io.Sinks.readParquet(docs.sparkSession, s"$path/postings$suffix")
     graft.util.Par.jobs(Seq(
       () => written
         .groupBy("term").agg(count(lit(1)).as("df"))
@@ -595,7 +596,7 @@ object Search {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       rel: String): DataFrame =
-    spark.read.parquet((s"$path/$rel" +: deltaDirs(spark, path, rel)): _*)
+    graft.io.Sinks.readParquet(spark, (s"$path/$rel" +: deltaDirs(spark, path, rel)): _*)
 
   /** Incremental index maintenance: fold a document batch into a
     * persisted `writeTextIndex` artifact without re-reading the corpus
@@ -668,12 +669,11 @@ object Search {
     * bit-identically to `writeTextIndex` run from scratch on the
     * retained corpus, because every relation is a sum of independent
     * per-document contributions —
-    *  - postings: per-(term, doc) rows, so the anti-join drops exactly
-    *    the deleted docs' rows;
+    *  - postings: per-(term, doc) rows, so dropping the deleted ids
+    *    drops exactly the deleted docs' rows;
     *  - term_df: the deleted docs' postings sliver (O(deletes ·
-    *    terms/doc) rows, read via a broadcast semi-join) aggregates to
-    *    the per-term decrement; terms reaching 0 disappear, as a
-    *    rebuild would have them;
+    *    terms/doc) rows) counts to the per-term decrement; terms
+    *    reaching 0 disappear, as a rebuild would have them;
     *  - meta: the same sliver's distinct (id, dl) rows are the n_docs /
     *    sum_dl decrement.
     * Contract: deleted ids must have ≥ 1 token. A token-less document
@@ -681,10 +681,18 @@ object Search {
     * the index alone — it can never be SERVED (score 0 always), and the
     * periodic full rebuild that re-centers any index clears the count.
     *
-    * Cost: one pass over base ∪ delta postings (the anti-join rewrite,
-    * which also folds deltas — a purge IS a compaction) with the
-    * delete set broadcast; term_df/meta rewrites touch O(terms) and
-    * 1-row relations. Crash discipline identical to
+    * Cost: the delete ids are read once (`Bounded.Keys`: one job, none
+    * for a LocalRelation) and match through `IN` filters. An empty set
+    * is a no-op that runs no job and leaves the index files as they
+    * are (no rewrite, so no compaction either). The deleted docs'
+    * postings sliver is read once too (one job), and the conflict
+    * check and decrements run on the driver. Then one pass over base ∪
+    * delta postings (the rewrite without the deleted ids, which also
+    * folds deltas — a purge IS a compaction); term_df/meta rewrites
+    * touch O(terms) and 1-row relations. Past `Bounded.Vectors` ids
+    * or sliver rows, the ids are a broadcast distributed `distinct`,
+    * the sliver a cached distributed relation, and the check and
+    * decrements Spark jobs. Crash discipline identical to
     * `compactTextIndex`: all three `.compacting` writes complete
     * before any delete/rename. */
   def purgeTextIndex(
@@ -706,65 +714,76 @@ object Search {
       deleteIds: DataFrame,
       idCol: String,
       scope: graft.util.CacheScope): Unit = {
+    val del = new Bounded.Keys(deleteIds, idCol, "id")
+    if (del.isEmpty) return
     // roll forward (or clear) any crash-interrupted rewrite BEFORE
     // computing the deleted sliver: after a half-applied swap the
     // postings may already be purged, and decrements recomputed from
     // them would be empty while term_df/meta still carry the old mass
     graft.io.Sinks.recoverSwap(spark, path, indexRels)
-    val del = deleteIds.select(col(idCol).as("id")).distinct()
     val post = readRel(spark, path, "postings")
     // the deleted docs' postings sliver — everything the decrements need
-    val gone = scope.cache(post.join(broadcast(del), Seq("id"), "left_semi")
-      .select("id", "term", "dl"))
-    // r14 wave 4 (A/B-measured): the conflict CHECK rides the same
-    // concurrent batch as the three rewrites instead of gating them
-    // serially — `Par.jobs` rethrows its failure after all tasks
-    // complete and BEFORE the swap, so a conflicting index still never
-    // swaps in (the completed `.compacting` siblings are exactly the
-    // crash residue `recoverSwap` already clears on the next run).
-    // Trade-off: consumers may race the `gone` cache and duplicate its
-    // postings scan (thread-safe, results identical) — the matched A/B
-    // read stream_index_purge 4.4-4.6 s with the overlap vs 5.1-5.2 s
-    // serial (two purge triggers amortize it) and privacy_purge_text a
-    // wash inside its noise band.
-    def checkConflicts(): Unit = {
-      // an id ingested twice with CONFLICTING lengths — an
-      // updateTextIndex no-collision violation — would silently
-      // under-decrement n_docs/sum_dl; surface it as an error instead
-      val conflicts = gone.select("id", "dl").distinct()
-        .groupBy("id").agg(count(lit(1)).as("n"))
-        .where(col("n") > 1).limit(1).collect()
-      require(conflicts.isEmpty,
-        s"purgeTextIndex: deleted id ${conflicts.headOption.map(_.get(0)).orNull} " +
+    val sliver = del.semi(post).select("id", "term", "dl")
+    // an id ingested twice with CONFLICTING lengths — an
+    // updateTextIndex no-collision violation — would silently
+    // under-decrement n_docs/sum_dl; surface it as an error instead
+    def conflict(id: Option[Any]): Unit =
+      require(id.isEmpty,
+        s"purgeTextIndex: deleted id ${id.orNull} " +
           "carries conflicting document lengths in the index — " +
           "updateTextIndex's no-collision contract was violated upstream")
-    }
+    // (the sliver, its conflict check, the meta decrement)
+    val (gone, check, decMeta) =
+      del.local.flatMap(_ => Bounded.collect(sliver, Bounded.limit(Bounded.Vectors))) match {
+        case Some(rows) =>
+          // the driver-side twin of the distributed case below
+          val idDl = rows.toSeq.map(r => (r.get(0), r.get(2))).distinct
+          conflict(idDl.groupBy(_._1).collectFirst { case (id, dls) if dls.size > 1 => id })
+          val (nd, sd) = (idDl.size.toLong, idDl.collect { case (_, d: Long) => d }.sum)
+          (Bounded.relation(spark, rows.toSeq, sliver.schema.map(f => f.name -> f.dataType)),
+            Seq.empty[() => Unit],
+            (m: DataFrame) => m.select((col("n_docs") - lit(nd)).as("n_docs"),
+              (col("sum_dl") - lit(sd)).as("sum_dl")))
+        case None =>
+          val gone = scope.cache(sliver)
+          // r14 wave 4 (A/B-measured): the conflict CHECK rides the
+          // same concurrent batch as the three rewrites instead of
+          // gating them serially — `Par.jobs` rethrows its failure
+          // after all tasks complete and BEFORE the swap, so a
+          // conflicting index still never swaps in (the completed
+          // `.compacting` siblings are exactly the crash residue
+          // `recoverSwap` already clears on the next run). Trade-off:
+          // consumers may race the `gone` cache and duplicate its
+          // postings scan (thread-safe, results identical) — the
+          // matched A/B read stream_index_purge 4.4-4.6 s with the
+          // overlap vs 5.1-5.2 s serial (two purge triggers amortize
+          // it) and privacy_purge_text a wash inside its noise band.
+          (gone,
+            Seq(() => conflict(gone.select("id", "dl").distinct()
+              .groupBy("id").agg(count(lit(1)).as("n"))
+              .where(col("n") > 1).limit(1).collect().headOption.map(_.get(0)))),
+            (m: DataFrame) => m.crossJoin(broadcast(gone.select("id", "dl").distinct()
+                .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sd"))))
+              .select((col("n_docs") - col("nd")).as("n_docs"),
+                (col("sum_dl") - col("sd")).as("sum_dl")))
+      }
     // the three .compacting rewrites are independent of each other
     // (disjoint outputs), so they run as concurrent jobs (guide §2.6);
     // the swap still happens only after ALL complete, so the crash
-    // discipline is unchanged.
-    graft.util.Par.jobs(Seq(
-      () => checkConflicts(),
-      () => post.join(broadcast(del), Seq("id"), "left_anti")
+    // discipline is unchanged. term_df sums one -1 per sliver row into
+    // its own merge; terms reaching 0 disappear, as a rebuild would
+    // have them.
+    graft.util.Par.jobs(check ++ Seq(
+      () => del.anti(post)
         .repartitionByRange(col("term")).sortWithinPartitions("term")
         .write.mode("overwrite").parquet(s"$path/postings.compacting"),
-      // no broadcast hint on the decrement side: it is bounded by the
-      // deleted docs' DISTINCT terms, which for a large GDPR batch can
-      // approach vocabulary size — let the planner (AQE) choose; for
-      // request-sized deletes it will broadcast on its own estimate
-      () => readRel(spark, path, "term_df")
+      () => readRel(spark, path, "term_df").select("term", "df")
+        .unionByName(gone.select(col("term"), lit(-1L).as("df")))
         .groupBy("term").agg(sum(col("df")).as("df"))
-        .join(gone.groupBy("term").agg(count(lit(1)).as("dec")),
-          Seq("term"), "left")
-        .select(col("term"), (col("df") - coalesce(col("dec"), lit(0L))).as("df"))
         .where(col("df") > 0)
         .write.mode("overwrite").parquet(s"$path/term_df.compacting"),
-      () => readRel(spark, path, "meta")
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .crossJoin(broadcast(gone.select("id", "dl").distinct()
-          .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sd"))))
-        .select((col("n_docs") - col("nd")).as("n_docs"),
-          (col("sum_dl") - col("sd")).as("sum_dl"))
+      () => decMeta(readRel(spark, path, "meta")
+          .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
         .write.mode("overwrite").parquet(s"$path/meta.compacting")))
     graft.io.Sinks.swapCompacting(spark, path, indexRels,
       indexRels.flatMap(deltaDirs(spark, path, _)))

@@ -1684,10 +1684,10 @@ object Similarity {
 
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession, dir: String): AnnIndex =
     AnnIndex(
-      spark.read.parquet(s"$dir/coarse"),
-      spark.read.parquet(s"$dir/lists"),
-      spark.read.parquet(s"$dir/book"),
-      spark.read.parquet(s"$dir/codes"))
+      graft.io.Sinks.readParquet(spark, s"$dir/coarse"),
+      graft.io.Sinks.readParquet(spark, s"$dir/lists"),
+      graft.io.Sinks.readParquet(spark, s"$dir/book"),
+      graft.io.Sinks.readParquet(spark, s"$dir/codes"))
 
   /** Incremental ANN index maintenance — the daily-ingest twin of
     * `Search.updateTextIndex` for embeddings: encode a vector batch
@@ -1722,8 +1722,8 @@ object Similarity {
       vecCol: String,
       numSub: Int = 8,
       subDim: Int = 8): Unit = {
-    val coarse = spark.read.parquet(s"$dir/coarse")
-    val book = spark.read.parquet(s"$dir/book")
+    val coarse = graft.io.Sinks.readParquet(spark, s"$dir/coarse")
+    val book = graft.io.Sinks.readParquet(spark, s"$dir/book")
     // two independent appends — concurrent jobs (guide §2.6)
     graft.util.Par.jobs(Seq(
       () => ivfAssign(batch, idCol, vecCol, coarse)
@@ -1736,10 +1736,10 @@ object Similarity {
   /** Right-to-be-forgotten propagation into the persisted ANN index —
     * the deletion twin of `updateAnnIndex`, same pinned-quantizer
     * discipline: `lists` and `codes` are rewritten WITHOUT the deleted
-    * ids (one anti-join pass each, delete set broadcast), while
-    * `coarse` and `book` are untouched — quantizers are index metadata,
-    * not per-document state, and retraining them on the retained slice
-    * would silently desync every surviving code. `probeIndex` over the
+    * ids (one pass each), while `coarse` and `book` are untouched —
+    * quantizers are index metadata, not per-document state, and
+    * retraining them on the retained slice would silently desync every
+    * surviving code. `probeIndex` over the
     * purged artifact is therefore bit-identical to an index whose
     * assignment/encode ran only over the retained corpus under the SAME
     * pinned quantizers (`privacy_purge_ann`'s oracle replays exactly
@@ -1749,24 +1749,30 @@ object Similarity {
     * (park-old / rename-in / drop-old — no window ever holds the only
     * copy of a relation). The rewrite also folds accumulated
     * append-part files, so a purge doubles as the small-file
-    * compaction pass. */
+    * compaction pass.
+    *
+    * Cost: the delete ids are read once (`Bounded.Keys`: one job, none
+    * for a LocalRelation) and dropped by an `IN` filter; an empty set
+    * is a no-op that runs no job and leaves the index files as they
+    * are (no rewrite, so no compaction either). Past `Bounded.Vectors`
+    * ids the distributed `distinct` is broadcast into anti-joins
+    * instead. Then two concurrent rewrites and the swap. */
   def purgeAnnIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
       deleteIds: DataFrame,
       idCol: String): Unit = {
+    val del = new Bounded.Keys(deleteIds, idCol, idCol)
+    if (del.isEmpty) return
     // roll forward (or clear) any crash-interrupted rewrite first —
     // the same mixed-relation hazard as the text-index purge
     graft.io.Sinks.recoverSwap(spark, dir, Seq("lists", "codes"))
-    val del = broadcast(deleteIds.select(col(idCol)).distinct())
-    // two independent anti-join rewrites — concurrent jobs (guide
-    // §2.6); the swap still waits for both, so the crash discipline
-    // (no window holds the only copy) is unchanged
-    graft.util.Par.jobs(Seq(
-      () => spark.read.parquet(s"$dir/lists").join(del, Seq(idCol), "left_anti")
-        .write.mode("overwrite").parquet(s"$dir/lists.compacting"),
-      () => spark.read.parquet(s"$dir/codes").join(del, Seq(idCol), "left_anti")
-        .write.mode("overwrite").parquet(s"$dir/codes.compacting")))
+    // two independent rewrites — concurrent jobs (guide §2.6); the
+    // swap still waits for both, so the crash discipline (no window
+    // holds the only copy) is unchanged
+    graft.util.Par.jobs(Seq("lists", "codes").map(rel =>
+      () => del.anti(graft.io.Sinks.readParquet(spark, s"$dir/$rel"))
+        .write.mode("overwrite").parquet(s"$dir/$rel.compacting")))
     graft.io.Sinks.swapCompacting(spark, dir, Seq("lists", "codes"))
   }
 

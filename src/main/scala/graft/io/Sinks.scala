@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Sources and sinks beyond parquet/KV-text: CSV and JSON line formats,
   * with the reference's "R output files" contract available on every
@@ -9,6 +10,48 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * `w7/src/worker/workerimpl.cc:319-323`).
   */
 object Sinks {
+
+  /** `spark.read.parquet(paths: _*)` for relations the engine wrote
+    * itself, without the one-task schema-inference job. Spark stores
+    * the written schema as JSON under [[SparkSchemaKey]] in every
+    * parquet footer, and inference reads exactly that key from one
+    * file; here the first data file of each path (skipping `_*` and
+    * `.*` entries, as Spark's listing does) is opened on the driver
+    * and its schema handed to `spark.read.schema`. When a path has no
+    * data file, a footer cannot be read or lacks the key, or the paths'
+    * schemas disagree, this is plain inference, with its behaviour and
+    * its errors. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    paths.map(p => footerSchema(conf, new Path(p))).distinct match {
+      case Seq(Some(schema)) => spark.read.schema(schema).parquet(paths: _*)
+      case _ => spark.read.parquet(paths: _*)
+    }
+  }
+
+  private[graft] val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The Spark schema in the footer of `path`'s first data file (or of
+    * `path` itself when it is a file). */
+  private def footerSchema(
+      conf: org.apache.hadoop.conf.Configuration,
+      path: Path): Option[StructType] = {
+    val fs = path.getFileSystem(conf)
+    val first =
+      if (!fs.exists(path)) None
+      else Some(fs.getFileStatus(path)).filter(_.isFile).orElse(fs.listStatus(path).toSeq
+        .filter(st => st.isFile && !Seq("_", ".").exists(st.getPath.getName.startsWith))
+        .sortBy(_.getPath.getName).headOption)
+    // a footer that cannot be read or parsed leaves the error to inference
+    first.flatMap(st => scala.util.Try {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      finally reader.close()
+    }.toOption.flatten)
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case s: StructType => s }
+  }
 
   /** Write with exactly R hash-partitioned output files named out_<j>. */
   def writePartitioned(

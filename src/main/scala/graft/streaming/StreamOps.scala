@@ -14,7 +14,7 @@ object StreamOps {
 
   // one watched temp dir per source dir, reused across calls — a
   // long-lived session that builds many streams over the same table
-  // must not accumulate temp symlink dirs
+  // must not accumulate temp symlink dirs — and deleted at exit
   private val watchedDirs =
     new java.util.concurrent.ConcurrentHashMap[String, java.nio.file.Path]()
 
@@ -25,12 +25,16 @@ object StreamOps {
   def readTable(spark: SparkSession, dir: String, table: String): DataFrame = {
     // nanosAsLong is a session-construction conf (GraftSession.local
     // sets it) — mutating it per read races in a shared session; see
-    // io.Tables.apply for the full rationale
+    // io.Tables.apply for the full rationale. The sf files come from
+    // the data generator, whose footers carry no Spark schema, so this
+    // is plain inference rather than Sinks.readParquet.
     val schema = spark.read.parquet(s"$dir/$table.parquet").schema
     val watched = watchedDirs.computeIfAbsent(s"$dir/$table", { _ =>
       val src = java.nio.file.Paths.get(dir, s"$table.parquet")
       val w = java.nio.file.Files.createTempDirectory(s"${table}_stream")
+      w.toFile.deleteOnExit()
       java.nio.file.Files.createSymbolicLink(w.resolve(s"$table.parquet"), src)
+        .toFile.deleteOnExit()
       w
     })
     spark.readStream.schema(schema).parquet(watched.toString)
@@ -288,7 +292,7 @@ object StreamOps {
         }
     }
     spark.readStream
-      .schema(spark.read.parquet(flat.toString).schema)
+      .schema(graft.io.Sinks.readParquet(spark, flat.toString).schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(flat.toString)
   }
@@ -312,13 +316,15 @@ object StreamOps {
     }
 
   /** [[drain]] an append-mode stream through `foreachBatch`, handing
-    * every non-empty micro-batch to `f`. */
-  private def drainBatches(stream: DataFrame)(
+    * every non-empty micro-batch to `f` (the emptiness probe is one
+    * job); with `skipEmpty = false`, every micro-batch, for an `f` that
+    * reads its batch once anyway and treats an empty one as a no-op. */
+  private def drainBatches(stream: DataFrame, skipEmpty: Boolean = true)(
       f: Dataset[org.apache.spark.sql.Row] => Unit): Unit =
     drain(stream.writeStream
       .outputMode("append")
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) f(batch)
+        if (!skipEmpty || !batch.isEmpty) f(batch)
       })
 
   /** Start → drain → stop with the checkpoint/state-store dir placed
@@ -395,17 +401,20 @@ object StreamOps {
     * completing the streaming-twin family (every batch maintenance op
     * here has one: fold-in, MV, CDC — now the subtraction too).
     *
-    * Per-trigger cost is the batch purge's: one broadcast anti-join
-    * pass over the index relations + O(batch·terms/doc) stat
-    * decrements; the corpus is never read. Purging is idempotent per
-    * id (an absent id subtracts nothing — its sliver is empty) and
+    * Per-trigger cost is the batch purge's: one pass over the index
+    * relations without the deleted ids + O(batch·terms/doc) stat
+    * decrements; the corpus is never read. Each micro-batch goes to
+    * the purge as it is, with no emptiness probe first: the purge
+    * reads its delete ids once and an empty batch is its no-op.
+    * Purging is idempotent per id (an absent id subtracts nothing —
+    * its sliver is empty) and
     * batch-composable (each pass subtracts independent per-document
     * contributions), so after the stream drains the index equals ONE
     * batch purge of the union of all arrived ids — which is why
     * `stream_index_purge` shares `privacy_purge_text`'s
     * rebuild-on-the-retained-corpus oracle shape. */
   def indexPurgeApply(deletes: DataFrame, path: String, idCol: String): Unit =
-    drainBatches(deletes) { batch =>
+    drainBatches(deletes, skipEmpty = false) { batch =>
       graft.ext.Search.purgeTextIndex(batch.sparkSession, path, batch.toDF(), idCol)
     }
 
@@ -417,7 +426,7 @@ object StreamOps {
     * the drained index equals one batch purge of the union of
     * arrivals. */
   def annPurgeApply(deletes: DataFrame, dir: String, idCol: String): Unit =
-    drainBatches(deletes) { batch =>
+    drainBatches(deletes, skipEmpty = false) { batch =>
       graft.ext.Similarity.purgeAnnIndex(batch.sparkSession, dir, batch.toDF(), idCol)
     }
 

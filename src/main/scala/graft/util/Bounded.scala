@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -28,7 +28,9 @@ object Bounded {
 
   /** Vector and shortlist sites: the IVF trainer's own sample bound
     * (`Similarity.defaultTrainSample`), so a bounded corpus is never
-    * larger than what the trainer already collects by contract. */
+    * larger than what the trainer already collects by contract. The
+    * same bound covers small driver-side row sets (delete batches,
+    * purge slivers): narrow rows, far lighter than vectors. */
   val Vectors: Long = 32768L
 
   /** The effective bound at a site: its default, capped by the one
@@ -63,6 +65,37 @@ object Bounded {
       case LongType | IntegerType | ShortType | ByteType => true
       case _ => false
     }
+
+  /** A purge's delete set: the distinct non-null values of `df`'s
+    * column `c`, matched against a relation's column `as`. Within
+    * [[Vectors]] input rows they are read once, in one [[collect]] (a
+    * job for a distributed input, none for a LocalRelation), and match
+    * through `IN` filters, which run no job of their own; broadcasting
+    * even a LocalRelation would run one. Past the bound they stay the
+    * distributed `distinct`, broadcast into semi and anti joins. */
+  final class Keys(df: DataFrame, c: String, as: String) {
+    /** The keys on the driver; None past the bound. */
+    val local: Option[Seq[Any]] = collect(df.select(col(c)), limit(Vectors))
+      .map(_.iterator.map(_.get(0)).filter(_ != null).toSeq.distinct)
+
+    def isEmpty: Boolean = local.exists(_.isEmpty)
+
+    private lazy val distributed = broadcast(df.select(col(c).as(as)).distinct())
+
+    /** The rows of `rel` whose `as` is a key. */
+    def semi(rel: DataFrame): DataFrame = local.fold(
+      rel.join(distributed, Seq(as), "left_semi"))(ks => keyFirst(rel.where(col(as).isin(ks: _*))))
+
+    /** The rows of `rel` whose `as` is not a key, null `as` included
+      * (as in an anti-join). */
+    def anti(rel: DataFrame): DataFrame = local.fold(
+      rel.join(distributed, Seq(as), "left_anti"))(ks =>
+      keyFirst(rel.where(col(as).isNull || !col(as).isin(ks: _*))))
+
+    // a join USING `as` puts it first; the filters keep that schema
+    private def keyFirst(rel: DataFrame): DataFrame =
+      rel.select((as +: rel.columns.filterNot(_ == as).toSeq).map(col): _*)
+  }
 
   /** `array<bigint>` without nulls: a quantized vector column. */
   val LongArray: DataType = ArrayType(LongType, containsNull = false)

@@ -27,4 +27,24 @@ class BoundedSpec extends SparkSpec {
     withLocalMax(Bounded.Edges)(assert(Bounded.limit(Bounded.Vectors) == Bounded.Vectors))
     withLocalMax(0L)(assert(Bounded.limit(Bounded.Edges) == 0L))
   }
+
+  test("Bounded.Keys: IN filters equal the broadcast semi/anti joins, null keys and column order included") {
+    // the relation: a null key, a duplicate key and non-key columns
+    // before the key; the delete batch: a duplicate, a null, a miss
+    val rel = Seq[(String, Option[Long])](("a", Some(1L)), ("b", Some(2L)), ("c", Some(2L)),
+      ("d", None), ("e", Some(3L))).toDF("v", "id")
+    val del = Seq[Option[Long]](Some(2L), Some(2L), None, Some(9L)).toDF("doc_id")
+    val joinDel = org.apache.spark.sql.functions.broadcast(
+      del.select($"doc_id".as("id")).distinct())
+    def rows(df: org.apache.spark.sql.DataFrame) = (df.columns.toSeq, df.collect().map(_.toString).sorted.toSeq)
+    val want = (rows(rel.join(joinDel, Seq("id"), "left_semi")),
+      rows(rel.join(joinDel, Seq("id"), "left_anti")))
+    // 3 and 4 delete rows straddle the local read (4 rows); 0 is distributed
+    for (bound <- Seq(0L, 3L, 4L)) withLocalMax(bound) {
+      val keys = new Bounded.Keys(del, "doc_id", "id")
+      assert(keys.local.map(_.toSet) == (if (bound >= 4) Some(Set(2L, 9L)) else None), s"bound=$bound")
+      assert((rows(keys.semi(rel)), rows(keys.anti(rel))) == want, s"bound=$bound")
+    }
+    assert(new Bounded.Keys(Seq(Option.empty[Long]).toDF("doc_id"), "doc_id", "id").isEmpty)
+  }
 }

@@ -46,15 +46,17 @@ class DedupStreamSpec extends SparkSpec {
   }
 
   test("streaming wordcount (complete mode) equals batch wordcount") {
-    val dir = Files.createTempDirectory("swc")
-    Files.writeString(dir.resolve("a.txt"), "The quick brown fox\nthe fox again\n")
-    val streamed = StreamOps.runToMemory(
-      StreamOps.streamingWordCount(spark, dir.toString), "swc_out", OutputMode.Complete())
-      .as[(String, Long)].collect().toMap
-    val batch = ops.TextOps.wordCount(spark.read.text(dir.toString), col("value"))
-      .as[(String, Long)].collect().toMap
-    assert(streamed == batch)
-    assert(streamed("fox") == 2L)
+    withTempDir("swc") { dirDir =>
+      val dir = java.nio.file.Paths.get(dirDir)
+      Files.writeString(dir.resolve("a.txt"), "The quick brown fox\nthe fox again\n")
+      val streamed = StreamOps.runToMemory(
+        StreamOps.streamingWordCount(spark, dir.toString), "swc_out", OutputMode.Complete())
+        .as[(String, Long)].collect().toMap
+      val batch = ops.TextOps.wordCount(spark.read.text(dir.toString), col("value"))
+        .as[(String, Long)].collect().toMap
+      assert(streamed == batch)
+      assert(streamed("fox") == 2L)
+    }
   }
 
   implicit class Map2[A, B, C](rows: Array[(A, B, C)]) {

@@ -492,14 +492,15 @@ class ExtSpec extends SparkSpec {
     val pf = col("vec_id") < 5
     val inline = Similarity.ivfPqTopK(emb, "vec_id", "embedding", pf, k = 10)
       .orderBy("probe_id", "rn").collect()
-    val dir = java.nio.file.Files.createTempDirectory("ann_rt").toString
-    Similarity.writeAnnIndex(Similarity.annIndex(emb, "vec_id", "embedding"), dir)
-    val viaIndex = Similarity.probeIndex(Similarity.readAnnIndex(spark, dir),
-        emb, "vec_id", "embedding", pf, k = 10)
-      .orderBy("probe_id", "rn").collect()
-    assert(inline.nonEmpty)
-    assert(viaIndex.sameElements(inline))
-    spark.catalog.clearCache()
+    withTempDir("ann_rt") { dir =>
+      Similarity.writeAnnIndex(Similarity.annIndex(emb, "vec_id", "embedding"), dir)
+      val viaIndex = Similarity.probeIndex(Similarity.readAnnIndex(spark, dir),
+          emb, "vec_id", "embedding", pf, k = 10)
+        .orderBy("probe_id", "rn").collect()
+      assert(inline.nonEmpty)
+      assert(viaIndex.sameElements(inline))
+      spark.catalog.clearCache()
+    }
   }
 
   test("pqEncode: identical vectors get identical codes, zero qerr on a seed vector") {

@@ -11,31 +11,34 @@ class IoLshSpec extends SparkSpec {
   import spark.implicits._
 
   test("csv round trip preserves data") {
-    val dir = Files.createTempDirectory("csv").toString
-    val df = io.Tables(spark, sf, "nation")
-    Sinks.writeCsv(df, dir)
-    val back = Sinks.readCsv(spark, dir)
-    assert(back.count() == df.count())
-    assert(back.columns.toSeq == df.columns.toSeq)
-    assert(back.as[(Int, String, Int)].collect().toSet ==
-      df.as[(Int, String, Int)].collect().toSet)
+    withTempDir("csv") { dir =>
+      val df = io.Tables(spark, sf, "nation")
+      Sinks.writeCsv(df, dir)
+      val back = Sinks.readCsv(spark, dir)
+      assert(back.count() == df.count())
+      assert(back.columns.toSeq == df.columns.toSeq)
+      assert(back.as[(Int, String, Int)].collect().toSet ==
+        df.as[(Int, String, Int)].collect().toSet)
+    }
   }
 
   test("json lines round trip preserves data") {
-    val dir = Files.createTempDirectory("json").toString
-    val df = io.Tables(spark, sf, "region")
-    Sinks.writeJsonLines(df, dir)
-    val back = Sinks.readJsonLines(spark, dir)
-    assert(back.count() == df.count())
-    assert(back.select("r_regionkey", "r_name").as[(Long, String)].collect().toSet ==
-      df.select("r_regionkey", "r_name").as[(Int, String)].collect().map { case (k, n) => (k.toLong, n) }.toSet)
+    withTempDir("json") { dir =>
+      val df = io.Tables(spark, sf, "region")
+      Sinks.writeJsonLines(df, dir)
+      val back = Sinks.readJsonLines(spark, dir)
+      assert(back.count() == df.count())
+      assert(back.select("r_regionkey", "r_name").as[(Long, String)].collect().toSet ==
+        df.select("r_regionkey", "r_name").as[(Int, String)].collect().map { case (k, n) => (k.toLong, n) }.toSet)
+    }
   }
 
   test("writePartitioned emits out_<j> files in every format") {
-    val dir = Files.createTempDirectory("partd").toString
-    Sinks.writePartitioned(io.Tables(spark, sf, "nation"), dir, 3, "n_nationkey", "csv")
-    val names = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("out_"))
-    assert(names.map(_.takeWhile(_ != '.')).sorted.toSeq == Seq("out_0", "out_1", "out_2"))
+    withTempDir("partd") { dir =>
+      Sinks.writePartitioned(io.Tables(spark, sf, "nation"), dir, 3, "n_nationkey", "csv")
+      val names = new java.io.File(dir).listFiles().map(_.getName).filter(_.startsWith("out_"))
+      assert(names.map(_.takeWhile(_ != '.')).sorted.toSeq == Seq("out_0", "out_1", "out_2"))
+    }
   }
 
   test("writePartitioned throws when the filesystem refuses an out_<j> rename") {
@@ -43,14 +46,15 @@ class IoLshSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.refuseout.impl", classOf[RefuseOutRenameFs].getName)
     conf.setBoolean("fs.refuseout.impl.disable.cache", true)
-    val dir = Files.createTempDirectory("partr").toString
-    try {
-      val e = intercept[IllegalArgumentException](Sinks.writePartitioned(
-        io.Tables(spark, sf, "nation"), s"refuseout://$dir", 3, "n_nationkey", "csv"))
-      assert(e.getMessage.contains("out_"))
-    } finally {
-      conf.unset("fs.refuseout.impl")
-      conf.unset("fs.refuseout.impl.disable.cache")
+    withTempDir("partr") { dir =>
+      try {
+        val e = intercept[IllegalArgumentException](Sinks.writePartitioned(
+          io.Tables(spark, sf, "nation"), s"refuseout://$dir", 3, "n_nationkey", "csv"))
+        assert(e.getMessage.contains("out_"))
+      } finally {
+        conf.unset("fs.refuseout.impl")
+        conf.unset("fs.refuseout.impl.disable.cache")
+      }
     }
   }
 

@@ -22,21 +22,24 @@ class TestSumReducer extends api.TextReducer {
 class MainSpec extends SparkSpec {
 
   test("CLI custom job: user mapper/reducer classes submitted by FQCN end-to-end") {
-    val in = Files.createTempDirectory("cli_custom_in")
-    Files.writeString(in.resolve("a.txt"), "Education\nqueue\n")
-    val out = Files.createTempDirectory("cli_custom_out").toString
-    Main.main(Array(
-      "--input", in.toString, "--output", out, "--r", "2",
-      "--query", "custom",
-      "--mapper-class", "graft.TestVowelCountMapper",
-      "--reducer-class", "graft.TestSumReducer",
-      "--key", "key", "--value", "value"))
-    val back = io.KvText.read(spark, out)
-    import spark.implicits._
-    val counts = back.select($"key", $"value".cast("long"))
-      .as[(String, Long)].collect().toMap
-    // education -> e,u,a,i,o ; queue -> u,e,u,e
-    assert(counts == Map("a" -> 1L, "e" -> 3L, "i" -> 1L, "o" -> 1L, "u" -> 3L))
+    withTempDir("cli_custom_in") { inDir =>
+      val in = java.nio.file.Paths.get(inDir)
+      Files.writeString(in.resolve("a.txt"), "Education\nqueue\n")
+      withTempDir("cli_custom_out") { out =>
+        Main.main(Array(
+          "--input", in.toString, "--output", out, "--r", "2",
+          "--query", "custom",
+          "--mapper-class", "graft.TestVowelCountMapper",
+          "--reducer-class", "graft.TestSumReducer",
+          "--key", "key", "--value", "value"))
+        val back = io.KvText.read(spark, out)
+        import spark.implicits._
+        val counts = back.select($"key", $"value".cast("long"))
+          .as[(String, Long)].collect().toMap
+        // education -> e,u,a,i,o ; queue -> u,e,u,e
+        assert(counts == Map("a" -> 1L, "e" -> 3L, "i" -> 1L, "o" -> 1L, "u" -> 3L))
+      }
+    }
   }
 
   test("CustomJob.run plans exactly one exchange — the reduce shuffle IS the R partitioning") {
@@ -51,20 +54,23 @@ class MainSpec extends SparkSpec {
   }
 
   test("CLI wordcount job over a text container writes R out_<j> kv files") {
-    val in = Files.createTempDirectory("cli_in")
-    Files.writeString(in.resolve("a.txt"), "The quick brown fox\nthe lazy dog.\n")
-    Files.writeString(in.resolve("b.txt"), "THE end\n")
-    val out = Files.createTempDirectory("cli_out").toString
-    Main.main(Array(
-      "--input", in.toString, "--output", out, "--r", "3", "--query", "wordcount"))
-    val files = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("out_"))
-    assert(files.sorted.toSeq == Seq("out_0", "out_1", "out_2"))
-    val back = io.KvText.read(spark, out)
-    import spark.implicits._
-    val counts = back.select($"key", $"value".cast("long"))
-      .as[(String, Long)].collect().toMap
-    assert(counts("the") == 3L)
-    assert(counts("fox") == 1L)
+    withTempDir("cli_in") { inDir =>
+      val in = java.nio.file.Paths.get(inDir)
+      Files.writeString(in.resolve("a.txt"), "The quick brown fox\nthe lazy dog.\n")
+      Files.writeString(in.resolve("b.txt"), "THE end\n")
+      withTempDir("cli_out") { out =>
+        Main.main(Array(
+          "--input", in.toString, "--output", out, "--r", "3", "--query", "wordcount"))
+        val files = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("out_"))
+        assert(files.sorted.toSeq == Seq("out_0", "out_1", "out_2"))
+        val back = io.KvText.read(spark, out)
+        import spark.implicits._
+        val counts = back.select($"key", $"value".cast("long"))
+          .as[(String, Long)].collect().toMap
+        assert(counts("the") == 3L)
+        assert(counts("fox") == 1L)
+      }
+    }
   }
 
   test("CLI expr job: wordcount submitted purely as SQL expression strings") {
@@ -73,205 +79,225 @@ class MainSpec extends SparkSpec {
     // an ARRAY<STRUCT<key,value>> expression over the input line, the
     // reducer an aggregate over `value` — map.py:9-18 / reduce.py:2-17
     // as two CLI strings
-    val in = Files.createTempDirectory("cli_expr_in")
-    Files.writeString(in.resolve("a.txt"), "The quick brown fox\nthe lazy dog.\n")
-    Files.writeString(in.resolve("b.txt"), "THE end\n")
-    val out = Files.createTempDirectory("cli_expr_out").toString
-    Main.main(Array(
-      "--input", in.toString, "--output", out, "--r", "3",
-      "--query", "expr",
-      "--mapper-expr",
-      "transform(filter(split(regexp_replace(lower(value), '[\\\\p{Punct}]', ' '), ' '), w -> w != ''), w -> struct(w AS key, 1L AS value))",
-      "--reducer-expr", "sum(value)",
-      "--key", "key", "--value", "value"))
-    val files = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("out_"))
-    assert(files.sorted.toSeq == Seq("out_0", "out_1", "out_2"))
-    val back = io.KvText.read(spark, out)
-    import spark.implicits._
-    val counts = back.select($"key", $"value".cast("long"))
-      .as[(String, Long)].collect().toMap
-    assert(counts == Map("the" -> 3L, "quick" -> 1L, "brown" -> 1L, "fox" -> 1L,
-      "lazy" -> 1L, "dog" -> 1L, "end" -> 1L))
+    withTempDir("cli_expr_in") { inDir =>
+      val in = java.nio.file.Paths.get(inDir)
+      Files.writeString(in.resolve("a.txt"), "The quick brown fox\nthe lazy dog.\n")
+      Files.writeString(in.resolve("b.txt"), "THE end\n")
+      withTempDir("cli_expr_out") { out =>
+        Main.main(Array(
+          "--input", in.toString, "--output", out, "--r", "3",
+          "--query", "expr",
+          "--mapper-expr",
+          "transform(filter(split(regexp_replace(lower(value), '[\\\\p{Punct}]', ' '), ' '), w -> w != ''), w -> struct(w AS key, 1L AS value))",
+          "--reducer-expr", "sum(value)",
+          "--key", "key", "--value", "value"))
+        val files = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("out_"))
+        assert(files.sorted.toSeq == Seq("out_0", "out_1", "out_2"))
+        val back = io.KvText.read(spark, out)
+        import spark.implicits._
+        val counts = back.select($"key", $"value".cast("long"))
+          .as[(String, Long)].collect().toMap
+        assert(counts == Map("the" -> 3L, "quick" -> 1L, "brown" -> 1L, "fox" -> 1L,
+          "lazy" -> 1L, "dog" -> 1L, "end" -> 1L))
+      }
+    }
   }
 
   test("CLI expr job without a reducer is map-only: raw kv pairs out") {
-    val in = Files.createTempDirectory("cli_exprm_in")
-    Files.writeString(in.resolve("a.txt"), "ab\ncd\n")
-    val out = Files.createTempDirectory("cli_exprm_out").toString
-    Main.main(Array(
-      "--input", in.toString, "--output", out, "--r", "2",
-      "--query", "expr",
-      "--mapper-expr", "array(struct(value AS key, length(value) AS value))",
-      "--key", "key", "--value", "value"))
-    val back = io.KvText.read(spark, out)
-    import spark.implicits._
-    val rows = back.select($"key", $"value".cast("long")).as[(String, Long)].collect().toMap
-    assert(rows == Map("ab" -> 2L, "cd" -> 2L))
+    withTempDir("cli_exprm_in") { inDir =>
+      val in = java.nio.file.Paths.get(inDir)
+      Files.writeString(in.resolve("a.txt"), "ab\ncd\n")
+      withTempDir("cli_exprm_out") { out =>
+        Main.main(Array(
+          "--input", in.toString, "--output", out, "--r", "2",
+          "--query", "expr",
+          "--mapper-expr", "array(struct(value AS key, length(value) AS value))",
+          "--key", "key", "--value", "value"))
+        val back = io.KvText.read(spark, out)
+        import spark.implicits._
+        val rows = back.select($"key", $"value".cast("long")).as[(String, Long)].collect().toMap
+        assert(rows == Map("ab" -> 2L, "cd" -> 2L))
+      }
+    }
   }
 
   test("CLI py job: the reference's two-.py submission runs unmodified via the pipe shim") {
     // the literal `w6/docs/design.md:66-74` contract: a mapper .py with
     // mapfunc(in_file) -> dict and a reducer .py with
     // reducefunc(in_file) -> dict, no engine code, no SQL
-    val in = Files.createTempDirectory("cli_py_in")
-    Files.writeString(in.resolve("a.txt"), "The quick brown fox\nthe lazy dog.\n")
-    Files.writeString(in.resolve("b.txt"), "THE end\n")
-    val (mapPy, redPy) = Queries.writeWordcountScripts()
-    val out = Files.createTempDirectory("cli_py_out").toString
-    Main.main(Array(
-      "--input", in.toString, "--output", out, "--r", "3",
-      "--query", "py",
-      "--mapper-py", mapPy, "--reducer-py", redPy,
-      "--key", "key", "--value", "value"))
-    val files = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("out_"))
-    assert(files.sorted.toSeq == Seq("out_0", "out_1", "out_2"))
-    val back = io.KvText.read(spark, out)
-    import spark.implicits._
-    val counts = back.select($"key", $"value".cast("long"))
-      .as[(String, Long)].collect().toMap
-    assert(counts == Map("the" -> 3L, "quick" -> 1L, "brown" -> 1L, "fox" -> 1L,
-      "lazy" -> 1L, "dog" -> 1L, "end" -> 1L))
+    withTempDir("cli_py_in") { inDir =>
+      val in = java.nio.file.Paths.get(inDir)
+      Files.writeString(in.resolve("a.txt"), "The quick brown fox\nthe lazy dog.\n")
+      Files.writeString(in.resolve("b.txt"), "THE end\n")
+      val (mapPy, redPy) = Queries.wordcountScripts()
+      withTempDir("cli_py_out") { out =>
+        Main.main(Array(
+          "--input", in.toString, "--output", out, "--r", "3",
+          "--query", "py",
+          "--mapper-py", mapPy, "--reducer-py", redPy,
+          "--key", "key", "--value", "value"))
+        val files = new java.io.File(out).listFiles().map(_.getName).filter(_.startsWith("out_"))
+        assert(files.sorted.toSeq == Seq("out_0", "out_1", "out_2"))
+        val back = io.KvText.read(spark, out)
+        import spark.implicits._
+        val counts = back.select($"key", $"value".cast("long"))
+          .as[(String, Long)].collect().toMap
+        assert(counts == Map("the" -> 3L, "quick" -> 1L, "brown" -> 1L, "fox" -> 1L,
+          "lazy" -> 1L, "dog" -> 1L, "end" -> 1L))
+      }
+    }
   }
 
   test("PyJob keys may contain colons: last-colon split round-trips") {
     import spark.implicits._
-    val d = Files.createTempDirectory("py_colon")
-    // identity mapper emitting 'a:b' -> n keys: the wire format splits
-    // on the LAST colon (reduce.py:9 rsplit), which PyJob must mirror
-    Files.writeString(d.resolve("m.py"),
-      """def mapfunc(p):
-        |    out = {}
-        |    with open(p) as f:
-        |        for line in f:
-        |            w = line.strip()
-        |            if w:
-        |                out[w + ":x"] = len(w)
-        |    return out
-        |""".stripMargin)
-    val lines = Seq("ab", "cde").toDS()
-    val rows = api.PyJob.run(lines, d.resolve("m.py").toString, None, 2)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows == Map("ab:x" -> "2", "cde:x" -> "3"))
+    withTempDir("py_colon") { dDir =>
+      val d = java.nio.file.Paths.get(dDir)
+      // identity mapper emitting 'a:b' -> n keys: the wire format splits
+      // on the LAST colon (reduce.py:9 rsplit), which PyJob must mirror
+      Files.writeString(d.resolve("m.py"),
+        """def mapfunc(p):
+          |    out = {}
+          |    with open(p) as f:
+          |        for line in f:
+          |            w = line.strip()
+          |            if w:
+          |                out[w + ":x"] = len(w)
+          |    return out
+          |""".stripMargin)
+      val lines = Seq("ab", "cde").toDS()
+      val rows = api.PyJob.run(lines, d.resolve("m.py").toString, None, 2)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(rows == Map("ab:x" -> "2", "cde:x" -> "3"))
+    }
   }
 
   test("PyJob colon keys survive the FULL map+reduce wire round trip (rsplit contract)") {
     import spark.implicits._
-    val d = Files.createTempDirectory("py_colon_mr")
-    // keys like 'a:b' traverse the wire TWICE in the reduce form (map
-    // stdout → repartition → reduce stdin → reduce stdout); the
-    // reference's reduce.py:9 rsplit(':') contract must hold at every
-    // hop, not just the map-only read-back
-    Files.writeString(d.resolve("m.py"),
-      """def mapfunc(p):
-        |    out = {}
-        |    with open(p) as f:
-        |        for line in f:
-        |            w = line.strip()
-        |            if w:
-        |                out[w + ":x"] = out.get(w + ":x", 0) + 1
-        |    return out
-        |""".stripMargin)
-    Files.writeString(d.resolve("r.py"),
-      """def reducefunc(p):
-        |    out = {}
-        |    with open(p) as f:
-        |        for line in f:
-        |            k, _, v = line.rstrip("\n").rpartition(":")
-        |            if k:
-        |                out[k] = out.get(k, 0) + int(v)
-        |    return out
-        |""".stripMargin)
-    val lines = Seq("a:b", "cd", "a:b", "a:b", "cd").toDS().repartition(3)
-    val rows = api.PyJob.run(lines, d.resolve("m.py").toString,
-        Some(d.resolve("r.py").toString), r = 2)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(rows == Map("a:b:x" -> "3", "cd:x" -> "2"))
+    withTempDir("py_colon_mr") { dDir =>
+      val d = java.nio.file.Paths.get(dDir)
+      // keys like 'a:b' traverse the wire TWICE in the reduce form (map
+      // stdout → repartition → reduce stdin → reduce stdout); the
+      // reference's reduce.py:9 rsplit(':') contract must hold at every
+      // hop, not just the map-only read-back
+      Files.writeString(d.resolve("m.py"),
+        """def mapfunc(p):
+          |    out = {}
+          |    with open(p) as f:
+          |        for line in f:
+          |            w = line.strip()
+          |            if w:
+          |                out[w + ":x"] = out.get(w + ":x", 0) + 1
+          |    return out
+          |""".stripMargin)
+      Files.writeString(d.resolve("r.py"),
+        """def reducefunc(p):
+          |    out = {}
+          |    with open(p) as f:
+          |        for line in f:
+          |            k, _, v = line.rstrip("\n").rpartition(":")
+          |            if k:
+          |                out[k] = out.get(k, 0) + int(v)
+          |    return out
+          |""".stripMargin)
+      val lines = Seq("a:b", "cd", "a:b", "a:b", "cd").toDS().repartition(3)
+      val rows = api.PyJob.run(lines, d.resolve("m.py").toString,
+          Some(d.resolve("r.py").toString), r = 2)
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(rows == Map("a:b:x" -> "3", "cd:x" -> "2"))
+    }
   }
 
   test("PyJob rejects wire-breaking UDF output loudly (colon in value, newline in key)") {
     import spark.implicits._
-    val d = Files.createTempDirectory("py_badwire")
-    // a value containing ':' would shift the key boundary on read-back
-    // (silent corruption); the shim must fail the task instead
-    Files.writeString(d.resolve("colon_val.py"),
-      """def mapfunc(p):
-        |    return {"k": "a:b"}
-        |""".stripMargin)
-    def chainMsg(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(c => s"${c.getClass.getName}: ${c.getMessage}").mkString("\n")
-    val e1 = intercept[Exception] {
-      api.PyJob.run(Seq("x").toDS(), d.resolve("colon_val.py").toString, None, 1)
-        .collect()
+    withTempDir("py_badwire") { dDir =>
+      val d = java.nio.file.Paths.get(dDir)
+      // a value containing ':' would shift the key boundary on read-back
+      // (silent corruption); the shim must fail the task instead
+      Files.writeString(d.resolve("colon_val.py"),
+        """def mapfunc(p):
+          |    return {"k": "a:b"}
+          |""".stripMargin)
+      def chainMsg(t: Throwable): String =
+        Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+          .map(c => s"${c.getClass.getName}: ${c.getMessage}").mkString("\n")
+      val e1 = intercept[Exception] {
+        api.PyJob.run(Seq("x").toDS(), d.resolve("colon_val.py").toString, None, 1)
+          .collect()
+      }
+      assert(chainMsg(e1).contains("Subprocess exited"), chainMsg(e1))
+      // a newline in a key would split one pair into two wire lines
+      Files.writeString(d.resolve("nl_key.py"),
+        """def mapfunc(p):
+          |    return {"k\nq": 1}
+          |""".stripMargin)
+      val e2 = intercept[Exception] {
+        api.PyJob.run(Seq("x").toDS(), d.resolve("nl_key.py").toString, None, 1)
+          .collect()
+      }
+      assert(chainMsg(e2).contains("Subprocess exited"), chainMsg(e2))
     }
-    assert(chainMsg(e1).contains("Subprocess exited"), chainMsg(e1))
-    // a newline in a key would split one pair into two wire lines
-    Files.writeString(d.resolve("nl_key.py"),
-      """def mapfunc(p):
-        |    return {"k\nq": 1}
-        |""".stripMargin)
-    val e2 = intercept[Exception] {
-      api.PyJob.run(Seq("x").toDS(), d.resolve("nl_key.py").toString, None, 1)
-        .collect()
-    }
-    assert(chainMsg(e2).contains("Subprocess exited"), chainMsg(e2))
   }
 
   test("PyJob m override pins the mapfunc invocation count exactly") {
     import spark.implicits._
-    val d = Files.createTempDirectory("py_mctl")
-    // one marker pair per invocation: key = first input line (distinct
-    // per shard under round-robin of distinct lines), value = shard
-    // line count — so the row count IS the map task count and the
-    // value sum proves every line reached exactly one shard
-    Files.writeString(d.resolve("m.py"),
-      """def mapfunc(p):
-        |    with open(p) as f:
-        |        lines = [l.strip() for l in f if l.strip()]
-        |    if not lines:
-        |        return {}
-        |    return {"shard_" + lines[0]: len(lines)}
-        |""".stripMargin)
-    val lines = (0 until 24).map(i => f"L$i%02d").toDS()
-    for (m <- Seq(1, 4, 8)) {
-      val rows = api.PyJob.run(lines, d.resolve("m.py").toString, None, r = 2, m = m)
-        .collect().map(r => r.getString(0) -> r.getString(1).toInt)
-      assert(rows.length == m, s"m=$m produced ${rows.length} map invocations")
-      assert(rows.map(_._2).sum == 24, s"m=$m lost or duplicated lines")
+    withTempDir("py_mctl") { dDir =>
+      val d = java.nio.file.Paths.get(dDir)
+      // one marker pair per invocation: key = first input line (distinct
+      // per shard under round-robin of distinct lines), value = shard
+      // line count — so the row count IS the map task count and the
+      // value sum proves every line reached exactly one shard
+      Files.writeString(d.resolve("m.py"),
+        """def mapfunc(p):
+          |    with open(p) as f:
+          |        lines = [l.strip() for l in f if l.strip()]
+          |    if not lines:
+          |        return {}
+          |    return {"shard_" + lines[0]: len(lines)}
+          |""".stripMargin)
+      val lines = (0 until 24).map(i => f"L$i%02d").toDS()
+      for (m <- Seq(1, 4, 8)) {
+        val rows = api.PyJob.run(lines, d.resolve("m.py").toString, None, r = 2, m = m)
+          .collect().map(r => r.getString(0) -> r.getString(1).toInt)
+        assert(rows.length == m, s"m=$m produced ${rows.length} map invocations")
+        assert(rows.map(_._2).sum == 24, s"m=$m lost or duplicated lines")
+      }
     }
   }
 
   test("CLI sql job runs arbitrary SQL with custom functions over the tables") {
-    val out = Files.createTempDirectory("cli_sql_out").toString
-    Main.main(Array(
-      "--input", sf, "--output", out, "--r", "2",
-      "--query", "sql",
-      "--sql", "SELECT n_name AS key, qdot(array(CAST(0.5 AS FLOAT)), array(CAST(2.0 AS FLOAT))) AS value FROM nation ORDER BY n_name",
-      "--key", "key", "--value", "value"))
-    val back = io.KvText.read(spark, out)
-    import spark.implicits._
-    val rows = back.select($"key", $"value".cast("long")).as[(String, Long)].collect().toMap
-    assert(rows.size == 25)
-    assert(rows.values.forall(_ == 1000000L)) // 500 * 2000
+    withTempDir("cli_sql_out") { out =>
+      Main.main(Array(
+        "--input", sf, "--output", out, "--r", "2",
+        "--query", "sql",
+        "--sql", "SELECT n_name AS key, qdot(array(CAST(0.5 AS FLOAT)), array(CAST(2.0 AS FLOAT))) AS value FROM nation ORDER BY n_name",
+        "--key", "key", "--value", "value"))
+      val back = io.KvText.read(spark, out)
+      import spark.implicits._
+      val rows = back.select($"key", $"value".cast("long")).as[(String, Long)].collect().toMap
+      assert(rows.size == 25)
+      assert(rows.values.forall(_ == 1000000L)) // 500 * 2000
+    }
   }
 
   test("Verify.dump: a throwing query leaves an EMPTY dump dir, never a stale one") {
     import spark.implicits._
-    val out = Files.createTempDirectory("verify_out")
-    val dir = out.resolve("q_throws").toString
-    // an earlier run's dump of the same query, which check.py would pass
-    assert(Verify.dump(dir, "q_throws")(Seq(1L, 2L).toDF("x")))
-    assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".parquet")))
-    val ok = Verify.dump(dir, "q_throws")(
-      Seq(1L).toDF("x").select(assert_true(lit(false))))
-    assert(!ok)
-    val left = new java.io.File(dir).listFiles()
-    assert(left != null, "the failed query's dump dir must exist for check.py to see it")
-    assert(left.isEmpty, s"stale output survived a failed query: ${left.map(_.getName).toSeq}")
-    // a query that throws while it is being built, not run
-    val dir2 = out.resolve("q_build_throws").toString
-    assert(!Verify.dump(dir2, "q_build_throws")(sys.error("boom")))
-    assert(new java.io.File(dir2).listFiles().isEmpty)
+    withTempDir("verify_out") { outDir =>
+      val out = java.nio.file.Paths.get(outDir)
+      val dir = out.resolve("q_throws").toString
+      // an earlier run's dump of the same query, which check.py would pass
+      assert(Verify.dump(dir, "q_throws")(Seq(1L, 2L).toDF("x")))
+      assert(new java.io.File(dir).listFiles().exists(_.getName.endsWith(".parquet")))
+      val ok = Verify.dump(dir, "q_throws")(
+        Seq(1L).toDF("x").select(assert_true(lit(false))))
+      assert(!ok)
+      val left = new java.io.File(dir).listFiles()
+      assert(left != null, "the failed query's dump dir must exist for check.py to see it")
+      assert(left.isEmpty, s"stale output survived a failed query: ${left.map(_.getName).toSeq}")
+      // a query that throws while it is being built, not run
+      val dir2 = out.resolve("q_build_throws").toString
+      assert(!Verify.dump(dir2, "q_build_throws")(sys.error("boom")))
+      assert(new java.io.File(dir2).listFiles().isEmpty)
+    }
   }
 
   test("every main builds its session through GraftSession (no other SparkSession.builder)") {
@@ -293,5 +319,19 @@ class MainSpec extends SparkSpec {
     finally walk.close()
     assert(offenders.isEmpty,
       s"build sessions with GraftSession.local, not by hand: ${offenders.mkString(", ")}")
+  }
+
+  test("the index operators read their relations through Sinks.readParquet (no bare read.parquet)") {
+    import scala.jdk.CollectionConverters._
+    val offenders = Seq("Search.scala", "Similarity.scala").flatMap { f =>
+      val p = java.nio.file.Paths.get("src/main/scala/graft/ext", f)
+      assert(Files.isRegularFile(p), s"run from the repo root: ${p.toAbsolutePath}")
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if !Seq("//", "/*", "*").exists(line.trim.startsWith) &&
+            line.contains("read.parquet(") => s"$p:${i + 1}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"read engine-written relations with Sinks.readParquet (no inference job): ${offenders.mkString(", ")}")
   }
 }

@@ -157,68 +157,71 @@ class R10OpsSpec extends SparkSpec {
   }
 
   test("maintainAggView: group moves, emptied groups, and chained cycles all equal the recompute") {
-    val dir = java.nio.file.Files.createTempDirectory("mvspec").toString + "/tbl"
-    // base: grp a = {k1: 10, k2: 20}, grp b = {k3: 30}
-    val base = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
-      .toDF("k", "grp", "v")
-    io.Sinks.writeVersion(base, dir, 0)
-    // v1: k2 MOVES a→b with a new value; k3 deleted (empties nothing
-    // yet); k4 inserted into c
-    io.Sinks.writeVersion(Seq(
-      (2L, "b", 25L, false), (3L, "b", 30L, true), (4L, "c", 7L, false))
-      .toDF("k", "grp", "v", "__deleted"), dir, 1)
-    // v2: k1 deleted -> grp a EMPTIES and must leave the view
-    io.Sinks.writeVersion(Seq((1L, "a", 10L, true))
-      .toDF("k", "grp", "v", "__deleted"), dir, 2)
+    withTempDir("mvspec") { tmp =>
+      val dir = tmp + "/tbl"
+      // base: grp a = {k1: 10, k2: 20}, grp b = {k3: 30}
+      val base = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
+        .toDF("k", "grp", "v")
+      io.Sinks.writeVersion(base, dir, 0)
+      // v1: k2 MOVES a→b with a new value; k3 deleted (empties nothing
+      // yet); k4 inserted into c
+      io.Sinks.writeVersion(Seq(
+        (2L, "b", 25L, false), (3L, "b", 30L, true), (4L, "c", 7L, false))
+        .toDF("k", "grp", "v", "__deleted"), dir, 1)
+      // v2: k1 deleted -> grp a EMPTIES and must leave the view
+      io.Sinks.writeVersion(Seq((1L, "a", 10L, true))
+        .toDF("k", "grp", "v", "__deleted"), dir, 2)
 
-    def mvOf(asOf: Long) = io.Sinks.readSnapshotAt(spark, dir, asOf, "k")
-      .groupBy("grp").agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_val"))
-    def maintained(from: Long, to: Long, mv: org.apache.spark.sql.DataFrame) =
-      io.Sinks.maintainAggView(mv,
-        io.Sinks.snapshotDiff(spark, dir, from, to, "k"),
-        "grp", oldVal = col("old_v"), newVal = col("new_v"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(String, Long, Long)].collect().toSet
+      def mvOf(asOf: Long) = io.Sinks.readSnapshotAt(spark, dir, asOf, "k")
+        .groupBy("grp").agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_val"))
+      def maintained(from: Long, to: Long, mv: org.apache.spark.sql.DataFrame) =
+        io.Sinks.maintainAggView(mv,
+          io.Sinks.snapshotDiff(spark, dir, from, to, "k"),
+          "grp", oldVal = col("old_v"), newVal = col("new_v"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(String, Long, Long)].collect().toSet
 
-    // one cycle over the move commit
-    val m1 = maintained(0, 1, mvOf(0))
-    assert(rows(m1) == rows(mvOf(1)))
-    assert(rows(m1) == Set(("a", 1L, 10L), ("b", 1L, 25L), ("c", 1L, 7L)))
-    // chained second cycle off the MAINTAINED state (not a recompute):
-    // grp a empties and leaves the view
-    val m2 = maintained(1, 2, m1)
-    assert(rows(m2) == rows(mvOf(2)))
-    assert(rows(m2) == Set(("b", 1L, 25L), ("c", 1L, 7L)))
-    // one big cycle 0→2 equals the two chained ones
-    assert(rows(maintained(0, 2, mvOf(0))) == rows(m2))
+      // one cycle over the move commit
+      val m1 = maintained(0, 1, mvOf(0))
+      assert(rows(m1) == rows(mvOf(1)))
+      assert(rows(m1) == Set(("a", 1L, 10L), ("b", 1L, 25L), ("c", 1L, 7L)))
+      // chained second cycle off the MAINTAINED state (not a recompute):
+      // grp a empties and leaves the view
+      val m2 = maintained(1, 2, m1)
+      assert(rows(m2) == rows(mvOf(2)))
+      assert(rows(m2) == Set(("b", 1L, 25L), ("c", 1L, 7L)))
+      // one big cycle 0→2 equals the two chained ones
+      assert(rows(maintained(0, 2, mvOf(0))) == rows(m2))
+    }
   }
 
   test("mvMaintainApply: the stored view equals the recompute after every trigger, across stream restarts") {
-    val base = java.nio.file.Files.createTempDirectory("mvstream_spec").toString
-    val dir = base + "/tbl"
-    val rows = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
-      .toDF("k", "grp", "v")
-    io.Sinks.writeVersion(rows, dir, 0)
-    def agg(df: org.apache.spark.sql.DataFrame) = df.groupBy("grp")
-      .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_val"))
-    agg(io.Sinks.readSnapshotAt(spark, dir, 0, "k")).write.parquet(s"$base/mv")
-    val b1 = Seq((2L, "b", 25L, false), (4L, "c", 7L, false))
-      .toDF("k", "grp", "v", "__deleted")
-    val b2 = Seq((1L, "a", 10L, true)).toDF("k", "grp", "v", "__deleted")
-    def stored = spark.read.parquet(s"$base/mv")
-      .as[(String, Long, Long)].collect().toSet
-    def recompute(asOf: Long) = agg(io.Sinks.readSnapshotAt(spark, dir, asOf, "k"))
-      .as[(String, Long, Long)].collect().toSet
-    def drain(b: org.apache.spark.sql.DataFrame): Unit =
-      streaming.StreamOps.mvMaintainApply(
-        streaming.StreamOps.stagedStream(Seq(b)), dir, s"$base/mv",
-        "k", "grp", oldVal = col("old_v"), newVal = col("new_v"))
-    drain(b1) // trigger 1: move + insert
-    assert(stored == recompute(1))
-    drain(b2) // a SEPARATE stream session resumes off the stored view
-    assert(stored == recompute(2))
-    // grp a emptied by the delete; b holds the moved k2 plus base k3
-    assert(stored == Set(("b", 2L, 55L), ("c", 1L, 7L)))
+    withTempDir("mvstream_spec") { base =>
+      val dir = base + "/tbl"
+      val rows = Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
+        .toDF("k", "grp", "v")
+      io.Sinks.writeVersion(rows, dir, 0)
+      def agg(df: org.apache.spark.sql.DataFrame) = df.groupBy("grp")
+        .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_val"))
+      agg(io.Sinks.readSnapshotAt(spark, dir, 0, "k")).write.parquet(s"$base/mv")
+      val b1 = Seq((2L, "b", 25L, false), (4L, "c", 7L, false))
+        .toDF("k", "grp", "v", "__deleted")
+      val b2 = Seq((1L, "a", 10L, true)).toDF("k", "grp", "v", "__deleted")
+      def stored = spark.read.parquet(s"$base/mv")
+        .as[(String, Long, Long)].collect().toSet
+      def recompute(asOf: Long) = agg(io.Sinks.readSnapshotAt(spark, dir, asOf, "k"))
+        .as[(String, Long, Long)].collect().toSet
+      def drain(b: org.apache.spark.sql.DataFrame): Unit =
+        streaming.StreamOps.mvMaintainApply(
+          streaming.StreamOps.stagedStream(Seq(b)), dir, s"$base/mv",
+          "k", "grp", oldVal = col("old_v"), newVal = col("new_v"))
+      drain(b1) // trigger 1: move + insert
+      assert(stored == recompute(1))
+      drain(b2) // a SEPARATE stream session resumes off the stored view
+      assert(stored == recompute(2))
+      // grp a emptied by the delete; b holds the moved k2 plus base k3
+      assert(stored == Set(("b", 2L, 55L), ("c", 1L, 7L)))
+    }
   }
 
   test("epochSchedule: caps bind per source, effective <= alloc, uncapped epochs consume the allocation") {
@@ -376,214 +379,233 @@ class R10OpsSpec extends SparkSpec {
   test("restoreVersion: reverse-delta commit is O(diff), idempotent, history-preserving") {
     val docs = io.Tables(spark, sf, "documents")
       .select("doc_id", "text", "source")
-    val path = java.nio.file.Files
-      .createTempDirectory("restore_spec").toString + "/tbl"
-    io.Sinks.writeVersion(docs, path, 0)
-    // a "bad ingest": rewrite 10% of keys, insert 3 strays
-    val bad = docs.where(pmod(col("doc_id"), lit(10)) === 7)
-      .withColumn("text", concat(lit("BAD "), col("text")))
-      .withColumn("__deleted", lit(false))
-      .unionByName(docs.where(col("doc_id") < 3)
-        .withColumn("doc_id", col("doc_id") + 900000L)
-        .withColumn("__deleted", lit(false)))
-    io.Sinks.writeVersion(bad, path, 1)
-    def head(asOf: Long) = io.Sinks.readSnapshotAt(spark, path, asOf, "doc_id")
-      .select("doc_id", "text").as[(Long, String)].collect().toSet
-    val v0 = head(0)
-    val v1 = head(1)
-    assert(v1 != v0)
-    val v = io.Sinks.restoreVersion(spark, path, 0, "doc_id")
-    assert(v == 2L)
-    // head == target, forensic state untouched
-    assert(head(v) == v0)
-    assert(head(1) == v1)
-    // the restore commit carries ONLY the reverse delta, not the table
-    val badRows = spark.read.parquet(s"$path/__v=1").count()
-    assert(spark.read.parquet(s"$path/__v=2").count() == badRows)
-    // idempotent: restoring again to the same target commits an empty
-    // delta and the head doesn't move
-    val v2 = io.Sinks.restoreVersion(spark, path, 0, "doc_id")
-    assert(spark.read.parquet(s"$path/__v=$v2").isEmpty)
-    assert(head(v2) == v0)
-    // forward "restore" rejected
-    intercept[IllegalArgumentException] {
-      io.Sinks.restoreVersion(spark, path, 99, "doc_id")
+    withTempDir("restore_spec") { tmp =>
+      val path = tmp + "/tbl"
+      io.Sinks.writeVersion(docs, path, 0)
+      // a "bad ingest": rewrite 10% of keys, insert 3 strays
+      val bad = docs.where(pmod(col("doc_id"), lit(10)) === 7)
+        .withColumn("text", concat(lit("BAD "), col("text")))
+        .withColumn("__deleted", lit(false))
+        .unionByName(docs.where(col("doc_id") < 3)
+          .withColumn("doc_id", col("doc_id") + 900000L)
+          .withColumn("__deleted", lit(false)))
+      io.Sinks.writeVersion(bad, path, 1)
+      def head(asOf: Long) = io.Sinks.readSnapshotAt(spark, path, asOf, "doc_id")
+        .select("doc_id", "text").as[(Long, String)].collect().toSet
+      val v0 = head(0)
+      val v1 = head(1)
+      assert(v1 != v0)
+      val v = io.Sinks.restoreVersion(spark, path, 0, "doc_id")
+      assert(v == 2L)
+      // head == target, forensic state untouched
+      assert(head(v) == v0)
+      assert(head(1) == v1)
+      // the restore commit carries ONLY the reverse delta, not the table
+      val badRows = spark.read.parquet(s"$path/__v=1").count()
+      assert(spark.read.parquet(s"$path/__v=2").count() == badRows)
+      // idempotent: restoring again to the same target commits an empty
+      // delta and the head doesn't move
+      val v2 = io.Sinks.restoreVersion(spark, path, 0, "doc_id")
+      assert(spark.read.parquet(s"$path/__v=$v2").isEmpty)
+      assert(head(v2) == v0)
+      // forward "restore" rejected
+      intercept[IllegalArgumentException] {
+        io.Sinks.restoreVersion(spark, path, 99, "doc_id")
+      }
     }
   }
 
-  private def swapFixture(): (String, (String, String) => Unit) = {
+  /** The fixture's writer: `write(dir, marker)` makes `root/dir` a
+    * complete relation holding `marker`. */
+  private def swapFixture(root: String): (String, String) => Unit = {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("swap_spec").toString
-    def write(dir: String, marker: String): Unit = {
+    (dir, marker) => {
       Files.createDirectories(Paths.get(s"$root/$dir"))
       Files.writeString(Paths.get(s"$root/$dir/m"), marker)
       // swapCompacting refuses a replacement without the parquet
       // commit marker; the fixture writes complete relations
       Files.writeString(Paths.get(s"$root/$dir/_SUCCESS"), "")
     }
-    (root, write)
   }
 
   test("swapCompacting: swaps content in, clears stale .old from a prior crash, leaves no siblings") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    write("rel", "old-content")
-    write("rel.compacting", "new-content")
-    write("rel.old", "stale-crash-leftover")
-    write("rel_delta_0", "delta")
-    io.Sinks.swapCompacting(spark, root, Seq("rel"), Seq(s"$root/rel_delta_0"))
-    assert(Files.readString(Paths.get(s"$root/rel/m")) == "new-content")
-    for (gone <- Seq("rel.compacting", "rel.old", "rel_delta_0", "_swap_inprogress"))
-      assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      write("rel", "old-content")
+      write("rel.compacting", "new-content")
+      write("rel.old", "stale-crash-leftover")
+      write("rel_delta_0", "delta")
+      io.Sinks.swapCompacting(spark, root, Seq("rel"), Seq(s"$root/rel_delta_0"))
+      assert(Files.readString(Paths.get(s"$root/rel/m")) == "new-content")
+      for (gone <- Seq("rel.compacting", "rel.old", "rel_delta_0", "_swap_inprogress"))
+        assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    }
   }
 
   test("swapCompacting refuses a .compacting directory without _SUCCESS") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    write("rel", "old-content")
-    write("rel.compacting", "half-written")
-    Files.delete(Paths.get(s"$root/rel.compacting/_SUCCESS"))
-    intercept[IllegalArgumentException] {
-      io.Sinks.swapCompacting(spark, root, Seq("rel"))
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      write("rel", "old-content")
+      write("rel.compacting", "half-written")
+      Files.delete(Paths.get(s"$root/rel.compacting/_SUCCESS"))
+      intercept[IllegalArgumentException] {
+        io.Sinks.swapCompacting(spark, root, Seq("rel"))
+      }
+      // nothing was touched: the original base still serves
+      assert(Files.readString(Paths.get(s"$root/rel/m")) == "old-content")
     }
-    // nothing was touched: the original base still serves
-    assert(Files.readString(Paths.get(s"$root/rel/m")) == "old-content")
   }
 
   test("recoverSwap rolls a mid-swap crash FORWARD from the journal (cross-relation atomicity)") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    // crash state: postings already swapped (base = new, sibling gone),
-    // term_df parked mid-rel (base absent, .old + .compacting present),
-    // meta untouched (base = old, .compacting complete), delta dir and
-    // journal still on disk
-    write("postings", "postings-new")
-    write("term_df.old", "term_df-old")
-    write("term_df.compacting", "term_df-new")
-    write("meta", "meta-old")
-    write("meta.compacting", "meta-new")
-    write("postings_delta_0", "delta")
-    Files.writeString(Paths.get(s"$root/_swap_inprogress"),
-      s"rel postings\nrel term_df\nrel meta\nextra $root/postings_delta_0\ncommit\n")
-    val completed = io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df", "meta"))
-    assert(completed)
-    assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-new")
-    assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-new")
-    assert(Files.readString(Paths.get(s"$root/meta/m")) == "meta-new")
-    for (gone <- Seq("term_df.old", "term_df.compacting", "meta.compacting",
-        "postings_delta_0", "_swap_inprogress"))
-      assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
-    // idempotent: a second recovery is a no-op
-    assert(!io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df", "meta")))
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      // crash state: postings already swapped (base = new, sibling gone),
+      // term_df parked mid-rel (base absent, .old + .compacting present),
+      // meta untouched (base = old, .compacting complete), delta dir and
+      // journal still on disk
+      write("postings", "postings-new")
+      write("term_df.old", "term_df-old")
+      write("term_df.compacting", "term_df-new")
+      write("meta", "meta-old")
+      write("meta.compacting", "meta-new")
+      write("postings_delta_0", "delta")
+      Files.writeString(Paths.get(s"$root/_swap_inprogress"),
+        s"rel postings\nrel term_df\nrel meta\nextra $root/postings_delta_0\ncommit\n")
+      val completed = io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df", "meta"))
+      assert(completed)
+      assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-new")
+      assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-new")
+      assert(Files.readString(Paths.get(s"$root/meta/m")) == "meta-new")
+      for (gone <- Seq("term_df.old", "term_df.compacting", "meta.compacting",
+          "postings_delta_0", "_swap_inprogress"))
+        assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+      // idempotent: a second recovery is a no-op
+      assert(!io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df", "meta")))
+    }
   }
 
   test("recoverSwap clears pre-swap leftovers when no journal exists (bases untouched)") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    write("rel", "old-content")
-    write("rel.compacting", "from-a-crashed-write")
-    assert(!io.Sinks.recoverSwap(spark, root, Seq("rel")))
-    assert(Files.readString(Paths.get(s"$root/rel/m")) == "old-content")
-    assert(!Files.exists(Paths.get(s"$root/rel.compacting")))
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      write("rel", "old-content")
+      write("rel.compacting", "from-a-crashed-write")
+      assert(!io.Sinks.recoverSwap(spark, root, Seq("rel")))
+      assert(Files.readString(Paths.get(s"$root/rel/m")) == "old-content")
+      assert(!Files.exists(Paths.get(s"$root/rel.compacting")))
+    }
   }
 
   test("recoverSwap treats a torn (sentinel-less) journal as 'swap never began'") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    // crash mid-journal-write: manifest lists only SOME relations and has
-    // no commit sentinel; no rename has happened yet (bases original).
-    // Rolling forward the journaled subset would install a MIXED index —
-    // the recovery must instead discard the torn journal and clean up.
-    write("postings", "postings-old")
-    write("postings.compacting", "postings-new")
-    write("term_df", "term_df-old")
-    write("term_df.compacting", "term_df-new")
-    Files.writeString(Paths.get(s"$root/_swap_inprogress"), "rel postings\n")
-    assert(!io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df")))
-    assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-old")
-    assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-old")
-    for (gone <- Seq("postings.compacting", "term_df.compacting", "_swap_inprogress"))
-      assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      // crash mid-journal-write: manifest lists only SOME relations and has
+      // no commit sentinel; no rename has happened yet (bases original).
+      // Rolling forward the journaled subset would install a MIXED index —
+      // the recovery must instead discard the torn journal and clean up.
+      write("postings", "postings-old")
+      write("postings.compacting", "postings-new")
+      write("term_df", "term_df-old")
+      write("term_df.compacting", "term_df-new")
+      Files.writeString(Paths.get(s"$root/_swap_inprogress"), "rel postings\n")
+      assert(!io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df")))
+      assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-old")
+      assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-old")
+      for (gone <- Seq("postings.compacting", "term_df.compacting", "_swap_inprogress"))
+        assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    }
   }
 
   test("recoverSwap rolls a LEGACY (sentinel-less) committed journal forward when renames progressed") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    // a journal written by the pre-sentinel build: committed (that
-    // build also journalled only after every .compacting was complete)
-    // but with no trailing sentinel, and the crash fell MID-RENAME —
-    // postings already swapped, term_df parked (base absent, .old +
-    // .compacting present), meta untouched. Treating this as "swap
-    // never began" (the r12 behavior ADVICE flagged) would restore
-    // term_df's OLD content beside postings' NEW content — a mixed
-    // index returned as consistent. Rename progress (.old present)
-    // must version-gate the journal to committed and roll it forward.
-    write("postings", "postings-new")
-    write("term_df.old", "term_df-old")
-    write("term_df.compacting", "term_df-new")
-    write("meta", "meta-old")
-    write("meta.compacting", "meta-new")
-    write("postings_delta_0", "delta")
-    Files.writeString(Paths.get(s"$root/_swap_inprogress"),
-      s"rel postings\nrel term_df\nrel meta\nextra $root/postings_delta_0\n")
-    val completed = io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df", "meta"))
-    assert(completed)
-    assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-new")
-    assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-new")
-    assert(Files.readString(Paths.get(s"$root/meta/m")) == "meta-new")
-    for (gone <- Seq("term_df.old", "term_df.compacting", "meta.compacting",
-        "postings_delta_0", "_swap_inprogress"))
-      assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      // a journal written by the pre-sentinel build: committed (that
+      // build also journalled only after every .compacting was complete)
+      // but with no trailing sentinel, and the crash fell MID-RENAME —
+      // postings already swapped, term_df parked (base absent, .old +
+      // .compacting present), meta untouched. Treating this as "swap
+      // never began" (the r12 behavior ADVICE flagged) would restore
+      // term_df's OLD content beside postings' NEW content — a mixed
+      // index returned as consistent. Rename progress (.old present)
+      // must version-gate the journal to committed and roll it forward.
+      write("postings", "postings-new")
+      write("term_df.old", "term_df-old")
+      write("term_df.compacting", "term_df-new")
+      write("meta", "meta-old")
+      write("meta.compacting", "meta-new")
+      write("postings_delta_0", "delta")
+      Files.writeString(Paths.get(s"$root/_swap_inprogress"),
+        s"rel postings\nrel term_df\nrel meta\nextra $root/postings_delta_0\n")
+      val completed = io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df", "meta"))
+      assert(completed)
+      assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-new")
+      assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-new")
+      assert(Files.readString(Paths.get(s"$root/meta/m")) == "meta-new")
+      for (gone <- Seq("term_df.old", "term_df.compacting", "meta.compacting",
+          "postings_delta_0", "_swap_inprogress"))
+        assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    }
   }
 
   test("recoverSwap finishes a LEGACY journal whose renames all completed (only cleanup left)") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    // legacy crash after the last rename but before journal delete:
-    // every base installed, a stale .old parked, extras pending — the
-    // all-installed gate (every .compacting gone AND every base
-    // present) must classify this as committed and clean up, never
-    // roll the parked .old back over the installed base
-    write("postings", "postings-new")
-    write("postings.old", "postings-old")
-    write("term_df", "term_df-new")
-    write("postings_delta_0", "delta")
-    Files.writeString(Paths.get(s"$root/_swap_inprogress"),
-      s"rel postings\nrel term_df\nextra $root/postings_delta_0\n")
-    assert(io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df")))
-    assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-new")
-    assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-new")
-    for (gone <- Seq("postings.old", "postings_delta_0", "_swap_inprogress"))
-      assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      // legacy crash after the last rename but before journal delete:
+      // every base installed, a stale .old parked, extras pending — the
+      // all-installed gate (every .compacting gone AND every base
+      // present) must classify this as committed and clean up, never
+      // roll the parked .old back over the installed base
+      write("postings", "postings-new")
+      write("postings.old", "postings-old")
+      write("term_df", "term_df-new")
+      write("postings_delta_0", "delta")
+      Files.writeString(Paths.get(s"$root/_swap_inprogress"),
+        s"rel postings\nrel term_df\nextra $root/postings_delta_0\n")
+      assert(io.Sinks.recoverSwap(spark, root, Seq("postings", "term_df")))
+      assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-new")
+      assert(Files.readString(Paths.get(s"$root/term_df/m")) == "term_df-new")
+      for (gone <- Seq("postings.old", "postings_delta_0", "_swap_inprogress"))
+        assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    }
   }
 
   test("recoverSwap discards a torn journal whose only rel line is a truncated (garbage) name") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    // crash mid-line in the NEW build: the single journalled name is a
-    // truncated prefix of a real rel — its base is "absent" only
-    // because no such relation exists. A bare base-absent must not
-    // count as rename progress (rolling forward would require-fail on
-    // the garbage rel); the torn journal is discarded and the caller's
-    // rel set cleaned normally.
-    write("postings", "postings-old")
-    write("postings.compacting", "postings-new")
-    Files.writeString(Paths.get(s"$root/_swap_inprogress"), "rel post")
-    assert(!io.Sinks.recoverSwap(spark, root, Seq("postings")))
-    assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-old")
-    for (gone <- Seq("postings.compacting", "_swap_inprogress"))
-      assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      // crash mid-line in the NEW build: the single journalled name is a
+      // truncated prefix of a real rel — its base is "absent" only
+      // because no such relation exists. A bare base-absent must not
+      // count as rename progress (rolling forward would require-fail on
+      // the garbage rel); the torn journal is discarded and the caller's
+      // rel set cleaned normally.
+      write("postings", "postings-old")
+      write("postings.compacting", "postings-new")
+      Files.writeString(Paths.get(s"$root/_swap_inprogress"), "rel post")
+      assert(!io.Sinks.recoverSwap(spark, root, Seq("postings")))
+      assert(Files.readString(Paths.get(s"$root/postings/m")) == "postings-old")
+      for (gone <- Seq("postings.compacting", "_swap_inprogress"))
+        assert(!Files.exists(Paths.get(s"$root/$gone")), gone)
+    }
   }
 
   test("recoverSwap restores .old to an absent base instead of deleting the only copy") {
     import java.nio.file.{Files, Paths}
-    val (root, write) = swapFixture()
-    // pre-journal-era (or manual) state: base gone, .old holds the only
-    // copy — the no-journal branch must rename it back, not delete it
-    write("rel.old", "the-only-copy")
-    assert(!io.Sinks.recoverSwap(spark, root, Seq("rel")))
-    assert(Files.readString(Paths.get(s"$root/rel/m")) == "the-only-copy")
-    assert(!Files.exists(Paths.get(s"$root/rel.old")))
+    withTempDir("swap_spec") { root =>
+      val write = swapFixture(root)
+      // pre-journal-era (or manual) state: base gone, .old holds the only
+      // copy — the no-journal branch must rename it back, not delete it
+      write("rel.old", "the-only-copy")
+      assert(!io.Sinks.recoverSwap(spark, root, Seq("rel")))
+      assert(Files.readString(Paths.get(s"$root/rel/m")) == "the-only-copy")
+      assert(!Files.exists(Paths.get(s"$root/rel.old")))
+    }
   }
 
   test("purgeTextIndex completes an interrupted swap before recomputing (no stale idf)") {
@@ -591,92 +613,94 @@ class R10OpsSpec extends SparkSpec {
     val docs = io.Tables(spark, sf, "documents")
     val del = docs.where(pmod(col("doc_id"), lit(37)) === 3).select("doc_id")
     // reference index: purge applied cleanly
-    val pRef = Files.createTempDirectory("purge_ref").toString
-    ext.Search.writeTextIndex(docs, "doc_id", "text", pRef)
-    ext.Search.purgeTextIndex(spark, pRef, del, "doc_id")
-    // crashed twin: replay the purge's rewrite phase by hand (the same
-    // per-relation formulas), journal all three relations, then apply
-    // ONLY the postings swap — the exact crash window ADVICE r10
-    // flagged: re-running the purge on this mixed state without
-    // recovery would find an empty deleted sliver and keep the stale
-    // term_df/meta mass forever
-    val pCrash = Files.createTempDirectory("purge_crash").toString
-    ext.Search.writeTextIndex(docs, "doc_id", "text", pCrash)
-    val delIds = del.select(col("doc_id").as("id"))
-    val post = spark.read.parquet(s"$pCrash/postings")
-    val gone = post.join(broadcast(delIds), Seq("id"), "left_semi")
-      .select("id", "term", "dl").cache()
-    post.join(broadcast(delIds), Seq("id"), "left_anti")
-      .write.mode("overwrite").parquet(s"$pCrash/postings.compacting")
-    spark.read.parquet(s"$pCrash/term_df")
-      .join(gone.groupBy("term").agg(count(lit(1)).as("dec")), Seq("term"), "left")
-      .select(col("term"), (col("df") - coalesce(col("dec"), lit(0L))).as("df"))
-      .where(col("df") > 0)
-      .write.mode("overwrite").parquet(s"$pCrash/term_df.compacting")
-    spark.read.parquet(s"$pCrash/meta")
-      .crossJoin(broadcast(gone.select("id", "dl").distinct()
-        .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sd"))))
-      .select((col("n_docs") - col("nd")).as("n_docs"),
-        (col("sum_dl") - col("sd")).as("sum_dl"))
-      .write.mode("overwrite").parquet(s"$pCrash/meta.compacting")
-    gone.unpersist()
-    Files.writeString(Paths.get(s"$pCrash/_swap_inprogress"),
-      "rel postings\nrel term_df\nrel meta\ncommit\n")
-    val fs = new org.apache.hadoop.fs.Path(pCrash)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def P(s: String) = new org.apache.hadoop.fs.Path(s)
-    assert(fs.rename(P(s"$pCrash/postings"), P(s"$pCrash/postings.old")))
-    assert(fs.rename(P(s"$pCrash/postings.compacting"), P(s"$pCrash/postings")))
-    fs.delete(P(s"$pCrash/postings.old"), true)
-    // the natural retry: purgeTextIndex must FIRST finish the journaled
-    // swap (installing the correct term_df/meta), after which its own
-    // rewrite is a no-op compaction — not a recompute from mixed state
-    ext.Search.purgeTextIndex(spark, pCrash, del, "doc_id")
-    for (rel <- Seq("postings", "term_df", "meta")) {
-      val a = spark.read.parquet(s"$pRef/$rel").collect().map(_.toSeq).toSet
-      val b = spark.read.parquet(s"$pCrash/$rel").collect().map(_.toSeq).toSet
-      assert(a == b, rel)
+    withTempDir("purge_ref") { pRef =>
+      ext.Search.writeTextIndex(docs, "doc_id", "text", pRef)
+      ext.Search.purgeTextIndex(spark, pRef, del, "doc_id")
+      // crashed twin: replay the purge's rewrite phase by hand (the same
+      // per-relation formulas), journal all three relations, then apply
+      // ONLY the postings swap — the exact crash window ADVICE r10
+      // flagged: re-running the purge on this mixed state without
+      // recovery would find an empty deleted sliver and keep the stale
+      // term_df/meta mass forever
+      withTempDir("purge_crash") { pCrash =>
+        ext.Search.writeTextIndex(docs, "doc_id", "text", pCrash)
+        val delIds = del.select(col("doc_id").as("id"))
+        val post = spark.read.parquet(s"$pCrash/postings")
+        val gone = post.join(broadcast(delIds), Seq("id"), "left_semi")
+          .select("id", "term", "dl").cache()
+        post.join(broadcast(delIds), Seq("id"), "left_anti")
+          .write.mode("overwrite").parquet(s"$pCrash/postings.compacting")
+        spark.read.parquet(s"$pCrash/term_df")
+          .join(gone.groupBy("term").agg(count(lit(1)).as("dec")), Seq("term"), "left")
+          .select(col("term"), (col("df") - coalesce(col("dec"), lit(0L))).as("df"))
+          .where(col("df") > 0)
+          .write.mode("overwrite").parquet(s"$pCrash/term_df.compacting")
+        spark.read.parquet(s"$pCrash/meta")
+          .crossJoin(broadcast(gone.select("id", "dl").distinct()
+            .agg(count(lit(1)).as("nd"), coalesce(sum(col("dl")), lit(0L)).as("sd"))))
+          .select((col("n_docs") - col("nd")).as("n_docs"),
+            (col("sum_dl") - col("sd")).as("sum_dl"))
+          .write.mode("overwrite").parquet(s"$pCrash/meta.compacting")
+        gone.unpersist()
+        Files.writeString(Paths.get(s"$pCrash/_swap_inprogress"),
+          "rel postings\nrel term_df\nrel meta\ncommit\n")
+        val fs = new org.apache.hadoop.fs.Path(pCrash)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def P(s: String) = new org.apache.hadoop.fs.Path(s)
+        assert(fs.rename(P(s"$pCrash/postings"), P(s"$pCrash/postings.old")))
+        assert(fs.rename(P(s"$pCrash/postings.compacting"), P(s"$pCrash/postings")))
+        fs.delete(P(s"$pCrash/postings.old"), true)
+        // the natural retry: purgeTextIndex must FIRST finish the journaled
+        // swap (installing the correct term_df/meta), after which its own
+        // rewrite is a no-op compaction — not a recompute from mixed state
+        ext.Search.purgeTextIndex(spark, pCrash, del, "doc_id")
+        for (rel <- Seq("postings", "term_df", "meta")) {
+          val a = spark.read.parquet(s"$pRef/$rel").collect().map(_.toSeq).toSet
+          val b = spark.read.parquet(s"$pCrash/$rel").collect().map(_.toSeq).toSet
+          assert(a == b, rel)
+        }
+      }
     }
   }
 
   test("streaming two-batch ANN purge equals one batch purge of the union") {
     val emb = io.Tables(spark, sf, "embeddings")
-    val pS = java.nio.file.Files.createTempDirectory("sann_spec").toString
-    val pB = java.nio.file.Files.createTempDirectory("bann_spec").toString
-    val idx = ext.Similarity.annIndex(emb, "vec_id", "embedding")
-    ext.Similarity.writeAnnIndex(idx, pS)
-    ext.Similarity.writeAnnIndex(idx, pB)
-    val d1 = emb.where(pmod(col("vec_id"), lit(37)) === 3).select("vec_id")
-    val d2 = emb.where(pmod(col("vec_id"), lit(37)) === 5).select("vec_id")
-    streaming.StreamOps.annPurgeApply(
-      streaming.StreamOps.stagedStream(Seq(d1, d2)), pS, "vec_id")
-    ext.Similarity.purgeAnnIndex(spark, pB, d1.unionByName(d2), "vec_id")
-    for (rel <- Seq("lists", "codes")) {
-      val s = spark.read.parquet(s"$pS/$rel").collect().map(_.toSeq).toSet
-      val b = spark.read.parquet(s"$pB/$rel").collect().map(_.toSeq).toSet
-      assert(s == b, rel)
-    }
+    withTempDir("sann_spec") { pS => withTempDir("bann_spec") { pB =>
+      val idx = ext.Similarity.annIndex(emb, "vec_id", "embedding")
+      ext.Similarity.writeAnnIndex(idx, pS)
+      ext.Similarity.writeAnnIndex(idx, pB)
+      val d1 = emb.where(pmod(col("vec_id"), lit(37)) === 3).select("vec_id")
+      val d2 = emb.where(pmod(col("vec_id"), lit(37)) === 5).select("vec_id")
+      streaming.StreamOps.annPurgeApply(
+        streaming.StreamOps.stagedStream(Seq(d1, d2)), pS, "vec_id")
+      ext.Similarity.purgeAnnIndex(spark, pB, d1.unionByName(d2), "vec_id")
+      for (rel <- Seq("lists", "codes")) {
+        val s = spark.read.parquet(s"$pS/$rel").collect().map(_.toSeq).toSet
+        val b = spark.read.parquet(s"$pB/$rel").collect().map(_.toSeq).toSet
+        assert(s == b, rel)
+      }
+    }}
   }
 
   test("streaming two-batch index purge equals one batch purge of the union") {
     val docs = io.Tables(spark, sf, "documents")
-    val pS = java.nio.file.Files.createTempDirectory("sidx_spec").toString
-    val pB = java.nio.file.Files.createTempDirectory("bidx_spec").toString
-    ext.Search.writeTextIndex(docs, "doc_id", "text", pS)
-    ext.Search.writeTextIndex(docs, "doc_id", "text", pB)
-    val d1 = docs.where(pmod(col("doc_id"), lit(37)) === 3).select("doc_id")
-    val d2 = docs.where(pmod(col("doc_id"), lit(37)) === 5).select("doc_id")
-    streaming.StreamOps.indexPurgeApply(
-      streaming.StreamOps.stagedStream(Seq(d1, d2)), pS, "doc_id")
-    ext.Search.purgeTextIndex(spark, pB, d1.unionByName(d2), "doc_id")
-    def rel(p: String, r: String) = spark.read.parquet(s"$p/$r")
-    for ((r, cols) <- Seq(
-        "postings" -> Seq("term", "id", "dl", "tf"),
-        "term_df" -> Seq("term", "df"),
-        "meta" -> Seq("n_docs", "sum_dl"))) {
-      val s = rel(pS, r).select(cols.map(col): _*).collect().map(_.toSeq).toSet
-      val b = rel(pB, r).select(cols.map(col): _*).collect().map(_.toSeq).toSet
-      assert(s == b, r)
-    }
+    withTempDir("sidx_spec") { pS => withTempDir("bidx_spec") { pB =>
+      ext.Search.writeTextIndex(docs, "doc_id", "text", pS)
+      ext.Search.writeTextIndex(docs, "doc_id", "text", pB)
+      val d1 = docs.where(pmod(col("doc_id"), lit(37)) === 3).select("doc_id")
+      val d2 = docs.where(pmod(col("doc_id"), lit(37)) === 5).select("doc_id")
+      streaming.StreamOps.indexPurgeApply(
+        streaming.StreamOps.stagedStream(Seq(d1, d2)), pS, "doc_id")
+      ext.Search.purgeTextIndex(spark, pB, d1.unionByName(d2), "doc_id")
+      def rel(p: String, r: String) = spark.read.parquet(s"$p/$r")
+      for ((r, cols) <- Seq(
+          "postings" -> Seq("term", "id", "dl", "tf"),
+          "term_df" -> Seq("term", "df"),
+          "meta" -> Seq("n_docs", "sum_dl"))) {
+        val s = rel(pS, r).select(cols.map(col): _*).collect().map(_.toSeq).toSet
+        val b = rel(pB, r).select(cols.map(col): _*).collect().map(_.toSeq).toSet
+        assert(s == b, r)
+      }
+    }}
   }
 }

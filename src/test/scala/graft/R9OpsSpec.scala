@@ -90,45 +90,47 @@ class R9OpsSpec extends SparkSpec {
     val emb = io.Tables(spark, sf, "embeddings")
     val base = emb.where(pmod(col("vec_id"), lit(5)) =!= 0)
     val batch = emb.where(pmod(col("vec_id"), lit(5)) === 0)
-    val dir = java.nio.file.Files.createTempDirectory("annu_spec").toString
-    val scope = new graft.util.CacheScope
-    Similarity.writeAnnIndex(
-      Similarity.annIndex(base, "vec_id", "embedding", scope = scope), dir)
-    scope.close()
-    // fingerprint the persisted lists/codes BEFORE the update: the
-    // append must add part files, never rewrite or reopen existing ones
-    def files(rel: String): Map[String, (Long, Long)] = {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$rel")).toSeq
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .map(s => s.getPath.toString -> (s.getLen, s.getModificationTime)).toMap
+    withTempDir("annu_spec") { dir =>
+      val scope = new graft.util.CacheScope
+      Similarity.writeAnnIndex(
+        Similarity.annIndex(base, "vec_id", "embedding", scope = scope), dir)
+      scope.close()
+      // fingerprint the persisted lists/codes BEFORE the update: the
+      // append must add part files, never rewrite or reopen existing ones
+      def files(rel: String): Map[String, (Long, Long)] = {
+        val fs = new org.apache.hadoop.fs.Path(dir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$rel")).toSeq
+          .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
+          .map(s => s.getPath.toString -> (s.getLen, s.getModificationTime)).toMap
+      }
+      val before = Seq("coarse", "lists", "book", "codes").map(r => r -> files(r)).toMap
+      Similarity.updateAnnIndex(spark, dir, batch, "vec_id", "embedding")
+      for (rel <- Seq("coarse", "book"))
+        assert(files(rel) == before(rel), s"$rel changed — quantizers must stay pinned")
+      for (rel <- Seq("lists", "codes")) {
+        val after = files(rel)
+        assert(before(rel).forall { case (p, sig) => after.get(p).contains(sig) },
+          s"$rel rewrote existing part files — update must be append-only")
+        assert(after.size > before(rel).size, s"$rel gained no part files")
+      }
+      // reference: the SAME pinned quantizers encoding the FULL corpus in
+      // one append (copy coarse+book to a fresh dir, update once with
+      // everything) — the updated index must serve bit-identically
+      withTempDir("annu_ref") { ref =>
+        spark.read.parquet(s"$dir/coarse").write.parquet(s"$ref/coarse")
+        spark.read.parquet(s"$dir/book").write.parquet(s"$ref/book")
+        Similarity.updateAnnIndex(spark, ref, emb, "vec_id", "embedding")
+        def serve(d: String) =
+          Similarity.probeIndex(Similarity.readAnnIndex(spark, d), emb,
+              "vec_id", "embedding",
+              probeFilter = col("vec_id") < 10, k = 5)
+            .select("probe_id", "vec_id", "qdot", "rn")
+            .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+        assert(serve(dir) == serve(ref))
+        spark.catalog.clearCache()
+      }
     }
-    val before = Seq("coarse", "lists", "book", "codes").map(r => r -> files(r)).toMap
-    Similarity.updateAnnIndex(spark, dir, batch, "vec_id", "embedding")
-    for (rel <- Seq("coarse", "book"))
-      assert(files(rel) == before(rel), s"$rel changed — quantizers must stay pinned")
-    for (rel <- Seq("lists", "codes")) {
-      val after = files(rel)
-      assert(before(rel).forall { case (p, sig) => after.get(p).contains(sig) },
-        s"$rel rewrote existing part files — update must be append-only")
-      assert(after.size > before(rel).size, s"$rel gained no part files")
-    }
-    // reference: the SAME pinned quantizers encoding the FULL corpus in
-    // one append (copy coarse+book to a fresh dir, update once with
-    // everything) — the updated index must serve bit-identically
-    val ref = java.nio.file.Files.createTempDirectory("annu_ref").toString
-    spark.read.parquet(s"$dir/coarse").write.parquet(s"$ref/coarse")
-    spark.read.parquet(s"$dir/book").write.parquet(s"$ref/book")
-    Similarity.updateAnnIndex(spark, ref, emb, "vec_id", "embedding")
-    def serve(d: String) =
-      Similarity.probeIndex(Similarity.readAnnIndex(spark, d), emb,
-          "vec_id", "embedding",
-          probeFilter = col("vec_id") < 10, k = 5)
-        .select("probe_id", "vec_id", "qdot", "rn")
-        .as[(Long, Long, Long, Long)].collect().sorted.toSeq
-    assert(serve(dir) == serve(ref))
-    spark.catalog.clearCache()
   }
 
   test("saltedJoin: content-derived salt spreads a single-partition hot key; result is still the plain join") {

@@ -97,41 +97,43 @@ class R9bOpsSpec extends SparkSpec {
   }
 
   test("versioned snapshots: commits are append-only, time travel resolves last-writer-wins incl. tombstone revival") {
-    val dir = java.nio.file.Files.createTempDirectory("ttspec").toString + "/tbl"
-    val v0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s")
-    io.Sinks.writeVersion(v0, dir, 0)
-    assert(io.Sinks.nextVersion(spark, dir) == 1L)
-    def files(): Map[String, (Long, Long)] = {
-      val root = new org.apache.hadoop.fs.Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(root).filter(_.isDirectory).flatMap(d => fs.listStatus(d.getPath))
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .map(s => s.getPath.toString -> (s.getLen, s.getModificationTime)).toMap
+    withTempDir("ttspec") { tmp =>
+      val dir = tmp + "/tbl"
+      val v0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s")
+      io.Sinks.writeVersion(v0, dir, 0)
+      assert(io.Sinks.nextVersion(spark, dir) == 1L)
+      def files(): Map[String, (Long, Long)] = {
+        val root = new org.apache.hadoop.fs.Path(dir)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        fs.listStatus(root).filter(_.isDirectory).flatMap(d => fs.listStatus(d.getPath))
+          .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
+          .map(s => s.getPath.toString -> (s.getLen, s.getModificationTime)).toMap
+      }
+      val before = files()
+      // v1: update k=1, tombstone k=2, insert k=4
+      io.Sinks.writeVersion(
+        Seq((1L, "a2", false), (2L, "b", true), (4L, "d", false))
+          .toDF("k", "s", "__deleted"),
+        dir, io.Sinks.nextVersion(spark, dir))
+      // v2: revive k=2 over its tombstone, tombstone k=4
+      io.Sinks.writeVersion(
+        Seq((2L, "b3", false), (4L, "d", true)).toDF("k", "s", "__deleted"),
+        dir, io.Sinks.nextVersion(spark, dir))
+      val after = files()
+      assert(before.forall { case (p, sig) => after.get(p).contains(sig) },
+        "a commit rewrote an earlier version's files — commits must be append-only")
+      def read(asOf: Long) = io.Sinks.readSnapshotAt(spark, dir, asOf, "k")
+        .as[(Long, String)].collect().sorted.toSeq
+      assert(read(0) == Seq((1L, "a"), (2L, "b"), (3L, "c")))
+      assert(read(1) == Seq((1L, "a2"), (3L, "c"), (4L, "d")))
+      assert(read(2) == Seq((1L, "a2"), (2L, "b3"), (3L, "c")),
+        "v2 must revive k=2 over the v1 tombstone and delete k=4")
+      // a version-pruned read never lists newer commit directories: the
+      // partition filter must remove __v=2 from the v1 scan
+      val scan = io.Sinks.readSnapshotAt(spark, dir, 1, "k")
+        .queryExecution.executedPlan.toString
+      assert(!scan.contains("__v=2"), s"asOf=1 read still scans __v=2:\n$scan")
     }
-    val before = files()
-    // v1: update k=1, tombstone k=2, insert k=4
-    io.Sinks.writeVersion(
-      Seq((1L, "a2", false), (2L, "b", true), (4L, "d", false))
-        .toDF("k", "s", "__deleted"),
-      dir, io.Sinks.nextVersion(spark, dir))
-    // v2: revive k=2 over its tombstone, tombstone k=4
-    io.Sinks.writeVersion(
-      Seq((2L, "b3", false), (4L, "d", true)).toDF("k", "s", "__deleted"),
-      dir, io.Sinks.nextVersion(spark, dir))
-    val after = files()
-    assert(before.forall { case (p, sig) => after.get(p).contains(sig) },
-      "a commit rewrote an earlier version's files — commits must be append-only")
-    def read(asOf: Long) = io.Sinks.readSnapshotAt(spark, dir, asOf, "k")
-      .as[(Long, String)].collect().sorted.toSeq
-    assert(read(0) == Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    assert(read(1) == Seq((1L, "a2"), (3L, "c"), (4L, "d")))
-    assert(read(2) == Seq((1L, "a2"), (2L, "b3"), (3L, "c")),
-      "v2 must revive k=2 over the v1 tombstone and delete k=4")
-    // a version-pruned read never lists newer commit directories: the
-    // partition filter must remove __v=2 from the v1 scan
-    val scan = io.Sinks.readSnapshotAt(spark, dir, 1, "k")
-      .queryExecution.executedPlan.toString
-    assert(!scan.contains("__v=2"), s"asOf=1 read still scans __v=2:\n$scan")
   }
 
   test("triangleCounts matches hand counts on a known graph and a local recompute on the fixture") {
@@ -350,40 +352,43 @@ class R9bOpsSpec extends SparkSpec {
   }
 
   test("writeAudited: violation blocks publish and preserves staging; clean batch publishes atomically") {
-    val base = java.nio.file.Files.createTempDirectory("wapt").toString
-    val bad = Seq((1L, "x"), (1L, "y")).toDF("id", "s") // duplicate id
-    val dst = base + "/tbl"
-    val ex = intercept[IllegalStateException] {
-      io.Sinks.writeAudited(bad, dst, rowRules = Seq("s_not_null" -> col("s").isNull),
+    withTempDir("wapt") { base =>
+      val bad = Seq((1L, "x"), (1L, "y")).toDF("id", "s") // duplicate id
+      val dst = base + "/tbl"
+      val ex = intercept[IllegalStateException] {
+        io.Sinks.writeAudited(bad, dst, rowRules = Seq("s_not_null" -> col("s").isNull),
+          uniqueKeys = Seq("id_unique" -> Seq("id")))
+      }
+      assert(ex.getMessage.contains("id_unique=1"))
+      // published path untouched, staging left for inspection
+      assert(!new java.io.File(dst).exists())
+      assert(new java.io.File(dst + ".staging").exists())
+      // clean batch publishes; staging is consumed by the rename
+      val good = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
+      val report = io.Sinks.writeAudited(good, dst,
+        rowRules = Seq("s_not_null" -> col("s").isNull),
         uniqueKeys = Seq("id_unique" -> Seq("id")))
+      assert(report.toMap == Map("s_not_null" -> 0L, "id_unique" -> 0L))
+      assert(spark.read.parquet(dst).count() == 2)
+      assert(!new java.io.File(dst + ".staging").exists())
     }
-    assert(ex.getMessage.contains("id_unique=1"))
-    // published path untouched, staging left for inspection
-    assert(!new java.io.File(dst).exists())
-    assert(new java.io.File(dst + ".staging").exists())
-    // clean batch publishes; staging is consumed by the rename
-    val good = Seq((1L, "x"), (2L, "y")).toDF("id", "s")
-    val report = io.Sinks.writeAudited(good, dst,
-      rowRules = Seq("s_not_null" -> col("s").isNull),
-      uniqueKeys = Seq("id_unique" -> Seq("id")))
-    assert(report.toMap == Map("s_not_null" -> 0L, "id_unique" -> 0L))
-    assert(spark.read.parquet(dst).count() == 2)
-    assert(!new java.io.File(dst + ".staging").exists())
   }
 
   test("scd2History: tombstone closes the interval, revival reopens, current rows have null eff_to") {
-    val dir = java.nio.file.Files.createTempDirectory("scd2t").toString + "/tbl"
-    io.Sinks.writeVersion(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir, 0)
-    io.Sinks.writeVersion(
-      Seq((1L, "a2", false), (2L, "b", true)).toDF("k", "s", "__deleted"), dir, 1)
-    io.Sinks.writeVersion(
-      Seq((2L, "b2", false)).toDF("k", "s", "__deleted"), dir, 2)
-    val got = io.Sinks.scd2History(spark, dir, "k")
-      .select(col("k"), col("s"), col("eff_from"), col("eff_to"))
-      .as[(Long, String, Long, Option[Long])].collect().toSet
-    assert(got == Set(
-      (1L, "a", 0L, Some(1L)), (1L, "a2", 1L, None),
-      (2L, "b", 0L, Some(1L)), (2L, "b2", 2L, None)))
+    withTempDir("scd2t") { tmp =>
+      val dir = tmp + "/tbl"
+      io.Sinks.writeVersion(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir, 0)
+      io.Sinks.writeVersion(
+        Seq((1L, "a2", false), (2L, "b", true)).toDF("k", "s", "__deleted"), dir, 1)
+      io.Sinks.writeVersion(
+        Seq((2L, "b2", false)).toDF("k", "s", "__deleted"), dir, 2)
+      val got = io.Sinks.scd2History(spark, dir, "k")
+        .select(col("k"), col("s"), col("eff_from"), col("eff_to"))
+        .as[(Long, String, Long, Option[Long])].collect().toSet
+      assert(got == Set(
+        (1L, "a", 0L, Some(1L)), (1L, "a2", 1L, None),
+        (2L, "b", 0L, Some(1L)), (2L, "b2", 2L, None)))
+    }
   }
 
   test("estimateEquiJoin: exact branch by hand, null keys excluded, empty side estimates 0") {
@@ -625,31 +630,33 @@ class R9bOpsSpec extends SparkSpec {
 
   test("writeShards: md5 shard law pinned to a JVM recompute, manifest round trip, single-shard read") {
     val df = (0L until 64L).map(i => (i, "x" * (i % 7 + 1).toInt)).toDF("id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString + "/out"
-    io.Sinks.writeShards(df, dir, "id", 4, length(col("text")).cast("long"))
-    val back = spark.read.parquet(dir + "/data")
-      .select(col("id"), col("__shard").cast("long"))
-      .as[(Long, Long)].collect()
-    assert(back.length == 64)
-    // the shard law is engine-independent: recompute it with raw JVM
-    // MessageDigest (no Spark, no DuckDB) and demand equality per row
-    def law(id: Long): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.substring(0, 15)
-      java.lang.Long.parseLong(hex, 16) % 4
-    }
-    back.foreach { case (id, sh) => assert(sh == law(id), s"id $id") }
-    // manifest read back from disk equals a local recount
-    val expected = (0L until 64L).groupBy(law).map { case (sh, ids) =>
-      (sh, ids.size.toLong, ids.map(i => i % 7 + 1).sum)
-    }.toSet
-    assert(io.Sinks.readShardManifest(spark, dir)
-      .as[(Long, Long, Long)].collect().toSet == expected)
-    // a single-shard read returns exactly that shard's rows
-    assert(io.Sinks.readShard(spark, dir, 2L).count() == back.count(_._2 == 2L))
-    intercept[IllegalArgumentException] {
-      io.Sinks.writeShards(df, dir + "2", "id", 0, length(col("text")))
+    withTempDir("shards") { tmp =>
+      val dir = tmp + "/out"
+      io.Sinks.writeShards(df, dir, "id", 4, length(col("text")).cast("long"))
+      val back = spark.read.parquet(dir + "/data")
+        .select(col("id"), col("__shard").cast("long"))
+        .as[(Long, Long)].collect()
+      assert(back.length == 64)
+      // the shard law is engine-independent: recompute it with raw JVM
+      // MessageDigest (no Spark, no DuckDB) and demand equality per row
+      def law(id: Long): Long = {
+        val hex = java.security.MessageDigest.getInstance("MD5")
+          .digest(id.toString.getBytes("UTF-8"))
+          .map("%02x".format(_)).mkString.substring(0, 15)
+        java.lang.Long.parseLong(hex, 16) % 4
+      }
+      back.foreach { case (id, sh) => assert(sh == law(id), s"id $id") }
+      // manifest read back from disk equals a local recount
+      val expected = (0L until 64L).groupBy(law).map { case (sh, ids) =>
+        (sh, ids.size.toLong, ids.map(i => i % 7 + 1).sum)
+      }.toSet
+      assert(io.Sinks.readShardManifest(spark, dir)
+        .as[(Long, Long, Long)].collect().toSet == expected)
+      // a single-shard read returns exactly that shard's rows
+      assert(io.Sinks.readShard(spark, dir, 2L).count() == back.count(_._2 == 2L))
+      intercept[IllegalArgumentException] {
+        io.Sinks.writeShards(df, dir + "2", "id", 0, length(col("text")))
+      }
     }
   }
 
@@ -673,76 +680,80 @@ class R9bOpsSpec extends SparkSpec {
     assert(graft.ops.Constraints.requireCompatible(base, ok)
       .map(d => (d._1, d._2)) == Seq(("q", "added"), ("s", "dropped"), ("v", "dropped")))
 
-    val dir = java.nio.file.Files.createTempDirectory("sevol").toString + "/tbl"
-    io.Sinks.appendEvolved(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir)
-    val before = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getName -> f.lastModified()).toMap
-    io.Sinks.appendEvolved(Seq((3L, 0.5), (4L, 0.7)).toDF("id", "q"), dir)
-    val after = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".parquet"))
-      .map(f => f.getName -> f.lastModified()).toMap
-    // era-1 files byte-untouched (same names, same mtimes), era 2 appended
-    assert(before.forall { case (n, m) => after.get(n).contains(m) })
-    assert(after.size > before.size)
-    val merged = io.Sinks.readEvolved(spark, dir)
-    assert(merged.columns.sorted.toSeq == Seq("id", "q", "s"))
-    // hand-check the null-fill: era-1 rows have no q, era-2 rows no s
-    assert(merged.where(col("id") <= 2 && col("q").isNull && col("s").isNotNull).count() == 2)
-    assert(merged.where(col("id") >= 3 && col("s").isNull && col("q").isNotNull).count() == 2)
-    assert(merged.count() == 4)
+    withTempDir("sevol") { tmp =>
+      val dir = tmp + "/tbl"
+      io.Sinks.appendEvolved(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), dir)
+      val before = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.lastModified()).toMap
+      io.Sinks.appendEvolved(Seq((3L, 0.5), (4L, 0.7)).toDF("id", "q"), dir)
+      val after = new java.io.File(dir).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+        .map(f => f.getName -> f.lastModified()).toMap
+      // era-1 files byte-untouched (same names, same mtimes), era 2 appended
+      assert(before.forall { case (n, m) => after.get(n).contains(m) })
+      assert(after.size > before.size)
+      val merged = io.Sinks.readEvolved(spark, dir)
+      assert(merged.columns.sorted.toSeq == Seq("id", "q", "s"))
+      // hand-check the null-fill: era-1 rows have no q, era-2 rows no s
+      assert(merged.where(col("id") <= 2 && col("q").isNull && col("s").isNotNull).count() == 2)
+      assert(merged.where(col("id") >= 3 && col("s").isNull && col("q").isNotNull).count() == 2)
+      assert(merged.count() == 4)
+    }
   }
 
   test("compactVersions folds the log without changing reads at or after the horizon") {
-    val dir = java.nio.file.Files.createTempDirectory("ttcomp").toString + "/tbl"
-    io.Sinks.writeVersion(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir, 0)
-    io.Sinks.writeVersion(
-      Seq((1L, "a2", false), (3L, "c", false)).toDF("k", "s", "__deleted"), dir, 1)
-    io.Sinks.writeVersion(
-      Seq((2L, "x", true)).toDF("k", "s", "__deleted"), dir, 2)
-    // three more single-row commits fattening the chain — the 100 TB
-    // shape this maintenance exists for: many small CDC commits
-    // accumulating per retention window
-    (3 to 5).foreach { v =>
+    withTempDir("ttcomp") { tmp =>
+      val dir = tmp + "/tbl"
+      io.Sinks.writeVersion(Seq((1L, "a"), (2L, "b")).toDF("k", "s"), dir, 0)
       io.Sinks.writeVersion(
-        Seq((1L, s"a$v", false)).toDF("k", "s", "__deleted").coalesce(1), dir, v)
+        Seq((1L, "a2", false), (3L, "c", false)).toDF("k", "s", "__deleted"), dir, 1)
+      io.Sinks.writeVersion(
+        Seq((2L, "x", true)).toDF("k", "s", "__deleted"), dir, 2)
+      // three more single-row commits fattening the chain — the 100 TB
+      // shape this maintenance exists for: many small CDC commits
+      // accumulating per retention window
+      (3 to 5).foreach { v =>
+        io.Sinks.writeVersion(
+          Seq((1L, s"a$v", false)).toDF("k", "s", "__deleted").coalesce(1), dir, v)
+      }
+      val at5 = io.Sinks.readSnapshotAt(spark, dir, 5, "k")
+        .as[(Long, String)].collect().sorted.toSeq
+      val at4 = io.Sinks.readSnapshotAt(spark, dir, 4, "k")
+        .as[(Long, String)].collect().sorted.toSeq
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def countFiles() = {
+        val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+        var n = 0
+        while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
+        n
+      }
+      val filesBefore = countFiles()
+      io.Sinks.compactVersions(spark, dir, upTo = 4, keyCol = "k")
+      // history >= horizon unchanged; directories below it are gone
+      assert(io.Sinks.readSnapshotAt(spark, dir, 5, "k")
+        .as[(Long, String)].collect().sorted.toSeq == at5)
+      assert(io.Sinks.readSnapshotAt(spark, dir, 4, "k")
+        .as[(Long, String)].collect().sorted.toSeq == at4)
+      assert(at4 == Seq((1L, "a4"), (3L, "c")))
+      val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
+        .map(_.getPath.getName).filter(_.startsWith("__v=")).sorted.toSeq
+      assert(dirs == Seq("__v=4", "__v=5"), s"expected compacted {4,5}, got $dirs")
+      // the vacuum's reason to exist: the read path opens fewer files
+      val filesAfter = countFiles()
+      assert(filesAfter < filesBefore,
+        s"expected file count to drop, $filesBefore -> $filesAfter")
+      // reads below the retention horizon fail LOUD, never resolve empty
+      val e = intercept[IllegalArgumentException] {
+        io.Sinks.readSnapshotAt(spark, dir, 3, "k")
+      }
+      assert(e.getMessage.contains("retired"))
+      val e2 = intercept[IllegalArgumentException] {
+        io.Sinks.snapshotDiff(spark, dir, 3, 5, "k")
+      }
+      assert(e2.getMessage.contains("retired"))
     }
-    val at5 = io.Sinks.readSnapshotAt(spark, dir, 5, "k")
-      .as[(Long, String)].collect().sorted.toSeq
-    val at4 = io.Sinks.readSnapshotAt(spark, dir, 4, "k")
-      .as[(Long, String)].collect().sorted.toSeq
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def countFiles() = {
-      val it = fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
-      var n = 0
-      while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-      n
-    }
-    val filesBefore = countFiles()
-    io.Sinks.compactVersions(spark, dir, upTo = 4, keyCol = "k")
-    // history >= horizon unchanged; directories below it are gone
-    assert(io.Sinks.readSnapshotAt(spark, dir, 5, "k")
-      .as[(Long, String)].collect().sorted.toSeq == at5)
-    assert(io.Sinks.readSnapshotAt(spark, dir, 4, "k")
-      .as[(Long, String)].collect().sorted.toSeq == at4)
-    assert(at4 == Seq((1L, "a4"), (3L, "c")))
-    val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath.getName).filter(_.startsWith("__v=")).sorted.toSeq
-    assert(dirs == Seq("__v=4", "__v=5"), s"expected compacted {4,5}, got $dirs")
-    // the vacuum's reason to exist: the read path opens fewer files
-    val filesAfter = countFiles()
-    assert(filesAfter < filesBefore,
-      s"expected file count to drop, $filesBefore -> $filesAfter")
-    // reads below the retention horizon fail LOUD, never resolve empty
-    val e = intercept[IllegalArgumentException] {
-      io.Sinks.readSnapshotAt(spark, dir, 3, "k")
-    }
-    assert(e.getMessage.contains("retired"))
-    val e2 = intercept[IllegalArgumentException] {
-      io.Sinks.snapshotDiff(spark, dir, 3, 5, "k")
-    }
-    assert(e2.getMessage.contains("retired"))
   }
 
   test("dedupSpansKeepFirst keeps exactly the corpus-first copy of a shared span") {
@@ -973,27 +984,29 @@ class R9bOpsSpec extends SparkSpec {
       .withColumn("__deleted", lit(false))
     val del = docs.where(pmod(col("doc_id"), lit(3)) === 1)
       .withColumn("__deleted", lit(true))
-    def apply(parts: Seq[org.apache.spark.sql.DataFrame]): (String, Map[Long, String]) = {
-      val path = java.nio.file.Files.createTempDirectory("cdcspec").toString + "/t"
-      io.Sinks.writeVersion(docs, path, 0)
-      streaming.StreamOps.cdcApply(streaming.StreamOps.stagedStream(parts), path)
-      (path,
-        io.Sinks.readSnapshotAt(spark, path, Long.MaxValue, "doc_id")
-          .select("doc_id", "text").as[(Long, String)].collect().toMap)
-    }
     def versions(path: String): Set[Long] =
       new java.io.File(path).listFiles().map(_.getName)
         .filter(_.startsWith("__v=")).map(_.stripPrefix("__v=").toLong).toSet
-    val (p1, m1) = apply(Seq(upd, del))
-    assert(versions(p1) == Set(0L, 1L, 2L),
-      s"one staged file must become exactly one commit: ${versions(p1)}")
+    // (committed versions, resolved table)
+    def apply(parts: Seq[org.apache.spark.sql.DataFrame]): (Set[Long], Map[Long, String]) =
+      withTempDir("cdcspec") { tmp =>
+        val path = tmp + "/t"
+        io.Sinks.writeVersion(docs, path, 0)
+        streaming.StreamOps.cdcApply(streaming.StreamOps.stagedStream(parts), path)
+        (versions(path),
+          io.Sinks.readSnapshotAt(spark, path, Long.MaxValue, "doc_id")
+            .select("doc_id", "text").as[(Long, String)].collect().toMap)
+      }
+    val (v1, m1) = apply(Seq(upd, del))
+    assert(v1 == Set(0L, 1L, 2L),
+      s"one staged file must become exactly one commit: $v1")
     // finer slicing with per-key order preserved (the split halves of
     // upd touch disjoint keys) must resolve to the same final state
-    val (p2, m2) = apply(Seq(
+    val (v2, m2) = apply(Seq(
       upd.where(pmod(col("doc_id"), lit(2)) === 0),
       upd.where(pmod(col("doc_id"), lit(2)) === 1),
       del))
-    assert(versions(p2) == Set(0L, 1L, 2L, 3L))
+    assert(v2 == Set(0L, 1L, 2L, 3L))
     assert(m1 == m2, "micro-batch slicing changed the resolved table")
     // semantics: %3==1 deleted, %3==0 updated, rest untouched
     val base = docs.select("doc_id", "text").as[(Long, String)].collect().toMap
@@ -1204,49 +1217,51 @@ class R9bOpsSpec extends SparkSpec {
   }
 
   test("snapshotDiff: insert/update/delete classified; identical rewrites and round-trip revivals are silent") {
-    val dir = java.nio.file.Files.createTempDirectory("cft").toString + "/tbl"
-    val v0 = Seq((1L, "a"), (2L, "b"), (4L, "d"), (5L, "e"))
-      .toDF("k", "payload")
-    io.Sinks.writeVersion(v0, dir, 0)
-    val v1 = Seq((1L, "a2", false), (2L, "b", true), (3L, "c", false),
-      (4L, "d", false), // identical rewrite: touched, but no state change
-      (5L, "e", true))
-      .toDF("k", "payload", "__deleted")
-    io.Sinks.writeVersion(v1, dir, 1)
-    val v2 = Seq((5L, "e", false)) // revival with the ORIGINAL payload
-      .toDF("k", "payload", "__deleted")
-    io.Sinks.writeVersion(v2, dir, 2)
+    withTempDir("cft") { tmp =>
+      val dir = tmp + "/tbl"
+      val v0 = Seq((1L, "a"), (2L, "b"), (4L, "d"), (5L, "e"))
+        .toDF("k", "payload")
+      io.Sinks.writeVersion(v0, dir, 0)
+      val v1 = Seq((1L, "a2", false), (2L, "b", true), (3L, "c", false),
+        (4L, "d", false), // identical rewrite: touched, but no state change
+        (5L, "e", true))
+        .toDF("k", "payload", "__deleted")
+      io.Sinks.writeVersion(v1, dir, 1)
+      val v2 = Seq((5L, "e", false)) // revival with the ORIGINAL payload
+        .toDF("k", "payload", "__deleted")
+      io.Sinks.writeVersion(v2, dir, 2)
 
-    def diff(f: Long, t: Long): Map[Long, (String, Option[String], Option[String])] =
-      io.Sinks.snapshotDiff(spark, dir, f, t, "k")
-        .select("k", "change", "old_payload", "new_payload")
-        .as[(Long, String, Option[String], Option[String])]
-        .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+      def diff(f: Long, t: Long): Map[Long, (String, Option[String], Option[String])] =
+        io.Sinks.snapshotDiff(spark, dir, f, t, "k")
+          .select("k", "change", "old_payload", "new_payload")
+          .as[(Long, String, Option[String], Option[String])]
+          .collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
 
-    assert(diff(0, 1) == Map(
-      1L -> (("update", Some("a"), Some("a2"))),
-      2L -> (("delete", Some("b"), None)),
-      3L -> (("insert", None, Some("c"))),
-      5L -> (("delete", Some("e"), None))),
-      s"v0→v1 feed wrong: ${diff(0, 1)}")
-    assert(diff(1, 2) == Map(5L -> (("insert", None, Some("e")))),
-      s"v1→v2 feed wrong: ${diff(1, 2)}")
-    // endpoint semantics: 5 was deleted at v1 and revived at v2 with
-    // its original payload — over (0,2] the state round-tripped home,
-    // so the feed must be silent on it despite two commits of traffic
-    assert(diff(0, 2) == Map(
-      1L -> (("update", Some("a"), Some("a2"))),
-      2L -> (("delete", Some("b"), None)),
-      3L -> (("insert", None, Some("c")))),
-      s"v0→v2 endpoint law broken: ${diff(0, 2)}")
-    // structural guarantee: the touched-key prune plans as a LeftSemi
-    // join, so untouched base rows never reach the resolution windows
-    // (under AQE the executed plan exists only after an action)
-    val d = io.Sinks.snapshotDiff(spark, dir, 0, 1, "k")
-    d.collect()
-    val plan = d.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"),
-      s"touched-key semi-join prune missing from plan:\n$plan")
+      assert(diff(0, 1) == Map(
+        1L -> (("update", Some("a"), Some("a2"))),
+        2L -> (("delete", Some("b"), None)),
+        3L -> (("insert", None, Some("c"))),
+        5L -> (("delete", Some("e"), None))),
+        s"v0→v1 feed wrong: ${diff(0, 1)}")
+      assert(diff(1, 2) == Map(5L -> (("insert", None, Some("e")))),
+        s"v1→v2 feed wrong: ${diff(1, 2)}")
+      // endpoint semantics: 5 was deleted at v1 and revived at v2 with
+      // its original payload — over (0,2] the state round-tripped home,
+      // so the feed must be silent on it despite two commits of traffic
+      assert(diff(0, 2) == Map(
+        1L -> (("update", Some("a"), Some("a2"))),
+        2L -> (("delete", Some("b"), None)),
+        3L -> (("insert", None, Some("c")))),
+        s"v0→v2 endpoint law broken: ${diff(0, 2)}")
+      // structural guarantee: the touched-key prune plans as a LeftSemi
+      // join, so untouched base rows never reach the resolution windows
+      // (under AQE the executed plan exists only after an action)
+      val d = io.Sinks.snapshotDiff(spark, dir, 0, 1, "k")
+      d.collect()
+      val plan = d.queryExecution.executedPlan.toString
+      assert(plan.contains("LeftSemi"),
+        s"touched-key semi-join prune missing from plan:\n$plan")
+    }
   }
 
   test("sessionTransitions: hand-computed walk counts; interior state flow balances") {

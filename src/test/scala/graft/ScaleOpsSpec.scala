@@ -48,22 +48,23 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = Files.createTempDirectory("warehouse").toString
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast path
-    val li = io.Tables(s2, sf, "lineitem")
-    val o = io.Tables(s2, sf, "orders")
-    li.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .option("path", s"$wh/li_b").saveAsTable("li_b")
-    o.write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .option("path", s"$wh/o_b").saveAsTable("o_b")
-    val joined = s2.table("li_b")
-      .join(s2.table("o_b"), col("l_orderkey") === col("o_orderkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join must not shuffle:\n$plan")
-    assert(joined.count() > 0)
-    s2.sql("DROP TABLE IF EXISTS li_b")
-    s2.sql("DROP TABLE IF EXISTS o_b")
+    withTempDir("warehouse") { wh =>
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast path
+      val li = io.Tables(s2, sf, "lineitem")
+      val o = io.Tables(s2, sf, "orders")
+      li.write.mode("overwrite").bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$wh/li_b").saveAsTable("li_b")
+      o.write.mode("overwrite").bucketBy(8, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$wh/o_b").saveAsTable("o_b")
+      val joined = s2.table("li_b")
+        .join(s2.table("o_b"), col("l_orderkey") === col("o_orderkey"))
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"bucketed join must not shuffle:\n$plan")
+      assert(joined.count() > 0)
+      s2.sql("DROP TABLE IF EXISTS li_b")
+      s2.sql("DROP TABLE IF EXISTS o_b")
+    }
   }
 }

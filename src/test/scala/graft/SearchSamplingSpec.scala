@@ -113,78 +113,79 @@ class SearchSamplingSpec extends SparkSpec {
 
   test("persisted text index serves bit-identical to the scan form; term filter pushed") {
     val docs = io.Tables(spark, sf, "documents")
-    val path = java.nio.file.Files.createTempDirectory("txtidx_spec").toString
-    Search.writeTextIndex(docs, "doc_id", "text", path)
-    // two different term sets, both must equal the corpus-scan form
-    for (terms <- Seq(Search.defaultTerms, Seq("table", "merge"))) {
-      val scan = Search.bm25TopK(docs, "doc_id", "text", terms, 25)
-        .orderBy(desc("score"), col("doc_id"))
-        .as[(Long, Long, Long)].collect().toSeq
-      val served = Search.indexTopK(spark, path, terms, 25)
-        .orderBy(desc("score"), col("doc_id"))
-        .as[(Long, Long, Long)].collect().toSeq
-      assert(served == scan, s"terms=$terms")
+    withTempDir("txtidx_spec") { path =>
+      Search.writeTextIndex(docs, "doc_id", "text", path)
+      // two different term sets, both must equal the corpus-scan form
+      for (terms <- Seq(Search.defaultTerms, Seq("table", "merge"))) {
+        val scan = Search.bm25TopK(docs, "doc_id", "text", terms, 25)
+          .orderBy(desc("score"), col("doc_id"))
+          .as[(Long, Long, Long)].collect().toSeq
+        val served = Search.indexTopK(spark, path, terms, 25)
+          .orderBy(desc("score"), col("doc_id"))
+          .as[(Long, Long, Long)].collect().toSeq
+        assert(served == scan, s"terms=$terms")
+      }
+      // the whole point of the index: the query's IN(term) predicate
+      // reaches the postings scan as a pushed filter (row-group pruning
+      // at 100 TB), instead of filtering after a full read
+      val q = Search.indexTopK(spark, path, Seq("dup"), 5)
+      q.collect()
+      val scan = q.queryExecution.executedPlan.toString
+      val pushed = "PushedFilters: \\[([^\\]]*)\\]".r
+        .findAllMatchIn(scan).map(_.group(1)).mkString(";")
+      assert(pushed.contains("In(term") || pushed.contains("EqualTo(term"),
+        s"term filter not pushed (pushed=[$pushed])")
     }
-    // the whole point of the index: the query's IN(term) predicate
-    // reaches the postings scan as a pushed filter (row-group pruning
-    // at 100 TB), instead of filtering after a full read
-    val q = Search.indexTopK(spark, path, Seq("dup"), 5)
-    q.collect()
-    val scan = q.queryExecution.executedPlan.toString
-    val pushed = "PushedFilters: \\[([^\\]]*)\\]".r
-      .findAllMatchIn(scan).map(_.group(1)).mkString(";")
-    assert(pushed.contains("In(term") || pushed.contains("EqualTo(term"),
-      s"term filter not pushed (pushed=[$pushed])")
   }
 
   test("updateTextIndex appends O(batch) deltas; base untouched; serves equal to full build") {
     val docs = io.Tables(spark, sf, "documents")
-    val p0 = java.nio.file.Files.createTempDirectory("txtidx_u0").toString
-    val pFull = java.nio.file.Files.createTempDirectory("txtidx_full").toString
-    Search.writeTextIndex(docs.where(pmod(col("doc_id"), lit(5)) =!= 0),
-      "doc_id", "text", p0)
-    Search.writeTextIndex(docs, "doc_id", "text", pFull)
-    // fingerprint every base file (all three relations) BEFORE the
-    // fold-in: (path, length, modification time) — a fold-in that
-    // rewrites or even re-opens-for-write any base file is a rebuild
-    // with extra steps, the exact defect the delta design removes
-    def baseFiles(): Map[String, (Long, Long)] = {
-      val fs = new org.apache.hadoop.fs.Path(p0)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq("postings", "term_df", "meta").flatMap { rel =>
-        fs.listStatus(new org.apache.hadoop.fs.Path(s"$p0/$rel")).toSeq
-          .filter(_.isFile)
-          .map(s => s.getPath.toString -> (s.getLen, s.getModificationTime))
-      }.toMap
-    }
-    val before = baseFiles()
-    Search.updateTextIndex(spark, p0,
-      docs.where(pmod(col("doc_id"), lit(5)) === 0), "doc_id", "text")
-    assert(baseFiles() == before,
-      "fold-in touched base index files — the update is not append-only")
-    // serve equality on term sets spanning both the old and new slices
-    def served(path: String, terms: Seq[String]) =
-      Search.indexTopK(spark, path, terms, 25)
-        .orderBy(desc("score"), col("doc_id")).as[(Long, Long, Long)].collect().toSeq
-    for (terms <- Seq(Search.defaultTerms, Seq("table", "merge")))
-      assert(served(p0, terms) == served(pFull, terms), s"terms=$terms")
-    // second fold-in gets its own generation (delta_1), still equal
-    // overall? No — the corpus would double; just assert the listing
-    // discipline: one delta per relation after one fold-in
-    for (rel <- Seq("postings", "term_df", "meta"))
-      assert(Search.deltaDirs(spark, p0, rel).size == 1, rel)
-    // compaction folds deltas into the base: no delta dirs remain, the
-    // merged relations equal the full build's, and serving is unchanged
-    Search.compactTextIndex(spark, p0)
-    for (rel <- Seq("postings", "term_df", "meta"))
-      assert(Search.deltaDirs(spark, p0, rel).isEmpty, rel)
-    for (terms <- Seq(Search.defaultTerms, Seq("table", "merge")))
-      assert(served(p0, terms) == served(pFull, terms), s"post-compact terms=$terms")
-    val dfInc = spark.read.parquet(s"$p0/term_df").orderBy("term")
-      .as[(String, Long)].collect().toSeq
-    val dfFull = spark.read.parquet(s"$pFull/term_df").orderBy("term")
-      .as[(String, Long)].collect().toSeq
-    assert(dfInc == dfFull)
+    withTempDir("txtidx_u0") { p0 => withTempDir("txtidx_full") { pFull =>
+      Search.writeTextIndex(docs.where(pmod(col("doc_id"), lit(5)) =!= 0),
+        "doc_id", "text", p0)
+      Search.writeTextIndex(docs, "doc_id", "text", pFull)
+      // fingerprint every base file (all three relations) BEFORE the
+      // fold-in: (path, length, modification time) — a fold-in that
+      // rewrites or even re-opens-for-write any base file is a rebuild
+      // with extra steps, the exact defect the delta design removes
+      def baseFiles(): Map[String, (Long, Long)] = {
+        val fs = new org.apache.hadoop.fs.Path(p0)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        Seq("postings", "term_df", "meta").flatMap { rel =>
+          fs.listStatus(new org.apache.hadoop.fs.Path(s"$p0/$rel")).toSeq
+            .filter(_.isFile)
+            .map(s => s.getPath.toString -> (s.getLen, s.getModificationTime))
+        }.toMap
+      }
+      val before = baseFiles()
+      Search.updateTextIndex(spark, p0,
+        docs.where(pmod(col("doc_id"), lit(5)) === 0), "doc_id", "text")
+      assert(baseFiles() == before,
+        "fold-in touched base index files — the update is not append-only")
+      // serve equality on term sets spanning both the old and new slices
+      def served(path: String, terms: Seq[String]) =
+        Search.indexTopK(spark, path, terms, 25)
+          .orderBy(desc("score"), col("doc_id")).as[(Long, Long, Long)].collect().toSeq
+      for (terms <- Seq(Search.defaultTerms, Seq("table", "merge")))
+        assert(served(p0, terms) == served(pFull, terms), s"terms=$terms")
+      // second fold-in gets its own generation (delta_1), still equal
+      // overall? No — the corpus would double; just assert the listing
+      // discipline: one delta per relation after one fold-in
+      for (rel <- Seq("postings", "term_df", "meta"))
+        assert(Search.deltaDirs(spark, p0, rel).size == 1, rel)
+      // compaction folds deltas into the base: no delta dirs remain, the
+      // merged relations equal the full build's, and serving is unchanged
+      Search.compactTextIndex(spark, p0)
+      for (rel <- Seq("postings", "term_df", "meta"))
+        assert(Search.deltaDirs(spark, p0, rel).isEmpty, rel)
+      for (terms <- Seq(Search.defaultTerms, Seq("table", "merge")))
+        assert(served(p0, terms) == served(pFull, terms), s"post-compact terms=$terms")
+      val dfInc = spark.read.parquet(s"$p0/term_df").orderBy("term")
+        .as[(String, Long)].collect().toSeq
+      val dfFull = spark.read.parquet(s"$pFull/term_df").orderBy("term")
+        .as[(String, Long)].collect().toSeq
+      assert(dfInc == dfFull)
+    }}
   }
 
   test("bm25TopK/indexTopK reject a repeated query term (scan form would double-count it)") {
@@ -192,10 +193,11 @@ class SearchSamplingSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Search.bm25TopK(docs, "doc_id", "text", Seq("a", "a"), 5)
     }
-    val path = java.nio.file.Files.createTempDirectory("txtidx_dup").toString
-    Search.writeTextIndex(docs, "doc_id", "text", path)
-    intercept[IllegalArgumentException] {
-      Search.indexTopK(spark, path, Seq("a", "a"), 5)
+    withTempDir("txtidx_dup") { path =>
+      Search.writeTextIndex(docs, "doc_id", "text", path)
+      intercept[IllegalArgumentException] {
+        Search.indexTopK(spark, path, Seq("a", "a"), 5)
+      }
     }
   }
 }

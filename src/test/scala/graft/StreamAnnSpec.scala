@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
@@ -25,10 +23,16 @@ class StreamAnnSpec extends SparkSpec {
 
   private lazy val emb = io.Tables(spark, sf, "embeddings")
 
+  // the suite's one temp dir, deleted when the suite ends (AnyFunSuite
+  // runs its tests inside `run`)
+  private var suiteDir: String = _
+  override def run(testName: Option[String], args: org.scalatest.Args): org.scalatest.Status =
+    withTempDir("r10idx") { d => suiteDir = d; super.run(testName, args) }
+
   // train + persist once for the whole suite — the pinned-quantizer
   // index epoch every test probes against
   private lazy val idxDir: String = {
-    val d = Files.createTempDirectory("r10idx").toString
+    val d = suiteDir
     Similarity.writeAnnIndex(
       Similarity.annIndex(emb, "vec_id", "embedding"), d)
     val idx = Similarity.readAnnIndex(spark, d)

@@ -38,19 +38,18 @@ class StreamMultimodalSpec extends SparkSpec {
       Event(2L, new java.sql.Timestamp(base), "view", 8.0))
     // batch Dataset drives the same state machine via groupByKey-style path:
     // run through the streaming API with a memory sink
-    val sessions = StreamOps.sessionize(
-      spark.readStream
-        .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
-        .parquet {
-          val dir = java.nio.file.Files.createTempDirectory("sess").toString
-          evs.toDS().write.mode("overwrite").parquet(dir)
-          dir
-        }.as[Event])
-    val out = StreamOps.runToMemory(sessions.toDF(), "sessions")
-    // only sessions closed by the watermark are emitted in Append mode;
-    // user 1's first session (closed by the 1h-later event) must appear
-    val rows = out.as[Session].collect()
-    assert(rows.exists(s => s.user_id == 1L && s.n_events == 2 && s.total_value == 3.0))
+    withTempDir("sess") { dir =>
+      evs.toDS().write.mode("overwrite").parquet(dir)
+      val sessions = StreamOps.sessionize(
+        spark.readStream
+          .schema(implicitly[org.apache.spark.sql.Encoder[Event]].schema)
+          .parquet(dir).as[Event])
+      val out = StreamOps.runToMemory(sessions.toDF(), "sessions")
+      // only sessions closed by the watermark are emitted in Append mode;
+      // user 1's first session (closed by the 1h-later event) must appear
+      val rows = out.as[Session].collect()
+      assert(rows.exists(s => s.user_id == 1L && s.n_events == 2 && s.total_value == 3.0))
+    }
   }
 
   test("multimodal: feature extraction preserves rows and emits fixed-width vectors") {

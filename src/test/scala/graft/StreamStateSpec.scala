@@ -143,51 +143,52 @@ class StreamStateSpec extends SparkSpec {
     // triggers. After every single trigger the stored view must equal
     // a full recompute over the resolved head.
     import java.nio.file.Files
-    val base = Files.createTempDirectory("mv_late").toString
-    val path = base + "/tbl"
-    val mv = base + "/mv"
-    def doc(id: Long, src: String, len: Int) = (id, "x" * len, src)
-    val t0 = ((1L to 8L).map(i => doc(i, "a", i.toInt)) ++
-      (11L to 14L).map(i => doc(i, "b", 10)) ++ Seq(doc(21L, "c", 5)))
-      .toDF("doc_id", "text", "source")
-    io.Sinks.writeVersion(t0, path, 0)
-    def recompute(v: Long) =
-      io.Sinks.readSnapshotAt(spark, path, v, "doc_id")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_rows"),
-          sum(length(col("text")).cast("long")).as("sum_val"))
-    recompute(0).write.parquet(mv)
-    def b(rows: (Long, String, String, Boolean)*) =
-      rows.toDF("doc_id", "text", "source", "__deleted")
-    val triggers = Seq(
-      // t1: in-place update, insert into c, delete c's only doc (c
-      // empties → leaves the view), group-move 11 b→a
-      b((1L, "y" * 20, "a", false), (101L, "z" * 7, "c", false),
-        (21L, "", "c", true), (11L, "x" * 10, "a", false)),
-      // t2 (late): retract the key t1 inserted (c empties AGAIN),
-      // a stale-looking re-update of key 1, re-insert of the key t1
-      // deleted (c re-enters), 11 bounces a→b
-      b((101L, "", "c", true), (1L, "w" * 3, "a", false),
-        (21L, "v" * 6, "c", false), (11L, "x" * 10, "b", false)),
-      // t3: retractions only — a key from the base, and c emptied a
-      // third time
-      b((21L, "", "c", true), (2L, "", "a", true)))
-    for ((batch, i) <- triggers.zipWithIndex) {
-      streaming.StreamOps.mvMaintainApply(
-        streaming.StreamOps.stagedStream(Seq(batch)), path, mv,
-        "doc_id", "source",
-        oldVal = length(col("old_text")), newVal = length(col("new_text")))
-      val head = io.Sinks.nextVersion(spark, path) - 1
-      def toSet(df: org.apache.spark.sql.DataFrame) = df
-        .select(col("source"), col("n_rows").cast("long"), col("sum_val").cast("long"))
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      val expect = toSet(recompute(head))
-      val got = toSet(spark.read.parquet(mv))
-      assert(got == expect,
-        s"trigger ${i + 1} (v$head): view $got != recompute $expect")
+    withTempDir("mv_late") { base =>
+      val path = base + "/tbl"
+      val mv = base + "/mv"
+      def doc(id: Long, src: String, len: Int) = (id, "x" * len, src)
+      val t0 = ((1L to 8L).map(i => doc(i, "a", i.toInt)) ++
+        (11L to 14L).map(i => doc(i, "b", 10)) ++ Seq(doc(21L, "c", 5)))
+        .toDF("doc_id", "text", "source")
+      io.Sinks.writeVersion(t0, path, 0)
+      def recompute(v: Long) =
+        io.Sinks.readSnapshotAt(spark, path, v, "doc_id")
+          .groupBy("source")
+          .agg(count(lit(1)).as("n_rows"),
+            sum(length(col("text")).cast("long")).as("sum_val"))
+      recompute(0).write.parquet(mv)
+      def b(rows: (Long, String, String, Boolean)*) =
+        rows.toDF("doc_id", "text", "source", "__deleted")
+      val triggers = Seq(
+        // t1: in-place update, insert into c, delete c's only doc (c
+        // empties → leaves the view), group-move 11 b→a
+        b((1L, "y" * 20, "a", false), (101L, "z" * 7, "c", false),
+          (21L, "", "c", true), (11L, "x" * 10, "a", false)),
+        // t2 (late): retract the key t1 inserted (c empties AGAIN),
+        // a stale-looking re-update of key 1, re-insert of the key t1
+        // deleted (c re-enters), 11 bounces a→b
+        b((101L, "", "c", true), (1L, "w" * 3, "a", false),
+          (21L, "v" * 6, "c", false), (11L, "x" * 10, "b", false)),
+        // t3: retractions only — a key from the base, and c emptied a
+        // third time
+        b((21L, "", "c", true), (2L, "", "a", true)))
+      for ((batch, i) <- triggers.zipWithIndex) {
+        streaming.StreamOps.mvMaintainApply(
+          streaming.StreamOps.stagedStream(Seq(batch)), path, mv,
+          "doc_id", "source",
+          oldVal = length(col("old_text")), newVal = length(col("new_text")))
+        val head = io.Sinks.nextVersion(spark, path) - 1
+        def toSet(df: org.apache.spark.sql.DataFrame) = df
+          .select(col("source"), col("n_rows").cast("long"), col("sum_val").cast("long"))
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+        val expect = toSet(recompute(head))
+        val got = toSet(spark.read.parquet(mv))
+        assert(got == expect,
+          s"trigger ${i + 1} (v$head): view $got != recompute $expect")
+      }
+      // the zero-count eviction actually happened: c is absent at the end
+      assert(!spark.read.parquet(mv).collect().exists(_.getString(0) == "c"))
     }
-    // the zero-count eviction actually happened: c is absent at the end
-    assert(!spark.read.parquet(mv).collect().exists(_.getString(0) == "c"))
   }
 
   test("attributionJoinOuter: staged replay equals the batch left join on two independent runs") {

@@ -13,42 +13,42 @@ class ZOrderSpec extends SparkSpec {
 
   test("z-order files prune a narrow-band 2-D predicate that a 1-D sort cannot") {
     val li = io.Tables(spark, sf, "lineitem").select("l_partkey", "l_suppkey", "l_quantity")
-    val zdir = java.nio.file.Files.createTempDirectory("zord").toString
-    val ldir = java.nio.file.Files.createTempDirectory("lin").toString
-    Sinks.writeZOrdered(li, zdir, "l_partkey", "l_suppkey", files = 16)
-    li.repartitionByRange(16, col("l_partkey"))
-      .sortWithinPartitions("l_partkey")
-      .write.mode("overwrite").parquet(ldir)
+    withTempDir("zord") { zdir => withTempDir("lin") { ldir =>
+      Sinks.writeZOrdered(li, zdir, "l_partkey", "l_suppkey", files = 16)
+      li.repartitionByRange(16, col("l_partkey"))
+        .sortWithinPartitions("l_partkey")
+        .write.mode("overwrite").parquet(ldir)
 
-    val mm = li.agg(
-      min("l_suppkey").cast("double"), max("l_suppkey").cast("double")).head()
-    // narrow band in suppkey (~10%), unbounded in partkey — the layout
-    // sorted by partkey alone cannot prune this at all
-    val bandLo = mm.getDouble(0) + 0.45 * (mm.getDouble(1) - mm.getDouble(0))
-    val bandHi = mm.getDouble(0) + 0.55 * (mm.getDouble(1) - mm.getDouble(0))
+      val mm = li.agg(
+        min("l_suppkey").cast("double"), max("l_suppkey").cast("double")).head()
+      // narrow band in suppkey (~10%), unbounded in partkey — the layout
+      // sorted by partkey alone cannot prune this at all
+      val bandLo = mm.getDouble(0) + 0.45 * (mm.getDouble(1) - mm.getDouble(0))
+      val bandHi = mm.getDouble(0) + 0.55 * (mm.getDouble(1) - mm.getDouble(0))
 
-    def filesTouched(dir: String): (Int, Int) = {
-      val files = new java.io.File(dir).listFiles()
-        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      val touched = files.count { f =>
-        val s = spark.read.parquet(f.getAbsolutePath)
-          .agg(min("l_suppkey").cast("double"), max("l_suppkey").cast("double")).head()
-        s.getDouble(1) >= bandLo && s.getDouble(0) <= bandHi
+      def filesTouched(dir: String): (Int, Int) = {
+        val files = new java.io.File(dir).listFiles()
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        val touched = files.count { f =>
+          val s = spark.read.parquet(f.getAbsolutePath)
+            .agg(min("l_suppkey").cast("double"), max("l_suppkey").cast("double")).head()
+          s.getDouble(1) >= bandLo && s.getDouble(0) <= bandHi
+        }
+        (touched, files.length)
       }
-      (touched, files.length)
-    }
-    val (zTouch, zTotal) = filesTouched(zdir)
-    val (lTouch, lTotal) = filesTouched(ldir)
-    assert(zTotal == 16 && lTotal == 16)
-    assert(lTouch == 16, s"1-D layout should not prune the other dimension, touched $lTouch")
-    assert(zTouch * 2 <= lTouch, s"z-order should halve files touched: z=$zTouch lin=$lTouch")
+      val (zTouch, zTotal) = filesTouched(zdir)
+      val (lTouch, lTotal) = filesTouched(ldir)
+      assert(zTotal == 16 && lTotal == 16)
+      assert(lTouch == 16, s"1-D layout should not prune the other dimension, touched $lTouch")
+      assert(zTouch * 2 <= lTouch, s"z-order should halve files touched: z=$zTouch lin=$lTouch")
 
-    // the layout is a reorganization, never a data change
-    val a = spark.read.parquet(zdir).agg(
-      count(lit(1)), sum("l_partkey"), sum("l_suppkey"), sum(col("l_quantity").cast("decimal(18,6)"))).head()
-    val b = li.agg(
-      count(lit(1)), sum("l_partkey"), sum("l_suppkey"), sum(col("l_quantity").cast("decimal(18,6)"))).head()
-    assert(a == b)
+      // the layout is a reorganization, never a data change
+      val a = spark.read.parquet(zdir).agg(
+        count(lit(1)), sum("l_partkey"), sum("l_suppkey"), sum(col("l_quantity").cast("decimal(18,6)"))).head()
+      val b = li.agg(
+        count(lit(1)), sum("l_partkey"), sum("l_suppkey"), sum(col("l_quantity").cast("decimal(18,6)"))).head()
+      assert(a == b)
+    }}
   }
 
   test("morton code interleaves bits") {
