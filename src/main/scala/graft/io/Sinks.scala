@@ -187,41 +187,42 @@ object Sinks {
   }
 
   /** Write-audit-publish (the Iceberg-era production ingestion
-    * pattern): the batch lands in a STAGING location, the
-    * [[graft.ops.Constraints]] gate audits what was actually WRITTEN
-    * (not the plan that produced it — a re-read catches writer bugs
-    * the logical plan can't), and only a fully-clean report publishes
-    * the staging directory to the final path by rename. Any violation
-    * throws, leaving staging in place for inspection and the
-    * published path untouched — downstream readers can never observe
-    * a batch that failed its contract.
+    * pattern): the batch lands in a STAGING location
+    * (`<path>.staging`), the [[graft.ops.Constraints]] gate audits what
+    * was actually WRITTEN (not the plan that produced it — a re-read
+    * catches writer bugs the logical plan can't), and only a
+    * fully-clean report publishes staging to `path` through
+    * [[swapCompacting]] (its crash contract, journal
+    * [[journalBeside]]`(path)`). Any violation throws, leaving staging
+    * in place for inspection and the published path untouched —
+    * downstream readers can never observe a batch that failed its
+    * contract.
     *
     * Returns the audit report (O(rules) rows — the one bounded
-    * driver-side collect, the gate must be decided before the rename).
-    * The delete-then-rename publish is atomic per step (HDFS/POSIX
-    * rename); a crash between them leaves the old data gone but
-    * staging intact — re-running the publish is idempotent. */
+    * driver-side collect, the gate must be decided before the
+    * publish). */
   def writeAudited(
       df: DataFrame,
       path: String,
       rowRules: Seq[(String, org.apache.spark.sql.Column)],
       uniqueKeys: Seq[(String, Seq[String])] = Nil,
       fdRules: Seq[(String, (Seq[String], Seq[String]))] = Nil): Seq[(String, Long)] = {
+    val spark = df.sparkSession
+    val journal = journalBeside(path)
+    // a committed publish of an earlier staging must land before this
+    // batch overwrites that staging
+    recoverSwap(spark, journal)
     val staging = path.stripSuffix("/") + ".staging"
     df.write.mode("overwrite").parquet(staging)
-    val spark = df.sparkSession
     val report = graft.ops.Constraints
-      .check(spark.read.parquet(staging), rowRules, uniqueKeys, fdRules)
+      .check(readParquet(spark, staging), rowRules, uniqueKeys, fdRules)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val bad = report.filter(_._2 > 0)
     if (bad.nonEmpty)
       throw new IllegalStateException(
         s"audit failed, staging left for inspection at $staging: " +
           bad.map { case (n, v) => s"$n=$v" }.mkString(", "))
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dst = new Path(path)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    require(fs.rename(new Path(staging), dst), s"writeAudited: rename $staging -> $dst failed")
+    swapCompacting(spark, journal, Seq(new Path(staging) -> new Path(path)), Nil)
     report
   }
 
@@ -316,60 +317,69 @@ object Sinks {
   }
 
   /** Swap freshly-written `<rel>.compacting` directories into place —
-    * the shared crash discipline of every index-artifact rewrite
-    * (text-index compact/purge, ANN purge). Per relation: park the
-    * current base at `<rel>.old`, rename `.compacting` in, delete the
-    * parked copy; then delete `extraDirs` (delta directories an index
-    * rewrite also folds in). No window ever holds the ONLY copy of a
-    * relation: between the two renames the base name is briefly
-    * absent, but both the parked old and the complete new directory
-    * exist on disk — a crash there leaves a loud path-not-found (never
-    * a silent truncation).
-    *
-    * Cross-relation atomicity rides a swap JOURNAL: before the first
-    * rename, every `.compacting` sibling is verified COMPLETE (its
-    * parquet `_SUCCESS` marker) and the (rels, extraDirs) manifest is
-    * written to `<root>/_swap_inprogress`; the journal is removed only
-    * after every rename AND every extra-dir delete. A crash anywhere
-    * inside the window therefore leaves the journal on disk, and
-    * [[recoverSwap]] — which every compact/purge entry point calls
-    * FIRST — rolls the interrupted swap FORWARD from the journaled
-    * manifest. Without the journal, a crash between two relations'
-    * swaps (say after postings, before term_df) would leave a MIXED
-    * index that a naive re-run silently mis-repairs: the retry would
-    * recompute its decrements from the already-purged postings, find
-    * an empty deleted sliver, and install stale term_df/meta stats. */
+    * the index case of the general [[swapCompacting]] below, used by
+    * every index-artifact rewrite (text-index compact/purge, ANN purge):
+    * each rel moves `<root>/<rel>.compacting` onto `<root>/<rel>`,
+    * parking the base at `<root>/<rel>.old`, then `extraDirs` (delta
+    * directories an index rewrite also folds in) are dropped. The
+    * journal is `<root>/_swap_inprogress`, holding one `rel <rel>` line
+    * per relation. */
   def swapCompacting(
       spark: SparkSession,
       root: String,
       rels: Seq[String],
-      extraDirs: Seq[String] = Nil): Unit = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(swapJournal(root)),
-      s"swapCompacting: unrecovered interrupted swap under $root — " +
-        "call recoverSwap before starting a new rewrite")
-    // verify EVERY replacement is complete before touching ANY base:
-    // a half-written .compacting must fail here, not get installed
-    for (rel <- rels) {
-      val next = new Path(s"$root/$rel.compacting")
-      require(relComplete(fs, next),
-        s"swapCompacting: $next looks incomplete (no _SUCCESS marker and " +
-          "no data files) — refusing to install a possibly-truncated relation")
-    }
-    // The journal itself must commit atomically: it ends with a COMMIT
-    // sentinel, and recoverSwap treats a sentinel-less journal as "the
-    // swap never began" (renames only start after this write returns,
-    // so a torn manifest can only come from a crash mid-write — before
-    // any base was touched).
-    val out = fs.create(swapJournal(root), true)
-    try out.write(
-      (rels.map("rel " + _) ++ extraDirs.map("extra " + _) ++ Seq(JournalCommit))
-        .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
-    for (rel <- rels) swapOneRel(fs, root, rel)
-    extraDirs.foreach(d => fs.delete(new Path(d), true))
-    fs.delete(swapJournal(root), false)
+      extraDirs: Seq[String] = Nil): Unit =
+    publish(fsOf(spark, new Path(root)), swapJournal(root),
+      rels.map("rel " + _) ++ extraDirs.map("extra " + _))
+
+  /** Publish complete replacements over live data — the one commit
+    * protocol of every artifact rewrite in the engine (index rewrites,
+    * `compactVersions`, `compact`, `writeAudited`, `mvMaintainApply`).
+    * Each `(replacement, target)` move renames the replacement onto
+    * the target, parking a live target at `<replacement>.old` first and
+    * deleting the parked copy after; then every `drops` path is
+    * deleted.
+    *
+    * Crash contract. Before the first rename, every replacement is
+    * verified COMPLETE (its parquet `_SUCCESS` marker) and the moves
+    * and drops are written to `journal`, ending with a COMMIT sentinel;
+    * the journal is removed only after every rename and every drop. No
+    * step ever holds the only copy of a target: between its two renames
+    * the target name is briefly absent, but the parked old and the
+    * complete new directory both exist. A crash anywhere inside the
+    * window leaves the committed journal on disk, and [[recoverSwap]]
+    * — which every writer calls on its journal FIRST, before it reads —
+    * rolls the publish FORWARD to exactly the state it was committing.
+    * A crash before the journal commits leaves every target as it was.
+    * So after recovery a reader sees either the whole publish or none
+    * of it, never a mix: without the journal, a crash between two moves
+    * (say after postings, before term_df) or between a move and its
+    * drops (a folded base installed beside the versions it replaces)
+    * would leave a state that a naive re-run silently mis-repairs.
+    *
+    * One journal serves one artifact: publishes to different targets
+    * in one parent directory must use different journals
+    * ([[journalBeside]] names one per directory). */
+  def swapCompacting(
+      spark: SparkSession,
+      journal: Path,
+      moves: Seq[(Path, Path)],
+      drops: Seq[Path]): Unit = {
+    val named = moves.flatMap { case (from, to) => Seq(from, to) } ++ drops
+    require(!named.exists(p => p.toString.exists(c => c == '\t' || c == '\n')),
+      s"swapCompacting: a journalled path holds a tab or newline: ${named.mkString(", ")}")
+    publish(fsOf(spark, journal), journal,
+      moves.map { case (from, to) => s"move $from\t$to" } ++ drops.map("extra " + _))
   }
+
+  /** The journal of a publish that rewrites directory `dir`:
+    * `<dir>._swap_inprogress`, beside it, so it survives `dir` itself
+    * being replaced and no two directories share one. */
+  private[graft] def journalBeside(dir: String): Path =
+    new Path(dir.stripSuffix("/") + "._swap_inprogress")
+
+  private def fsOf(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def swapJournal(root: String): Path =
     new Path(s"$root/_swap_inprogress")
@@ -378,9 +388,58 @@ object Sinks {
     * a torn write from a crash BEFORE any rename started. */
   private val JournalCommit = "commit"
 
-  /** Is `.compacting` dir `next` a complete relation replacement?
-    * Normally that's the committer's `_SUCCESS` marker. Only when the
-    * deployment is configured to never write one
+  /** One publish step: rename the complete replacement `from` onto
+    * `to`, parking a live `to` at `park` until `from` is in. */
+  private final case class Move(from: Path, to: Path, park: Path)
+
+  private def relMove(root: Path, rel: String): Move =
+    Move(new Path(root, s"$rel.compacting"), new Path(root, rel), new Path(root, s"$rel.old"))
+
+  /** The moves and drops of journal lines: `rel <rel>` (relative to the
+    * journal's directory), `move <from>\t<to>`, `extra <dir>`; other
+    * lines (the sentinel, a torn tail) carry none. */
+  private def steps(journal: Path, lines: Seq[String]): (Seq[Move], Seq[Path]) = (
+    lines.collect {
+      case l if l.startsWith("rel ") => relMove(journal.getParent, l.stripPrefix("rel "))
+      case l if l.startsWith("move ") && l.contains('\t') =>
+        val (from, to) = l.stripPrefix("move ").span(_ != '\t')
+        Move(new Path(from), new Path(to.tail), new Path(from + ".old"))
+    },
+    lines.collect { case l if l.startsWith("extra ") => new Path(l.stripPrefix("extra ")) })
+
+  private def publish(fs: FileSystem, journal: Path, lines: Seq[String]): Unit = {
+    require(!fs.exists(journal),
+      s"swapCompacting: unrecovered interrupted swap at $journal — " +
+        "call recoverSwap before starting a new rewrite")
+    val (moves, drops) = steps(journal, lines)
+    // verify EVERY replacement is complete before touching ANY target:
+    // a half-written replacement must fail here, not get installed
+    for (m <- moves)
+      require(relComplete(fs, m.from),
+        s"swapCompacting: ${m.from} looks incomplete (no _SUCCESS marker and " +
+          "no data files) — refusing to install a possibly-truncated relation")
+    // The journal itself must commit atomically: it ends with a COMMIT
+    // sentinel, and recoverSwap treats a sentinel-less journal as "the
+    // swap never began" (renames only start after this write returns,
+    // so a torn manifest can only come from a crash mid-write — before
+    // any target was touched).
+    val out = fs.create(journal, true)
+    try out.write((lines :+ JournalCommit).mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+    finish(fs, journal, moves, drops)
+  }
+
+  /** Every move, every drop, then the journal: the resumable tail of a
+    * committed publish. */
+  private def finish(fs: FileSystem, journal: Path, moves: Seq[Move], drops: Seq[Path]): Unit = {
+    moves.foreach(moveOne(fs, _))
+    drops.foreach(fs.delete(_, true))
+    fs.delete(journal, false)
+  }
+
+  /** Is replacement dir `next` complete? Normally that's the
+    * committer's `_SUCCESS` marker. Only when the deployment is
+    * configured to never write one
     * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`) do we
     * fall back to "directory holds at least one visible data file" —
     * with markers enabled, a data-but-no-marker directory is a
@@ -395,115 +454,112 @@ object Sinks {
     }
   }
 
-  /** One relation's park/rename/drop, resumable from any crash point:
-    * a missing `.compacting` means this relation already swapped (only
-    * its parked `.old` may remain to clear); base present + `.old`
-    * present means the crash fell between park and install. */
-  private def swapOneRel(fs: FileSystem, root: String, rel: String): Unit = {
-    val base = new Path(s"$root/$rel")
-    val old = new Path(s"$root/$rel.old")
-    val next = new Path(s"$root/$rel.compacting")
-    if (fs.exists(next)) {
-      if (fs.exists(base)) {
-        if (fs.exists(old)) fs.delete(old, true)
+  /** One move's park/rename/drop, resumable from any crash point: a
+    * missing replacement means this move already happened (only its
+    * parked copy may remain to clear); target present + park present
+    * means the crash fell between park and install. */
+  private def moveOne(fs: FileSystem, m: Move): Unit = {
+    if (fs.exists(m.from)) {
+      if (fs.exists(m.to)) {
+        if (fs.exists(m.park)) fs.delete(m.park, true)
         // Hadoop rename reports failure by RETURN VALUE, not exception —
         // an unchecked false here would silently corrupt the artifact
-        require(fs.rename(base, old), s"swapCompacting: rename $base -> $old failed")
+        require(fs.rename(m.to, m.park), s"swapCompacting: rename ${m.to} -> ${m.park} failed")
       }
-      require(fs.rename(next, base), s"swapCompacting: rename $next -> $base failed")
+      require(fs.rename(m.from, m.to), s"swapCompacting: rename ${m.from} -> ${m.to} failed")
     }
-    require(fs.exists(base),
-      s"swapCompacting: $base absent with no $next to install — corrupt index")
-    if (fs.exists(old)) fs.delete(old, true)
+    require(fs.exists(m.to),
+      s"swapCompacting: ${m.to} absent with no ${m.from} to install — corrupt artifact")
+    if (fs.exists(m.park)) fs.delete(m.park, true)
   }
 
-  /** Crash recovery for [[swapCompacting]] — idempotent; every
-    * compact/purge entry point calls this before reading the index.
-    *
-    * With a journal on disk, the interrupted swap is rolled FORWARD:
-    * the journal is only ever written after every `.compacting`
-    * replacement verified complete, so finishing the remaining
-    * renames (and extra-dir deletes) reaches exactly the state the
-    * crashed rewrite was committing. A journal MISSING its COMMIT
-    * sentinel is a torn write from a crash before any rename — it is
-    * discarded and handled as no-journal. Without a (committed)
-    * journal, any leftover `.compacting`/`.old` siblings are from a
-    * crash BEFORE the swap began — every base is still the
-    * pre-rewrite original — so the leftovers are deleted (after
-    * restoring `.old` to base if base is somehow absent) and the
-    * caller recomputes from a consistent base. Returns true when an
+  /** Crash recovery for the index form of [[swapCompacting]] —
+    * idempotent; every compact/purge entry point calls this before
+    * reading the index. It is the general `recoverSwap(spark, journal)`
+    * of `<root>/_swap_inprogress`, plus a clean-up when no journal
+    * commits a publish: any leftover `.compacting`/`.old` siblings of
+    * `rels` are then from a crash BEFORE the swap began — every base is
+    * still the pre-rewrite original — so they are deleted (after
+    * restoring `.old` to base if base is somehow absent) and the caller
+    * recomputes from a consistent base. Returns true when an
     * interrupted swap was completed (the caller's rewrite is then
     * already applied). */
-  def recoverSwap(spark: SparkSession, root: String, rels: Seq[String]): Boolean = {
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed: Option[Seq[String]] =
-      if (!fs.exists(swapJournal(root))) None
-      else {
-        val in = fs.open(swapJournal(root))
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val lines = text.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-        // A journal without the trailing COMMIT sentinel is normally a
-        // torn write: swapCompacting only starts renaming after the full
-        // journal (incl. sentinel) is on disk, so no base was touched —
-        // treat as no-journal. EXCEPT the legacy case: a journal written
-        // by the pre-sentinel build never carried the sentinel yet WAS
-        // committed (that build too only journalled after every
-        // `.compacting` verified complete). The two are distinguished by
-        // RENAME PROGRESS on the journalled rels — in the torn case no
-        // rename began, so every rel still has its base present, no
-        // parked `.old`, and its `.compacting` untouched; any rel with
-        // base absent or `.old` present, or every journalled `.compacting`
-        // already gone, proves renames ran ⇒ legacy-committed ⇒ roll
-        // FORWARD (the no-journal cleanup would restore `.old` on the
-        // mid-rename rels while already-swapped rels keep the new
-        // version — a mixed old/new set handed back as "swap never
-        // began").
-        if (lines.lastOption.contains(JournalCommit)) Some(lines.init)
-        else {
-          val jRels = lines.collect { case l if l.startsWith("rel ") => l.stripPrefix("rel ") }
-          def base(rel: String) = new Path(s"$root/$rel")
-          def old(rel: String) = new Path(s"$root/$rel.old")
-          def next(rel: String) = new Path(s"$root/$rel.compacting")
-          // mid-swap states always leave corroborating siblings (`.old`
-          // parked, or base absent WITH `.compacting` still pending) —
-          // a bare "base absent" could be a garbage rel name on a torn
-          // line and must not trigger a roll-forward; the all-installed
-          // state additionally requires every base present so truncated
-          // names can't fake completion
-          val progressed = jRels.nonEmpty && (
-            jRels.exists { rel =>
-              fs.exists(old(rel)) ||
-                (!fs.exists(base(rel)) && fs.exists(next(rel)))
-            } ||
-              jRels.forall(rel =>
-                !fs.exists(next(rel)) && fs.exists(base(rel))))
-          if (progressed) Some(lines) else None
-        }
-      }
-    committed match {
+  def recoverSwap(spark: SparkSession, root: String, rels: Seq[String]): Boolean =
+    recover(fsOf(spark, new Path(root)), swapJournal(root), rels.map(relMove(new Path(root), _)))
+
+  /** Crash recovery for [[swapCompacting]] — idempotent; every writer
+    * calls it on its journal before it reads. With a journal on disk,
+    * the interrupted publish is rolled FORWARD: the journal is only
+    * ever written after every replacement verified complete, so
+    * finishing the remaining moves and drops reaches exactly the state
+    * the crashed publish was committing. A journal MISSING its COMMIT
+    * sentinel is a torn write from a crash before any rename — it is
+    * discarded and nothing else changes (a leftover replacement is
+    * overwritten by the writer's next run). Returns true when an
+    * interrupted publish was completed. */
+  def recoverSwap(spark: SparkSession, journal: Path): Boolean =
+    recover(fsOf(spark, journal), journal, Nil)
+
+  private def recover(fs: FileSystem, journal: Path, leftovers: Seq[Move]): Boolean =
+    committed(fs, journal) match {
       case Some(lines) =>
-        val jRels = lines.collect { case l if l.startsWith("rel ") => l.stripPrefix("rel ") }
-        val jExtras = lines.collect { case l if l.startsWith("extra ") => l.stripPrefix("extra ") }
-        for (rel <- jRels) swapOneRel(fs, root, rel)
-        jExtras.foreach(d => fs.delete(new Path(d), true))
-        fs.delete(swapJournal(root), false)
+        val (moves, drops) = steps(journal, lines)
+        finish(fs, journal, moves, drops)
         true
       case None =>
-        fs.delete(swapJournal(root), false) // torn sentinel-less journal, if any
-        for (rel <- rels) {
-          val base = new Path(s"$root/$rel")
-          val old = new Path(s"$root/$rel.old")
+        fs.delete(journal, false) // torn sentinel-less journal, if any
+        for (m <- leftovers) {
           // If something (pre-journal crash, manual surgery) left the base
           // absent with `.old` holding the only copy, RESTORE it — deleting
           // `.old` here would destroy the relation.
-          if (!fs.exists(base) && fs.exists(old))
-            require(fs.rename(old, base), s"recoverSwap: restore $old -> $base failed")
-          fs.delete(new Path(s"$root/$rel.compacting"), true)
-          fs.delete(old, true)
+          if (!fs.exists(m.to) && fs.exists(m.park))
+            require(fs.rename(m.park, m.to), s"recoverSwap: restore ${m.park} -> ${m.to} failed")
+          fs.delete(m.from, true)
+          fs.delete(m.park, true)
         }
         false
     }
-  }
+
+  /** The lines of the publish `journal` commits, if any. */
+  private def committed(fs: FileSystem, journal: Path): Option[Seq[String]] =
+    if (!fs.exists(journal)) None
+    else {
+      val in = fs.open(journal)
+      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val lines = text.split("\n").map(_.trim).filter(_.nonEmpty).toSeq
+      // A journal without the trailing COMMIT sentinel is normally a
+      // torn write: publish only starts renaming after the full
+      // journal (incl. sentinel) is on disk, so no target was touched —
+      // treat as no-journal. EXCEPT the legacy case: an index journal
+      // written by the pre-sentinel build never carried the sentinel yet
+      // WAS committed (that build too only journalled after every
+      // `.compacting` verified complete). The two are distinguished by
+      // RENAME PROGRESS on the journalled rels — in the torn case no
+      // rename began, so every rel still has its base present, no
+      // parked `.old`, and its `.compacting` untouched; any rel with
+      // base absent or `.old` present, or every journalled `.compacting`
+      // already gone, proves renames ran ⇒ legacy-committed ⇒ roll
+      // FORWARD (the no-journal cleanup would restore `.old` on the
+      // mid-rename rels while already-swapped rels keep the new
+      // version — a mixed old/new set handed back as "swap never
+      // began").
+      if (lines.lastOption.contains(JournalCommit)) Some(lines.init)
+      else {
+        val jRels = lines.collect {
+          case l if l.startsWith("rel ") => relMove(journal.getParent, l.stripPrefix("rel "))
+        }
+        // mid-swap states always leave corroborating siblings (`.old`
+        // parked, or base absent WITH `.compacting` still pending) —
+        // a bare "base absent" could be a garbage rel name on a torn
+        // line and must not trigger a roll-forward; the all-installed
+        // state additionally requires every base present so truncated
+        // names can't fake completion
+        val progressed = jRels.nonEmpty && (
+          jRels.exists(m => fs.exists(m.park) || (!fs.exists(m.to) && fs.exists(m.from))) ||
+            jRels.forall(m => !fs.exists(m.from) && fs.exists(m.to)))
+        if (progressed) Some(lines) else None
+      }
+    }
 
   /** ROLLBACK as a new commit (Delta RESTORE / Iceberg rollback
     * semantics): make the table's head equal its snapshot at
@@ -601,15 +657,15 @@ object Sinks {
   }
 
   /** Fold commits 0..`upTo` into a single resolved base partition:
-    * writes the materialized snapshot to a `.compacting_v<upTo>`
-    * sibling, deletes `__v=0..upTo`, then renames the sibling in as
-    * `__v=upTo`. Crash window: between the deletes and the rename the
-    * table holds only the commits above `upTo`, and the folded base
-    * sits in the sibling until the rename is redone; a failed rename
-    * throws. Reads at any `asOf >= upTo`
-    * are unchanged; history BEFORE `upTo` is retired — the retention
-    * trade every log-structured table format makes — and a read below
-    * the horizon fails loud (`readSnapshotAt`/`snapshotDiff` check the
+    * writes the materialized snapshot to a `<path>.compacting_v<upTo>`
+    * sibling (outside the table: a `__v=…` name inside it would not be
+    * hidden from partition discovery), then publishes it as
+    * `__v=upTo` and drops `__v` directories below `upTo` in one
+    * [[swapCompacting]] (its crash contract, journal
+    * [[journalBeside]]`(path)`). Reads at any `asOf >= upTo` are
+    * unchanged; history BEFORE `upTo` is retired — the retention trade
+    * every log-structured table format makes — and a read below the
+    * horizon fails loud (`readSnapshotAt`/`snapshotDiff` check the
     * listing), never returns an empty snapshot. */
   def compactVersions(
       spark: SparkSession,
@@ -617,20 +673,15 @@ object Sinks {
       upTo: Long,
       keyCol: String): Unit = {
     import org.apache.spark.sql.functions.lit
-    val resolved = readSnapshotAt(spark, path, upTo, keyCol)
+    val journal = journalBeside(path)
+    recoverSwap(spark, journal)
+    val tmp = path.stripSuffix("/") + s".compacting_v$upTo"
+    readSnapshotAt(spark, path, upTo, keyCol)
       .withColumn("__deleted", lit(false))
+      .write.mode("overwrite").parquet(tmp)
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(path.stripSuffix("/") + s".compacting_v$upTo")
-    resolved.write.mode("overwrite").parquet(tmp.toString)
-    fs.listStatus(root).map(_.getPath)
-      .filter { p =>
-        p.getName.startsWith("__v=") &&
-          p.getName.stripPrefix("__v=").toLong <= upTo
-      }
-      .foreach(fs.delete(_, true))
-    val base = new Path(root, s"__v=$upTo")
-    require(fs.rename(tmp, base), s"compactVersions: rename $tmp -> $base failed")
+    swapCompacting(spark, journal, Seq(new Path(tmp) -> new Path(root, s"__v=$upTo")),
+      committedVersions(spark, path).filter(_ < upTo).map(v => new Path(root, s"__v=$v")))
   }
 
   /** Persist a table bucketed (and sorted) by join/aggregation keys —
@@ -674,14 +725,16 @@ object Sinks {
     * thousands of KB-sized files whose per-file open/footer/task cost
     * dominates scans; periodic compaction rewrites them into
     * scan-sized files. Round-robin repartition (no shuffle key needed
-    * — data is reorganized, never changed). */
+    * — data is reorganized, never changed), written to
+    * `<path>.compacting` and published through [[swapCompacting]] (its
+    * crash contract, journal [[journalBeside]]`(path)`). */
   def compact(spark: SparkSession, path: String, targetFiles: Int): Unit = {
+    val journal = journalBeside(path)
+    recoverSwap(spark, journal)
     val tmp = path.stripSuffix("/") + ".compacting"
     spark.read.parquet(path).repartition(targetFiles)
       .write.mode("overwrite").parquet(tmp)
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new Path(path), true)
-    require(fs.rename(new Path(tmp), new Path(path)), s"compact: rename $tmp -> $path failed")
+    swapCompacting(spark, journal, Seq(new Path(tmp) -> new Path(path)), Nil)
   }
 
   /** Morton (Z-order) interleave of two columns, each equal-width

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -350,20 +351,22 @@ object StreamOps {
   /** Streaming materialized-view maintenance — the stream-to-lakehouse
     * twin of `Sinks.maintainAggView`, completing the family: every
     * micro-batch commits as ONE append-only `__v=N` version (exactly
-    * [[cdcApply]]) and then folds its OWN change feed (the
-    * `snapshotDiff` of just that commit) into the stored view, written
-    * to a `.next_v<N>` sibling, then swapped in by delete + rename.
-    * Crash windows: between the commit and the swap the stored view
-    * lags the committed head by one version, and between the delete
-    * and the rename no view exists at `mvPath` (the updated one sits
-    * at `<mvPath>.next_v<N>`). A failed rename throws. After every
-    * completed trigger the view is bit-equal to what a batch
-    * recompute over the resolved head would produce — which is what
-    * lets `stream_mv_maintain` share `io_mv_maintain`'s recompute
-    * oracle verbatim.
+    * [[cdcApply]]) and then folds the change feed from the version the
+    * stored view reflects to `N` into the view, written to
+    * `<mvPath>.compacting` and published through
+    * `Sinks.swapCompacting` (its crash contract, journal
+    * `Sinks.journalBeside(mvPath)`). The view records the version it
+    * reflects in a `_table_version` file inside its directory, so the
+    * record moves with the publish; a view without one (the caller's
+    * seed) reflects `N − 1`. A crash after the commit but before the
+    * publish thus only delays the view: the next trigger folds the
+    * orphaned commit along with its own. After every completed trigger
+    * the view is bit-equal to what a batch recompute over the resolved
+    * head would produce — which is what lets `stream_mv_maintain` share
+    * `io_mv_maintain`'s recompute oracle verbatim.
     *
     * Per-cycle cost is the batch twin's: the diff prunes to the
-    * commit's touched keys, the fold shuffles O(changes)+O(groups)
+    * commits' touched keys, the fold shuffles O(changes)+O(groups)
     * rows, and the table is never re-aggregated. The caller seeds the
     * stored view from the base version before starting the stream
     * (the deployment's initial backfill). */
@@ -377,22 +380,33 @@ object StreamOps {
       newVal: org.apache.spark.sql.Column): Unit = {
     drainBatches(changes) { batch =>
       val s = batch.sparkSession
+      val fs = new Path(mvPath).getFileSystem(s.sparkContext.hadoopConfiguration)
+      val journal = graft.io.Sinks.journalBeside(mvPath)
+      graft.io.Sinks.recoverSwap(s, journal)
       val v = graft.io.Sinks.nextVersion(s, path)
       graft.io.Sinks.writeVersion(batch.toDF(), path, v)
-      val updated = graft.io.Sinks.maintainAggView(
-        s.read.parquet(mvPath)
-          .select(col(grpCol), col("n_rows"), col("sum_val")),
-        graft.io.Sinks.snapshotDiff(s, path, v - 1, v, keyCol),
-        grpCol, oldVal, newVal)
-      val fs = new org.apache.hadoop.fs.Path(mvPath)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(mvPath + s".next_v$v")
-      updated.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(new org.apache.hadoop.fs.Path(mvPath), true)
-      require(fs.rename(tmp, new org.apache.hadoop.fs.Path(mvPath)),
-        s"mvMaintainApply: rename $tmp -> $mvPath failed")
+      val next = mvPath.stripSuffix("/") + ".compacting"
+      graft.io.Sinks.maintainAggView(
+          graft.io.Sinks.readParquet(s, mvPath)
+            .select(col(grpCol), col("n_rows"), col("sum_val")),
+          graft.io.Sinks.snapshotDiff(s, path, viewVersion(fs, mvPath).getOrElse(v - 1), v, keyCol),
+          grpCol, oldVal, newVal)
+        .write.mode("overwrite").parquet(next)
+      val out = fs.create(new Path(next, ViewVersion), true)
+      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+      graft.io.Sinks.swapCompacting(s, journal, Seq(new Path(next) -> new Path(mvPath)), Nil)
     }
   }
+
+  /** The file inside a maintained view that holds the table version
+    * the view reflects (`_`-prefixed: hidden from parquet reads). */
+  private val ViewVersion = "_table_version"
+
+  private def viewVersion(fs: FileSystem, mvPath: String): Option[Long] =
+    Some(new Path(mvPath, ViewVersion)).filter(fs.exists).map { f =>
+      val in = fs.open(f)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong finally in.close()
+    }
 
   /** Streaming right-to-be-forgotten: delete requests arriving as a
     * stream are folded into the persisted text index one micro-batch

@@ -1,0 +1,275 @@
+package graft
+
+import java.io.File
+
+import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import ext.{Search, Similarity}
+
+/** Local filesystem under the `crashfs://` scheme that simulates a
+  * driver crash. Once armed with k, the k-th mutating call (a create,
+  * a rename, a delete of a present path, a mkdirs of an absent one)
+  * whose caller is engine code (`graft.*`) throws, and from then on so
+  * does every mutating call from any thread, until disarmed. Calls made
+  * by Spark's own write jobs are not counted: they only ever build a
+  * replacement before its publish begins, and a crash there leaves the
+  * live data as it was. */
+class CrashFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  override protected def createOutputStreamWithMode(
+      f: Path, append: Boolean, permission: FsPermission): java.io.OutputStream =
+    CrashFs.step(super.createOutputStreamWithMode(f, append, permission))
+  override def rename(src: Path, dst: Path): Boolean = CrashFs.step(super.rename(src, dst))
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (exists(p)) CrashFs.step(super.delete(p, recursive)) else super.delete(p, recursive)
+  override def mkdirs(p: Path): Boolean =
+    if (exists(p)) super.mkdirs(p) else CrashFs.step(super.mkdirs(p))
+  override def mkdirs(p: Path, permission: FsPermission): Boolean =
+    if (exists(p)) super.mkdirs(p, permission) else CrashFs.step(super.mkdirs(p, permission))
+}
+
+object CrashFs {
+  private var crashAt = 0 // 0 = disarmed
+  private var calls = 0
+  private var dead = false
+  // a call made inside another (create's parent mkdirs, a rename's
+  // fallback delete) is part of that one step
+  private val inside = new ThreadLocal[Boolean] { override def initialValue = false }
+
+  def arm(k: Int): Unit = synchronized { crashAt = k; calls = 0; dead = false }
+
+  /** Disarms, and tells whether the crash happened. */
+  def disarm(): Boolean = synchronized { val d = dead; crashAt = 0; dead = false; d }
+
+  private[graft] def step[A](op: => A): A =
+    if (inside.get) op
+    else {
+      inside.set(true)
+      try { check(); op } finally inside.set(false)
+    }
+
+  private def check(): Unit = synchronized {
+    if (dead) throw new java.io.IOException("crashfs: the process has crashed")
+    if (crashAt > 0 && engineCaller) {
+      calls += 1
+      if (calls == crashAt) {
+        dead = true
+        throw new java.io.IOException(s"crashfs: crash at mutating call $crashAt")
+      }
+    }
+  }
+
+  private def engineCaller: Boolean =
+    Thread.currentThread.getStackTrace.iterator.map(_.getClassName)
+      .find(c => !Seq("java.", "jdk.", "sun.", "scala.", "org.apache.hadoop.", "graft.CrashFs")
+        .exists(c.startsWith))
+      .exists(_.startsWith("graft."))
+}
+
+/** Every artifact writer that publishes through the journaled
+  * `Sinks.swapCompacting`, crashed at each of its counted mutating
+  * calls: after the entry point's recovery a reader sees exactly the
+  * state before or after the write, and the next run completes it. */
+class CrashSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Registers `crashfs://` for `body`. */
+  private def withCrashFs[A](body: => A): A = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.crashfs.impl", classOf[CrashFs].getName)
+    conf.setBoolean("fs.crashfs.impl.disable.cache", true)
+    try body
+    finally {
+      conf.unset("fs.crashfs.impl")
+      conf.unset("fs.crashfs.impl.disable.cache")
+    }
+  }
+
+  /** Runs `op` on a fresh copy of the fixture `make` builds, crashing
+    * it at counted call k = 1, 2, … until a run completes. After each
+    * crash: `recover`, then `read` must be the before- or the
+    * after-state, and `op` again must complete to the after-state.
+    * `read` must collect. Returns the number of crash points. */
+  private def crashAtEveryStep[R](make: String => Unit)(op: String => Unit)(
+      recover: String => Unit)(read: String => R): Int = withCrashFs {
+    withTempDir("crashfs") { tmp =>
+      make(s"crashfs://$tmp/pristine")
+      def fresh(name: String): String = {
+        FileUtils.copyDirectory(new File(s"$tmp/pristine"), new File(s"$tmp/$name"))
+        s"crashfs://$tmp/$name"
+      }
+      val before = read(fresh("before"))
+      val after = { val d = fresh("after"); op(d); read(d) }
+      assert(before != after, "the reader must tell the two states apart")
+      var k = 0
+      var completed = false
+      while (!completed) {
+        k += 1
+        assert(k < 100, "the writer never completed")
+        val d = fresh(s"k$k")
+        CrashFs.arm(k)
+        val run = scala.util.Try(op(d))
+        val crashed = CrashFs.disarm()
+        if (!crashed) {
+          run.get
+          assert(read(d) == after, s"k=$k: completed run")
+          completed = true
+        } else {
+          recover(d)
+          val seen = read(d)
+          assert(seen == before || seen == after,
+            s"k=$k: after recovery the reader sees $seen, neither $before nor $after")
+          op(d)
+          assert(read(d) == after, s"k=$k: the next run")
+        }
+        graft.util.Scratch.delete(s"$tmp/k$k")
+      }
+      k - 1
+    }
+  }
+
+  private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  private def recoverBeside(d: String): Unit = io.Sinks.recoverSwap(spark, io.Sinks.journalBeside(d))
+
+  // counted calls of one publish: the journal's create and delete, and
+  // per move the park rename, the install rename and the parked copy's
+  // delete (the park steps only when the target exists), plus one
+  // delete per drop
+
+  test("writeAudited: every crash point leaves the old table or the new one") {
+    val points = crashAtEveryStep(
+      d => Seq((1L, "old")).toDF("id", "s").write.parquet(s"$d/tbl"))(
+      d => io.Sinks.writeAudited(Seq((1L, "new"), (2L, "new")).toDF("id", "s"), s"$d/tbl",
+        rowRules = Seq("s_not_null" -> col("s").isNull),
+        uniqueKeys = Seq("id_unique" -> Seq("id"))))(
+      d => recoverBeside(s"$d/tbl"))(
+      d => rows(spark.read.parquet(s"$d/tbl")))
+    assert(points == 5)
+  }
+
+  test("two publishes in one parent directory keep separate journals") {
+    withCrashFs {
+      withTempDir("crashfs") { tmp =>
+        val (a, b) = (s"crashfs://$tmp/a", s"crashfs://$tmp/b")
+        def publish(dst: String, v: String): Unit =
+          io.Sinks.writeAudited(Seq((1L, v)).toDF("id", "s"), dst, Seq("s_null" -> col("s").isNull))
+        publish(a, "a0")
+        // crash a's second publish between parking a and installing it
+        CrashFs.arm(3)
+        intercept[Exception](publish(a, "a1"))
+        assert(CrashFs.disarm())
+        val aJournal = new File(s"$tmp/a._swap_inprogress")
+        assert(aJournal.exists() && !new File(s"$tmp/a").exists())
+        // b publishes beside it without tripping over a's journal
+        publish(b, "b0")
+        assert(rows(spark.read.parquet(b)) == Set(Seq(1L, "b0")))
+        assert(aJournal.exists())
+        // and a's recovery installs exactly a's staged batch
+        assert(io.Sinks.recoverSwap(spark, io.Sinks.journalBeside(a)))
+        assert(rows(spark.read.parquet(a)) == Set(Seq(1L, "a1")))
+      }
+    }
+  }
+
+  test("compact: every crash point leaves the table readable with the same rows") {
+    val points = crashAtEveryStep(
+      d => spark.range(0, 200).select(col("id"), (col("id") % 7).as("g"))
+        .repartition(8).write.parquet(s"$d/tbl"))(
+      d => io.Sinks.compact(spark, s"$d/tbl", targetFiles = 2))(
+      d => recoverBeside(s"$d/tbl"))(
+      d => (rows(spark.read.parquet(s"$d/tbl")),
+        new File(new java.net.URI(s"$d/tbl").getPath).list().count(_.endsWith(".parquet"))))
+    assert(points == 5)
+  }
+
+  test("compactVersions: every crash point leaves the commit log or its folded form") {
+    val points = crashAtEveryStep { d =>
+      val t = s"$d/tbl"
+      io.Sinks.writeVersion(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"), t, 0)
+      io.Sinks.writeVersion(Seq((1L, "a1", false), (2L, "", true)).toDF("k", "s", "__deleted"), t, 1)
+      // a tombstone at the horizon: a folded base installed beside the
+      // versions it replaces would revive key 1 from v1
+      io.Sinks.writeVersion(Seq((2L, "b2", false), (4L, "d", false), (1L, "", true))
+        .toDF("k", "s", "__deleted"), t, 2)
+      io.Sinks.writeVersion(Seq((3L, "", true)).toDF("k", "s", "__deleted"), t, 3)
+    }(d => io.Sinks.compactVersions(spark, s"$d/tbl", upTo = 2, keyCol = "k"))(
+      d => recoverBeside(s"$d/tbl")) { d =>
+      val t = s"$d/tbl"
+      (io.Sinks.committedVersions(spark, t),
+        Seq(2L, 3L).map(v => rows(io.Sinks.readSnapshotAt(spark, t, v, "k"))))
+    }
+    // two versions below the horizon dropped
+    assert(points == 7)
+  }
+
+  test("mvMaintainApply: every crash point leaves a view that the re-sent batch brings to the head") {
+    def trigger(d: String, batch: Seq[(Long, String, Long, Boolean)]): Unit =
+      streaming.StreamOps.mvMaintainApply(
+        streaming.StreamOps.stagedStream(Seq(batch.toDF("k", "grp", "v", "__deleted"))),
+        s"$d/tbl", s"$d/mv", "k", "grp", oldVal = col("old_v"), newVal = col("new_v"))
+    val points = crashAtEveryStep { d =>
+      io.Sinks.writeVersion(Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
+        .toDF("k", "grp", "v"), s"$d/tbl", 0)
+      io.Sinks.readSnapshotAt(spark, s"$d/tbl", 0, "k")
+        .groupBy("grp").agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_val"))
+        .write.parquet(s"$d/mv")
+      // one good trigger, so the view records the version it reflects
+      trigger(d, Seq((3L, "b", 31L, false)))
+    }(trigger(_, Seq((2L, "b", 25L, false), (4L, "c", 7L, false), (1L, "a", 0L, true))))(
+      d => recoverBeside(s"$d/mv"))(
+      d => rows(spark.read.parquet(s"$d/mv")))
+    // the view's version marker, then one publish
+    assert(points == 6)
+  }
+
+  private def textIndex(d: String): Unit = {
+    val docs = io.Tables(spark, sf, "documents")
+    Search.writeTextIndex(docs.where(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", d)
+    Search.updateTextIndex(spark, d, docs.where(pmod(col("doc_id"), lit(5)) === 0),
+      "doc_id", "text")
+  }
+
+  private val textRels = Seq("postings", "term_df", "meta")
+
+  /** What the index serves, and whether deltas are still apart. */
+  private def served(d: String) = (
+    Seq(Search.defaultTerms, Seq("table", "merge")).map(terms =>
+      Search.indexTopK(spark, d, terms, 25).collect().map(_.toSeq).toSeq),
+    textRels.map(Search.deltaDirs(spark, d, _).size))
+
+  test("compactTextIndex: every crash point serves the same answers from one consistent index") {
+    val points = crashAtEveryStep(textIndex)(Search.compactTextIndex(spark, _))(
+      io.Sinks.recoverSwap(spark, _, textRels))(served)
+    // three moves and three delta drops
+    assert(points == 14)
+  }
+
+  test("purgeTextIndex: every crash point serves from the index before or after the purge") {
+    val del = io.Tables(spark, sf, "documents")
+      .where(pmod(col("doc_id"), lit(37)) === 3).select("doc_id")
+    val points = crashAtEveryStep(textIndex)(Search.purgeTextIndex(spark, _, del, "doc_id"))(
+      io.Sinks.recoverSwap(spark, _, textRels))(served)
+    assert(points == 14)
+  }
+
+  test("purgeAnnIndex: every crash point serves from the index before or after the purge") {
+    val emb = io.Tables(spark, sf, "embeddings")
+    val del = pmod(col("vec_id"), lit(37)) === 3
+    val points = crashAtEveryStep(
+      d => Similarity.writeAnnIndex(Similarity.annIndex(emb, "vec_id", "embedding"), d))(
+      Similarity.purgeAnnIndex(spark, _, emb.where(del).select("vec_id"), "vec_id"))(
+      io.Sinks.recoverSwap(spark, _, Seq("lists", "codes"))) { d =>
+      val index = Similarity.readAnnIndex(spark, d)
+      (rows(index.lists), Similarity.probeIndex(index, emb.where(!del), "vec_id", "embedding",
+        probeFilter = col("vec_id") < 10, k = 10).collect().map(_.toSeq).toSet)
+    }
+    // two moves, no drops
+    assert(points == 8)
+  }
+}

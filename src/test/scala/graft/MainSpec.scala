@@ -334,4 +334,28 @@ class MainSpec extends SparkSpec {
     assert(offenders.isEmpty,
       s"read engine-written relations with Sinks.readParquet (no inference job): ${offenders.mkString(", ")}")
   }
+
+  test("only the journaled swap renames over live data (besides the part-file renames)") {
+    import scala.jdk.CollectionConverters._
+    // (file, enclosing def) of every `.rename(` allowed in src/main/scala:
+    // the swap's move and recovery, and the renames of fresh part files
+    // inside a directory the writer just made
+    val allowed = Set("Sinks.scala" -> "moveOne", "Sinks.scala" -> "recover",
+      "Sinks.scala" -> "writePartitioned", "KvText.scala" -> "write")
+    val defName = """\s*(?:(?:private|protected)\S*\s+|override\s+|final\s+)*def\s+(\w+).*""".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val sites = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+      val lines = Files.readAllLines(p).asScala.toSeq
+      lines.zipWithIndex.collect {
+        case (line, i) if !Seq("//", "/*", "*").exists(line.trim.startsWith) &&
+            line.contains(".rename(") =>
+          val owner = lines.take(i + 1).reverseIterator.collectFirst { case defName(n) => n }
+          (p.getFileName.toString -> owner.getOrElse(""), s"$p:${i + 1}")
+      }
+    }.toList
+    finally walk.close()
+    assert(sites.map(_._1).toSet == allowed, s"rename sites: ${sites.mkString(", ")}")
+  }
 }

@@ -224,6 +224,31 @@ class R10OpsSpec extends SparkSpec {
     }
   }
 
+  test("mvMaintainApply catches up when a commit's view publish never ran and the batch is re-sent") {
+    withTempDir("mvlag_spec") { base =>
+      val dir = base + "/tbl"
+      io.Sinks.writeVersion(Seq((1L, "a", 10L), (2L, "a", 20L), (3L, "b", 30L))
+        .toDF("k", "grp", "v"), dir, 0)
+      def agg(asOf: Long) = io.Sinks.readSnapshotAt(spark, dir, asOf, "k").groupBy("grp")
+        .agg(count(lit(1)).as("n_rows"), sum(col("v")).as("sum_val"))
+      agg(0).write.parquet(s"$base/mv")
+      def drain(b: org.apache.spark.sql.DataFrame): Unit =
+        streaming.StreamOps.mvMaintainApply(
+          streaming.StreamOps.stagedStream(Seq(b)), dir, s"$base/mv",
+          "k", "grp", oldVal = col("old_v"), newVal = col("new_v"))
+      drain(Seq((2L, "b", 25L, false)).toDF("k", "grp", "v", "__deleted"))
+      val b = Seq((4L, "c", 7L, false), (1L, "a", 10L, true)).toDF("k", "grp", "v", "__deleted")
+      // a crash after b's commit, before the view's publish: the
+      // commit lands and the view stays at v1
+      io.Sinks.writeVersion(b, dir, 2)
+      // the caller re-sends b, which commits v3 with v2's rows
+      drain(b)
+      assert(io.Sinks.nextVersion(spark, dir) == 4)
+      def set(df: org.apache.spark.sql.DataFrame) = df.as[(String, Long, Long)].collect().toSet
+      assert(set(spark.read.parquet(s"$base/mv")) == set(agg(3)))
+    }
+  }
+
   test("epochSchedule: caps bind per source, effective <= alloc, uncapped epochs consume the allocation") {
     // tiny source gets a sqrt-law upweight big enough to hit the cap;
     // the large source stays under it
