@@ -5474,9 +5474,4 @@ object ExtQueries {
         .orderBy("source")
     }
   )
-
-  /** Ops with no SQL-expressible oracle (driver records rows-only).
-    * Empty since the RHP-LSH family became engine-independent
-    * (md5-derived planes) and `ann_lsh_topk` gained a full hash oracle. */
-  val plansNoOracle: Map[String, (SparkSession, String) => DataFrame] = Map.empty
 }

@@ -8,7 +8,8 @@ import org.apache.spark.scheduler._
   * records every Spark job/stage, and print a per-query breakdown —
   * wall seconds, job count, stage count, cumulative task time, shuffle
   * bytes — plus optionally dump `.explain("formatted")` of the returned
-  * DataFrame to plans/<tag>/<name>_<suffix>.txt.
+  * DataFrame, masked by [[maskPlan]], to plans/<tag>/<name>_<suffix>.txt:
+  * `diff -r` of two such directories is the plan-identity check.
   *
   * Usage: runMain graft.ProfileQ q1,q2,...  (env SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_PLAN_DIR=plans/r13, SPARK_GRAFT_PLAN_SUFFIX=before)
@@ -81,10 +82,22 @@ object ProfileQ {
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(pd, s"${name}_$suffix.txt"), plan)
+          java.nio.file.Paths.get(pd, s"${name}_$suffix.txt"), maskPlan(plan))
       }
       scrub()
     }
     spark.stop()
   }
+
+  /** `plan` with what differs between two builds of the same query
+    * masked: expression ids (`#12`), exchange ids (`[plan_id=34]`), RDD
+    * labels (`MapPartitionsRDD[56] at localCheckpoint at
+    * Bounded.scala:78`, the file name kept) and the random suffix of
+    * scratch directories (`/txtidx8841…` from `util.Scratch`). */
+  def maskPlan(plan: String): String = Seq(
+    """#\d+""" -> "#N",
+    """\[plan_id=\d+\]""" -> "[plan_id=N]",
+    """(\w+RDD)\[\d+\] at (\w+) at ([\w$]+\.scala):\d+""" -> "$1[N] at $2 at $3:N",
+    """(/[A-Za-z_]+)\d{8,}""" -> "$1N")
+    .foldLeft(plan) { case (s, (re, to)) => s.replaceAll(re, to) }
 }

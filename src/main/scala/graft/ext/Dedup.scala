@@ -39,6 +39,25 @@ final case class DedupPipeline(
 
 object Dedup {
 
+  /** Measured in-flight expansion of the gram-family kernels' widest
+    * shuffle relative to Catalyst's compressed-source size estimate —
+    * the `inflate` these entry points hand `ShuffleBudget.advise`.
+    * Decoded text (~2-4× vs snappy parquet) explodes into per-gram
+    * (hash, id, sz) rows (~10× the source text bytes), and the
+    * candidate stage fans each shared prefix gram into id-pair rows
+    * whose verify join ships two full shingle arrays — the round-8
+    * scale A/B located the spill knee there: the 128× jaccard probe
+    * (source estimate ~76 MB) needed ~256 reduce slots to shed its
+    * superlinear spill (52.8 → 29.7 s), i.e. an effective ~430×
+    * expansion against the 128 MiB/slot target; a round-9 same-day
+    * A/B at the same 128× cell re-confirmed ~256 slots as the
+    * operating point (fixed-32: 76.3 s, advised-125: 59.4 s,
+    * manual-256: 51.4 s — absolute numbers shifted by host conditions,
+    * ordering stable). 1024 lands the advice on it (AQE coalesces any
+    * over-provision down for free; an under-provision can never be
+    * raised at runtime). */
+  private[graft] val gramShuffleInflate = 1024L
+
   /** Corpus-size-derived MinHash-LSH geometry: (rowsPerBand, bands).
     *
     * Fixed geometry goes superlinear as the corpus grows: the band
@@ -62,25 +81,6 @@ object Dedup {
     * oracles for the dedup family are the exact O(n²) Jaccard joins —
     * geometry-independent — so the schedule can never affect
     * correctness, only candidate cost. */
-  /** Measured in-flight expansion of the gram-family kernels' widest
-    * shuffle relative to Catalyst's compressed-source size estimate —
-    * the `inflate` these entry points hand `ShuffleBudget.advise`.
-    * Decoded text (~2-4× vs snappy parquet) explodes into per-gram
-    * (hash, id, sz) rows (~10× the source text bytes), and the
-    * candidate stage fans each shared prefix gram into id-pair rows
-    * whose verify join ships two full shingle arrays — the round-8
-    * scale A/B located the spill knee there: the 128× jaccard probe
-    * (source estimate ~76 MB) needed ~256 reduce slots to shed its
-    * superlinear spill (52.8 → 29.7 s), i.e. an effective ~430×
-    * expansion against the 128 MiB/slot target; a round-9 same-day
-    * A/B at the same 128× cell re-confirmed ~256 slots as the
-    * operating point (fixed-32: 76.3 s, advised-125: 59.4 s,
-    * manual-256: 51.4 s — absolute numbers shifted by host conditions,
-    * ordering stable). 1024 lands the advice on it (AQE coalesces any
-    * over-provision down for free; an under-provision can never be
-    * raised at runtime). */
-  private[graft] val gramShuffleInflate = 1024L
-
   def lshGeometry(n: Long, threshold: Double = 0.6): (Int, Int) = {
     val octaves =
       math.ceil(math.log(math.max(n, 1L).toDouble / 100000.0) / math.log(4.0)).toInt
@@ -367,19 +367,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
-  /** Near-dup pairs BETWEEN two corpora — the incremental-ingest shape:
-    * a new batch is screened against the existing corpus WITHOUT the
-    * full self-join a from-scratch `nearDupPairs(old ∪ new)` would pay.
-    * Returns (id_new, id_old, jaccard) with exact Jaccard ≥ threshold.
-    *
-    * Cost at 100 TB: the existing corpus contributes only its
-    * (id, band, bh) index rows — the pre-bucketed index a production
-    * deployment keeps materialized from ingest to ingest — and the
-    * equi-join on (band, bh) touches only buckets the NEW batch
-    * occupies, so each day's work scales with the batch, not the
-    * corpus. Candidates cross corpora by construction (no id ordering
-    * needed); exact verification on the shingle sets decides, as
-    * everywhere in the dedup family. */
   /** The persistable dedup index of one corpus: the cached
     * (id, shingle-hash-set) relation and the (id, band, bh) LSH band
     * relation — what a production deployment materializes at ingest
@@ -435,6 +422,19 @@ object Dedup {
       .where(col("jaccard") >= threshold)
   }
 
+  /** Near-dup pairs BETWEEN two corpora — the incremental-ingest shape:
+    * a new batch is screened against the existing corpus WITHOUT the
+    * full self-join a from-scratch `nearDupPairs(old ∪ new)` would pay.
+    * Returns (id_new, id_old, jaccard) with exact Jaccard ≥ threshold.
+    *
+    * Cost at 100 TB: the existing corpus contributes only its
+    * (id, band, bh) index rows — the pre-bucketed index a production
+    * deployment keeps materialized from ingest to ingest — and the
+    * equi-join on (band, bh) touches only buckets the NEW batch
+    * occupies, so each day's work scales with the batch, not the
+    * corpus. Candidates cross corpora by construction (no id ordering
+    * needed); exact verification on the shingle sets decides, as
+    * everywhere in the dedup family. */
   def nearDupPairsAgainst(
       newDocs: DataFrame,
       oldDocs: DataFrame,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.io.Sinks
 import graft.ops.TextOps
 import graft.util.Bounded
 
@@ -26,6 +27,8 @@ import graft.util.Bounded
   *  - tf saturation + length norm: `tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl))`
   *    in per-mille floor arithmetic (k1 = 1.2, b = 0.75 as
   *    `k1X1000`/`bX1000`), `dl/avgdl` as `dl·N div Σdl`.
+  * The weight is written once ([[weightSql]]) for the three rankers
+  * (`bm25TopK`, `batchBm25TopK`, `indexTopK`) and their DuckDB replays.
   *
   * Scale shape (the point): the query terms are a FIXED tiny set, so
   *  - per-doc tf columns are map-only `size(filter(tokens, = term))`
@@ -49,6 +52,33 @@ object Search {
   val defaultTerms: Seq[String] = Seq("dup", "join", "vector")
   val defaultK: Int = 25
 
+  /** BM25's k1 = 1.2 and b = 0.75 in per-mille, shared by the engine
+    * and its oracle generators. */
+  val k1X1000: Long = 1200L
+  val bX1000: Long = 750L
+
+  /** Per-document `k1·(1-b+b·dl/avgdl)` in per-mille, over columns `dl`,
+    * `n_docs` and `sum_dl`. `div` is the dialect's integer division:
+    * `div` in Spark SQL, `//` in DuckDB — never Column `/`, which
+    * promotes to DOUBLE, whose rounding can disagree with DuckDB's
+    * exact `//` at the margins. */
+  private def kX1000Sql(div: String): String =
+    s"($k1X1000 * ((1000 - $bX1000) + ($bX1000 * dl * n_docs) $div sum_dl)) $div 1000"
+
+  /** The integer-BM25 weight of one (term, document): idf =
+    * floor(log2(2N/df)) via bin() times the per-mille tf saturation,
+    * over columns `tf`, `df` (named by the caller), `n_docs` and
+    * `k_x1000`; `div` as in [[kX1000Sql]]. */
+  private def weightSql(tf: String, df: String, div: String): String =
+    s"(length(bin(CAST((2 * n_docs) $div $df AS BIGINT))) - 1)" +
+      s" * (($tf * ${k1X1000 + 1000L} * 1000) $div ($tf * 1000 + k_x1000))"
+
+  /** `rel` with its `k_x1000` column, for [[weight]]. */
+  private def withKx1000(rel: DataFrame): DataFrame =
+    rel.withColumn("k_x1000", expr(kX1000Sql("div")))
+
+  private def weight(tf: String, df: String): Column = expr(weightSql(tf, df, "div"))
+
   /** SQL string literal for a query term in the generated oracle text:
     * doubles embedded single quotes so a term like `don't` produces a
     * valid (and correct) literal instead of breaking the oracle SQL.
@@ -63,9 +93,7 @@ object Search {
       idCol: String,
       textCol: String,
       terms: Seq[String],
-      k: Int,
-      k1X1000: Long = 1200L,
-      bX1000: Long = 750L): DataFrame = {
+      k: Int): DataFrame = {
     require(terms.nonEmpty && terms.size <= 64,
       s"query must carry 1..64 terms, got ${terms.size}")
     // a repeated term would be counted twice here (independent tf_i
@@ -89,25 +117,13 @@ object Search {
         sum(when(col(s"tf_$i") > 0, 1L).otherwise(0L)).as(s"df_$i"))
     val stats = base.agg(count(lit(1)).as("n_docs"), statsAggs: _*)
 
-    // integer BM25: idf = floor(log2(2N/df)) via bin(); tf term in
-    // per-mille floor arithmetic. `div` throughout, never Column `/`:
-    // the latter promotes to DOUBLE, whose rounding can disagree with
-    // DuckDB's exact `//` at the margins.
-    def idf(i: Int): Column =
-      (length(bin(expr(s"(2 * n_docs) div df_$i"))) - 1).cast("long")
-    def termScore(i: Int): Column = {
-      val tf = col(s"tf_$i")
-      val satX1000 =
-        expr(s"(tf_$i * ${k1X1000 + 1000L} * 1000) div (tf_$i * 1000 + k_x1000)")
-      when(tf > 0 && col(s"df_$i") > 0, idf(i) * satX1000).otherwise(0L)
-    }
+    def termScore(i: Int): Column =
+      when(col(s"tf_$i") > 0 && col(s"df_$i") > 0, weight(s"tf_$i", s"df_$i")).otherwise(0L)
     val nHits = terms.indices
       .map(i => when(col(s"tf_$i") > 0, 1L).otherwise(0L))
       .reduce(_ + _)
 
-    base.crossJoin(broadcast(stats))
-      .withColumn("k_x1000",
-        expr(s"($k1X1000 * ((1000 - $bX1000) + ($bX1000 * dl * n_docs) div sum_dl)) div 1000"))
+    withKx1000(base.crossJoin(broadcast(stats)))
       .select(col(idCol),
         terms.indices.map(termScore).reduce(_ + _).as("score"),
         nHits.as("n_hits"))
@@ -149,9 +165,7 @@ object Search {
       idCol: String,
       textCol: String,
       queries: Seq[(Long, Seq[String])] = defaultBatch,
-      k: Int = defaultK,
-      k1X1000: Long = 1200L,
-      bX1000: Long = 750L): DataFrame = {
+      k: Int = defaultK): DataFrame = {
     require(queries.nonEmpty && queries.size <= 4096,
       s"need 1..4096 queries, got ${queries.size}")
     require(queries.map(_._1).distinct.size == queries.size,
@@ -185,15 +199,11 @@ object Search {
       .groupBy(col(idCol), col("term"))
       .agg(first(col("dl")).as("dl"), count(lit(1)).as("tf"))
     val dfRel = tfRel.groupBy("term").agg(count(lit(1)).as("df"))
-    val scored = tfRel
-      .join(broadcast(qRel), "term")
-      .join(broadcast(dfRel), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("k_x1000",
-        expr(s"($k1X1000 * ((1000 - $bX1000) + ($bX1000 * dl * n_docs) div sum_dl)) div 1000"))
-      .withColumn("__ts",
-        (length(bin(expr("(2 * n_docs) div df"))) - 1).cast("long")
-          * expr(s"(tf * ${k1X1000 + 1000L} * 1000) div (tf * 1000 + k_x1000)"))
+    val scored = withKx1000(tfRel
+        .join(broadcast(qRel), "term")
+        .join(broadcast(dfRel), "term")
+        .crossJoin(broadcast(stats)))
+      .withColumn("__ts", weight("tf", "df"))
       .groupBy(col("qid"), col(idCol))
       .agg(sum(col("__ts")).as("score"), count(lit(1)).as("n_hits"))
       .where(col("score") > 0)
@@ -208,10 +218,8 @@ object Search {
   def batchBm25OracleSql(
       tokSql: String,
       queries: Seq[(Long, Seq[String])],
-      k: Int,
-      k1X1000: Long = 1200L,
-      bX1000: Long = 750L): String =
-    s"""WITH ${batchBm25CtesSql(tokSql, queries, k1X1000, bX1000)}
+      k: Int): String =
+    s"""WITH ${batchBm25CtesSql(tokSql, queries)}
        |SELECT qid, doc_id, score, n_hits, rn FROM r WHERE rn <= $k
        |ORDER BY qid, rn""".stripMargin
 
@@ -219,9 +227,7 @@ object Search {
     * share — ends with `r` = the full per-(qid, doc) ranking. */
   private[graft] def batchBm25CtesSql(
       tokSql: String,
-      queries: Seq[(Long, Seq[String])],
-      k1X1000: Long = 1200L,
-      bX1000: Long = 750L): String = {
+      queries: Seq[(Long, Seq[String])]): String = {
     val qValues = queries
       .flatMap { case (qid, ts) => ts.map(t => s"($qid, ${sqlLit(t)})") }
       .mkString(", ")
@@ -239,13 +245,12 @@ object Search {
        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
        |sc0 AS (
        |  SELECT q.qid, t.doc_id, t.tf, d.df, s.n_docs,
-       |         ($k1X1000 * ((1000 - $bX1000) + ($bX1000 * t.dl * s.n_docs) // s.sum_dl)) // 1000 AS k_x1000
+       |         ${kX1000Sql("//")} AS k_x1000
        |  FROM tf t JOIN q ON q.term = t.term JOIN df d ON d.term = t.term
        |  CROSS JOIN stats s),
        |sc AS (
        |  SELECT qid, doc_id,
-       |         sum((length(bin(CAST((2*n_docs) // df AS BIGINT))) - 1)
-       |             * ((tf * ${k1X1000 + 1000L} * 1000) // (tf * 1000 + k_x1000))) AS score,
+       |         sum(${weightSql("tf", "df", "//")}) AS score,
        |         count(*) AS n_hits
        |  FROM sc0 GROUP BY qid, doc_id),
        |r AS (
@@ -368,10 +373,8 @@ object Search {
       tokSql: String,
       terms: Seq[String],
       k: Int,
-      k1X1000: Long = 1200L,
-      bX1000: Long = 750L,
       fromSql: String = "documents"): String =
-    s"""WITH ${bm25CtesSql(tokSql, terms, k1X1000, bX1000, fromSql)}
+    s"""WITH ${bm25CtesSql(tokSql, terms, fromSql)}
        |SELECT doc_id, CAST(score AS BIGINT) AS score, CAST(n_hits AS BIGINT) AS n_hits
        |FROM scored WHERE score > 0
        |ORDER BY score DESC, doc_id LIMIT $k""".stripMargin
@@ -384,8 +387,6 @@ object Search {
   private def bm25CtesSql(
       tokSql: String,
       terms: Seq[String],
-      k1X1000: Long,
-      bX1000: Long,
       fromSql: String = "documents"): String = {
     val tfDefs = terms.indices.map { i =>
       s"len(list_filter(tk, x -> x = ${sqlLit(terms(i))})) AS tf_$i"
@@ -394,10 +395,7 @@ object Search {
       s"sum(CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END) AS df_$i"
     }.mkString(",\n|         ")
     val termScores = terms.indices.map { i =>
-      s"""CASE WHEN tf_$i > 0 AND df_$i > 0
-         |            THEN (length(bin(CAST((2*n_docs) // df_$i AS BIGINT))) - 1)
-         |                 * ((tf_$i * ${k1X1000 + 1000} * 1000) // (tf_$i * 1000 + k_x1000))
-         |            ELSE 0 END""".stripMargin
+      s"CASE WHEN tf_$i > 0 AND df_$i > 0 THEN ${weightSql(s"tf_$i", s"df_$i", "//")} ELSE 0 END"
     }.mkString(" +\n|       ")
     val hitFlags = terms.indices
       .map(i => s"CASE WHEN tf_$i > 0 THEN 1 ELSE 0 END").mkString(" + ")
@@ -414,7 +412,7 @@ object Search {
        |       $termScores AS score,
        |       $hitFlags AS n_hits
        |  FROM (SELECT base.*, stats.*,
-       |          ($k1X1000 * ((1000 - $bX1000) + ($bX1000 * dl * n_docs) // sum_dl)) // 1000 AS k_x1000
+       |          ${kX1000Sql("//")} AS k_x1000
        |        FROM base, stats))""".stripMargin
   }
 
@@ -494,8 +492,8 @@ object Search {
     * train-once/serve-many counterpart of `bm25TopK` (which bakes its
     * term set into the plan and re-scans the corpus per query), exactly
     * as `Similarity.writeAnnIndex` is the serving form of the inline
-    * ANN paths. Three all-integer parquet relations:
-    *  - `postings` (term, id, tf, dl) — one row per distinct term per
+    * ANN paths. Three all-integer parquet relations ([[indexCols]]):
+    *  - `postings` (term, id, dl, tf) — one row per distinct term per
     *    doc, range-partitioned AND sorted by term so parquet row-group
     *    min/max prune every term the query doesn't mention;
     *  - `term_df` (term, df) — the idf input;
@@ -510,13 +508,56 @@ object Search {
       idCol: String,
       textCol: String,
       path: String): Unit =
-    writeIndexRels(docs, idCol, textCol, path, "")
+    writeIndexRels(docs, idCol, textCol, path, delta = false)
 
-  /** Tokenize `docs` once and write the three index relations as
-    * `$path/<rel>$suffix`: range-sorted postings first, then `term_df`
-    * and `meta` derived from the WRITTEN postings as two concurrent
-    * jobs (§2.6). r13: term_df comes off a pruned (term) columnar scan
-    * of the compact postings instead of re-running the
+  /** The index's three relations, each with the one column order that
+    * every writer (build, update, compaction, purge) emits, all columns
+    * nullable ([[laidOut]]): a base and its deltas then carry one footer
+    * schema, and `Sinks.readParquet` reads them without an inference
+    * job. Each relation lives as a base directory `$path/<rel>` plus
+    * zero or more append-only `$path/<rel>_delta_N` directories that
+    * `updateTextIndex` adds and a compaction or purge folds back in. */
+  private val indexCols: Seq[(String, Seq[String])] = Seq(
+    "postings" -> Seq("term", "id", "dl", "tf"),
+    "term_df" -> Seq("term", "df"),
+    "meta" -> Seq("n_docs", "sum_dl"))
+  private val indexRels = indexCols.map(_._1)
+
+  /** `df` as relation `rel` is written: its column order, every column
+    * nullable, and postings range-partitioned and sorted by term. */
+  private def laidOut(rel: String, df: DataFrame): DataFrame = {
+    val out = df.select(indexCols.toMap.apply(rel).map(c =>
+      org.apache.spark.sql.GraftBridge.nullable(col(c)).as(c)): _*)
+    if (rel == "postings") out.repartitionByRange(col("term")).sortWithinPartitions("term")
+    else out
+  }
+
+  /** A staged write of relation `rel` for `Sinks.rewriteAndSwap`,
+    * published as `<rel><suffix>`. */
+  private def write(rel: String, suffix: String = "")(df: => DataFrame): (String, () => DataFrame) =
+    (rel + suffix) -> (() => laidOut(rel, df))
+
+  /** The one merge of `term_df`: base ∪ deltas (and a purge's -1 rows)
+    * summed per term. */
+  private def mergeTermDf(termDf: DataFrame): DataFrame =
+    termDf.groupBy("term").agg(sum(col("df")).as("df"))
+
+  /** The one merge of `meta`: base ∪ deltas summed to one row. */
+  private def mergeMeta(meta: DataFrame): DataFrame =
+    meta.agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
+
+  /** Rolls a crash-interrupted publish of the index at `path` forward,
+    * or clears its staged leftovers; every writer calls it first. */
+  private def recover(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    Sinks.recoverSwap(spark, path, indexRels)
+
+  /** Tokenize `docs` once and publish the three index relations as
+    * `$path/<rel>` (a build) or as the next `$path/<rel>_delta_N` (an
+    * update, N = max existing + 1; the relations advance in lockstep)
+    * in one `Sinks.rewriteAndSwap`: range-sorted postings first, then
+    * `term_df` and `meta` derived from the STAGED postings as two
+    * concurrent jobs (§2.6). r13: term_df comes off a pruned (term)
+    * columnar scan of the compact postings instead of re-running the
     * tokenize+explode+aggregate pipeline over the corpus. r14 (guide
     * §1.2 — remove passes): meta's tokenize pass is gone too. sum_dl
     * comes off the written postings' distinct (id, dl) rows (dl is
@@ -533,42 +574,32 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      suffix: String): Unit = {
+      delta: Boolean): Unit = {
+    val spark = docs.sparkSession
+    recover(spark, path)
+    val suffix =
+      if (!delta) ""
+      else "_delta_" + indexRels
+        .flatMap(rel => deltaDirs(spark, path, rel).map(_.split("_delta_").last.toInt))
+        .reduceOption(_ max _).map(_ + 1).getOrElse(0)
     val dl = graft.util.Par.widen(docs)
       .select(col(idCol).as("id"), TextOps.tokens(col(textCol)).as("tk"))
       .select(col("id"), size(col("tk")).cast("long").as("dl"), col("tk"))
-    val postings = dl
-      .select(col("id"), col("dl"), explode(col("tk")).as("term"))
-      .groupBy("term", "id", "dl").agg(count(lit(1)).as("tf"))
-    postings
-      .repartitionByRange(col("term")).sortWithinPartitions("term")
-      .write.mode("overwrite").parquet(s"$path/postings$suffix")
-    val written = graft.io.Sinks.readParquet(docs.sparkSession, s"$path/postings$suffix")
-    graft.util.Par.jobs(Seq(
-      () => written
-        .groupBy("term").agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$path/term_df$suffix"),
-      () => docs
-        .agg(count(lit(1)).as("n_docs"), count(col(textCol)).as("__nt"))
-        .crossJoin(broadcast(written.select("id", "dl").distinct()
-          .agg(sum(col("dl")).as("__sd"))))
-        .select(col("n_docs"),
-          when(col("__nt") > 0, coalesce(col("__sd"), lit(0L)))
-            .otherwise(lit(null).cast("long")).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$path/meta$suffix")))
+    lazy val written = Sinks.readParquet(spark, Sinks.staged(path, "postings" + suffix))
+    Sinks.rewriteAndSwap(spark, path)(
+      Seq(write("postings", suffix)(dl
+        .select(col("id"), col("dl"), explode(col("tk")).as("term"))
+        .groupBy("term", "id", "dl").agg(count(lit(1)).as("tf")))),
+      Seq(
+        write("term_df", suffix)(written.groupBy("term").agg(count(lit(1)).as("df"))),
+        write("meta", suffix)(docs
+          .agg(count(lit(1)).as("n_docs"), count(col(textCol)).as("__nt"))
+          .crossJoin(broadcast(written.select("id", "dl").distinct()
+            .agg(sum(col("dl")).as("__sd"))))
+          .select(col("n_docs"),
+            when(col("__nt") > 0, coalesce(col("__sd"), lit(0L)))
+              .otherwise(lit(null).cast("long")).as("sum_dl")))))
   }
-
-  /** The index's three relation names; each lives as a base directory
-    * `$path/<rel>` plus zero or more append-only `$path/<rel>_delta_N`
-    * directories that `updateTextIndex` adds and `compactTextIndex`
-    * folds back into the base. */
-  private val indexRels = Seq("postings", "term_df", "meta")
-
-  private def hadoopFs(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Existing delta directories of one relation, `$path/<rel>_delta_N`,
     * in generation order. Listing metadata only — O(deltas). */
@@ -577,7 +608,7 @@ object Search {
       path: String,
       rel: String): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)
-    val f = hadoopFs(spark, path)
+    val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val pat = s"${rel}_delta_(\\d+)".r
     if (!f.exists(root)) Seq.empty
     else f.listStatus(root).toSeq
@@ -596,18 +627,20 @@ object Search {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       rel: String): DataFrame =
-    graft.io.Sinks.readParquet(spark, (s"$path/$rel" +: deltaDirs(spark, path, rel)): _*)
+    Sinks.readParquet(spark, (s"$path/$rel" +: deltaDirs(spark, path, rel)): _*)
 
   /** Incremental index maintenance: fold a document batch into a
     * persisted `writeTextIndex` artifact without re-reading the corpus
     * OR the index — the daily-ingest twin of `Dedup`'s incremental
     * screen. Append-only: the batch's postings, per-term df, and 1-row
-    * meta are each written as a NEW `<rel>_delta_N` directory (postings
+    * meta become a NEW `<rel>_delta_N` generation (postings
     * term-range-sorted like the base, so row-group pruning works on
-    * deltas too); nothing under the existing base or earlier deltas is
-    * opened, let alone rewritten (spec-pinned byte-identical). Cost is
-    * O(batch) — a daily fold-in stays daily-sized while the indexed
-    * corpus grows without bound. `indexTopK` serves from base ∪ deltas
+    * deltas too), published in one journaled swap after all three are
+    * written, so a reader sees the whole generation or none of it;
+    * nothing under the existing base or earlier deltas is opened, let
+    * alone rewritten (spec-pinned byte-identical). Cost is O(batch) — a
+    * daily fold-in stays daily-sized while the indexed corpus grows
+    * without bound. `indexTopK` serves from base ∪ deltas
     * bit-identically to an index built from scratch on the union
     * (spec-pinned); `compactTextIndex` folds accumulated deltas back
     * into the base when their file count starts to matter (the
@@ -619,45 +652,48 @@ object Search {
       path: String,
       batch: DataFrame,
       idCol: String,
-      textCol: String): Unit = {
-    // next generation number = max existing + 1, per relation listing
-    // (metadata-only); the three relations advance in lockstep
-    val gen = indexRels
-      .flatMap(rel => deltaDirs(spark, path, rel)
-        .map(_.split("_delta_").last.toInt))
-      .reduceOption(_ max _).map(_ + 1).getOrElse(0)
-    writeIndexRels(batch, idCol, textCol, path, s"_delta_$gen")
-  }
+      textCol: String): Unit =
+    writeIndexRels(batch, idCol, textCol, path, delta = true)
 
   /** Fold accumulated deltas back into the base relations — the
     * periodic consolidation that keeps serve-side file counts bounded
     * (run it when deltas accumulate, not per fold-in; fold-ins stay
-    * O(batch)). Each merged relation is written to a `.compacting`
-    * sibling FIRST and only then swapped in (all three writes complete
-    * before any delete), so a crash leaves stale extra directories,
-    * never a truncated index. No-op when there are no deltas. */
+    * O(batch)). It is the purge's rewrite with nothing deleted
+    * ([[rewriteIndex]]). No-op when there are no deltas. */
   def compactTextIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     // roll forward (or clear) any crash-interrupted rewrite BEFORE
     // reading: a mixed-relation state would silently mis-compact
-    graft.io.Sinks.recoverSwap(spark, path, indexRels)
+    recover(spark, path)
     if (indexRels.forall(rel => deltaDirs(spark, path, rel).isEmpty)) return
-    // three independent merged rewrites — concurrent jobs (guide §2.6),
-    // swap after all complete, same as the purge path
-    graft.util.Par.jobs(Seq(
-      () => readRel(spark, path, "postings")
-        .repartitionByRange(col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(s"$path/postings.compacting"),
-      () => readRel(spark, path, "term_df")
-        .groupBy("term").agg(sum(col("df")).as("df"))
-        .write.mode("overwrite").parquet(s"$path/term_df.compacting"),
-      () => readRel(spark, path, "meta")
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-        .write.mode("overwrite").parquet(s"$path/meta.compacting")))
-    graft.io.Sinks.swapCompacting(spark, path, indexRels,
-      indexRels.flatMap(deltaDirs(spark, path, _)))
+    rewriteIndex(spark, path, readRel(spark, path, "postings"), None, identity, Nil)
   }
+
+  /** The one rewrite of the index, shared by compaction and purge: base
+    * ∪ deltas folded into new bases, published with the deltas dropped
+    * in one `Sinks.rewriteAndSwap` — the three writes are concurrent
+    * jobs and nothing swaps in before all complete, so a crash leaves
+    * the index before or after the rewrite, never a mix. `postings` is
+    * what the new postings hold; each row of `gone` (a purge's deleted
+    * postings sliver) takes 1 off its term's df, and terms reaching 0
+    * disappear, as a rebuild would have them; `decMeta` subtracts from
+    * the merged meta; `alongside` jobs run beside the writes, and their
+    * failure stops the publish. */
+  private def rewriteIndex(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      postings: => DataFrame,
+      gone: Option[DataFrame],
+      decMeta: DataFrame => DataFrame,
+      alongside: Seq[() => Unit]): Unit =
+    Sinks.rewriteAndSwap(spark, path,
+        drops = indexRels.flatMap(deltaDirs(spark, path, _)), alongside = alongside)(Seq(
+      write("postings")(postings),
+      write("term_df")(mergeTermDf((readRel(spark, path, "term_df") +:
+          gone.toSeq.map(_.select(col("term"), lit(-1L).as("df")))).reduce(_ unionByName _))
+        .where(col("df") > 0)),
+      write("meta")(decMeta(mergeMeta(readRel(spark, path, "meta"))))))
 
   /** Right-to-be-forgotten propagation into the persisted index: drop
     * every trace of `deleteIds` from the three relations WITHOUT
@@ -686,15 +722,13 @@ object Search {
     * is a no-op that runs no job and leaves the index files as they
     * are (no rewrite, so no compaction either). The deleted docs'
     * postings sliver is read once too (one job), and the conflict
-    * check and decrements run on the driver. Then one pass over base ∪
-    * delta postings (the rewrite without the deleted ids, which also
-    * folds deltas — a purge IS a compaction); term_df/meta rewrites
-    * touch O(terms) and 1-row relations. Past `Bounded.Vectors` ids
-    * or sliver rows, the ids are a broadcast distributed `distinct`,
-    * the sliver a cached distributed relation, and the check and
-    * decrements Spark jobs. Crash discipline identical to
-    * `compactTextIndex`: all three `.compacting` writes complete
-    * before any delete/rename. */
+    * check and decrements run on the driver. Then the index rewrite
+    * ([[rewriteIndex]]: one pass over base ∪ delta postings without
+    * the deleted ids, which also folds deltas — a purge IS a
+    * compaction); term_df/meta rewrites touch O(terms) and 1-row
+    * relations. Past `Bounded.Vectors` ids or sliver rows, the ids are
+    * a broadcast distributed `distinct`, the sliver a cached
+    * distributed relation, and the check and decrements Spark jobs. */
   def purgeTextIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -720,7 +754,7 @@ object Search {
     // computing the deleted sliver: after a half-applied swap the
     // postings may already be purged, and decrements recomputed from
     // them would be empty while term_df/meta still carry the old mass
-    graft.io.Sinks.recoverSwap(spark, path, indexRels)
+    recover(spark, path)
     val post = readRel(spark, path, "postings")
     // the deleted docs' postings sliver — everything the decrements need
     val sliver = del.semi(post).select("id", "term", "dl")
@@ -748,16 +782,15 @@ object Search {
           val gone = scope.cache(sliver)
           // r14 wave 4 (A/B-measured): the conflict CHECK rides the
           // same concurrent batch as the three rewrites instead of
-          // gating them serially — `Par.jobs` rethrows its failure
-          // after all tasks complete and BEFORE the swap, so a
-          // conflicting index still never swaps in (the completed
-          // `.compacting` siblings are exactly the crash residue
-          // `recoverSwap` already clears on the next run). Trade-off:
-          // consumers may race the `gone` cache and duplicate its
-          // postings scan (thread-safe, results identical) — the
-          // matched A/B read stream_index_purge 4.4-4.6 s with the
-          // overlap vs 5.1-5.2 s serial (two purge triggers amortize
-          // it) and privacy_purge_text a wash inside its noise band.
+          // gating them serially — the rewrite's publish waits for it,
+          // so a conflicting index still never swaps in (the completed
+          // staged siblings are exactly the crash residue the next
+          // run's recovery clears). Trade-off: consumers may race the
+          // `gone` cache and duplicate its postings scan (thread-safe,
+          // results identical) — the matched A/B read
+          // stream_index_purge 4.4-4.6 s with the overlap vs 5.1-5.2 s
+          // serial (two purge triggers amortize it) and
+          // privacy_purge_text a wash inside its noise band.
           (gone,
             Seq(() => conflict(gone.select("id", "dl").distinct()
               .groupBy("id").agg(count(lit(1)).as("n"))
@@ -767,26 +800,7 @@ object Search {
               .select((col("n_docs") - col("nd")).as("n_docs"),
                 (col("sum_dl") - col("sd")).as("sum_dl")))
       }
-    // the three .compacting rewrites are independent of each other
-    // (disjoint outputs), so they run as concurrent jobs (guide §2.6);
-    // the swap still happens only after ALL complete, so the crash
-    // discipline is unchanged. term_df sums one -1 per sliver row into
-    // its own merge; terms reaching 0 disappear, as a rebuild would
-    // have them.
-    graft.util.Par.jobs(check ++ Seq(
-      () => del.anti(post)
-        .repartitionByRange(col("term")).sortWithinPartitions("term")
-        .write.mode("overwrite").parquet(s"$path/postings.compacting"),
-      () => readRel(spark, path, "term_df").select("term", "df")
-        .unionByName(gone.select(col("term"), lit(-1L).as("df")))
-        .groupBy("term").agg(sum(col("df")).as("df"))
-        .where(col("df") > 0)
-        .write.mode("overwrite").parquet(s"$path/term_df.compacting"),
-      () => decMeta(readRel(spark, path, "meta")
-          .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl")))
-        .write.mode("overwrite").parquet(s"$path/meta.compacting")))
-    graft.io.Sinks.swapCompacting(spark, path, indexRels,
-      indexRels.flatMap(deltaDirs(spark, path, _)))
+    rewriteIndex(spark, path, del.anti(post), Some(gone), decMeta, check)
   }
 
   /** Serve a bag-of-words query from a persisted `writeTextIndex`
@@ -797,36 +811,29 @@ object Search {
     * The delta union costs nothing at serve time: postings plan as ONE
     * multi-path scan with the `IN(terms)` filter pushed into every
     * file, the df sum-merge runs over ≤ |terms|·(1+deltas) pushed-
-    * filtered rows, and the meta sum over 1+deltas rows. Output column
-    * is named `idColOut`. */
+    * filtered rows, and the meta sum over 1+deltas rows. A publish that
+    * a crash interrupted is rolled forward first (`Sinks.recoverSwap`,
+    * under its single-writer assumption). Output column is named
+    * `idColOut`. */
   def indexTopK(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       terms: Seq[String],
       k: Int,
-      idColOut: String = "doc_id",
-      k1X1000: Long = 1200L,
-      bX1000: Long = 750L): DataFrame = {
+      idColOut: String = "doc_id"): DataFrame = {
     require(terms.nonEmpty && terms.size <= 64,
       s"query must carry 1..64 terms, got ${terms.size}")
     // same repeated-term rejection as bm25TopK: the isin filter below
     // would dedup what the scan form counts twice
     require(terms.distinct.size == terms.size,
       s"query terms must be distinct, got $terms")
+    Sinks.recoverSwap(spark, Sinks.swapJournal(path))
     val p = readRel(spark, path, "postings")
       .where(col("term").isin(terms: _*))
-    val dfs = readRel(spark, path, "term_df")
-      .where(col("term").isin(terms: _*))
-      .groupBy("term").agg(sum(col("df")).as("df"))
-    val meta = readRel(spark, path, "meta")
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    p.join(broadcast(dfs), "term")
-      .crossJoin(broadcast(meta))
-      .withColumn("k_x1000",
-        expr(s"($k1X1000 * ((1000 - $bX1000) + ($bX1000 * dl * n_docs) div sum_dl)) div 1000"))
-      .withColumn("idf", (length(bin(expr("(2 * n_docs) div df"))) - 1).cast("long"))
-      .withColumn("s",
-        expr(s"idf * ((tf * ${k1X1000 + 1000L} * 1000) div (tf * 1000 + k_x1000))"))
+    val dfs = mergeTermDf(readRel(spark, path, "term_df").where(col("term").isin(terms: _*)))
+    val meta = mergeMeta(readRel(spark, path, "meta"))
+    withKx1000(p.join(broadcast(dfs), "term").crossJoin(broadcast(meta)))
+      .withColumn("s", weight("tf", "df"))
       .groupBy(col("id"))
       .agg(sum(col("s")).as("score"), count(lit(1)).as("n_hits"))
       .where(col("score") > 0)
@@ -846,10 +853,8 @@ object Search {
       queryVecId: Long = defaultQueryVecId,
       k: Int = defaultK,
       legK: Int = defaultK,
-      rrfK: Long = defaultRrfK,
-      k1X1000: Long = 1200L,
-      bX1000: Long = 750L): String =
-    s"""WITH ${bm25CtesSql(tokSql, terms, k1X1000, bX1000)},
+      rrfK: Long = defaultRrfK): String =
+    s"""WITH ${bm25CtesSql(tokSql, terms)},
        |lex AS (
        |  SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS lex_rank
        |  FROM (SELECT doc_id, score FROM scored WHERE score > 0

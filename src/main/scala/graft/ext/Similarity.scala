@@ -1682,12 +1682,17 @@ object Similarity {
       () => index.codes.write.mode("overwrite").parquet(s"$dir/codes")))
   }
 
-  def readAnnIndex(spark: org.apache.spark.sql.SparkSession, dir: String): AnnIndex =
+  /** The four index relations under `dir`, after rolling forward a
+    * publish that a crash interrupted (`Sinks.recoverSwap`, under its
+    * single-writer assumption). */
+  def readAnnIndex(spark: org.apache.spark.sql.SparkSession, dir: String): AnnIndex = {
+    graft.io.Sinks.recoverSwap(spark, graft.io.Sinks.swapJournal(dir))
     AnnIndex(
       graft.io.Sinks.readParquet(spark, s"$dir/coarse"),
       graft.io.Sinks.readParquet(spark, s"$dir/lists"),
       graft.io.Sinks.readParquet(spark, s"$dir/book"),
       graft.io.Sinks.readParquet(spark, s"$dir/codes"))
+  }
 
   /** Incremental ANN index maintenance — the daily-ingest twin of
     * `Search.updateTextIndex` for embeddings: encode a vector batch
@@ -1744,12 +1749,11 @@ object Similarity {
     * assignment/encode ran only over the retained corpus under the SAME
     * pinned quantizers (`privacy_purge_ann`'s oracle replays exactly
     * that), and a purged id can never surface: it is absent from every
-    * inverted list and every code row. Rewrites land as `.compacting`
-    * siblings first and swap in through `Sinks.swapCompacting`
-    * (park-old / rename-in / drop-old — no window ever holds the only
-    * copy of a relation). The rewrite also folds accumulated
-    * append-part files, so a purge doubles as the small-file
-    * compaction pass.
+    * inverted list and every code row. The two rewrites publish through
+    * `Sinks.rewriteAndSwap` (staged siblings, then one journaled swap —
+    * no window ever holds the only copy of a relation). The rewrite
+    * also folds accumulated append-part files, so a purge doubles as
+    * the small-file compaction pass.
     *
     * Cost: the delete ids are read once (`Bounded.Keys`: one job, none
     * for a LocalRelation) and dropped by an `IN` filter; an empty set
@@ -1767,13 +1771,8 @@ object Similarity {
     // roll forward (or clear) any crash-interrupted rewrite first —
     // the same mixed-relation hazard as the text-index purge
     graft.io.Sinks.recoverSwap(spark, dir, Seq("lists", "codes"))
-    // two independent rewrites — concurrent jobs (guide §2.6); the
-    // swap still waits for both, so the crash discipline (no window
-    // holds the only copy) is unchanged
-    graft.util.Par.jobs(Seq("lists", "codes").map(rel =>
-      () => del.anti(graft.io.Sinks.readParquet(spark, s"$dir/$rel"))
-        .write.mode("overwrite").parquet(s"$dir/$rel.compacting")))
-    graft.io.Sinks.swapCompacting(spark, dir, Seq("lists", "codes"))
+    graft.io.Sinks.rewriteAndSwap(spark, dir)(Seq("lists", "codes").map(rel =>
+      rel -> (() => del.anti(graft.io.Sinks.readParquet(spark, s"$dir/$rel")))))
   }
 
   /** Serve one probe batch from a prebuilt index — the per-query cost a

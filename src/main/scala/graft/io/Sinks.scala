@@ -135,9 +135,12 @@ object Sinks {
 
   /** Versions currently committed under `path` (ascending) — one
     * directory listing, the same metadata read every planner pass
-    * pays. After `compactVersions` the minimum is the retention
-    * horizon: history below it no longer exists. */
+    * pays, after [[recoverSwap]] of the table's journal. After
+    * `compactVersions` the minimum is the retention horizon: history
+    * below it no longer exists. */
   def committedVersions(spark: SparkSession, path: String): Seq[Long] = {
+    // a crashed publish (compactVersions) is rolled forward first
+    recoverSwap(spark, journalBeside(path))
     val dir = new Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) Seq.empty
@@ -243,6 +246,7 @@ object Sinks {
   def scd2History(spark: SparkSession, path: String, keyCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{col, lead, not}
+    recoverSwap(spark, journalBeside(path))
     val all = spark.read.parquet(path)
       .withColumn("eff_from", col("__v").cast("long"))
     val w = Window.partitionBy(col(keyCol)).orderBy(col("eff_from"))
@@ -316,14 +320,41 @@ object Sinks {
       .drop("__old_here", "__new_here")
   }
 
-  /** Swap freshly-written `<rel>.compacting` directories into place —
-    * the index case of the general [[swapCompacting]] below, used by
-    * every index-artifact rewrite (text-index compact/purge, ANN purge):
-    * each rel moves `<root>/<rel>.compacting` onto `<root>/<rel>`,
-    * parking the base at `<root>/<rel>.old`, then `extraDirs` (delta
-    * directories an index rewrite also folds in) are dropped. The
-    * journal is `<root>/_swap_inprogress`, holding one `rel <rel>` line
-    * per relation. */
+  /** The one rewrite of an index artifact (text index build, update,
+    * compaction and purge; ANN purge): each phase writes its relations
+    * to their staged siblings ([[staged]], `<root>/<rel>.compacting`)
+    * as concurrent jobs (guide §2.6), the `alongside` jobs beside the
+    * first phase, and a later phase may read what an earlier one
+    * staged. Then ONE journaled [[swapCompacting]] (the index form
+    * below) moves every staged relation onto `<root>/<rel>` and drops
+    * `drops`. A failed write or `alongside` job throws before the
+    * publish and leaves the artifact as it was; its staged siblings are
+    * overwritten by the next rewrite of the same relations, and
+    * `recoverSwap(spark, root, rels)` — which callers run before they
+    * read — clears those of `rels`. */
+  def rewriteAndSwap(
+      spark: SparkSession,
+      root: String,
+      drops: Seq[String] = Nil,
+      alongside: Seq[() => Unit] = Nil)(phases: Seq[(String, () => DataFrame)]*): Unit = {
+    for ((writes, i) <- phases.zipWithIndex)
+      graft.util.Par.jobs((if (i == 0) alongside else Nil) ++ writes.map { case (rel, df) =>
+        () => df().write.mode("overwrite").parquet(staged(root, rel))
+      })
+    swapCompacting(spark, root, phases.flatten.map(_._1), drops)
+  }
+
+  /** Where [[rewriteAndSwap]] stages relation `rel` of the artifact at
+    * `root`. */
+  private[graft] def staged(root: String, rel: String): String = s"$root/$rel.compacting"
+
+  /** Swap staged `<rel>.compacting` directories into place — the index
+    * case of the general [[swapCompacting]] below: each rel moves
+    * `<root>/<rel>.compacting` onto `<root>/<rel>`, parking the base at
+    * `<root>/<rel>.old`, then `extraDirs` (delta directories an index
+    * rewrite also folds in) are dropped. The journal is
+    * [[swapJournal]]`(root)`, holding one `rel <rel>` line per
+    * relation. */
   def swapCompacting(
       spark: SparkSession,
       root: String,
@@ -381,7 +412,8 @@ object Sinks {
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def swapJournal(root: String): Path =
+  /** The journal of an index artifact's publishes. */
+  private[graft] def swapJournal(root: String): Path =
     new Path(s"$root/_swap_inprogress")
 
   /** Last line of a fully-written swap journal; a journal missing it is
@@ -393,11 +425,12 @@ object Sinks {
   private final case class Move(from: Path, to: Path, park: Path)
 
   private def relMove(root: Path, rel: String): Move =
-    Move(new Path(root, s"$rel.compacting"), new Path(root, rel), new Path(root, s"$rel.old"))
+    Move(new Path(staged(root.toString, rel)), new Path(root, rel), new Path(root, s"$rel.old"))
 
-  /** The moves and drops of journal lines: `rel <rel>` (relative to the
-    * journal's directory), `move <from>\t<to>`, `extra <dir>`; other
-    * lines (the sentinel, a torn tail) carry none. */
+  /** The moves and drops of journal lines: `move <from>\t<to>`,
+    * `extra <dir>`, and `rel <rel>` (`<rel>.compacting` onto `<rel>`,
+    * relative to the journal's directory); other lines (the sentinel, a
+    * torn tail) carry none. */
   private def steps(journal: Path, lines: Seq[String]): (Seq[Move], Seq[Path]) = (
     lines.collect {
       case l if l.startsWith("rel ") => relMove(journal.getParent, l.stripPrefix("rel "))
@@ -473,30 +506,38 @@ object Sinks {
     if (fs.exists(m.park)) fs.delete(m.park, true)
   }
 
-  /** Crash recovery for the index form of [[swapCompacting]] —
-    * idempotent; every compact/purge entry point calls this before
-    * reading the index. It is the general `recoverSwap(spark, journal)`
-    * of `<root>/_swap_inprogress`, plus a clean-up when no journal
-    * commits a publish: any leftover `.compacting`/`.old` siblings of
-    * `rels` are then from a crash BEFORE the swap began — every base is
-    * still the pre-rewrite original — so they are deleted (after
-    * restoring `.old` to base if base is somehow absent) and the caller
-    * recomputes from a consistent base. Returns true when an
-    * interrupted swap was completed (the caller's rewrite is then
-    * already applied). */
+  /** Crash recovery for [[rewriteAndSwap]] — idempotent; every index
+    * writer calls this before reading the index. It is the general
+    * `recoverSwap(spark, journal)` of [[swapJournal]]`(root)`, plus a
+    * clean-up when no journal commits a publish: any leftover
+    * `.compacting`/`.old` siblings of `rels` are then from a crash
+    * BEFORE the swap began — every base is still the pre-rewrite
+    * original — so they are deleted (after restoring `.old` to base if
+    * base is somehow absent) and the caller recomputes from a
+    * consistent base. Returns true when an interrupted swap was
+    * completed (the caller's rewrite is then already applied). */
   def recoverSwap(spark: SparkSession, root: String, rels: Seq[String]): Boolean =
     recover(fsOf(spark, new Path(root)), swapJournal(root), rels.map(relMove(new Path(root), _)))
 
   /** Crash recovery for [[swapCompacting]] — idempotent; every writer
-    * calls it on its journal before it reads. With a journal on disk,
-    * the interrupted publish is rolled FORWARD: the journal is only
-    * ever written after every replacement verified complete, so
+    * calls it on its journal before it reads, and so does every reader
+    * before it lists or reads (`committedVersions` and through it
+    * `readSnapshotAt`/`snapshotDiff`, `scd2History`,
+    * `Search.indexTopK`, `Similarity.readAnnIndex`). With a journal on
+    * disk, the interrupted publish is rolled FORWARD: the journal is
+    * only ever written after every replacement verified complete, so
     * finishing the remaining moves and drops reaches exactly the state
     * the crashed publish was committing. A journal MISSING its COMMIT
     * sentinel is a torn write from a crash before any rename — it is
     * discarded and nothing else changes (a leftover replacement is
     * overwritten by the writer's next run). Returns true when an
-    * interrupted publish was completed. */
+    * interrupted publish was completed.
+    *
+    * Single-writer assumption: an artifact has one writer at a time,
+    * and its reads never overlap a write in progress. A reader that
+    * ran beside a live publish would find its committed journal and
+    * finish the publish under the writer; recovery is only safe once
+    * the writer that owned the journal is gone. */
   def recoverSwap(spark: SparkSession, journal: Path): Boolean =
     recover(fsOf(spark, journal), journal, Nil)
 

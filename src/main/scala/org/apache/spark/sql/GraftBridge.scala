@@ -10,6 +10,12 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** `c` declared nullable, whatever Catalyst proves: the written
+    * parquet schema then says nullable however the value was computed
+    * (a `count` is non-null, the same column read back is not). */
+  def nullable(c: Column): Column =
+    column(org.apache.spark.sql.catalyst.expressions.KnownNullable(expression(c)))
+
   /** Logical plan of a DataFrame / DataFrame from a logical plan — for
     * custom operators (LogicalPlan + Strategy + SparkPlan). */
   def plan(df: Dataset[Row]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

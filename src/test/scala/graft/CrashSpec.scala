@@ -188,8 +188,9 @@ class CrashSpec extends SparkSpec {
     assert(points == 5)
   }
 
-  test("compactVersions: every crash point leaves the commit log or its folded form") {
-    val points = crashAtEveryStep { d =>
+  /** The compactVersions case; `recover` runs after each crash. */
+  private def compactVersionsPoints(recover: String => Unit): Int =
+    crashAtEveryStep { d =>
       val t = s"$d/tbl"
       io.Sinks.writeVersion(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"), t, 0)
       io.Sinks.writeVersion(Seq((1L, "a1", false), (2L, "", true)).toDF("k", "s", "__deleted"), t, 1)
@@ -198,14 +199,21 @@ class CrashSpec extends SparkSpec {
       io.Sinks.writeVersion(Seq((2L, "b2", false), (4L, "d", false), (1L, "", true))
         .toDF("k", "s", "__deleted"), t, 2)
       io.Sinks.writeVersion(Seq((3L, "", true)).toDF("k", "s", "__deleted"), t, 3)
-    }(d => io.Sinks.compactVersions(spark, s"$d/tbl", upTo = 2, keyCol = "k"))(
-      d => recoverBeside(s"$d/tbl")) { d =>
+    }(d => io.Sinks.compactVersions(spark, s"$d/tbl", upTo = 2, keyCol = "k"))(recover) { d =>
       val t = s"$d/tbl"
       (io.Sinks.committedVersions(spark, t),
         Seq(2L, 3L).map(v => rows(io.Sinks.readSnapshotAt(spark, t, v, "k"))))
     }
+
+  test("compactVersions: every crash point leaves the commit log or its folded form") {
     // two versions below the horizon dropped
-    assert(points == 7)
+    assert(compactVersionsPoints(d => recoverBeside(s"$d/tbl")) == 7)
+  }
+
+  test("compactVersions: with no explicit recovery, the readers roll the crashed publish forward") {
+    // without it, a folded base installed beside the versions it
+    // replaces revives key 1 at readSnapshotAt(2)
+    assert(compactVersionsPoints(_ => ()) == 7)
   }
 
   test("mvMaintainApply: every crash point leaves a view that the re-sent batch brings to the head") {
@@ -250,26 +258,104 @@ class CrashSpec extends SparkSpec {
     assert(points == 14)
   }
 
-  test("purgeTextIndex: every crash point serves from the index before or after the purge") {
+  private def purgeTextPoints(recover: String => Unit): Int = {
     val del = io.Tables(spark, sf, "documents")
       .where(pmod(col("doc_id"), lit(37)) === 3).select("doc_id")
-    val points = crashAtEveryStep(textIndex)(Search.purgeTextIndex(spark, _, del, "doc_id"))(
-      io.Sinks.recoverSwap(spark, _, textRels))(served)
-    assert(points == 14)
+    crashAtEveryStep(textIndex)(Search.purgeTextIndex(spark, _, del, "doc_id"))(recover)(served)
   }
 
-  test("purgeAnnIndex: every crash point serves from the index before or after the purge") {
+  test("purgeTextIndex: every crash point serves from the index before or after the purge") {
+    assert(purgeTextPoints(io.Sinks.recoverSwap(spark, _, textRels)) == 14)
+  }
+
+  test("purgeTextIndex: with no explicit recovery, indexTopK serves from the index before or after the purge") {
+    assert(purgeTextPoints(_ => ()) == 14)
+  }
+
+  test("updateTextIndex: every crash point serves the index without or with the whole new generation") {
+    val docs = io.Tables(spark, sf, "documents")
+    val points = crashAtEveryStep(
+      Search.writeTextIndex(docs.where(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", _))(
+      // an ingest re-sends a batch only when its generation is not in
+      // the index: a re-sent update would fold it in twice
+      d => if (Search.deltaDirs(spark, d, "postings").isEmpty)
+        Search.updateTextIndex(spark, d, docs.where(pmod(col("doc_id"), lit(5)) === 0),
+          "doc_id", "text"))(
+      io.Sinks.recoverSwap(spark, _, textRels))(served)
+    // three moves onto absent targets: the journal's create, three
+    // renames, the journal's delete
+    assert(points == 5)
+  }
+
+  test("updateTextIndex: a refused term_df write publishes nothing, and a retry completes") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.refusedf.impl", classOf[RefuseTermDfFs].getName)
+    conf.setBoolean("fs.refusedf.impl.disable.cache", true)
+    val docs = io.Tables(spark, sf, "documents")
+    val batch = docs.where(pmod(col("doc_id"), lit(5)) === 0)
+    try withTempDir("refusedf") { tmp =>
+      val (p, full) = (s"refusedf://$tmp/p", s"$tmp/full")
+      Search.writeTextIndex(docs.where(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", p)
+      Search.writeTextIndex(docs, "doc_id", "text", full)
+      val before = served(p)
+      RefuseTermDfFs.refusing = true
+      try intercept[Exception](Search.updateTextIndex(spark, p, batch, "doc_id", "text"))
+      finally RefuseTermDfFs.refusing = false
+      // the postings and meta written beside the refused term_df are
+      // not served
+      assert(served(p) == before)
+      Search.updateTextIndex(spark, p, batch, "doc_id", "text")
+      assert(served(p) == ((served(full)._1, Seq(1, 1, 1))))
+    } finally {
+      conf.unset("fs.refusedf.impl")
+      conf.unset("fs.refusedf.impl.disable.cache")
+    }
+  }
+
+  private def purgeAnnPoints(recover: String => Unit): Int = {
     val emb = io.Tables(spark, sf, "embeddings")
     val del = pmod(col("vec_id"), lit(37)) === 3
-    val points = crashAtEveryStep(
+    crashAtEveryStep(
       d => Similarity.writeAnnIndex(Similarity.annIndex(emb, "vec_id", "embedding"), d))(
       Similarity.purgeAnnIndex(spark, _, emb.where(del).select("vec_id"), "vec_id"))(
-      io.Sinks.recoverSwap(spark, _, Seq("lists", "codes"))) { d =>
+      recover) { d =>
       val index = Similarity.readAnnIndex(spark, d)
       (rows(index.lists), Similarity.probeIndex(index, emb.where(!del), "vec_id", "embedding",
         probeFilter = col("vec_id") < 10, k = 10).collect().map(_.toSeq).toSet)
     }
-    // two moves, no drops
-    assert(points == 8)
   }
+
+  test("purgeAnnIndex: every crash point serves from the index before or after the purge") {
+    // two moves, no drops
+    assert(purgeAnnPoints(io.Sinks.recoverSwap(spark, _, Seq("lists", "codes"))) == 8)
+  }
+
+  test("purgeAnnIndex: with no explicit recovery, readAnnIndex serves from the index before or after the purge") {
+    assert(purgeAnnPoints(_ => ()) == 8)
+  }
+}
+
+/** Local filesystem under the `refusedf://` scheme that, while
+  * `RefuseTermDfFs.refusing` is set, throws on every create and mkdirs
+  * of a path naming a `term_df` directory. */
+class RefuseTermDfFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refusedf:///")
+  override def getScheme: String = "refusedf"
+  private def check(p: Path): Unit =
+    if (RefuseTermDfFs.refusing && p.toString.contains("/term_df"))
+      throw new java.io.IOException(s"refusedf: refusing to write $p")
+  override protected def createOutputStreamWithMode(
+      f: Path, append: Boolean, permission: FsPermission): java.io.OutputStream = {
+    check(f)
+    super.createOutputStreamWithMode(f, append, permission)
+  }
+  override def mkdirs(p: Path): Boolean = { check(p); super.mkdirs(p) }
+  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
+    check(p)
+    super.mkdirs(p, permission)
+  }
+}
+
+object RefuseTermDfFs {
+  @volatile var refusing = false
 }

@@ -56,6 +56,29 @@ class IndexReadSpec extends SparkSpec {
     }
   }
 
+  test("purges and updates write one schema per text relation: base and deltas read from the footer") {
+    withTempDir("idxread_mix") { tmp =>
+      val docs = io.Tables(spark, sf, "documents")
+      def slice(m: Int) = docs.where(pmod(col("doc_id"), lit(5)) === m)
+      def update(p: String, m: Int): Unit = Search.updateTextIndex(spark, p, slice(m), "doc_id", "text")
+      def purge(p: String): Unit = Search.purgeTextIndex(spark, p,
+        docs.where(pmod(col("doc_id"), lit(37)) === 3).select("doc_id"), "doc_id")
+      def build(p: String): Unit =
+        Search.writeTextIndex(docs.where(pmod(col("doc_id"), lit(5)) > 1), "doc_id", "text", p)
+      // build → purge → update
+      val a = s"$tmp/a"
+      build(a); purge(a); update(a, 0)
+      // build → update → purge → update
+      val b = s"$tmp/b"
+      build(b); update(b, 0); purge(b); update(b, 1)
+      for (p <- Seq(a, b); rel <- Seq("postings", "term_df", "meta")) {
+        val deltas = Search.deltaDirs(spark, p, rel)
+        assert(deltas.size == 1, s"$p $rel")
+        assertLikeInference(0)(s"$p/$rel" +: deltas: _*)
+      }
+    }
+  }
+
   test("footer read falls back to inference: missing dir, footer without the Spark key, mismatched schemas") {
     withTempDir("idxread_fb") { tmp =>
       val missing = s"$tmp/missing"

@@ -300,6 +300,23 @@ class MainSpec extends SparkSpec {
     }
   }
 
+  test("ProfileQ.maskPlan: the same queries built twice in one session mask to identical plans") {
+    val names = Seq("search_index_bm25", "privacy_purge_text", "ann_index_probe", "graph_triangles")
+    val raw = names.map { name =>
+      def plan() = SparkEntry.queries(name)(spark, sf).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      val (a, b) = (plan(), plan())
+      assert(ProfileQ.maskPlan(a) == ProfileQ.maskPlan(b), name)
+      (a, b)
+    }
+    // each mask has something to do
+    val all = raw.map { case (a, b) => a + b }.mkString
+    for (re <- Seq("""#\d+""", """\[plan_id=\d+\]""", """RDD\[\d+\] at \w+ at \w+\.scala:\d+""",
+        """/txtidx\d{8,}"""))
+      assert(re.r.findFirstIn(all).nonEmpty, re)
+    assert(raw.exists { case (a, b) => a != b })
+  }
+
   test("every main builds its session through GraftSession (no other SparkSession.builder)") {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
