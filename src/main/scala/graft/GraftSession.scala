@@ -55,6 +55,17 @@ object GraftSession {
     spark
   }
 
+  /** Release what a finished query left cached in `spark`: the
+    * catalog-cached relations, then every persistent RDD. The second
+    * step matters because `localCheckpoint` RDDs (CC, PageRank, LPA,
+    * k-core, BFS, MMR) persist OUTSIDE the cache manager, so
+    * `clearCache()` alone leaves them pinned for the rest of the
+    * session. The mains call it between queries. */
+  def scrub(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+  }
+
   /** The reference's `m` knob: number of map-side input shards for a given
     * total input size (`DBConnection::calc_shard_sz`,
     * `w7/src/master/dbconn.h:39-64`). In Spark, shard size is declarative.

@@ -18,9 +18,9 @@ object Verify {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       dump(s"$outDir/$name", name)(fn(spark, sfDir))
-      // queries that cache intermediates (dedup/simhash pipelines) must
-      // not accumulate across a 67-query session
-      spark.catalog.clearCache()
+      // what a query cached (dedup/simhash intermediates, checkpointed
+      // graph rounds) must not accumulate across the whole session
+      GraftSession.scrub(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

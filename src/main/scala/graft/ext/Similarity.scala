@@ -1670,16 +1670,19 @@ object Similarity {
         .select(col(idCol), col("sub"), col("code")))
   }
 
-  /** Persist the four index relations under `dir` (parquet). */
+  /** Persist the four index relations under `dir` (parquet), after
+    * rolling forward a publish that a crash interrupted. They are
+    * staged and swapped in through one `Sinks.rewriteAndSwap`, so a
+    * rebuild over a live index leaves the old index or the new one,
+    * never new centroids beside old lists. The four staged writes are
+    * concurrent jobs (guide §2.6): each is a sub-second action whose
+    * fixed scheduling latency dominated the sequential choreography. */
   def writeAnnIndex(index: AnnIndex, dir: String): Unit = {
-    // four independent writes of disjoint directories — concurrent
-    // jobs (guide §2.6): each is a sub-second action whose fixed
-    // scheduling latency dominated the sequential choreography
-    graft.util.Par.jobs(Seq(
-      () => index.coarse.write.mode("overwrite").parquet(s"$dir/coarse"),
-      () => index.lists.write.mode("overwrite").parquet(s"$dir/lists"),
-      () => index.book.write.mode("overwrite").parquet(s"$dir/book"),
-      () => index.codes.write.mode("overwrite").parquet(s"$dir/codes")))
+    val spark = index.coarse.sparkSession
+    graft.io.Sinks.recoverSwap(spark, graft.io.Sinks.swapJournal(dir))
+    graft.io.Sinks.rewriteAndSwap(spark, dir)(Seq(
+      "coarse" -> (() => index.coarse), "lists" -> (() => index.lists),
+      "book" -> (() => index.book), "codes" -> (() => index.codes)))
   }
 
   /** The four index relations under `dir`, after rolling forward a
@@ -1718,7 +1721,14 @@ object Similarity {
     * degrades list balance and codebook fit gradually (recall, never
     * correctness — candidate routing and ADC stay exact w.r.t. the
     * pinned quantizers), and a periodic full rebuild re-centers, like
-    * `compactTextIndex` folding deltas. */
+    * `compactTextIndex` folding deltas.
+    *
+    * A purge or rebuild that a crash interrupted is rolled forward
+    * first: appending into a half-swapped index would put the batch's
+    * codes in a `codes` directory that the recovery then replaces. The
+    * append itself is two concurrent in-place writes, not one atomic
+    * publish: when one fails, the batch may be in one relation and not
+    * the other, and must be purged by id before it is re-sent. */
   def updateAnnIndex(
       spark: org.apache.spark.sql.SparkSession,
       dir: String,
@@ -1727,6 +1737,7 @@ object Similarity {
       vecCol: String,
       numSub: Int = 8,
       subDim: Int = 8): Unit = {
+    graft.io.Sinks.recoverSwap(spark, graft.io.Sinks.swapJournal(dir))
     val coarse = graft.io.Sinks.readParquet(spark, s"$dir/coarse")
     val book = graft.io.Sinks.readParquet(spark, s"$dir/book")
     // two independent appends — concurrent jobs (guide §2.6)

@@ -321,8 +321,8 @@ object Sinks {
   }
 
   /** The one rewrite of an index artifact (text index build, update,
-    * compaction and purge; ANN purge): each phase writes its relations
-    * to their staged siblings ([[staged]], `<root>/<rel>.compacting`)
+    * compaction and purge; ANN build and purge): each phase writes its
+    * relations to their staged siblings ([[staged]], `<root>/<rel>.compacting`)
     * as concurrent jobs (guide §2.6), the `alongside` jobs beside the
     * first phase, and a later phase may read what an earlier one
     * staged. Then ONE journaled [[swapCompacting]] (the index form

@@ -333,6 +333,68 @@ class CrashSpec extends SparkSpec {
   test("purgeAnnIndex: with no explicit recovery, readAnnIndex serves from the index before or after the purge") {
     assert(purgeAnnPoints(_ => ()) == 8)
   }
+
+  test("updateAnnIndex after a purge crashed at any point, with no explicit recovery, keeps every listed id's codes and serves the batch") {
+    val emb = io.Tables(spark, sf, "embeddings")
+    val inBatch = pmod(col("vec_id"), lit(7)) === 0
+    val del = pmod(col("vec_id"), lit(37)) === 3 && !inBatch
+    val batchIds = rows(emb.where(inBatch).select("vec_id"))
+    def update(d: String): Unit =
+      Similarity.updateAnnIndex(spark, d, emb.where(inBatch), "vec_id", "embedding")
+    def served(d: String) = {
+      val index = Similarity.readAnnIndex(spark, d)
+      val listed = rows(index.lists.select("vec_id"))
+      assert(listed == rows(index.codes.select("vec_id").distinct()),
+        s"$d: an id is listed without its codes, or coded without a list")
+      assert(batchIds.subsetOf(listed), s"$d: the batch is not listed")
+      val found = Similarity.probeIndex(index, emb, "vec_id", "embedding",
+        probeFilter = col("vec_id") < 20, k = 10)
+      assert(rows(found.select("vec_id")).exists(batchIds), s"$d: no probe finds a batch vector")
+      (listed, rows(found))
+    }
+    val points = withCrashFs(withTempDir("crashfs") { tmp =>
+      Similarity.writeAnnIndex(
+        Similarity.annIndex(emb.where(!inBatch), "vec_id", "embedding"), s"crashfs://$tmp/pristine")
+      def fresh(name: String): String = {
+        FileUtils.copyDirectory(new File(s"$tmp/pristine"), new File(s"$tmp/$name"))
+        s"crashfs://$tmp/$name"
+      }
+      def purge(d: String): Unit =
+        Similarity.purgeAnnIndex(spark, d, emb.where(del).select("vec_id"), "vec_id")
+      val unpurged = { val d = fresh("unpurged"); update(d); served(d) }
+      val purged = { val d = fresh("purged"); purge(d); update(d); served(d) }
+      assert(purged != unpurged, "the reader must tell the two states apart")
+      var k = 0
+      var completed = false
+      while (!completed) {
+        k += 1
+        assert(k < 100, "the purge never completed")
+        val d = fresh(s"k$k")
+        CrashFs.arm(k)
+        scala.util.Try(purge(d))
+        completed = !CrashFs.disarm()
+        update(d)
+        val seen = served(d)
+        assert(seen == purged || seen == unpurged, s"k=$k: the update serves neither state")
+        graft.util.Scratch.delete(s"$tmp/k$k")
+      }
+      k - 1
+    })
+    assert(points == 8)
+  }
+
+  test("writeAnnIndex: a rebuild over a live index, crashed at every point, serves the old index or the new one") {
+    val emb = io.Tables(spark, sf, "embeddings")
+    val before = Similarity.annIndex(emb.where(pmod(col("vec_id"), lit(3)) =!= 0), "vec_id", "embedding")
+    val after = Similarity.annIndex(emb, "vec_id", "embedding")
+    val points = crashAtEveryStep(Similarity.writeAnnIndex(before, _))(
+      Similarity.writeAnnIndex(after, _))(_ => ()) { d =>
+      val index = Similarity.readAnnIndex(spark, d)
+      Seq(index.coarse, index.lists, index.book, index.codes).map(rows)
+    }
+    // four moves onto live targets, no drops
+    assert(points == 14)
+  }
 }
 
 /** Local filesystem under the `refusedf://` scheme that, while

@@ -300,13 +300,13 @@ class MainSpec extends SparkSpec {
     }
   }
 
-  test("ProfileQ.maskPlan: the same queries built twice in one session mask to identical plans") {
+  test("Bench.maskPlan: the same queries built twice in one session mask to identical plans") {
     val names = Seq("search_index_bm25", "privacy_purge_text", "ann_index_probe", "graph_triangles")
     val raw = names.map { name =>
       def plan() = SparkEntry.queries(name)(spark, sf).queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode)
       val (a, b) = (plan(), plan())
-      assert(ProfileQ.maskPlan(a) == ProfileQ.maskPlan(b), name)
+      assert(Bench.maskPlan(a) == Bench.maskPlan(b), name)
       (a, b)
     }
     // each mask has something to do
@@ -315,6 +315,34 @@ class MainSpec extends SparkSpec {
         """/txtidx\d{8,}"""))
       assert(re.r.findFirstIn(all).nonEmpty, re)
     assert(raw.exists { case (a, b) => a != b })
+  }
+
+  test("GraftSession.scrub releases the localCheckpoint RDDs a distributed graph query pins") {
+    withLocalMax(0) {
+      SparkEntry.queries("graph_kcore")(spark, sf).write.format("noop").mode("overwrite").save()
+    }
+    assert(spark.sparkContext.getPersistentRDDs.nonEmpty, "the distributed k-core pins no RDD")
+    GraftSession.scrub(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
+
+  test("the env table in the verify skill names exactly the env vars the code reads") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: ${root.toAbsolutePath}")
+    val read = """sys\.env\.\w+\("(\w+)"""".r
+    val walk = Files.walk(root)
+    val sources = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+    val inCode = (java.nio.file.Paths.get("build.sbt") :: sources)
+      .flatMap(p => read.findAllMatchIn(Files.readString(p)).map(_.group(1))).toSet
+    val skill = Files.readAllLines(java.nio.file.Paths.get(".claude/skills/verify/SKILL.md")).asScala
+    val inTable = skill.dropWhile(_ != "## Environment variables of the mains")
+      .drop(1).takeWhile(!_.startsWith("## "))
+      .collect { case l if l.startsWith("| `") => l.stripPrefix("| `").takeWhile(_ != '`') }.toSet
+    assert(inCode.nonEmpty)
+    assert(inTable == inCode,
+      s"read but not documented: ${inCode -- inTable}; documented but not read: ${inTable -- inCode}")
   }
 
   test("every main builds its session through GraftSession (no other SparkSession.builder)") {
